@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints per-query seconds as JSON on stdout
-  * (three lines — full named map, compact array, heaviest-named tail
-  * line; see `emit`).
+  * (three lines — full named map, heaviest-queries named map, compact
+  * array LAST; see `emit`).
   *
   * Each query is forced through a `noop` sink so the full result is
   * materialized (a bare count() would let Catalyst prune the computed
@@ -207,12 +207,14 @@ object Bench {
     }
     // The harness keeps only the LAST ~2 KB of stdout, and the named
     // per-query line above is ~2.4 KB at 99 queries — so whichever end is
-    // cut, one line alone can't carry everything. A second, compact line
-    // is printed LAST: total plus every per-query median as a plain JSON
+    // cut, one line alone can't carry everything. A compact line is
+    // printed LAST: total plus every per-query median as a plain JSON
     // array in sorted-query-name order ("order":"name-asc" — the same
-    // order as the named line's keys). ~0.7 KB, so the captured tail
-    // always contains this line whole; the named line before it remains
-    // the human-readable record when nothing is truncated.
+    // order as the named line's keys). ~1.5 KB at 159 queries with the
+    // t_prod map, so the captured tail always contains this line whole
+    // (check_bench names it from CORRECTNESS_rN.json and gates every
+    // query); the named line remains the human-readable record when
+    // nothing is truncated.
     def renderCompact(rs: Seq[(String, Double)]): String = {
       val total = r3(rs.map(_._2).filter(_ >= 0).sum)
       val partial = rs.exists(_._2 < 0) || prodResults().exists(_._2 < 0) ||
@@ -228,20 +230,21 @@ object Bench {
     // ~2000 bytes of stdout, and a fully-NAMED per-query map cannot fit
     // that window (the 159 query names alone are ~2.5 KB), which is why
     // the r16 comparator recovered zero named rows from the compact
-    // line's bare `t` array. This third, FINAL line is self-describing
-    // within the window: headline total + t_prod + a `queries` map of
-    // the SLOWEST entries, greedily filled until the line reaches ~1900
-    // bytes (the heavy queries are the ones a regression comparison can
-    // resolve; sub-second entries drown in host noise). `queries_omitted`
-    // records the truncation; the full named map stays on line 1 and
-    // every raw sample in BENCH_SAMPLES.json.
+    // line's bare `t` array. This line is self-describing: headline
+    // total + t_prod + a `queries` map of the SLOWEST entries, greedily
+    // filled until the line reaches ~1100 bytes (the heavy queries are
+    // the ones a regression comparison can resolve; sub-second entries
+    // drown in host noise). It is printed BEFORE the compact line, which
+    // therefore ends the output and always survives the tail window
+    // whole. `queries_omitted` records the truncation; the full named
+    // map stays on line 1 and every raw sample in BENCH_SAMPLES.json.
     def renderTopNamed(rs: Seq[(String, Double)]): String = {
       val total = r3(rs.map(_._2).filter(_ >= 0).sum)
       val partial = rs.exists(_._2 < 0) || prodResults().exists(_._2 < 0) ||
         roundsDone == 0
       val head = s"""{"metric":"total","value":$total,"unit":"sec","rounds":$roundsDone,"partial":$partial,"sf":"$sfDir","n":${rs.size},"t_prod":${renderProd()},"queries_omitted":NNN,"queries":{"""
       val tail = "}}"
-      val budget = 1900 - head.length - tail.length
+      val budget = 1100 - head.length - tail.length
       val byCost = rs.filter(_._2 >= 0).sortBy { case (n, v) => (-v, n) }
       val sb = new StringBuilder
       var kept = 0
@@ -255,14 +258,13 @@ object Bench {
       // three parse-friendly JSON lines, flushed straight to stdout (the
       // forked JVM inherits stdout — no sbt [info] prefix, see
       // build.sbt): full named line first (the human record), the
-      // compact total+array line (every per-query median, name-asc),
-      // then the heaviest-queries NAMED line LAST so the tail-kept
-      // capture window always parses to the headline total, t_prod, and
-      // named seconds for every expensive query.
+      // heaviest-queries NAMED line, then the compact total+array line
+      // (every per-query median, name-asc) LAST, so the tail-kept
+      // capture window always holds the full registry's medians.
       val rs = results()
       println(render(rs))
-      println(renderCompact(rs))
       println(renderTopNamed(rs))
+      println(renderCompact(rs))
       Console.flush()
       writeSamplesFile()
     }

@@ -119,12 +119,13 @@ object Optimize {
         sum(col("y") * col("y")).as("syy") :+
         count(lit(1)).cast("double").as("n")
     val row = frame.agg(aggs.head, aggs.tail: _*).head()
-    // read n FIRST (count is 0, never null) so an empty or all-null-x
+    // check every cell read below (count is 0, never null; a sum is null
+    // when all its inputs are) so an empty, all-null-x or all-null-y
     // frame fails with the intended message instead of an NPE from
-    // getDouble on the null sum cells (r16 advisor)
+    // getDouble on a null sum cell
     val n = row.getDouble(upper.length + d + 1)
-    require(n > 0 && !row.isNullAt(0),
-      "objective over an empty (or all-null-feature) frame")
+    require(n > 0 && !row.anyNull,
+      "objective over an empty (or all-null feature/label) frame")
     val m = Array.ofDim[Double](d, d)
     upper.zipWithIndex.foreach { case ((j, k), i) =>
       m(j)(k) = row.getDouble(i); m(k)(j) = row.getDouble(i)

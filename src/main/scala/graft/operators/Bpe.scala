@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 import graft.functions.TextFunctions.tokens
 
 /** Byte-pair-encoding vocabulary induction (r15) — the standard
@@ -59,11 +59,11 @@ object Bpe {
     * here (tokenize + groupBy(word)); everything after is
     * vocabulary-scale. */
   private def initialSegs(docs: DataFrame): DataFrame =
-    docs
+    LoopState.cut(docs
       .select(explode(tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
-      .select(regexp_replace(guarded(col("w")), "(.)", "<$1>").as("seg"), col("n"))
-      .localCheckpoint()
+      .select(regexp_replace(guarded(col("w")), "(.)", "<$1>").as("seg"), col("n")),
+      eager = true)
 
   /** Weighted adjacent-pair counts (l, r, cnt) of a segmentation table:
     * stage the symbol array (the t10 inlining lesson), explode adjacent
@@ -107,7 +107,7 @@ object Bpe {
       segs = segs.select(applyMerge(col("seg"), l, r).as("seg"), col("n"))
       // lineage cut every few rounds: the chain is one thin projection
       // per round over a vocabulary-sized table
-      if ((step + 1) % 8 == 0) segs = segs.localCheckpoint(false) // lazy: next round's count materializes (r16)
+      if ((step + 1) % 8 == 0) segs = LoopState.cut(segs, eager = false) // next round's count materializes (r16)
     }
     out.toSeq.toDF("step", "lhs", "rhs", "cnt")
   }
@@ -258,7 +258,7 @@ object Bpe {
       rounds += 1
       // a batched round appends up to `batch` replaces to the projection
       // chain, so cut twice as often as the sequential trainer
-      if (sinceCut % 2 == 0) segs = segs.localCheckpoint(false) // lazy: next round's count materializes (r16)
+      if (sinceCut % 2 == 0) segs = LoopState.cut(segs, eager = false) // next round's count materializes (r16)
     }
     (out.toSeq.toDF("step", "lhs", "rhs", "cnt"), rounds)
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 
 /** Duplicate-cluster resolution: candidate pairs → canonical keep/drop
   * sets — the last step of the dedup pipeline (d02/d03/d04 emit pairs;
@@ -23,51 +23,29 @@ object Clusters {
     *                 orientations are generated internally)
     * @return (id, label) where label = min id of the component
     *
-    * Each iteration: every vertex takes the min of its own label and its
-    * neighbors' labels (one shuffle join + one shuffle agg), then the
-    * lineage is cut with localCheckpoint so iteration N's plan stays
-    * O(1) instead of O(N). Iteration count = graph diameter — tiny for
-    * dup clusters (chains of near-identical docs). The fixpoint test
+    * Each round (a [[LoopState.fixpoint]] step): every vertex takes
+    * the min of its own label and its neighbors' labels (one shuffle
+    * join + one shuffle agg). Round count = graph diameter — tiny for
+    * dup clusters (chains of near-identical docs). The fingerprint
     * exploits monotonicity: labels only ever DECREASE, so sum(label)
-    * strictly decreases iff any label changed — one 1-row aggregate per
-    * iteration instead of a join+count (sums of long ids stay within
-    * Long well past 10^9 vertices; ANSI mode would throw on overflow
-    * rather than silently wrap). Driver-coordinated loops are how
-    * iterative graph algorithms run on Spark (GraphX Pregel does the
-    * same); the data itself never leaves the executors. At cluster
-    * scale, swap localCheckpoint for reliable checkpointing; for
-    * adversarially deep graphs use [[connectedComponentsStar]]
-    * (large-star/small-star contraction, O(log² n) rounds).
+    * strictly decreases iff any label changed — one pass per round
+    * instead of a join+count. Driver-coordinated loops are how iterative
+    * graph algorithms run on Spark (GraphX Pregel does the same); the
+    * data itself never leaves the executors. For adversarially deep
+    * graphs use [[connectedComponentsStar]] (large-star/small-star
+    * contraction, O(log² n) rounds).
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val bidir = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint()
-    var labels = vertices.select(col("id"), col("id").as("label")).localCheckpoint()
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum("label"), lit(0L))).head.getLong(0)
-    var prevSum = labelSum(labels)
-    var changed = true
-    var iter = 0
-    while (changed && iter < maxIter) {
+    LoopState.fixpoint(vertices.select(col("id"), col("id").as("label")), maxIter,
+        "connectedComponents (deep graphs: connectedComponentsStar)") { labels =>
       val msgs = bidir.join(labels, bidir("src") === labels("id"))
         .select(col("dst").as("id"), col("label"))
-      val updated = labels.select(col("id"), col("label")).union(msgs)
+      labels.select(col("id"), col("label")).union(msgs)
         .groupBy("id").agg(min("label").as("label"))
-        .localCheckpoint(false) // lazy: the fingerprint below materializes it (r16)
-      val newSum = labelSum(updated)
-      changed = newSum != prevSum
-      prevSum = newSum
-      labels = updated
-      iter += 1
-    }
-    if (changed) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents did not converge in $maxIter iterations " +
-          "— results are NOT a fixpoint; for adversarially deep graphs " +
-          "use connectedComponentsStar")
-    }
-    labels
+    }(col("label"))._1
   }
 
   /** Connected components by alternating large-star / small-star
@@ -78,19 +56,17 @@ object Clusters {
     * ~40 here).
     *
     * Each round is two join+agg passes over the canonical edge set
-    * (u > v, distinct, no self-loops), lineage cut per round:
+    * (u > v, distinct, no self-loops):
     *  - large-star: every node connects its LARGER neighbors to
     *    min(N(u) ∪ u) — long tails fold toward minima;
     *  - small-star: every node connects its smaller neighbors (and
     *    itself) to its minimum neighbor — stars flatten.
     * At fixpoint the edges are exactly {(v, component_min)}.
     *
-    * The per-round fixpoint check is ONE 1-row aggregate: edge count +
-    * an order-free bit_xor of xxhash64(u, v). Canonical edge sets are
-    * distinct, so set equality reduces to (count, xor-checksum) equality
-    * (collision odds ~2⁻⁶⁴); xor never overflows, so it is ANSI-safe at
-    * any edge count — unlike a sum of hashes. At cluster scale also swap
-    * localCheckpoint for reliable checkpointing.
+    * The per-round fingerprint is the edge count + an order-free
+    * wrapping sum of xxhash64(u, v). Canonical edge sets are distinct, so
+    * set equality reduces to (count, checksum) equality (collision odds
+    * ~2⁻⁶⁴).
     *
     * @return (id, label) with label = component minimum, identical to
     *         [[connectedComponents]] output on any graph.
@@ -101,41 +77,21 @@ object Clusters {
       df.filter(col("u") =!= col("v"))
         .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
         .distinct()
-    // (count, order-free checksum) signature of a canonical edge set —
-    // one 1-row aggregate, the whole per-round convergence cost
-    def sig(df: DataFrame): (Long, Long) = {
-      val r = df.agg(
-        count(lit(1)),
-        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L))).head
-      (r.getLong(0), r.getLong(1))
-    }
-    var e = canon(edges.select(col("src").as("u"), col("dst").as("v"))).localCheckpoint()
-    var eSig = sig(e)
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
+    val (e, _, _) = LoopState.fixpoint(
+        canon(edges.select(col("src").as("u"), col("dst").as("v"))), maxRounds,
+        "connectedComponentsStar") { e =>
       // large-star over both orientations
       val b = e.union(e.select(col("v").as("u"), col("u").as("v")))
       val minsL = b.groupBy("u").agg(min("v").as("mn"))
         .select(col("u"), least(col("mn"), col("u")).as("m"))
       val large = b.join(minsL, "u").filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
-      val e1 = canon(large).localCheckpoint()
+      val e1 = LoopState.cut(canon(large), eager = true)
       // small-star over the canonical (u > v) orientation
       val minsS = e1.groupBy("u").agg(min("v").as("m"))
-      val small = e1.join(minsS, "u").select(col("v").as("u"), col("m").as("v"))
-        .union(minsS.select(col("u"), col("m").as("v")))
-      val e2 = canon(small).localCheckpoint(false) // lazy: sig() materializes it (r16)
-      val e2Sig = sig(e2)
-      converged = e2Sig == eSig
-      e = e2
-      eSig = e2Sig
-      round += 1
-    }
-    if (!converged) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponentsStar did not converge in $maxRounds rounds")
-    }
+      canon(e1.join(minsS, "u").select(col("v").as("u"), col("m").as("v"))
+        .union(minsS.select(col("u"), col("m").as("v"))))
+    }(xxhash64(col("u"), col("v")))
     vertices.select(col("id"))
       .join(e.select(col("u").as("id"), col("v").as("label")), Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 
 /** Graph algorithms over plain edge DataFrames — the GraphX surface of
   * the reference (graphx/src/main/scala/org/apache/spark/graphx/lib/
@@ -20,37 +20,17 @@ object Graphs {
     * The dangling mass (rank parked on sink nodes) rides INSIDE the
     * round's plan as a broadcast 1-row aggregate instead of a separate
     * driver-side action, so each iteration costs exactly one job (the
-    * localCheckpoint) — half the per-round job count of collecting the
-    * scalar first.
+    * state's lineage cut) — half the per-round job count of collecting
+    * the scalar first. Runs [[pageRankUntilConvergenceTracked]]'s loop in
+    * its fixed-iteration mode.
     *
     * @param vertices single column `id`
     * @param edges    directed edges `src`,`dst`
     * @return (id, rank); ranks sum to 1 over the vertex set
     */
   def pageRank(vertices: DataFrame, edges: DataFrame,
-               iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    val n = vertices.count().toDouble
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val e = edges.join(deg, "src").localCheckpoint()
-    var ranks = vertices.select(col("id"), lit(1.0 / n).as("rank")).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val contribs = e.join(ranks, e("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      // rank mass parked on sink nodes (no out-edges), spread uniformly
-      val dangling = ranks.join(deg, ranks("id") === deg("src"), "left_anti")
-        .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
-      ranks = vertices.select(col("id"))
-        .join(contribs, Seq("id"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("id"),
-          (lit((1 - damping) / n) +
-            lit(damping) * (coalesce(col("c"), lit(0.0)) + col("dm") / n))
-            .as("rank"))
-        .localCheckpoint()
-    }
-    ranks
-  }
+               iters: Int = 10, damping: Double = 0.85): DataFrame =
+    pageRankUntilConvergenceTracked(vertices, edges, tol = 0, maxIter = iters, damping)._1
 
   /** [[pageRank]] run to CONVERGENCE instead of a fixed round count
     * (reference graphx/src/main/scala/org/apache/spark/graphx/lib/
@@ -63,9 +43,8 @@ object Graphs {
     * way); rounds stop once max |Δrank| ≤ tol or `maxIter` is hit.
     * tol ≤ 0 is an EXPLICIT fixed-iteration mode (r15 advisor: "tol=0
     * never converges in floats" is not guaranteed — ranks can hit an
-    * exact floating-point fixed point): exactly `maxIter` rounds, the
-    * per-round delta aggregate skipped, per-round plans identical to
-    * [[pageRank]] — GraphsSpec's bit-equality anchor. */
+    * exact floating-point fixed point): exactly `maxIter` rounds with the
+    * per-round delta aggregate skipped — [[pageRank]] itself. */
   def pageRankUntilConvergence(vertices: DataFrame, edges: DataFrame,
                                tol: Double, maxIter: Int = 100,
                                damping: Double = 0.85): DataFrame =
@@ -79,7 +58,8 @@ object Graphs {
     val n = vertices.count().toDouble
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val e = edges.join(deg, "src").localCheckpoint()
-    var ranks = vertices.select(col("id"), lit(1.0 / n).as("rank")).localCheckpoint()
+    var ranks = LoopState.cut(
+      vertices.select(col("id"), lit(1.0 / n).as("rank")), eager = true)
     var rounds = 0
     var converged = false
     while (rounds < maxIter && !converged) {
@@ -88,14 +68,13 @@ object Graphs {
         .groupBy("id").agg(sum("c").as("c"))
       val dangling = ranks.join(deg, ranks("id") === deg("src"), "left_anti")
         .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
-      val next = vertices.select(col("id"))
+      val next = LoopState.cut(vertices.select(col("id"))
         .join(contribs, Seq("id"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("id"),
           (lit((1 - damping) / n) +
             lit(damping) * (coalesce(col("c"), lit(0.0)) + col("dm") / n))
-            .as("rank"))
-        .localCheckpoint()
+            .as("rank")), eager = true)
       if (tol > 0) {
         val maxDelta = next
           .join(ranks.select(col("id"), col("rank").as("prev")), "id")
@@ -169,20 +148,17 @@ object Graphs {
       vprog: (org.apache.spark.sql.Column, org.apache.spark.sql.Column)
         => org.apache.spark.sql.Column): DataFrame = {
     val e = edges.localCheckpoint()
-    var v = vertices.select(col("id"),
-        initialMsg.fold(col("attr"))(m => vprog(col("attr"), m)).as("attr"))
-      .localCheckpoint()
+    var v = LoopState.cut(vertices.select(col("id"),
+        initialMsg.fold(col("attr"))(m => vprog(col("attr"), m)).as("attr")), eager = true)
     var halted = false
     var round = 0
     while (round < maxIter && !halted) {
-      val merged = aggregateMessages(v, e)(sendMsg, mergeMsg)
-        .select(col("id"), col("msg"))
-        .localCheckpoint()
+      val merged = LoopState.cut(aggregateMessages(v, e)(sendMsg, mergeMsg)
+        .select(col("id"), col("msg")), eager = true)
       if (merged.isEmpty) halted = true // the reference's activeMessages==0 stop
       else {
-        v = v.join(merged, Seq("id"), "left")
-          .select(col("id"), vprog(col("attr"), col("msg")).as("attr"))
-          .localCheckpoint()
+        v = LoopState.cut(v.join(merged, Seq("id"), "left")
+          .select(col("id"), vprog(col("attr"), col("msg")).as("attr")), eager = true)
       }
       round += 1
     }
@@ -346,8 +322,10 @@ object Graphs {
     val bidir = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(false) // lazy: round 1 materializes (r16)
+    // the initial labels stay a plan over `vertices` (round 1 reads them
+    // once, with the vertex scan's real size estimate); each round's lazy
+    // cut is materialized by the next round's first job, or the caller's
     var labels = vertices.select(col("id"), col("id").as("label"))
-      .localCheckpoint(false) // lazy: single reference per round (r16)
     for (_ <- 1 to iters) {
       val msgs = bidir.join(labels, bidir("src") === labels("id"))
         .select(col("dst").as("id"), col("label"))
@@ -355,10 +333,9 @@ object Graphs {
       val best = votes.groupBy("id")
         .agg(max(struct(col("n"), (-col("label")).as("negl"))).as("b"))
         .select(col("id"), (-col("b.negl")).as("label"))
-      labels = vertices.select(col("id"))
+      labels = LoopState.cut(vertices.select(col("id"))
         .join(best, Seq("id"), "left")
-        .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-        .localCheckpoint(false) // lazy: next round (or the caller) materializes (r16)
+        .select(col("id"), coalesce(col("label"), col("id")).as("label")), eager = false)
     }
     labels
   }
@@ -529,27 +506,16 @@ object Graphs {
     val bidir = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(false) // lazy: round 1 materializes (r16)
-    var dist = landmarks.select(col("lm").as("id"), col("lm"), lit(0L).as("d"))
-      .localCheckpoint()
     // early exit on the (row count, Σd) fingerprint: relaxation only ever
     // ADDS pairs or DECREASES a d, so an unchanged pair is a sound
     // fixpoint — most graphs converge well before the hop cap, and each
-    // skipped round saves a join+aggregate+checkpoint job (one 1-row agg
-    // per round buys it)
-    var last = (-1L, -1L)
-    var converged = false
-    for (_ <- 1 to maxHops if !converged) {
+    // skipped round saves a join+aggregate+checkpoint pass
+    LoopState.fixpoint(landmarks.select(col("lm").as("id"), col("lm"), lit(0L).as("d")),
+        maxHops, "shortestPaths") { dist =>
       val relaxed = bidir.join(dist, bidir("src") === dist("id"))
         .select(col("dst").as("id"), col("lm"), (col("d") + 1L).as("d"))
-      dist = dist.unionByName(relaxed)
-        .groupBy("id", "lm").agg(min("d").as("d"))
-        .localCheckpoint(false) // lazy: the fingerprint below materializes it (r16)
-      val row = dist.agg(count(lit(1)), coalesce(sum("d"), lit(0L))).head
-      val sig = (row.getLong(0), row.getLong(1))
-      converged = sig == last
-      last = sig
-    }
-    dist
+      dist.unionByName(relaxed).groupBy("id", "lm").agg(min("d").as("d"))
+    }(col("d"))._1
   }
 
   /** Hop distances from the three smallest co-purchase vertices — the
@@ -580,43 +546,22 @@ object Graphs {
       .orderBy("partkey", "landmark")
   }
 
-  /** Directed min-label propagation to fixpoint: m(v) = min id with a
-    * directed path to v (along `src`→`dst`), v included. Per round one
-    * join on the edge key + one min-aggregate, lineage cut per round.
-    * Labels only DECREASE, so an unchanged Σm over a fixed vertex set is
-    * a sound fixpoint — the 1-row fingerprint agg buys the early exit.
-    * Rounds needed = longest shortest-path from a minimum, capped like
+  /** Directed min-label propagation to fixpoint, in BOTH directions at
+    * once: fmin(v) = min id with a directed path to v (along
+    * `src`→`dst`), bmin(v) = min id reachable from v, v included in
+    * both. Per round the edges and their reversal relax one loop state
+    * (id, fmin, bmin), and both labels take a pointer-jumping shortcut
+    * (label ← min(label, label(label)) — sound because the composition of
+    * two reaching paths is a reaching path). One checkpoint + one
+    * convergence action per round covers both directions, so the driver
+    * pays max(d_f, d_b) round-trips instead of d_f + d_b — at any scale,
+    * half the barriers. Labels only DECREASE, so an unchanged
+    * (Σfmin, Σbmin) over a fixed vertex set is a sound fixpoint — the
+    * fingerprint pass buys the early exit. Rounds are capped like
     * GraphX's Pregel iterations. */
-  /** Lineage cut for NESTED loop state. A plain localCheckpoint attaches
-    * stats computed from the origin plan; in scc01's loop-inside-a-loop
-    * those stats compound GEOMETRICALLY (each outer round squares the
-    * inner product), until Catalyst hangs multiplying megabit BigInts at
-    * planning time. The shim drops the inherited stats so every round
-    * plans at constant cost. Single loops (pageRank, shortestPaths) only
-    * grow stats bits linearly and keep the plain checkpoint. */
-  private def cut(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.GraftDatasetFactory.localCheckpointFreshStats(df)
-
-  /** Lazy lineage cut (r16): the caller's NEXT action materializes the
-    * blocks, fusing "checkpoint the round's state" and "read its 1-row
-    * fingerprint" into one job — see
-    * GraftDatasetFactory.localCheckpointFreshStatsLazy. */
-  private def cutLazy(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.GraftDatasetFactory.localCheckpointFreshStatsLazy(df)
-
-  /** BOTH direction labels advance in one loop state (id, fmin, bmin):
-    * fmin relaxes along the edges, bmin along their reversal, and both
-    * take a pointer-jumping shortcut (label ← min(label, label(label)) —
-    * sound because the composition of two reaching paths is a reaching
-    * path). One checkpoint + one convergence action per round covers
-    * both directions, so the driver pays max(d_f, d_b) round-trips
-    * instead of d_f + d_b — at any scale, half the barriers. */
   private def minPropagateBoth(vertices: DataFrame, edges: DataFrame, maxIter: Int,
       smallState: Boolean = false): DataFrame = {
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"))
-    var m = cut(vertices.select(col("id"), col("id").as("fmin"), col("id").as("bmin")))
-    var last = -1L
-    var converged = false
     // r16: when the DRIVER already knows the remaining vertex set is
     // small (it counts it every outer round), say so — the label state
     // side of the message joins broadcasts instead of shuffling, which
@@ -632,7 +577,9 @@ object Graphs {
       state.unionByName(fMsgs).unionByName(bMsgs)
         .groupBy("id").agg(min("fmin").as("fmin"), min("bmin").as("bmin"))
     }
-    for (_ <- 1 to maxIter if !converged) {
+    LoopState.fixpoint(
+        vertices.select(col("id"), col("id").as("fmin"), col("id").as("bmin")),
+        maxIter, "minPropagateBoth") { m =>
       // r16: TWO relaxations per round in one plan — the tail rounds of
       // this loop are relaxation-limited (a label must physically travel
       // the remaining cycle edges; the pointer jump already covers the
@@ -642,13 +589,15 @@ object Graphs {
       // idempotent/associative; R∘R's fixpoints are R's — labels are
       // monotone non-increasing).
       val m1 = relax(relax(m))
-      // (jump's checkpoint is LAZY: the convergence aggregate right
-      // below materializes it — one job per round instead of two)
       // (r17 note: broadcasting the yf/yb lookup sides under smallState
       // was measured NEUTRAL here (8.37 vs 8.34 s) and rejected: m1 is an
       // unmaterialized plan, so each broadcast build re-evaluates the
       // relax chain, trading two exchanges for two extra computations.)
-      val jump = m1.as("x")
+      // (r16 note: a SECOND in-plan pointer jump was measured here and
+      // REVERTED — it did not cut the round count on this graph (the
+      // tail rounds are relaxation-limited, not chain-limited) while the
+      // two extra joins raised per-round cost ~1.6×.)
+      m1.as("x")
         .join(m1.select(col("id").as("fid"), col("fmin").as("ff")).as("yf"),
           col("x.fmin") === col("yf.fid"))
         .join(m1.select(col("id").as("bid"), col("bmin").as("bb")).as("yb"),
@@ -656,22 +605,7 @@ object Graphs {
         .select(col("x.id").as("id"),
           least(col("x.fmin"), col("yf.ff")).as("fmin"),
           least(col("x.bmin"), col("yb.bb")).as("bmin"))
-      // (r16 note: a SECOND in-plan pointer jump was measured here and
-      // REVERTED — it did not cut the round count on this graph (the
-      // tail rounds are relaxation-limited, not chain-limited) while the
-      // two extra joins raised per-round cost ~1.6×.)
-      m = cutLazy(jump)
-      val row = m.agg(coalesce(sum("fmin"), lit(0L)) + coalesce(sum("bmin"), lit(0L))).head
-      val sig = row.getLong(0)
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        System.err.println(s"[scc] prop sig=$sig t=${System.nanoTime() / 1000000}")
-      converged = sig == last
-      last = sig
-    }
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"minPropagateBoth hit the $maxIter-round cap before its fixpoint")
-    m
+    }(col("fmin"), col("bmin"))._1
   }
 
   /** Strongly connected components (reference graphx/lib/
@@ -707,16 +641,12 @@ object Graphs {
       maxOuter: Int = 30, maxPropagate: Int = 30): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
-    var remaining = cutLazy(vertices.select("id")) // count below materializes (r16)
+    var remaining = LoopState.cut(vertices.select("id"), eager = false) // count below materializes (r16)
     var nRemaining = remaining.count()
     var assigned = Seq.empty[(Long, Long)].toDF("id", "scc")
     var outer = 0
     while (nRemaining > 0 && outer < maxOuter) {
       outer += 1
-      var e = cutLazy(edges
-        .join(remaining.select(col("id").as("src")), "src")
-        .join(remaining.select(col("id").as("dst")), "dst")
-        .select("src", "dst")) // the edge count below materializes (r16)
       // TRIM (the Trim of FW-BW-Trim): a vertex with no in-edge or no
       // out-edge in the remaining subgraph cannot sit on a cycle — it is
       // its own SCC. Peeling to fixpoint eats the condensation's DAG
@@ -733,8 +663,7 @@ object Graphs {
       // peeled singletons fall out of one anti-join afterwards. Same
       // fixpoint, same assignments — the subgraph where every vertex
       // keeps in- and out-support is layer-order-independent.
-      var nE = e.count()
-      var peeled = nE > 0
+      //
       // r17: TWO peels per round in one plan (the double-relax argument
       // applied to trim): the peel operator P(e) = e restricted to
       // src ∈ dsts(e) ∧ dst ∈ srcs(e) is monotone-decreasing and P∘P has
@@ -743,26 +672,22 @@ object Graphs {
       // checkpoint+count barriers instead of one per layer. At any
       // scale the trim depth is the condensation's tail length, so the
       // barrier count is the 100 TB quantity here (sf0.1: 7 → 4 rounds).
+      // The edge count is a sound fingerprint: P only ever removes edges.
       def peel(ed: DataFrame): DataFrame = ed
         .join(ed.select(col("dst").as("src")).distinct(), Seq("src"), "left_semi")
         .join(ed.select(col("src").as("dst")).distinct(), Seq("dst"), "left_semi")
-      while (peeled) {
-        val e2 = cutLazy(peel(peel(e)))
-        val nE2 = e2.count()
-        if (sys.env.contains("GRAFT_SCC_DEBUG"))
-          System.err.println(s"[scc] trim e $nE->$nE2 t=${System.nanoTime() / 1000000}")
-        peeled = nE2 < nE
-        e = e2
-        nE = nE2
-      }
+      val (e, _, _) = LoopState.fixpoint(edges
+          .join(remaining.select(col("id").as("src")), "src")
+          .join(remaining.select(col("id").as("dst")), "dst")
+          .select("src", "dst"), Int.MaxValue, "scc trim")(ed => peel(peel(ed)))()
       // 2-core vertex set (= srcs(e) at the fixpoint); everything else
       // still remaining is a singleton SCC, assigned in one batch
-      val core = cutLazy(e.select(col("src").as("id")).distinct())
+      val core = LoopState.cut(e.select(col("src").as("id")).distinct(), eager = false)
       val nCore = core.count()
       if (nCore < nRemaining) {
-        assigned = cut(assigned.unionByName(
+        assigned = LoopState.cut(assigned.unionByName(
           remaining.join(core, Seq("id"), "left_anti")
-            .select(col("id"), col("id").as("scc"))))
+            .select(col("id"), col("id").as("scc"))), eager = true)
         remaining = core
         nRemaining = nCore
       }
@@ -775,14 +700,13 @@ object Graphs {
         // Beyond it the pure shuffle path stands.
         val lab = minPropagateBoth(remaining, e, maxPropagate,
           smallState = nRemaining <= 400000L)
-        assigned = cut(assigned.unionByName(
+        assigned = LoopState.cut(assigned.unionByName(
           lab.filter(col("fmin") === col("bmin"))
-            .select(col("id"), col("fmin").as("scc"))))
-        remaining = cut(lab.filter(col("fmin") =!= col("bmin")).select("id"))
+            .select(col("id"), col("fmin").as("scc"))), eager = true)
+        remaining = LoopState.cut(
+          lab.filter(col("fmin") =!= col("bmin")).select("id"), eager = true)
         nRemaining = remaining.count()
       }
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        System.err.println(s"[scc] outer $outer remaining=$nRemaining t=${System.nanoTime() / 1000000}")
     }
     val exhausted = nRemaining == 0
     if (!exhausted)
@@ -893,9 +817,9 @@ object Graphs {
       .localCheckpoint(false) // lazy: round 1 materializes (r16)
     // reference init: degree / total-degree (already L1-normalized)
     val totalDeg = deg.agg(sum("deg").as("t"))
-    var v = deg.crossJoin(broadcast(totalDeg))
-      .select(col("src").as("id"), (col("deg") / col("t")).as("v"))
-      .localCheckpoint(false) // lazy: round 1 materializes (r16)
+    var v = LoopState.cut(deg.crossJoin(broadcast(totalDeg))
+      .select(col("src").as("id"), (col("deg") / col("t")).as("v")),
+      eager = false) // round 1 materializes (r16)
     // (r16 note: materializing the matvec result once per round via a
     // lazy localCheckpoint — so the broadcast L1 subtree and the main
     // stream share it — was measured and REVERTED: the bounded
@@ -906,9 +830,8 @@ object Graphs {
         .select(col("src").as("id"), (col("a") * col("v")).as("c"))
         .groupBy("id").agg(sum("c").as("v0"))
       val l1 = next.agg(sum(abs(col("v0"))).as("l1"))
-      v = next.crossJoin(broadcast(l1))
-        .select(col("id"), (col("v0") / col("l1")).as("v"))
-        .localCheckpoint()
+      v = LoopState.cut(next.crossJoin(broadcast(l1))
+        .select(col("id"), (col("v0") / col("l1")).as("v")), eager = true)
     }
     // split the sorted embedding at the k−1 largest adjacent gaps
     // (id-asc tiebreaks keep every step deterministic). Numbering via

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 
 /** SVD++ recommender factorization (reference graphx/src/main/scala/org/
   * apache/spark/graphx/lib/SVDPlusPlus.scala:1 — Koren's
@@ -37,22 +37,6 @@ object Recommender {
 
   private def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  /** Loop-state lineage cut WITHOUT inherited stats — each SVD++
-    * iteration joins the previous round's leaves ~10×, so plain
-    * localCheckpoint stats would compound geometrically (see
-    * GraftDatasetFactory.localCheckpointFreshStats; observed as a
-    * planning-time BigInteger hang by iteration ~7). */
-  private def cut(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.GraftDatasetFactory.localCheckpointFreshStats(df)
-
-  /** Lazy lineage cut (r16): the next consuming action materializes the
-    * blocks, so a training round's "checkpoint state" job fuses with
-    * the round's tracking aggregate / Gramian collect (or cascades into
-    * the next round's first job when tracking is off) — same values,
-    * same storage, fewer driver barriers. */
-  private def cutLazy(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.GraftDatasetFactory.localCheckpointFreshStatsLazy(df)
 
   /** Deterministic uniform(-0.5, 0.5)/dim init from (id, dim, salt). */
   private def initArr(id: Column, dim: Int, salt: Long): Column =
@@ -135,13 +119,12 @@ object Recommender {
     val nu = r2.groupBy("u").agg(pow(count(lit(1)).cast("double"), -0.5).as("w"))
       .localCheckpoint()
 
-    var userF = r2.select("u").distinct()
-      .select(col("u"), initArr(col("u"), dim, seed).as("p"), lit(0.0).as("bu"))
-      .localCheckpoint()
-    var itemF = r2.select("i").distinct()
+    var userF = LoopState.cut(r2.select("u").distinct()
+      .select(col("u"), initArr(col("u"), dim, seed).as("p"), lit(0.0).as("bu")),
+      eager = true)
+    var itemF = LoopState.cut(r2.select("i").distinct()
       .select(col("i"), initArr(col("i"), dim, seed + 1).as("q"),
-        initArr(col("i"), dim, seed + 2).as("y"), lit(0.0).as("bi"))
-      .localCheckpoint()
+        initArr(col("i"), dim, seed + 2).as("y"), lit(0.0).as("bi")), eager = true)
 
     def scored(uF: DataFrame, iF: DataFrame): DataFrame = {
       val imp = impProfile(r2, nu, iF)
@@ -157,7 +140,7 @@ object Recommender {
     def sse(f: DataFrame): Double =
       f.agg(sum(pow(col("err"), 2))).head.getDouble(0)
     for (_ <- 1 to iters) {
-      val s = cutLazy(scored(userF, itemF))
+      val s = LoopState.cut(scored(userF, itemF), eager = false)
       if (track) js += sse(s)
       // r16: the three user-keyed gradients (bias avg, p-gradient, the
       // y-gradient's per-user term) FUSE into one (u, p) aggregation —
@@ -190,22 +173,24 @@ object Recommender {
         .groupBy("i", "p").agg(avg("v").as("g"))
         .groupBy("i").agg(asArr("g").as("dy"))
 
-      userF = cutLazy(userF.join(uAgg, Seq("u"), "left")
+      userF = LoopState.cut(userF.join(uAgg, Seq("u"), "left")
         .select(col("u"),
           when(col("dp").isNull, col("p")).otherwise(
             zip_with(col("p"), col("dp"), (p, g) => p + lit(lr) * (g - lit(reg) * p))).as("p"),
-          (col("bu") + lit(lr) * (coalesce(col("db"), lit(0.0)) - lit(reg) * col("bu"))).as("bu")))
-      itemF = cutLazy(itemF.join(iAgg, Seq("i"), "left")
+          (col("bu") + lit(lr) * (coalesce(col("db"), lit(0.0)) - lit(reg) * col("bu"))).as("bu")),
+        eager = false)
+      itemF = LoopState.cut(itemF.join(iAgg, Seq("i"), "left")
         .join(dY, Seq("i"), "left")
         .select(col("i"),
           when(col("dq").isNull, col("q")).otherwise(
             zip_with(col("q"), col("dq"), (q, g) => q + lit(lr) * (g - lit(reg) * q))).as("q"),
           when(col("dy").isNull, col("y")).otherwise(
             zip_with(col("y"), col("dy"), (y, g) => y + lit(lr) * (g - lit(reg) * y))).as("y"),
-          (col("bi") + lit(lr) * (coalesce(col("db"), lit(0.0)) - lit(reg) * col("bi"))).as("bi")))
+          (col("bi") + lit(lr) * (coalesce(col("db"), lit(0.0)) - lit(reg) * col("bi"))).as("bi")),
+        eager = false)
     }
     val finS = scored(userF, itemF)
-    val fin = if (track) { val c = cutLazy(finS); js += sse(c); c } else finS
+    val fin = if (track) { val c = LoopState.cut(finS, eager = false); js += sse(c); c } else finS
     // serving factors (lazy plans — only evaluated if the caller uses them)
     val userX = userF.join(impProfile(r2, nu, itemF), Seq("u"), "left")
       .select(col("u"),
@@ -344,6 +329,11 @@ object Recommender {
     * before accumulating so float summation order — and therefore the
     * whole trainer — is bit-deterministic.
     *
+    * @param ratings (u: long, i: long, r), ONE row per (u, i) — every
+    *                ALS trainer here assumes unique pairs (the registered
+    *                entries aggregate per (u, i) first); a repeated pair
+    *                is not rejected, it silently enters its keys' normal
+    *                equations once per copy
     * @return (u, i, r, pred) over the training edges
     */
   def als(ratings: DataFrame, dim: Int = 8, iters: Int = 5,
@@ -447,6 +437,7 @@ object Recommender {
                  nonnegative: Boolean = false): (DataFrame, DataFrame, Seq[Double]) = {
     val spark = ratings.sparkSession
     import spark.implicits._
+    // ratings are unique per (u, i): see [[als]]
     val r2 = ratings.select(col("u"), col("i"), col("r").cast("double").as("r"))
       .localCheckpoint()
 
@@ -515,16 +506,15 @@ object Recommender {
     // reference's abs-of-random convention) so round 1's item warm start
     // is clamp-free
     val init0 = initArr(col("i"), dim, seed)
-    var itemF = r2.select("i").distinct()
+    var itemF = LoopState.cut(r2.select("i").distinct()
       .select(col("i"),
-        (if (nonnegative) transform(init0, v => abs(v)) else init0).as("f"))
-      .localCheckpoint()
+        (if (nonnegative) transform(init0, v => abs(v)) else init0).as("f")), eager = true)
     var userF: DataFrame = null
     for (_ <- 1 to iters) {
-      userF = cutLazy(halfRound(itemF, "i", "u", "f",
-        Option(userF).filter(_ => nonnegative)))
-      itemF = cutLazy(halfRound(userF, "u", "i", "f",
-        if (nonnegative) Some(itemF) else None))
+      userF = LoopState.cut(halfRound(itemF, "i", "u", "f",
+        Option(userF).filter(_ => nonnegative)), eager = false)
+      itemF = LoopState.cut(halfRound(userF, "u", "i", "f",
+        if (nonnegative) Some(itemF) else None), eager = false)
       if (track) js += objective(userF, itemF)
     }
     (userF, itemF, js.toSeq)
@@ -738,6 +728,7 @@ object Recommender {
       : (DataFrame, DataFrame, Seq[Double]) = {
     val spark = ratings.sparkSession
     import spark.implicits._
+    // ratings are unique per (u, i): see [[als]]
     val r2 = ratings.select(col("u"), col("i"), col("r").cast("double").as("r"))
       .localCheckpoint()
 
@@ -777,15 +768,14 @@ object Recommender {
     }
 
     val js = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var itemF = r2.select("i").distinct()
-      .select(col("i"), initArr(col("i"), dim, seed + 1).as("f"))
-      .localCheckpoint()
+    var itemF = LoopState.cut(r2.select("i").distinct()
+      .select(col("i"), initArr(col("i"), dim, seed + 1).as("f")), eager = true)
     var userF: DataFrame = null
     for (_ <- 1 to iters) {
       val gY = gramian(itemF, dim)
-      userF = cutLazy(halfRound(itemF, "i", "u", gY))
+      userF = LoopState.cut(halfRound(itemF, "i", "u", gY), eager = false)
       val gX = gramian(userF, dim)
-      itemF = cutLazy(halfRound(userF, "u", "i", gX))
+      itemF = LoopState.cut(halfRound(userF, "u", "i", gX), eager = false)
       if (track) {
         val gY2 = gramian(itemF, dim)
         var frob = 0.0

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 
 /** LDA topic modeling (reference mllib/src/main/scala/org/apache/spark/
   * mllib/clustering/LDA.scala:1 — the 1.3-era EM optimizer over the
@@ -23,21 +23,10 @@ import graft.{Q, Tables}
   * driver-side scales beyond k.
   *
   * Init is hash-derived per (edge, topic) — seeded end-to-end like t05
-  * and r01. Loop state is checkpointed WITHOUT inherited stats: each
-  * round joins BOTH previous leaves, so plain checkpoint stats would
-  * double in bit-length per round (see GraftDatasetFactory.
-  * localCheckpointFreshStats).
+  * and r01. The count tables are loop state, carried through
+  * [[graft.LoopState.cut]].
   */
 object Topics {
-
-  private def cut(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.GraftDatasetFactory.localCheckpointFreshStats(df)
-
-  /** Lazy lineage cut (r16): the next round's topic-mass aggregate
-    * materializes γ and n_wk in one cascaded job instead of two eager
-    * checkpoint jobs per round — see GraftDatasetFactory. */
-  private def cutLazy(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftshim.GraftDatasetFactory.localCheckpointFreshStatsLazy(df)
 
   /** Train and return the topic-word summary: for every topic, the
     * `topWords` highest-φ terms, φ_wk = (n_wk + β)/(n_k + V·β).
@@ -72,7 +61,7 @@ object Topics {
       g.groupBy(key).agg(sums.head, sums.tail: _*)
     }
     var nDK = aggTo(gInit, "d") // single-consumer: plan over the edges checkpoint (r16)
-    var nWK = cut(aggTo(gInit, "w"))
+    var nWK = LoopState.cut(aggTo(gInit, "w"), eager = true)
 
     def nK(wk: DataFrame): Array[Double] = {
       val sums = (0 until k).map(j => sum(col(s"t$j")).as(s"t$j"))
@@ -104,9 +93,9 @@ object Topics {
       // two variants equal within noise (plan min 4.78 s vs eager min
       // 4.55 s, overlapping samples), so the r15 eager shape — whose
       // driver reading was clean — is restored.
-      val gammaCk = cutLazy(gamma)
-      nDK = cut(aggTo(gammaCk, "d"))
-      nWK = cutLazy(aggTo(gammaCk, "w"))
+      val gammaCk = LoopState.cut(gamma, eager = false)
+      nDK = LoopState.cut(aggTo(gammaCk, "d"), eager = true)
+      nWK = LoopState.cut(aggTo(gammaCk, "w"), eager = false)
     }
 
     val topicMass = nK(nWK)

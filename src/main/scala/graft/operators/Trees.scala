@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 
 /** Distributed tree-family training (reference mllib/src/main/scala/org/
   * apache/spark/mllib/tree/DecisionTree.scala:1, RandomForest.scala:1,
@@ -127,9 +127,9 @@ object Trees {
     require(allowed.nonEmpty && allowed.forall(f => f >= 0 && f < d))
     val raw = data.select(array(fts.map(_.cast("double")): _*).as("x"),
       labelCol.cast("string").as("label"), weight.cast("long").as("w"))
-    var df = raw.select(array(binColumns(raw, d, bins): _*).as("b"),
-      col("label"), col("w"), lit(0).as("node"))
-      .localCheckpoint(false) // lazy: level-0's cube collect materializes (r16)
+    var df = LoopState.cut(raw.select(array(binColumns(raw, d, bins): _*).as("b"),
+      col("label"), col("w"), lit(0).as("node")),
+      eager = false) // level-0's cube collect materializes (r16)
 
     var splits = Map.empty[Int, Split]
     var leaves = Map.empty[Int, String]
@@ -264,9 +264,9 @@ object Trees {
     val d = fts.length
     val raw = data.select(array(fts.map(_.cast("double")): _*).as("x"),
       yCol.cast("double").as("y"))
-    raw.select(array(binColumns(raw, d, bins): _*).as("b"), col("y"),
-      lit(1L).as("w"), lit(0).as("node"))
-      .localCheckpoint(false) // lazy: the caller's first pass materializes (r16)
+    LoopState.cut(raw.select(array(binColumns(raw, d, bins): _*).as("b"), col("y"),
+      lit(1L).as("w"), lit(0).as("node")),
+      eager = false) // the caller's first pass materializes (r16)
   }
 
   /** Split choice for one node from its histogram cells
@@ -412,10 +412,10 @@ object Trees {
     }
     val raw = data.select(array(fts.map(_.cast("double")): _*).as("x"),
       labelCol.cast("string").as("label"), array(wCols: _*).as("w"))
-    var df = raw.select(array(binColumns(raw, d, bins): _*).as("b"),
+    var df = LoopState.cut(raw.select(array(binColumns(raw, d, bins): _*).as("b"),
       col("label"), col("w"),
-      typedlit(Seq.fill(nTrees)(0)).as("node"))
-      .localCheckpoint(false) // lazy: level-0's cube collect materializes (r16)
+      typedlit(Seq.fill(nTrees)(0)).as("node")),
+      eager = false) // level-0's cube collect materializes (r16)
 
     val splits = Array.fill(nTrees)(Map.empty[Int, Split])
     val leaves = Array.fill(nTrees)(Map.empty[Int, String])
@@ -474,8 +474,8 @@ object Trees {
       // leaf-finalize pass) materializes the routed frame in the same
       // job, fusing the former per-level eager write job with its first
       // consumer; blocks persist exactly as before.
-      df = df.select(col("b"), col("label"), col("w"),
-        array(routes: _*).as("node")).localCheckpoint(false)
+      df = LoopState.cut(df.select(col("b"), col("label"), col("w"),
+        array(routes: _*).as("node")), eager = false)
     }
     // finalize leaves for every still-open (tree, node) in ONE pass
     val fin = df

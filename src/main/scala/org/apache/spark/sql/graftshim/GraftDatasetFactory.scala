@@ -16,43 +16,19 @@ object GraftDatasetFactory {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** `localCheckpoint` that DROPS the origin plan's computed statistics
-    * from the resulting leaf.
-    *
-    * An eager localCheckpoint attaches stats computed from the origin
-    * plan to its LogicalRDD. In a driver-iterated loop those stats
-    * COMPOUND: round r's plan joins round r−1's leaf, the size-only
-    * visitor MULTIPLIES children sizes, and the product is attached to
-    * round r's leaf — so the BigInt's bit-length grows geometrically
-    * with the iteration count (nested loops square it per round), until
-    * Catalyst spends minutes inside BigInteger.multiplyToomCook3 at
-    * PLANNING time (observed hang: the SCC double loop at round ~4).
-    * Dropping originStats resets each round's leaf to the session
-    * default — the conservative "unknown" that is exactly right for
-    * loop state: planning cost stays constant per round, and joins
-    * against the state are never wrongly auto-broadcast. */
-  def localCheckpointFreshStats(df: DataFrame): DataFrame = {
-    val ds = df.localCheckpoint()
+  /** Rebuilds a checkpointed frame's `LogicalRDD` leaf WITHOUT the
+    * statistics it inherited from its origin plan, so the leaf reports
+    * `spark.sql.defaultSizeInBytes`. The LogicalRDD copy constructor is
+    * the one private-API step [[graft.LoopState.cut]] needs; the
+    * reasoning lives there. Any other plan passes through unchanged. */
+  def withoutOriginStats(ds: DataFrame): DataFrame =
     ds.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         ofRows(ds.sparkSession,
           lr.copy()(ds.sparkSession.asInstanceOf[classic.SparkSession], None, None))
       case _ => ds
     }
-  }
 
-  /** LAZY [[localCheckpointFreshStats]]: marks the frame for local
-    * checkpointing but lets the CALLER's next action materialize it —
-    * the r16 loop fusion. A driver-iterated round that eagerly
-    * checkpoints its state and then runs a 1-row convergence/tracking
-    * aggregate pays two jobs for one pass; with the lazy mark the
-    * aggregate both materializes the blocks and returns the
-    * fingerprint in ONE job, and later rounds read the stored blocks
-    * exactly as with the eager form. Same values, same storage, half
-    * the driver barriers. Only use where a consuming action follows
-    * promptly (otherwise materialization cascades into the next
-    * consumer's job — correct, but it moves cost where you may not
-    * want it). */
   /** Block until the async listener bus has delivered every queued
     * event — the deterministic replacement for "sleep and hope" when a
     * tool reads listener-accumulated counters right after an action
@@ -61,14 +37,4 @@ object GraftDatasetFactory {
     * this shim. */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
-
-  def localCheckpointFreshStatsLazy(df: DataFrame): DataFrame = {
-    val ds = df.localCheckpoint(eager = false)
-    ds.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        ofRows(ds.sparkSession,
-          lr.copy()(ds.sparkSession.asInstanceOf[classic.SparkSession], None, None))
-      case _ => ds
-    }
-  }
 }

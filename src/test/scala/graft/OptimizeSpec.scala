@@ -55,6 +55,13 @@ class OptimizeSpec extends SparkTestBase {
       s"moment-objective lbfgs: loss ${hist.last}, weights ${w.toList}")
   }
 
+  test("leastSquaresObjective fails by name, not NPE, on an all-null label column") {
+    val df = planted(20).withColumn("y", lit(null).cast("double"))
+    val e = intercept[IllegalArgumentException](
+      Optimize.leastSquaresObjective(df, array(lit(1.0), col("x1"), col("x2")), col("y"), d = 3))
+    assert(e.getMessage.contains("all-null feature/label"), e.getMessage)
+  }
+
   test("lbfgs converges far faster than sqrt-decay gradient descent") {
     val df = planted(600)
     def freshObj() = Optimize.objective(df,

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Analytics, Relational}
+import graft.operators.{Analytics, Recommender, Relational}
 
 /** Physical-plan hygiene: the properties that decide whether these
   * operators survive a 100× scale-up — pushdown reaching the scan,
@@ -252,5 +252,34 @@ class PlanSpec extends SparkTestBase {
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("isFinalPlan=true") && p.contains("*("),
       s"codegen disabled?\n${p.take(800)}")
+  }
+
+  /** Executed plans of every Dataset action `body` runs (the trainer's
+    * per-round checkpoints and collects included, not just the returned
+    * frame). */
+  private def plansDuring(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = seen.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      org.apache.spark.sql.graftshim.GraftDatasetFactory.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(l)
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("r02/r04 ALS half-rounds plan a partial collect_list, no AppendColumns or MapGroups") {
+    for (q <- Seq(Recommender.r02, Recommender.r04)) {
+      val plans = plansDuring(q.run(spark, sfDir).collect())
+      assert(plans.exists(_.contains("partial_collect_list")),
+        s"${q.name}: no half-round with a map-side collect_list among ${plans.size} plans")
+      val typed = plans.filter(p => p.contains("AppendColumns") || p.contains("MapGroups"))
+      assert(typed.isEmpty, s"${q.name}: typed group hop is back:\n${typed.mkString("\n")}")
+    }
   }
 }

@@ -64,19 +64,24 @@ def _names_from(correctness_path, t):
 
 
 def load_bench(path, correctness_path=None):
-    """Returns (per-query seconds map, twin seconds map, partial flag
-    or None if unknown). The twin map ("t_prod") is rendered as a NAMED
-    map in both bench output lines and in the driver artifact's parsed
-    form, so no name recovery is needed for it."""
+    """Returns a 4-tuple (per-query seconds map, twin seconds map,
+    partial flag or None if unknown, truncated flag). `truncated` is True
+    only when nothing but the heaviest-queries map survived, so just the
+    captured entries can be gated and absent pins are not GONE. The twin
+    map ("t_prod") is rendered as a NAMED map in every bench output line
+    and in the driver artifact's parsed form, so no name recovery is
+    needed for it."""
     raw = open(path, encoding="utf-8").read()
     candidates = []
     try:
         candidates.append(json.loads(raw))
     except json.JSONDecodeError:
-        # raw graft.Bench stdout is TWO JSON lines (named first, compact
-        # LAST — the tail-truncation-proof one). Scan lines BOTTOM-UP so a
-        # capture whose head was cut (the harness keeps the last ~2KB)
-        # still parses from its surviving complete line.
+        # raw graft.Bench stdout is THREE JSON lines: the full named map,
+        # the ~1.1 KB heaviest-queries named map, and the compact
+        # total + name-asc "t" array LAST (the tail-truncation-proof one).
+        # Scan lines BOTTOM-UP so a capture whose head was cut (the
+        # harness keeps the last ~2KB) still parses from its surviving
+        # complete lines.
         for line in reversed(raw.splitlines()):
             line = line.strip()
             if not line:
@@ -101,9 +106,8 @@ def load_bench(path, correctness_path=None):
                      "part of the gate; re-run with a Bench that emits it")
         return {k: float(v) for k, v in tp.items()}
 
-    # preference order (r17 — Bench now prints a THIRD, final line whose
-    # "queries" map is truncated to the heaviest entries so the external
-    # ~2KB tail capture stays self-describing):
+    # preference order (the heaviest-queries line's "queries" map is
+    # truncated, so it ranks below the compact line that follows it):
     #   1. a COMPLETE named map (no queries_omitted, or zero omitted),
     #   2. the compact name-asc "t" array (needs a names source),
     #   3. the truncated heaviest-queries map, with a warning — only the

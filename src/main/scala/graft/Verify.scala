@@ -15,6 +15,9 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // the readers use declared schemas, which read a drifted column as
+    // nulls: check the corpus against them once, before any entry runs
+    Tables.requireSchemas(spark, sfDir)
     // local-iteration filter (comma-separated names); the driver never
     // sets it, so official runs always dump the full registry
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")

@@ -68,11 +68,21 @@ object Relational {
       .orderBy("l_orderkey", "l_linenumber")
   }
 
+  /** Discounted revenue, summed in DECIMAL(18,4) and rounded to cents: a
+    * double sum depends on the order of addition and can land on a
+    * half-cent tie that Spark (decimal HALF_UP) and DuckDB (binary) round
+    * apart, while the decimal sum is exact in any order. q03 and q05 use
+    * it; their oracles, and q46's SQL, spell the same CASTs. */
+  private def decimalRevenue =
+    round(sum((col("l_extendedprice") * (lit(1) - col("l_discount"))).cast("decimal(18,4)")), 2)
+      .cast("double")
+
   /** TPC-H Q3 shape: filter-reduced shuffle joins + agg + top-k. */
   val q03 = Q.sql(
     "q03_join_agg",
     """SELECT l_orderkey,
-      |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+      |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2)
+      |       AS DOUBLE) AS revenue,
       |  CAST(o_orderdate AS DATE) AS orderdate, o_orderpriority
       |FROM customer JOIN orders ON c_custkey = o_custkey
       |JOIN lineitem ON l_orderkey = o_orderkey
@@ -90,7 +100,7 @@ object Relational {
     cust.join(ord, col("c_custkey") === col("o_custkey"))
       .join(li, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate").cast("date").as("orderdate"), col("o_orderpriority"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
+      .agg(decimalRevenue.as("revenue"))
       .select("l_orderkey", "revenue", "orderdate", "o_orderpriority")
       .orderBy(col("revenue").desc, col("l_orderkey"))
       .limit(20)
@@ -117,7 +127,9 @@ object Relational {
   /** TPC-H Q5 shape: 5-way join, dims broadcast, facts shuffled once. */
   val q05 = Q.sql(
     "q05_multi_join",
-    """SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    """SELECT n_name,
+      |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2)
+      |       AS DOUBLE) AS revenue
       |FROM customer
       |JOIN orders ON c_custkey = o_custkey
       |JOIN lineitem ON l_orderkey = o_orderkey
@@ -135,7 +147,7 @@ object Relational {
       .join(broadcast(Tables.supplier(s, dir)), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
       .groupBy("n_name")
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
+      .agg(decimalRevenue.as("revenue"))
       .orderBy(col("revenue").desc, col("n_name"))
   }
 

@@ -1,70 +1,79 @@
 package graft
 
-import org.apache.spark.sql.types._
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Corpus-schema guard: pins the Spark-visible dtype of every column of
-  * every driver-generated table (TESTDATA.md is the ground truth). When
-  * the driver regenerates the corpus with a different physical encoding
-  * (the round-7 events.ts TIMESTAMP(NANOS) → TIMESTAMP(MICROS) drift that
-  * silently crashed 16 queries), THIS test goes red and names the drifted
-  * column — one loud failure instead of 17 downstream analysis exceptions.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.GraftDatasetFactory
+import org.apache.spark.sql.types.TimestampType
+
+/** Corpus-schema guard: every test corpus must have exactly the schemas
+  * `Tables` declares. The readers pass those schemas to the scan instead
+  * of inferring them, so a drifted corpus would otherwise read a renamed
+  * column as nulls; an earlier events.ts TIMESTAMP(NANOS) →
+  * TIMESTAMP(MICROS) drift crashed 16 queries. THIS test goes red and
+  * names the drifted table and column.
   */
 class TestDataSpec extends SparkTestBase {
 
-  // timestamp[us] without isAdjustedToUTC loads as TIMESTAMP_NTZ or
-  // TIMESTAMP depending on spark.sql.parquet.inferTimestampNTZ; both are
-  // handled by every consumer (UTC session makes them value-identical),
-  // so the guard accepts either — what it must catch is a LONG/NANOS or
-  // string regression.
-  private def isTs(dt: DataType): Boolean =
-    dt == TimestampType || dt == TimestampNTZType
-
-  private val expected: Map[String, Seq[(String, DataType => Boolean)]] = {
-    def is(d: DataType): DataType => Boolean = _ == d
-    Map(
-      "region" -> Seq("r_regionkey" -> is(IntegerType), "r_name" -> is(StringType)),
-      "nation" -> Seq("n_nationkey" -> is(IntegerType), "n_name" -> is(StringType),
-        "n_regionkey" -> is(IntegerType)),
-      "customer" -> Seq("c_custkey" -> is(LongType), "c_name" -> is(StringType),
-        "c_nationkey" -> is(IntegerType), "c_acctbal" -> is(DoubleType),
-        "c_mktsegment" -> is(StringType)),
-      "supplier" -> Seq("s_suppkey" -> is(LongType), "s_name" -> is(StringType),
-        "s_nationkey" -> is(IntegerType), "s_acctbal" -> is(DoubleType)),
-      "part" -> Seq("p_partkey" -> is(LongType), "p_name" -> is(StringType),
-        "p_brand" -> is(StringType), "p_type" -> is(StringType),
-        "p_size" -> is(IntegerType), "p_retailprice" -> is(DoubleType)),
-      "orders" -> Seq("o_orderkey" -> is(LongType), "o_custkey" -> is(LongType),
-        "o_orderstatus" -> is(StringType), "o_totalprice" -> is(DoubleType),
-        "o_orderdate" -> isTs _, "o_orderpriority" -> is(StringType)),
-      "lineitem" -> Seq("l_orderkey" -> is(LongType), "l_partkey" -> is(LongType),
-        "l_suppkey" -> is(LongType), "l_linenumber" -> is(IntegerType),
-        "l_quantity" -> is(DoubleType), "l_extendedprice" -> is(DoubleType),
-        "l_discount" -> is(DoubleType), "l_tax" -> is(DoubleType),
-        "l_returnflag" -> is(StringType), "l_linestatus" -> is(StringType),
-        "l_shipdate" -> isTs _),
-      "events" -> Seq("event_id" -> is(LongType), "ts" -> isTs _,
-        "user_id" -> is(LongType), "event_type" -> is(StringType),
-        "value" -> is(DoubleType), "props" -> is(StringType)),
-      "documents" -> Seq("doc_id" -> is(LongType), "text" -> is(StringType),
-        "lang" -> is(StringType), "source" -> is(StringType),
-        "n_chars" -> is(LongType)),
-      "embeddings" -> Seq("vec_id" -> is(LongType),
-        "embedding" -> is(ArrayType(FloatType, containsNull = true)),
-        "label" -> is(IntegerType))
-    )
+  private val corpora = {
+    val root = new java.io.File(sfDir).getParent
+    Seq("sf0.001", "sf0.01", "sf0.1").map(sf => s"$root/$sf")
   }
 
-  test("every table matches the TESTDATA.md column inventory, in order") {
-    Tables.all.foreach { t =>
-      val exp = expected(t)
-      val got = Tables(spark, sfDir, t).schema
-        .map(f => f.name -> f.dataType)
-      assert(got.map(_._1) == exp.map(_._1),
-        s"$t column names drifted: got ${got.map(_._1)}")
-      got.zip(exp).foreach { case ((name, dt), (_, ok)) =>
-        assert(ok(dt), s"$t.$name dtype drifted: got $dt")
-      }
+  test("every corpus matches the schemas Tables declares, column for column") {
+    corpora.foreach(dir => Tables.requireSchemas(spark, dir))
+  }
+
+  test("requireSchemas names the table and column of a drifted corpus") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-drift").toString
+    Tables.all.filter(_ != "orders").foreach { t =>
+      Tables(spark, sfDir, t).limit(1).write.parquet(s"$dir/$t.parquet")
     }
+    Tables.orders(spark, sfDir).withColumnRenamed("o_orderpriority", "o_priority")
+      .limit(1).write.parquet(s"$dir/orders.parquet")
+    // the declared read does not see the drift: the column is all nulls
+    assert(Tables.orders(spark, dir).where("o_orderpriority IS NOT NULL").isEmpty)
+    val e = intercept[IllegalArgumentException](Tables.requireSchemas(spark, dir))
+    assert(e.getMessage.contains("table orders, column o_orderpriority"), e.getMessage)
+    assert(e.getMessage.contains("has o_priority STRING"), e.getMessage)
+  }
+
+  test("Tables readers and SQL query builds start no Spark job") {
+    // a reader with an inferred schema starts a footer job per call; the
+    // declared schemas make building a DataFrame job-free
+    val sc = spark.sparkContext
+    val tag = "graft.test.tablesJobs"
+    val jobs = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(tag) != null) jobs.incrementAndGet()
+    }
+    def jobsToBuild(build: => Unit): Int = {
+      jobs.set(0)
+      sc.setLocalProperty(tag, "1")
+      try build finally sc.setLocalProperty(tag, null)
+      GraftDatasetFactory.drainListenerBus(spark)
+      jobs.get
+    }
+    sc.addSparkListener(counter)
+    try {
+      // the counter sees this thread's jobs
+      assert(jobsToBuild(Tables.region(spark, sfDir).count()) > 0)
+      val readers = Seq[(String, (SparkSession, String) => DataFrame)](
+        "region" -> Tables.region, "nation" -> Tables.nation,
+        "customer" -> Tables.customer, "supplier" -> Tables.supplier,
+        "part" -> Tables.part, "orders" -> Tables.orders, "lineitem" -> Tables.lineitem,
+        "events" -> Tables.events, "documents" -> Tables.documents,
+        "embeddings" -> Tables.embeddings)
+      assert(readers.map(_._1) == Tables.all)
+      readers.foreach { case (t, read) =>
+        assert(jobsToBuild(read(spark, sfDir)) == 0, s"Tables.$t started a job")
+      }
+      Seq("q46_sql_nation_volume", "q49_sql_big_orders").foreach { q =>
+        assert(jobsToBuild(SparkEntry.queries(q)(spark, sfDir)) == 0, s"building $q started a job")
+      }
+    } finally sc.removeSparkListener(counter)
   }
 
   test("documents.text is pure ASCII (mm01's byte-decode oracle assumes it)") {

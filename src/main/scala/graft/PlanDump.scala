@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.ExplainUtils
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import java.nio.file.{Files, Paths}
 
-/** Plan-evidence dumper (r16 optimization round): writes the
-  * `.explain("formatted")` text of registered queries to
-  * `<outDir>/<name>.txt`, so plan-shape claims in OPTIMIZATION_rN.md are
-  * checkable without running Spark. Usage:
+/** Plan-evidence dumper (r16 optimization round): runs registered
+  * queries and writes the `.explain("formatted")` text of the plan each
+  * one ran (AQE's final plan) to `<outDir>/<name>.txt`, so plan-shape
+  * claims in OPTIMIZATION_rN.md are checkable without running Spark.
+  * Usage:
   *
   *   tools/run.sh graft.PlanDump <sfDir> <outDir> <query>[,<query>...]
   *
@@ -36,7 +38,6 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
-    val mode = ExplainMode.fromString("formatted")
     // execution-shape evidence: count the jobs/stages/tasks the whole
     // entry submits (driver-iterated trainers do their work in actions,
     // not in the returned frame's plan — the job count IS the claim)
@@ -54,13 +55,21 @@ object PlanDump {
       try {
         val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)
         val df = SparkEntry.queries(n)(spark, sfDir)
-        val plan = df.queryExecution.explainString(mode)
-        df.write.format("noop").mode("overwrite").save()
+        // run the frame's OWN QueryExecution (a write would plan a fresh
+        // one), so the dump is AQE's final plan: the plan that ran, not
+        // the initial plan with exchanges a re-plan may have dropped
+        df.queryExecution.toRdd.foreach(_ => ())
+        val ran = df.queryExecution.executedPlan match {
+          case aqe: AdaptiveSparkPlanExec => aqe.finalPhysicalPlan
+          case p => p
+        }
+        val plan = new StringBuilder("== Physical Plan (final) ==\n")
+        ExplainUtils.processPlan(ran, s => plan.append(s))
         // listener events are async; block until the bus has delivered
         // everything (deterministic, unlike a fixed sleep — r16 advisor)
         org.apache.spark.sql.graftshim.GraftDatasetFactory.drainListenerBus(spark)
         Files.writeString(Paths.get(s"$outDir/$n.txt"),
-          plan + s"\n\n# executed end-to-end (incl. noop sink): jobs=${jobs.get - j0} " +
+          plan.toString + s"\n\n# executed end-to-end: jobs=${jobs.get - j0} " +
             s"stages=${stages.get - s0} tasks=${tasks.get - t0}\n")
         System.err.println(s"[plandump] wrote $n jobs=${jobs.get - j0} stages=${stages.get - s0}")
       } catch { case e: Throwable =>

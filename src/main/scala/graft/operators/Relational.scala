@@ -14,6 +14,8 @@ import graft.{Q, Tables}
   *  - double aggregates are rounded (2 dp) on both sides to absorb float
   *    summation-order differences between engines;
   *  - every query ends in a deterministic ORDER BY with a unique tiebreak;
+  *    a result of at most AQE's minPartitionSize (1 MB) is sorted in one
+  *    partition, with no range exchange (plans.OnePartitionSort);
   *  - computed integers are cast to long (DuckDB ints are 64-bit).
   */
 object Relational {

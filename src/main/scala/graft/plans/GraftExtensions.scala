@@ -5,13 +5,16 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-/** Registers graft's native expressions.
+/** Registers graft's native expressions, optimizer rule and planner
+  * strategies ([[GraftStrategies]]).
   *
   * Two entry points:
   *  - config: `spark.sql.extensions=graft.plans.GraftExtensions` picks the
   *    functions up at session build (cluster deployments);
-  *  - [[GraftFunctions.register]]: idempotent runtime registration for an
-  *    existing session (tests, notebooks, the Verify/Bench mains).
+  *  - [[GraftFunctions.register]] and [[GraftStrategies.install]]:
+  *    idempotent runtime registration for an existing session (tests,
+  *    notebooks, the Verify/Bench mains; every registered entry installs
+  *    the strategies through [[graft.Q]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -42,6 +45,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("might_contain"), GraftFunctions.mightContainInfo,
       GraftFunctions.mightContainBuilder))
     ext.injectOptimizerRule(_ => RewriteHofCosine)
+    GraftStrategies.all.foreach(strategy => ext.injectPlannerStrategy(_ => strategy))
   }
 }
 

@@ -148,10 +148,7 @@ object TopK {
   def perKey(df: DataFrame, keyCol: String, orderCol: String,
              tiebreak: String, k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
+    GraftStrategies.install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(name: String): Attribute =
       analyzed.output.find(_.name == name).getOrElse(

@@ -1,0 +1,105 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.CoalesceExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.functions._
+import graft.operators.Analytics
+import graft.plans.{GraftStrategies, OnePartitionSort}
+import graft.streaming.Pipelines
+
+/** A global sort whose input is at most AQE's minimum partition size is
+  * planned over a one-partition coalesce, with no sampling job and no
+  * range shuffle; above that size Spark's range sort is unchanged. */
+class OnePartitionSortSpec extends SparkTestBase {
+
+  private val MinPartitionSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+  private def finalPlan(df: DataFrame): String = df.queryExecution.executedPlan.toString
+
+  /** Runs `body` with AQE's minimum partition size at one byte, so no
+    * input fits one partition, and restores the session's setting. */
+  private def withRangeSort[T](body: => T): T = {
+    val before = spark.conf.getOption(MinPartitionSize)
+    spark.conf.set(MinPartitionSize, "1b")
+    try body
+    finally before.fold(spark.conf.unset(MinPartitionSize))(spark.conf.set(MinPartitionSize, _))
+  }
+
+  test("q15 sorts in one partition: no range exchange, 2 jobs") {
+    val df = Analytics.q15.run(spark, sfDir)
+    val jobs = jobsOf(df.collect())
+    val p = finalPlan(df)
+    assert(!p.contains("rangepartitioning"), s"q15 kept its range exchange:\n$p")
+    assert(p.contains("Coalesce 1"), s"q15 is not coalesced to one partition:\n$p")
+    // the rollup's map stage and the result: no sampling job, no range map stage
+    assert(jobs == 2, s"q15 ran $jobs jobs:\n$p")
+  }
+
+  test("the size gate is live: at a 1-byte minimum partition size q15 range-sorts again") {
+    val p = withRangeSort {
+      val df = Analytics.q15.run(spark, sfDir)
+      df.collect()
+      finalPlan(df)
+    }
+    assert(p.contains("rangepartitioning"), s"no range exchange above the threshold:\n$p")
+    assert(!p.contains("Coalesce 1"), p)
+    // and the setting is restored
+    val after = Analytics.q15.run(spark, sfDir)
+    after.collect()
+    assert(!finalPlan(after).contains("rangepartitioning"))
+  }
+
+  test("duplicate sort keys over 8 input partitions: same rows, same key order on both paths") {
+    def sorted: DataFrame = spark.range(0, 5000, 1, 8)
+      .select((col("id") * 7919 % 41).as("k"), col("id").as("v"))
+      .orderBy("k")
+    val one = sorted
+    val onePart = one.collect().toSeq
+    assert(finalPlan(one).contains("Coalesce 1"), finalPlan(one))
+    val (rangePart, rangePlan) = withRangeSort {
+      val df = sorted
+      (df.collect().toSeq, finalPlan(df))
+    }
+    assert(rangePlan.contains("rangepartitioning"), rangePlan)
+    assert(onePart.size == 5000)
+    val keys = onePart.map(_.getLong(0))
+    assert(keys == keys.sorted, "one-partition result is not in key order")
+    assert(keys == rangePart.map(_.getLong(0)))
+    assert(onePart.map(r => (r.getLong(0), r.getLong(1))).sorted ==
+      rangePart.map(r => (r.getLong(0), r.getLong(1))).sorted)
+  }
+
+  test("a complete-mode streaming sort gets no one-partition coalesce") {
+    val src = Files.createTempDirectory("graft-sort-stream-src").toString
+    val events = Tables.events(spark, sfDir)
+    val stream = Pipelines.hourlyTypeCounts(Pipelines.eventStream(spark, src, events.schema))
+      .orderBy("ws", "event_type")
+    val q = Pipelines.startToMemory(stream, "one_partition_sort_stream", "complete")
+    try {
+      events.write.mode("append").parquet(src)
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      assert(plan.collectFirst { case c: CoalesceExec => c }.isEmpty,
+        s"the streaming sort was coalesced:\n$plan")
+      assert(plan.toString.contains("Sort ["), plan.toString)
+    } finally q.stop()
+    val got = spark.table("one_partition_sort_stream").collect().toSeq
+    val want = Pipelines.hourlyTypeCounts(events).orderBy("ws", "event_type").collect().toSeq
+    assert(got == want)
+  }
+
+  test("the test session plans with each graft strategy exactly once") {
+    def counts = GraftStrategies.all.map(s => spark.sessionState.planner.strategies.count(_ == s))
+    assert(counts.forall(_ == 1), counts)
+    GraftStrategies.install(spark)
+    Analytics.q15.run(spark, sfDir)
+    assert(counts.forall(_ == 1), counts)
+    // a plain DataFrame sort, built outside any registered entry
+    val df = spark.range(10).toDF().orderBy(col("id").desc)
+    assert(spark.sessionState.planner.strategies.contains(OnePartitionSort))
+    assert(finalPlan(df).contains("Coalesce 1"), finalPlan(df))
+  }
+}

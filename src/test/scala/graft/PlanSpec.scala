@@ -28,9 +28,11 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("t10/t11/pii01 plan as scan + ONE map-only projection stage (no join, no hash exchange)") {
-    // the oracle's ORDER BY costs one range exchange; anything else —
-    // a hash exchange, a join, an aggregate — would mean the 'map-only'
-    // 100 TB claim in SURVEY §2 is false
+    // the oracle's ORDER BY sorts in one partition when its input is at
+    // most AQE's minPartitionSize (OnePartitionSort) and behind a range
+    // exchange above it; anything else — a hash exchange, a join, an
+    // aggregate — would mean the 'map-only' 100 TB claim in SURVEY §2 is
+    // false
     for (q <- Seq(graft.operators.TextOps.t10, graft.operators.TextOps.t11,
                   graft.operators.TextOps.pii01)) {
       val p = plan(q.run(spark, sfDir))
@@ -195,7 +197,9 @@ class PlanSpec extends SparkTestBase {
 
   test("q38/q52/kf01 hash sampling stays a map-side filter - no shuffle before the sort") {
     // the predicate/projection is pure codegen'd column arithmetic; the
-    // only exchange allowed is the final orderBy's range partitioning
+    // only exchange allowed is the final orderBy's range partitioning,
+    // and none when its input is at most AQE's minPartitionSize
+    // (OnePartitionSort sorts that in one partition)
     Seq(graft.operators.Stats.q38, graft.operators.Stats.q52,
       graft.operators.Stats.kf01).foreach { q =>
       val p = plan(q.run(spark, sfDir))

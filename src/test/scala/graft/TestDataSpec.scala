@@ -1,10 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftshim.GraftDatasetFactory
 import org.apache.spark.sql.types.TimestampType
 
 /** Corpus-schema guard: every test corpus must have exactly the schemas
@@ -42,38 +38,21 @@ class TestDataSpec extends SparkTestBase {
   test("Tables readers and SQL query builds start no Spark job") {
     // a reader with an inferred schema starts a footer job per call; the
     // declared schemas make building a DataFrame job-free
-    val sc = spark.sparkContext
-    val tag = "graft.test.tablesJobs"
-    val jobs = new AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && j.properties.getProperty(tag) != null) jobs.incrementAndGet()
+    // the counter sees this thread's jobs
+    assert(jobsOf(Tables.region(spark, sfDir).count()) > 0)
+    val readers = Seq[(String, (SparkSession, String) => DataFrame)](
+      "region" -> Tables.region, "nation" -> Tables.nation,
+      "customer" -> Tables.customer, "supplier" -> Tables.supplier,
+      "part" -> Tables.part, "orders" -> Tables.orders, "lineitem" -> Tables.lineitem,
+      "events" -> Tables.events, "documents" -> Tables.documents,
+      "embeddings" -> Tables.embeddings)
+    assert(readers.map(_._1) == Tables.all)
+    readers.foreach { case (t, read) =>
+      assert(jobsOf(read(spark, sfDir)) == 0, s"Tables.$t started a job")
     }
-    def jobsToBuild(build: => Unit): Int = {
-      jobs.set(0)
-      sc.setLocalProperty(tag, "1")
-      try build finally sc.setLocalProperty(tag, null)
-      GraftDatasetFactory.drainListenerBus(spark)
-      jobs.get
+    Seq("q46_sql_nation_volume", "q49_sql_big_orders").foreach { q =>
+      assert(jobsOf(SparkEntry.queries(q)(spark, sfDir)) == 0, s"building $q started a job")
     }
-    sc.addSparkListener(counter)
-    try {
-      // the counter sees this thread's jobs
-      assert(jobsToBuild(Tables.region(spark, sfDir).count()) > 0)
-      val readers = Seq[(String, (SparkSession, String) => DataFrame)](
-        "region" -> Tables.region, "nation" -> Tables.nation,
-        "customer" -> Tables.customer, "supplier" -> Tables.supplier,
-        "part" -> Tables.part, "orders" -> Tables.orders, "lineitem" -> Tables.lineitem,
-        "events" -> Tables.events, "documents" -> Tables.documents,
-        "embeddings" -> Tables.embeddings)
-      assert(readers.map(_._1) == Tables.all)
-      readers.foreach { case (t, read) =>
-        assert(jobsToBuild(read(spark, sfDir)) == 0, s"Tables.$t started a job")
-      }
-      Seq("q46_sql_nation_volume", "q49_sql_big_orders").foreach { q =>
-        assert(jobsToBuild(SparkEntry.queries(q)(spark, sfDir)) == 0, s"building $q started a job")
-      }
-    } finally sc.removeSparkListener(counter)
   }
 
   test("documents.text is pure ASCII (mm01's byte-decode oracle assumes it)") {

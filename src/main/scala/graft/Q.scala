@@ -30,6 +30,9 @@ final case class Q(
 object Q {
   def sql(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, planned(run), Some(oracle))
+  /** An entry whose oracle text is also its run, through [[Tables.sql]]. */
+  def sqlText(name: String, text: String): Q =
+    sql(name, text)((spark, dir) => Tables.sql(spark, dir, text))
   def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, planned(run), None)
 

@@ -1,9 +1,15 @@
 package graft
 
+import java.util.Locale
+
 import scala.collection.immutable.ListMap
+import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.GraftDatasetFactory
 import org.apache.spark.sql.types._
 
 /** Parquet readers for the generated test tables, with declared schemas.
@@ -91,4 +97,32 @@ object Tables {
     apply(s, d, "events").withColumn("ts", col("ts").cast("timestamp"))
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
+
+  /** Plans SQL text over the tables under `dir`: each relation the text
+    * names after one of the tables above, in subqueries and CTE bodies
+    * too, is bound to that table's reader (`events` to [[events]]), so
+    * no name is registered in the session. A table named twice is read
+    * once and deduplicated by the analyzer, as a temp view referenced
+    * twice is. A CTE that shadows a table name is left to the analyzer,
+    * which then fails on any reference to the table itself. */
+  def sql(spark: SparkSession, dir: String, text: String): DataFrame = {
+    def lower(name: String) = name.toLowerCase(Locale.ROOT)
+    val parsed = spark.sessionState.sqlParser.parsePlan(text)
+    val ctes = parsed.collectWithSubqueries { case w: UnresolvedWith =>
+      w.cteRelations.map(cte => lower(cte._1))
+    }.flatten.toSet
+    val readers = mutable.Map.empty[String, LogicalPlan]
+    def reader(t: String): LogicalPlan = readers.getOrElseUpdate(t,
+      (if (t == "events") events(spark, dir) else apply(spark, dir, t)).queryExecution.analyzed)
+    def bind(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+      case UnresolvedRelation(Seq(name), _, _)
+          if schemas.contains(lower(name)) && !ctes(lower(name)) =>
+        SubqueryAlias(name, reader(lower(name)))
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { case (n, q, depth) =>
+          (n, q.copy(child = bind(q.child)), depth)
+        })
+    }
+    GraftDatasetFactory.ofRows(spark, bind(parsed))
+  }
 }

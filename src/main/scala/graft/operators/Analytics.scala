@@ -431,10 +431,7 @@ object Analytics {
       |ORDER BY g_status, g_prio,
       |  o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin
 
-  val q47 = Q.sql("q47_grouping_sets", q47Text) { (s, dir) =>
-    Tables.orders(s, dir).createOrReplaceTempView("orders")
-    s.sql(q47Text)
-  }
+  val q47 = Q.sqlText("q47_grouping_sets", q47Text)
 
   /** collect_set / collect_list — the groupByKey-materializing surface
     * (PairRDD groupByKey parity). The set is sorted then serialized to

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.plans.GraftFunctions.{floatCosine, floatDot}
 
 /** Embedding clustering — distributed spherical k-means over the
   * `embeddings` table (SURVEY.md §2.4): semantic bucketing for
@@ -31,11 +32,10 @@ object Embeddings {
   /** Cluster id per row: argmax over cosine(embedding, centroid_j),
     * ties to the larger j (deterministic struct ordering). */
   private def withCluster(base: DataFrame, centroids: Array[Array[Float]]): DataFrame = {
-    graft.plans.GraftFunctions.register(base.sparkSession)
     if (centroids.length == 1) return base.withColumn("cluster", lit(0))
     val scored: Seq[Column] = centroids.toIndexedSeq.zipWithIndex.map { case (c, j) =>
       struct(
-        call_function("float_cosine", col("embedding"), typedlit(c.toSeq)).as("s"),
+        floatCosine(col("embedding"), typedlit(c.toSeq)).as("s"),
         lit(j).as("c"))
     }
     base.withColumn("cluster", greatest(scored: _*).getField("c"))
@@ -50,7 +50,7 @@ object Embeddings {
 
   private def maxSim(centers: Array[Array[Float]]): Column = {
     val sims = centers.toIndexedSeq.map(c =>
-      call_function("float_cosine", col("embedding"), typedlit(c.toSeq)))
+      floatCosine(col("embedding"), typedlit(c.toSeq)))
     if (sims.length == 1) sims.head else greatest(sims: _*)
   }
 
@@ -83,7 +83,6 @@ object Embeddings {
     * makes naive init collapse clusters. Each round is one codegen'd
     * map + a 1-row agg; driver state is O(k·dim). */
   def kmeansParallelSeeds(base: DataFrame, k: Int, rounds: Int = 2): Array[Array[Float]] = {
-    graft.plans.GraftFunctions.register(base.sparkSession)
     val l = 2 * k
     var centers: Array[Array[Float]] = base.orderBy("vec_id").limit(1)
       .collect().map(_.getSeq[Float](1).toArray)
@@ -272,8 +271,8 @@ object Embeddings {
       val cTerm = means(j).zip(vars(j)).map { case (m, v) => m * m / v }.sum
       val logDet = vars(j).map(math.log).sum
       (lit(math.log(weights(j)) - 0.5 * (logDet + cTerm)) -
-        lit(0.5) * call_function("float_dot", col(s"${p}xx"), typedlit(a)) +
-        call_function("float_dot", col("embedding"), typedlit(b))).as(s"${p}ld$j")
+        lit(0.5) * floatDot(col(s"${p}xx"), typedlit(a)) +
+        floatDot(col("embedding"), typedlit(b))).as(s"${p}ld$j")
     }
     val lds = (0 until k).map(j => col(s"${p}ld$j"))
     val es = (0 until k).map(j => col(s"${p}e$j"))

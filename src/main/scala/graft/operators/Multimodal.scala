@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.plans.GraftFunctions.{pcmS16le, rgb24Pixels, u8Moments}
 
 /** Multimodal column plumbing — SURVEY.md §2.4 mm01.
   *
@@ -338,7 +339,6 @@ object Multimodal {
     * sf0.1, the native pass replaces two string conversions per byte). */
   def parseWav(df: org.apache.spark.sql.DataFrame, payloadCol: String,
                maxChunks: Int = 6): org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val p = col(payloadCol)
     // Chunk walk as ONE runtime fold over sequence(1, maxChunks): the
     // accumulator struct carries (next header offset, fmt offset, data
@@ -396,7 +396,7 @@ object Multimodal {
     parsed
       .withColumn("samples",
         when(col("n_samples") > 0,
-          call_function("pcm_s16le", p, (dOff + 8L).cast("long"),
+          pcmS16le(p, (dOff + 8L).cast("long"),
             col("n_samples").cast("long")))
           .otherwise(typedlit(Seq.empty[Int])))
       .drop("_walk", "_fmt_off", "_data_off")
@@ -518,7 +518,6 @@ object Multimodal {
     * Map-only over the blob column — mm04's 100 TB shape. */
   def parseBmp(df: org.apache.spark.sql.DataFrame, payloadCol: String)
       : org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val p = col(payloadCol)
     df
       .filter(expr(
@@ -550,7 +549,7 @@ object Multimodal {
           s"DIV (((3 * width + 3) DIV 4) * 4), " +
           "'parseBmp: pixel data truncated'))"))
       .withColumn("pixels",
-        call_function("rgb24_pixels", p, col("_data_off") + 1L,
+        rgb24Pixels(p, col("_data_off") + 1L,
           col("width"), col("height")))
       .withColumn("width", col("width").cast("int"))
       .withColumn("height", col("height").cast("int"))
@@ -664,7 +663,6 @@ object Multimodal {
     * [[frameLumaStats]]. Map-only over the blob column. */
   def parseY4m(df: org.apache.spark.sql.DataFrame, payloadCol: String)
       : org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val p = col(payloadCol)
     val hdr = decode(p.substr(lit(1), lit(160)), "ISO-8859-1")
     df
@@ -718,7 +716,7 @@ object Multimodal {
         s"isnull(assert_true(decode(substring($payloadCol, " +
           "CAST(_hdr_len + frame_idx * _frame_tot + 1 AS INT), 6), " +
           "'ISO-8859-1') = 'FRAME\\n', 'parseY4m: bad FRAME marker'))"))
-      .withColumn("_m", call_function("u8_moments", p, frameOff + 6L,
+      .withColumn("_m", u8Moments(p, frameOff + 6L,
         (col("width") * col("height")).cast("long")))
       .withColumn("y_sum", element_at(col("_m"), 1))
       .withColumn("y_max", element_at(col("_m"), 2))

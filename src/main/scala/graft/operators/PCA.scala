@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.plans.GraftFunctions.floatDot
 
 /** Principal component analysis over the embedding table — the
   * RowMatrix surface of the reference (mllib/src/main/scala/org/apache/
@@ -207,11 +208,10 @@ object PCA {
     * rounded 5 dp for cross-run stability. */
   private def projectExpr(emb: DataFrame, mus: Seq[Double],
                           comps: Array[Array[Double]], m: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val projCols = (0 until m).map { k =>
       val vf: Seq[Float] = comps(k).map(_.toFloat).toSeq
       val offset = mus.zip(vf).map { case (mu, vkf) => mu * vkf.toDouble }.sum
-      round(call_function("float_dot", col("embedding"), typedlit(vf)) - lit(offset), 5)
+      round(floatDot(col("embedding"), typedlit(vf)) - lit(offset), 5)
         .as(s"pc$k")
     }
     emb.select(col("vec_id") +: projCols: _*)
@@ -278,11 +278,10 @@ object PCA {
   /** Left-singular coordinates per row: u_k = (x·v_k)/σ_k, map-only
     * native float_dot against plan literals. */
   def svdProject(emb: DataFrame, m: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val (sv, vecs) = singularValues(emb, m)
     val projCols = (0 until m).map { k =>
       val vf: Seq[Float] = vecs(k).map(_.toFloat).toSeq
-      round(call_function("float_dot", col("embedding"), typedlit(vf)) / lit(sv(k)), 6)
+      round(floatDot(col("embedding"), typedlit(vf)) / lit(sv(k)), 6)
         .as(s"u$k")
     }
     emb.select(col("vec_id") +: projCols: _*)
@@ -301,13 +300,12 @@ object PCA {
     "d15_svd",
     """SELECT vec_id, TRUE AS energy_conserved
       |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir) =>
-    graft.plans.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, dir)
     val dim = emb.select(size(col("embedding"))).head.getInt(0)
     val (_, vecs) = singularValues(emb, dim)
     val energyProj = (0 until dim).map { k =>
       val vf: Seq[Float] = vecs(k).map(_.toFloat).toSeq
-      val d = call_function("float_dot", col("embedding"), typedlit(vf))
+      val d = floatDot(col("embedding"), typedlit(vf))
       d * d
     }.reduce(_ + _)
     val ssq = aggregate(col("embedding"), lit(0.0d),

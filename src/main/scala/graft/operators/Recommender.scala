@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.{LoopState, Q, Tables}
+import graft.plans.GraftFunctions.doubleDot
 
 /** SVD++ recommender factorization (reference graphx/src/main/scala/org/
   * apache/spark/graphx/lib/SVDPlusPlus.scala:1 — Koren's
@@ -412,11 +413,10 @@ object Recommender {
     * candidate side is the broadcast one. */
   private def topKByDot(keys: DataFrame, cands: DataFrame,
                         keyCol: String, candCol: String, k: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(keys.sparkSession)
     val scored = keys.select(col(keyCol), col("f").as("_p"))
       .crossJoin(broadcast(cands.select(col(candCol), col("f").as("_q"))))
       .select(col(keyCol), col(candCol),
-        (round(call_function("double_dot", col("_p"), col("_q")), 6) + 0.0)
+        (round(doubleDot(col("_p"), col("_q")), 6) + 0.0)
           .as("score"))
     val top = graft.plans.TopK.perKey(scored, keyCol, "score", candCol, k)
     // rank within the kept k rows only — the window input is already

@@ -274,8 +274,8 @@ object Relational {
   /** The `spark.sql` text surface — how the reference's users actually
     * drive it (Spark 1.3 SQLContext.sql, sql/core/src/main/scala/org/
     * apache/spark/sql/SQLContext.scala): the TPC-H Q10 shape (returned-
-    * item revenue per customer) submitted as one SQL string over temp
-    * views. The text is engine-portable, so the oracle runs the SAME
+    * item revenue per customer) submitted as one SQL string over the
+    * corpus tables ([[Tables.sql]]). The text is engine-portable, so the oracle runs the SAME
     * query; Catalyst still gets full pushdown/broadcast freedom from the
     * declarative text. */
   private val q42Text =
@@ -290,13 +290,7 @@ object Relational {
       |ORDER BY revenue DESC, c_custkey
       |LIMIT 20""".stripMargin
 
-  val q42 = Q.sql("q42_sql_surface", q42Text) { (s, dir) =>
-    Tables.customer(s, dir).createOrReplaceTempView("customer")
-    Tables.orders(s, dir).createOrReplaceTempView("orders")
-    Tables.lineitem(s, dir).createOrReplaceTempView("lineitem")
-    Tables.nation(s, dir).createOrReplaceTempView("nation")
-    s.sql(q42Text)
-  }
+  val q42 = Q.sqlText("q42_sql_surface", q42Text)
 
   /** TPC-H Q14 shape (promo revenue share) as engine-portable SQL text:
     * conditional aggregation computing a ratio of sums per ship-year.
@@ -312,11 +306,7 @@ object Relational {
       |GROUP BY l_year
       |ORDER BY l_year""".stripMargin
 
-  val q44 = Q.sql("q44_sql_promo_share", q44Text) { (s, dir) =>
-    Tables.lineitem(s, dir).createOrReplaceTempView("lineitem")
-    Tables.part(s, dir).createOrReplaceTempView("part")
-    s.sql(q44Text)
-  }
+  val q44 = Q.sqlText("q44_sql_promo_share", q44Text)
 
   /** TPC-H Q15 shape (top supplier by revenue): a CTE consumed twice —
     * once as the join input, once under a scalar `max` subquery. The
@@ -333,11 +323,7 @@ object Relational {
       |WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
       |ORDER BY s_suppkey""".stripMargin
 
-  val q45 = Q.sql("q45_sql_top_supplier", q45Text) { (s, dir) =>
-    Tables.lineitem(s, dir).createOrReplaceTempView("lineitem")
-    Tables.supplier(s, dir).createOrReplaceTempView("supplier")
-    s.sql(q45Text)
-  }
+  val q45 = Q.sqlText("q45_sql_top_supplier", q45Text)
 
   /** TPC-H Q7 shape (volume shipped between nation pairs per year): a
     * 6-way join with the nation dim joined TWICE under different
@@ -361,14 +347,7 @@ object Relational {
       |GROUP BY supp_nation, cust_nation, l_year
       |ORDER BY supp_nation, cust_nation, l_year""".stripMargin
 
-  val q46 = Q.sql("q46_sql_nation_volume", q46Text) { (s, dir) =>
-    Tables.lineitem(s, dir).createOrReplaceTempView("lineitem")
-    Tables.orders(s, dir).createOrReplaceTempView("orders")
-    Tables.supplier(s, dir).createOrReplaceTempView("supplier")
-    Tables.customer(s, dir).createOrReplaceTempView("customer")
-    Tables.nation(s, dir).createOrReplaceTempView("nation")
-    s.sql(q46Text)
-  }
+  val q46 = Q.sqlText("q46_sql_nation_volume", q46Text)
 
   /** The DataFrameNaFunctions surface (`df.na.drop/fill/replace`,
     * Spark 1.3 DataFrameNaFunctions.scala parity) — the standard
@@ -415,12 +394,7 @@ object Relational {
       |GROUP BY c_name, c_custkey, o_orderkey
       |ORDER BY o_orderkey""".stripMargin
 
-  val q49 = Q.sql("q49_sql_big_orders", q49Text) { (s, dir) =>
-    Tables.customer(s, dir).createOrReplaceTempView("customer")
-    Tables.orders(s, dir).createOrReplaceTempView("orders")
-    Tables.lineitem(s, dir).createOrReplaceTempView("lineitem")
-    s.sql(q49Text)
-  }
+  val q49 = Q.sqlText("q49_sql_big_orders", q49Text)
 
   /** TPC-H Q22 shape (rich-but-idle customers): a scalar AVG subquery in
     * the predicate AND a correlated NOT EXISTS (anti join) in the same
@@ -437,11 +411,7 @@ object Relational {
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin
 
-  val q50 = Q.sql("q50_sql_rich_idle", q50Text) { (s, dir) =>
-    Tables.customer(s, dir).createOrReplaceTempView("customer")
-    Tables.orders(s, dir).createOrReplaceTempView("orders")
-    s.sql(q50Text)
-  }
+  val q50 = Q.sqlText("q50_sql_rich_idle", q50Text)
 
   /** TPC-H Q11 shape (revenue concentration): a CTE aggregated once,
     * filtered against a scalar fraction of ITS OWN total — the
@@ -458,10 +428,7 @@ object Relational {
       |WHERE round(r, 2) > (SELECT round(sum(r) * 0.0102, 2) FROM rev)
       |ORDER BY l_suppkey""".stripMargin
 
-  val q51 = Q.sql("q51_sql_revenue_share", q51Text) { (s, dir) =>
-    Tables.lineitem(s, dir).createOrReplaceTempView("lineitem")
-    s.sql(q51Text)
-  }
+  val q51 = Q.sqlText("q51_sql_revenue_share", q51Text)
 
   /** NOT IN — the NULL-AWARE anti join, a genuinely different operator
     * from q11's NOT EXISTS: one NULL in the subquery list legally empties
@@ -477,11 +444,7 @@ object Relational {
       |                        WHERE c_mktsegment = 'BUILDING')
       |ORDER BY o_orderkey""".stripMargin
 
-  val q53 = Q.sql("q53_null_aware_anti", q53Text) { (s, dir) =>
-    Tables.orders(s, dir).createOrReplaceTempView("orders")
-    Tables.customer(s, dir).createOrReplaceTempView("customer")
-    s.sql(q53Text)
-  }
+  val q53 = Q.sqlText("q53_null_aware_anti", q53Text)
 
   /** Global row numbering WITHOUT a one-reducer sort — the RDD
     * `zipWithIndex` surface (reference core rdd/ZippedWithIndexRDD.scala:1)
@@ -531,9 +494,10 @@ object Relational {
     * The registered entry UNCACHES before returning: the aggregate is
     * materialized eagerly through the cache via `localCheckpoint` (data
     * stays on executors — no driver collect), then the table is
-    * uncached, so a long-lived Bench/Verify session carries no resident
-    * columnar copy of orders into later queries and repeated runs never
-    * hit the "already cached" warning. */
+    * uncached and its view dropped, so a long-lived Bench/Verify session
+    * carries no resident columnar copy of orders into later queries,
+    * repeated runs never hit the "already cached" warning, and the
+    * session's catalog is left as the entry found it. */
   /** The lazy cache-reading aggregate (PlanSpec plan-locks this shape:
     * pruned `Scan In-memory table`). Leaves the table cached — callers
     * own the uncache. */
@@ -559,7 +523,10 @@ object Relational {
       cachedOrdersAgg(s, dir)
         .localCheckpoint() // eager: populates + reads the cache NOW
         .orderBy("o_orderpriority")
-    } finally s.catalog.uncacheTable("graft_orders_cached")
+    } finally {
+      s.catalog.uncacheTable("graft_orders_cached")
+      s.catalog.dropTempView("graft_orders_cached")
+    }
   }
 
   val all: Seq[Q] = Seq(q01, q02, q03, q04, q05, q06, q07, q08, q09, q10, q11, q12,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.plans.GraftFunctions.floatCosine
 
 /** Cluster-scoped semantic dedup — the end-to-end near-duplicate pattern
   * a 100 TB training-data pipeline actually runs, composed from stages
@@ -97,7 +98,7 @@ object SemanticDedup {
       .join(base.select(col("vec_id").as("d1"), col("embedding").as("e1")), "d1")
       .join(base.select(col("vec_id").as("d2"), col("embedding").as("e2")), "d2")
       .select(col("d1"), col("d2"), col("cluster"),
-        call_function("float_cosine", col("e1"), col("e2")).as("sim"))
+        floatCosine(col("e1"), col("e2")).as("sim"))
       .filter(col("sim") >= tau)
   }
 
@@ -109,7 +110,6 @@ object SemanticDedup {
       emb: DataFrame, k: Int, iters: Int,
       nPlanes: Int, nTables: Int, tau: Double,
       targetOccupancy: Int = 0): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     // k-means assignment is consumed by both sides of the candidate
     // self-join; cut it once so the Lloyd's map stage runs once
     val assign = Embeddings.kmeansAssign(emb, k, iters).localCheckpoint()

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.plans.GraftFunctions.{floatCosine, hashedWordGrams, hyperplaneSign,
+  minhashSignature, simhash63}
 import graft.functions.TextFunctions._
 
 /** Near-duplicate detection and similarity search — SURVEY.md §2.4.
@@ -151,13 +153,12 @@ object Similarity {
     *        there would. The cache-BYPASS path sets it true. */
   def jaccardPairs(docs: DataFrame, dfCap: Int, minJaccard: Double,
       shareShingleStage: Boolean = false): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     // native shingle hashing: the candidate join shuffles longs, not
     // gram strings (oracle still joins strings — equal modulo 64-bit
     // hash collisions)
     val grams0 = docs
       .select(col("doc_id"),
-        explode(call_function("hashed_word_grams", col("text"), lit(3))).as("g"))
+        explode(hashedWordGrams(col("text"), 3)).as("g"))
     // partial-agg the df counts (map-side combine collapses each gram to
     // one row per partition) and remove hot grams with a left_anti join.
     // No broadcast hint: the hot-gram set scales as totalGrams/dfCap, so
@@ -256,15 +257,13 @@ object Similarity {
   }
 
   def minhashLshPairs(docs: DataFrame, k: Int, bands: Int, minEstJaccard: Double): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val rowsPerBand = k / bands
     // native codegen signature (graft.plans.MinhashSignature) — bit-
     // identical to TextFunctions.minhashFromHashes but one tight loop
     // per row instead of k×|grams| interpreted lambda calls
     val sigs = docs.select(
       col("doc_id"),
-      call_function("minhash_signature",
-        call_function("hashed_word_grams", col("text"), lit(3)), lit(k)).as("sig"))
+      minhashSignature(hashedWordGrams(col("text"), 3), k).as("sig"))
     // band join carries only (doc_id, band, bh): the shuffle stays narrow
     // and pair-dedup happens before the signature compare, so each
     // candidate pair is scored exactly once
@@ -343,10 +342,9 @@ object Similarity {
     * (bit-identical to the explode+vote aggregate it replaced, but
     * map-only — no shuffle to build fingerprints). */
   val d04 = Q.sql("d04_simhash", d04Oracle) { (s, dir) =>
-    graft.plans.GraftFunctions.register(s)
     val hashed = Tables.documents(s, dir).select(
       col("doc_id"),
-      call_function("simhash63", tokens(col("text"))).as("sh"))
+      simhash63(tokens(col("text"))).as("sh"))
     // unlike minhash (32-long signature), the simhash fingerprint is a
     // single long: carrying it through the band join is cheaper than
     // re-joining, which would recompute the simhash aggregation twice
@@ -385,14 +383,13 @@ object Similarity {
       |  FROM sims)
       |SELECT qid, cid, sim6, rk FROM ranked WHERE rk <= 5
       |ORDER BY qid, rk""".stripMargin) { (s, dir) =>
-    graft.plans.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val c = emb.select(col("vec_id").as("cid"), col("embedding").as("ce"))
     val sims = broadcast(q).join(c, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        call_function("float_cosine", col("qe"), col("ce")).as("sim"))
+        floatCosine(col("qe"), col("ce")).as("sim"))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid"))
     sims.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5)
@@ -500,9 +497,8 @@ object Similarity {
   }
 
   def hyperplaneBuckets(emb: DataFrame, nPlanes: Int, nTables: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     def bucketOf(v: org.apache.spark.sql.Column, table: Int) =
-      call_function("hyperplane_sign", v, typedlit(planesFor(table, nPlanes)), lit(nPlanes))
+      hyperplaneSign(v, planesFor(table, nPlanes), nPlanes)
     emb.select(
       col("vec_id"),
       posexplode(array((0 until nTables).map(t => bucketOf(col("embedding"), t)): _*))
@@ -515,7 +511,6 @@ object Similarity {
     * members); the corpus side is bucketed once and probed per query. */
   def annLshTopK(emb: DataFrame, queries: DataFrame, nPlanes: Int, k: Int,
                  nTables: Int = 2): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val base = emb.select(col("vec_id"), col("embedding"))
     val bucketed = hyperplaneBuckets(base, nPlanes, nTables)
     // query vectors bucket through the SAME deterministic plane sets,
@@ -537,7 +532,7 @@ object Similarity {
       .join(queries.select(col("qid"), col("qe")), "qid")
       .join(base.select(col("vec_id").as("cid"), col("embedding").as("ce")), "cid")
       .select(col("qid"), col("cid"),
-        call_function("float_cosine", col("qe"), col("ce")).as("sim"))
+        floatCosine(col("qe"), col("ce")).as("sim"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("qid"), col("cid"), round(col("sim"), 6).as("sim6"), col("rk"))
@@ -556,10 +551,9 @@ object Similarity {
   def ivfTopK(emb: DataFrame, queries: DataFrame, nCells: Int, iters: Int,
               nProbe: Int, k: Int): DataFrame = {
     require(nProbe >= 1 && nProbe <= nCells)
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val (centroids, assign) = Embeddings.kmeansModel(emb, nCells, iters)
     val cellSims = array(centroids.toIndexedSeq.map(c =>
-      call_function("float_cosine", col("qe"), typedlit(c.toSeq))): _*)
+      floatCosine(col("qe"), typedlit(c.toSeq))): _*)
     val sorted = array_sort(transform(cellSims, (s, j) =>
       struct(s.as("s"), j.as("j"))))
     val probes = queries
@@ -575,7 +569,7 @@ object Similarity {
         Seq("cluster"))
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        call_function("float_cosine", col("qe"), col("ce")).as("sim"))
+        floatCosine(col("qe"), col("ce")).as("sim"))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid"))
     cands.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
   }
@@ -614,7 +608,7 @@ object Similarity {
       .join(emb.select(col("vec_id").as("cid"), col("embedding").as("ce")),
         col("qid") =!= col("cid"))
       .groupBy("qid")
-      .agg(max(call_function("float_cosine", col("qe"), col("ce"))).as("brute1"))
+      .agg(max(floatCosine(col("qe"), col("ce"))).as("brute1"))
     val ivfTop1 = ranked.filter(col("rk") === 1)
       .select(col("qid"), col("sim").as("ivf1"))
     ranked

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.plans.GraftFunctions.{bloomFilterAgg, mightContain}
 
 /** Probabilistic sketch operators — the two classic 100 TB pruning /
   * frequency tools alongside q30's HLL and q41's percentile sketch:
@@ -19,40 +20,21 @@ import graft.{Q, Tables}
 object Sketches {
 
   /** Build a Bloom filter over `keyCol` of `build` as a ONE-ROW binary
-    * sketch column (bloom_filter_agg — executor-side aggregation, the
-    * sketch never round-trips through the driver), broadcast it, and
-    * return `probe` rows passing `might_contain` on `probeCol`. This is
-    * Spark's runtime row-level-filter shape made explicit: at 100 TB
-    * the probe-side parquet scan drops non-candidate rows BEFORE the
-    * shuffle/join, at the cost of a bounded bit array per executor. */
+    * sketch (`bloomFilterAgg` — executor-side aggregation, the sketch
+    * never round-trips through the driver) and return `probe` rows
+    * passing `mightContain` on `probeCol`. The sketch is a scalar
+    * subquery (the runtime-filter contract: the Bloom argument must be
+    * foldable or one): it executes once, and its result reaches every
+    * probe task as a literal. This is Spark's runtime row-level-filter
+    * shape made explicit: at 100 TB the probe-side parquet scan drops
+    * non-candidate rows BEFORE the shuffle/join, at the cost of a
+    * bounded bit array per executor. The plan names nothing in the
+    * session, so concurrent callers cannot clobber each other. */
   def bloomPrune(build: DataFrame, keyCol: String,
                  probe: DataFrame, probeCol: String,
                  expectedItems: Long, numBits: Long): DataFrame = {
-    val spark = probe.sparkSession
-    graft.plans.GraftFunctions.register(spark)
-    // might_contain requires its Bloom argument foldable or a scalar
-    // subquery (the runtime-filter contract) — the subquery executes
-    // once and its result reaches every probe task as a literal.
-    // View names are per-call unique (concurrent callers sharing one
-    // SparkSession must not clobber each other's build side) and dropped
-    // immediately: spark.sql resolves views at ANALYSIS time, so the
-    // returned plan keeps its resolved relations after the drop.
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val buildView = s"graft_bloom_build_$tag"
-    val probeView = s"graft_bloom_probe_$tag"
-    build.createOrReplaceTempView(buildView)
-    probe.createOrReplaceTempView(probeView)
-    try {
-      spark.sql(
-        s"""SELECT p.* FROM $probeView p
-           |WHERE might_contain(
-           |  (SELECT bloom_filter_agg(xxhash64($keyCol), ${expectedItems}L, ${numBits}L)
-           |   FROM $buildView),
-           |  xxhash64(p.$probeCol))""".stripMargin)
-    } finally {
-      spark.catalog.dropTempView(buildView)
-      spark.catalog.dropTempView(probeView)
-    }
+    val bloom = build.agg(bloomFilterAgg(xxhash64(col(keyCol)), expectedItems, numBits))
+    probe.filter(mightContain(bloom.scalar(), xxhash64(col(probeCol))))
   }
 
   /** Registered pass: prune lineitem to rows whose order is URGENT via

@@ -44,8 +44,9 @@ object SkewTools {
   /** Weighted range bucketing: rows land in `weights.size` buckets with
     * frequency proportional to weight, using a deterministic uniform
     * derived from `uniformCol` (k mod 1000 / 1000). Combined with
-    * repartitionByRange this grants capable nodes more rows — the
-    * DataFrame analog of Capacity.WeightedPartitioner. */
+    * repartitionByRange ([[weightedRepartition]]) this grants capable
+    * nodes more rows: Lever's capacity placement, with weights from
+    * [[graft.streaming.Capacity.Assignment.shares]]. */
   def weightedBucket(uniformCol: Column, weights: Seq[Double]): Column = {
     val total = weights.sum
     // integer thresholds out of 1000 — float cumulative sums would move a

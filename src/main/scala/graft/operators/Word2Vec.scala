@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.plans.GraftFunctions.floatDot
 import graft.functions.TextFunctions.tokens
 
 /** Word2Vec-lite: distributed skip-gram with negative sampling over the
@@ -100,7 +101,6 @@ object Word2Vec {
             window: Int = 2, negatives: Int = 3, iters: Int = 15,
             lr: Double = 3.0, seed: Long = 42L): DataFrame = {
     val spark = docs.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     import spark.implicits._
     val vocab = vocabulary(docs, vocabSize).localCheckpoint(false) // lazy: count() materializes (r16)
     val nVocab = vocab.count().toInt
@@ -151,7 +151,7 @@ object Word2Vec {
           // documented contract); here both sides come from the same
           // `model` literal, so lengths are equal by construction — a
           // mismatch can't silently corrupt gradients
-          lit(1.0) / (lit(1.0) + exp(-call_function("float_dot", col("u"), col("v"))))
+          lit(1.0) / (lit(1.0) + exp(-floatDot(col("u"), col("v"))))
             - col("label"))
       // both gradient streams through one shuffle; map-side combine
       // collapses each partition to <= 2*vocab*dim rows. The mean over

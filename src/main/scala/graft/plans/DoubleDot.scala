@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -69,10 +69,4 @@ case class DoubleDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "double_dot"
-}
-
-object DoubleDot {
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[DoubleDot].getName, "double_dot")
-  val builder: Seq[Expression] => Expression = exprs => DoubleDot(exprs(0), exprs(1))
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -78,10 +78,4 @@ case class FloatCosine(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "float_cosine"
-}
-
-object FloatCosine {
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[FloatCosine].getName, "float_cosine")
-  val builder: Seq[Expression] => Expression = exprs => FloatCosine(exprs(0), exprs(1))
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -67,10 +67,4 @@ case class FloatDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "float_dot"
-}
-
-object FloatDot {
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[FloatDot].getName, "float_dot")
-  val builder: Seq[Expression] => Expression = exprs => FloatDot(exprs(0), exprs(1))
 }

@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -64,11 +64,4 @@ case class HashedWordGrams(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "hashed_word_grams"
-}
-
-object HashedWordGrams {
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[HashedWordGrams].getName, "hashed_word_grams")
-  val builder: Seq[Expression] => Expression = exprs =>
-    HashedWordGrams(exprs.head, exprs(1).eval().asInstanceOf[Int])
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
@@ -35,27 +35,30 @@ case class HyperplaneSign(child: Expression, planes: IndexedSeq[Double], nPlanes
         s"planes.length), got ${t.simpleString}, n=$nPlanes, planes=${planes.length}")
   }
 
-  private val isFloat = child.dataType match {
+  // lazy: evaluated only from compute(), after analysis has resolved the
+  // child (a typed constructor builds this over an unresolved column)
+  // and checkInputDataTypes has rejected nPlanes < 1 — eager division
+  // would throw a raw ArithmeticException at construction for
+  // hyperplane_sign(..., 0)
+  private lazy val isFloat = child.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
   }
-  // lazy: evaluated only from compute(), after checkInputDataTypes has
-  // rejected nPlanes < 1 — eager division would throw a raw
-  // ArithmeticException at construction for hyperplane_sign(..., 0)
   private lazy val dim = planes.length / nPlanes
   private lazy val flat: Array[Double] = planes.toArray
 
   def compute(vec: ArrayData): Long = {
-    val n = math.min(dim, vec.numElements())
+    val (fl, d, w) = (isFloat, dim, flat)
+    val n = math.min(d, vec.numElements())
     var bits = 0L
     var p = 0
     while (p < nPlanes) {
-      val off = p * dim
+      val off = p * d
       var dot = 0.0
       var i = 0
       while (i < n) {
-        val x = if (isFloat) vec.getFloat(i).toDouble else vec.getDouble(i)
-        dot += x * flat(off + i)
+        val x = if (fl) vec.getFloat(i).toDouble else vec.getDouble(i)
+        dot += x * w(off + i)
         i += 1
       }
       if (dot >= 0) bits |= (1L << p)
@@ -76,14 +79,4 @@ case class HyperplaneSign(child: Expression, planes: IndexedSeq[Double], nPlanes
     copy(child = newChild)
 
   override def prettyName: String = "hyperplane_sign"
-}
-
-object HyperplaneSign {
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[HyperplaneSign].getName, "hyperplane_sign")
-  /** SQL surface: hyperplane_sign(vec, array<double> planesFlat, nPlanes). */
-  val builder: Seq[Expression] => Expression = exprs => {
-    val flat = exprs(1).eval().asInstanceOf[ArrayData].toDoubleArray().toIndexedSeq
-    HyperplaneSign(exprs.head, flat, exprs(2).eval().asInstanceOf[Int])
-  }
 }

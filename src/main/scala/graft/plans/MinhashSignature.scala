@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -83,9 +83,4 @@ object MinhashSignature {
   val P: Long = 2147483647L
   /** Knuth multiplier reduced mod P — same b-family as the HOF version. */
   val B0: Long = 2654435761L % P
-
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[MinhashSignature].getName, "minhash_signature")
-  val builder: Seq[Expression] => Expression = exprs =>
-    MinhashSignature(exprs.head, exprs(1).eval().asInstanceOf[Int])
 }

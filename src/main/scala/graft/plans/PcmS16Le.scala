@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType}
 
@@ -90,11 +90,4 @@ case class PcmS16Le(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 
   override def prettyName: String = "pcm_s16le"
-}
-
-object PcmS16Le {
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[PcmS16Le].getName, "pcm_s16le")
-  val builder: Seq[Expression] => Expression =
-    exprs => PcmS16Le(exprs(0), exprs(1), exprs(2))
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   * codegen. Non-matching expressions are left untouched — the rule is
   * purely opportunistic and safe to run on any plan.
   *
-  * Enable per session with [[GraftFunctions.enableRewrites]] (the public
+  * Enable per session with [[GraftRewrites.enable]] (the public
   * `spark.experimental.extraOptimizations` hook) or cluster-wide via
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */

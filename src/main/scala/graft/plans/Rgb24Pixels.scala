@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, QuaternaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType}
 
@@ -110,11 +110,4 @@ case class Rgb24Pixels(first: Expression, second: Expression,
       third = newThird, fourth = newFourth)
 
   override def prettyName: String = "rgb24_pixels"
-}
-
-object Rgb24Pixels {
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[Rgb24Pixels].getName, "rgb24_pixels")
-  val builder: Seq[Expression] => Expression =
-    exprs => Rgb24Pixels(exprs(0), exprs(1), exprs(2), exprs(3))
 }

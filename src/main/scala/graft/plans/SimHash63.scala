@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -69,9 +69,4 @@ case class SimHash63(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "simhash63"
-}
-
-object SimHash63 {
-  val info: ExpressionInfo = new ExpressionInfo(classOf[SimHash63].getName, "simhash63")
-  val builder: Seq[Expression] => Expression = exprs => SimHash63(exprs.head)
 }

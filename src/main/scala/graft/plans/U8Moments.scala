@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
 
@@ -91,11 +91,4 @@ case class U8Moments(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 
   override def prettyName: String = "u8_moments"
-}
-
-object U8Moments {
-  val info: ExpressionInfo = new ExpressionInfo(
-    classOf[U8Moments].getName, "u8_moments")
-  val builder: Seq[Expression] => Expression =
-    exprs => U8Moments(exprs(0), exprs(1), exprs(2))
 }

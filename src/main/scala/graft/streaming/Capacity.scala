@@ -2,7 +2,6 @@ package graft.streaming
 
 import scala.collection.mutable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.Partitioner
 
 /** Spark-4-native re-expression of Lever's capacity-aware load balancing
   * (reference: core/src/main/scala/org/apache/spark/monitor/
@@ -17,9 +16,9 @@ import org.apache.spark.Partitioner
   *   - [[CapacityMonitor]] — a SparkListener computing per-executor
   *     bytes/ms from real task metrics (no actors needed);
   *   - [[Assignment]] — the four placement strategies as pure partition
-  *     math, usable to size a weighted repartition before a heavy stage;
-  *   - [[WeightedPartitioner]] — an RDD Partitioner granting each node a
-  *     partition share proportional to its measured capacity.
+  *     math, whose shares size a weighted repartition before a heavy
+  *     stage ([[graft.operators.SkewTools.weightedRepartition]], the
+  *     placement path the capacity-balanced stream uses).
   */
 object Capacity {
 
@@ -231,31 +230,6 @@ object Capacity {
     def capacities: Map[String, Double] = synchronized { speed.toMap }
     def totals: Map[String, (Long, Long)] = synchronized {
       runTime.keys.map(k => k -> (bytes.getOrElse(k, 0L), runTime(k))).toMap
-    }
-    def classification(tolerance: Double = 0.2): Classification =
-      classify(capacities, tolerance)
-  }
-
-  /** RDD-level partitioner giving node i a contiguous block of partitions
-    * sized by Assignment.proportional — keys hash uniformly into
-    * `numPartitions` slots, slots are owned proportionally to capacity. */
-  final class WeightedPartitioner(weights: Seq[Double], val numPartitions: Int)
-      extends Partitioner {
-    require(weights.nonEmpty && weights.forall(_ >= 0) && weights.sum > 0)
-    private val cum: Array[Double] = {
-      val total = weights.sum
-      weights.scanLeft(0.0)(_ + _).tail.map(_ / total).toArray
-    }
-    /** slot → owner node (exposed for tests and placement maps). */
-    def ownerOfPartition(p: Int): Int = {
-      val frac = (p + 0.5) / numPartitions
-      val i = java.util.Arrays.binarySearch(cum, frac)
-      if (i >= 0) i else math.min(weights.size - 1, -i - 1)
-    }
-    override def getPartition(key: Any): Int = {
-      val h = key.hashCode()
-      val nonNeg = if (h == Int.MinValue) 0 else math.abs(h)
-      nonNeg % numPartitions
     }
   }
 }

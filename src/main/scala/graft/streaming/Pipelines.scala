@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
+import graft.plans.GraftFunctions.{hashedWordGrams, minhashSignature}
 
 /** Live Structured Streaming pipelines — the Spark-4 re-expression of the
   * reference's DStream programs (file/receiver input → windowed transform
@@ -105,19 +106,8 @@ object Pipelines {
   /** Watermarked stream-stream inner join: each side keeps only the state
     * the 10-minute join window needs — the DStream-era join(otherStream)
     * with bounded state instead of unbounded RDD retention. */
-  def streamStreamJoin(clicks: DataFrame, purchases: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    val c = clicks.withWatermark("ts", "10 minutes")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("click_id"))
-    val p = purchases.withWatermark("ts", "10 minutes")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"), col("value"))
-    c.join(p, expr(
-      """c_user = p_user AND
-        |p_ts >= c_ts AND
-        |p_ts <= c_ts + interval 10 minutes""".stripMargin))
-  }
+  def streamStreamJoin(clicks: DataFrame, purchases: DataFrame): DataFrame =
+    clickPurchaseJoin(clicks, purchases, "inner")
 
   /** Watermarked stream-stream LEFT OUTER join — the behavior the inner
     * join cannot give: a click with no purchase in its 10-minute window
@@ -126,8 +116,13 @@ object Pipelines {
     * premature — a matching purchase can no longer arrive). State stays
     * bounded exactly as in [[streamStreamJoin]]; the join watermark is
     * the min of the two sides'. */
-  def streamStreamLeftJoin(clicks: DataFrame, purchases: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
+  def streamStreamLeftJoin(clicks: DataFrame, purchases: DataFrame): DataFrame =
+    clickPurchaseJoin(clicks, purchases, "left_outer")
+
+  /** Clicks joined to the same user's purchases in the 10 minutes after
+    * them, both sides watermarked at 10 minutes. */
+  private def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame,
+                                joinType: String): DataFrame = {
     val c = clicks.withWatermark("ts", "10 minutes")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
         col("event_id").as("click_id"))
@@ -137,8 +132,7 @@ object Pipelines {
     c.join(p, expr(
       """c_user = p_user AND
         |p_ts >= c_ts AND
-        |p_ts <= c_ts + interval 10 minutes""".stripMargin),
-      "left_outer")
+        |p_ts <= c_ts + interval 10 minutes""".stripMargin), joinType)
   }
 
   final case class TaggedEvent(user_id: Long, ts: java.sql.Timestamp,
@@ -306,14 +300,11 @@ object Pipelines {
     * MinHash+LSH front end (native codegen signature + band slices),
     * shared by the batch pair-join and the streaming dedup below. */
   def bandDocs(docs: DataFrame, k: Int, bands: Int): Dataset[BandedDoc] = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     implicit val enc = Encoders.product[BandedDoc]
     val rowsPerBand = k / bands
     docs
       .select(col("doc_id"),
-        call_function("minhash_signature",
-          call_function("hashed_word_grams", col("text"), lit(3)),
-          lit(k)).as("sig"))
+        minhashSignature(hashedWordGrams(col("text"), 3), k).as("sig"))
       .select(col("doc_id"),
         posexplode(graft.functions.TextFunctions.lshBands(
           col("sig"), bands, rowsPerBand)).as(Seq("band", "bh")),

@@ -1,12 +1,16 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Bridges a hand-built LogicalPlan into a public DataFrame.
+/** Bridges hand-built Catalyst plans and expressions into public
+  * DataFrames and Columns.
   *
-  * `Dataset.ofRows` is private[sql], so this one-line shim lives under the
+  * `Dataset.ofRows` and the `ExpressionUtils` conversions are
+  * private[sql], so this shim lives under the
   * org.apache.spark.sql namespace — the standard pattern for third-party
   * plan extensions (cf. retrieved public snippets of DatasetFactory
   * wrappers in SNIPPETS.md [1], [3]). Nothing else in graft touches
@@ -15,6 +19,12 @@ import org.apache.spark.sql.classic
 object GraftDatasetFactory {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A Catalyst expression as a public Column, and a Column's
+    * expression: how [[graft.plans.GraftFunctions]] builds its native
+    * expressions without a name in any session's function registry. */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Rebuilds a checkpointed frame's `LogicalRDD` leaf WITHOUT the
     * statistics it inherited from its origin plan, so the leaf reports

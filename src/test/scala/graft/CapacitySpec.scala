@@ -162,14 +162,6 @@ class CapacitySpec extends SparkTestBase {
     assert(c.medians == Set("m"))
   }
 
-  test("WeightedPartitioner keeps keys in range and owners match weights") {
-    val wp = new Capacity.WeightedPartitioner(Seq(0.5, 0.3, 0.2), 100)
-    val parts = (0 until 10000).map(k => wp.getPartition(k))
-    assert(parts.forall(p => p >= 0 && p < 100))
-    val ownerCounts = (0 until 100).groupBy(wp.ownerOfPartition).view.mapValues(_.size).toMap
-    assert(ownerCounts(0) == 50 && ownerCounts(1) == 30 && ownerCounts(2) == 20)
-  }
-
   test("CapacityMonitor observes real task metrics from a spark job") {
     val mon = new Capacity.CapacityMonitor()
     spark.sparkContext.addSparkListener(mon)

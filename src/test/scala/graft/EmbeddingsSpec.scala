@@ -221,6 +221,21 @@ class EmbeddingsSpec extends SparkTestBase {
     assert(err.getMessage.contains("already exists"), err.getMessage)
   }
 
+  test("gmmRespFrame returns responsibilities on a session nothing was registered into") {
+    val fresh = spark.newSession()
+    val rows: java.util.List[Row] = new java.util.ArrayList()
+    rows.add(Row(0L, Seq(1.0f, 0.0f))); rows.add(Row(1L, Seq(0.0f, 1.0f)))
+    val base = fresh.createDataFrame(rows, embSchema)
+    val got = Embeddings.gmmRespFrame(base, Array(Array(1.0, 0.0), Array(0.0, 1.0)),
+        Array(Array(0.1, 0.1), Array(0.1, 0.1)), Array(0.5, 0.5))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](2)).toMap
+    // each point sits on its own component's mean: responsibilities sum
+    // to one and favor that component
+    assert(got.keySet == Set(0L, 1L))
+    got.values.foreach(rs => assert(math.abs(rs.sum - 1.0) < 1e-12, rs))
+    assert(got(0L)(0) > 0.99 && got(1L)(1) > 0.99, got)
+  }
+
   test("d12 standardization: per-dimension mean ~0, stddev ~1, zero-variance dim -> NULL") {
     import org.apache.spark.sql.functions._
     val out = Embeddings.d12.run(spark, sfDir).cache()

@@ -134,7 +134,10 @@ class PlanSpec extends SparkTestBase {
 
   test("q48's registered entry leaves nothing cached behind") {
     Relational.q48.run(spark, sfDir).count()
-    assert(!spark.catalog.isCached("graft_orders_cached"),
+    assert(!spark.catalog.tableExists("graft_orders_cached"),
+      "registered q48 must drop its view before returning")
+    assert(Tables.orders(spark, sfDir).storageLevel ==
+      org.apache.spark.storage.StorageLevel.NONE,
       "registered q48 must uncache before returning")
   }
 

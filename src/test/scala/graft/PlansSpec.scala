@@ -3,25 +3,24 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.plans.GraftFunctions
+import graft.plans.GraftFunctions._
 
 class PlansSpec extends SparkTestBase {
 
   test("native float_cosine is bit-identical to the HOF cosine") {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir).limit(100)
     val both = emb.as("a").join(emb.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(
-        call_function("float_cosine", col("a.embedding"), col("b.embedding")).as("native"),
+        floatCosine(col("a.embedding"), col("b.embedding")).as("native"),
         TextFunctions.cosine(col("a.embedding"), col("b.embedding")).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0,
       "native expression must reproduce the HOF arithmetic exactly")
   }
 
   test("float_cosine participates in whole-stage codegen") {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir)
     val df = emb.select(
-      call_function("float_cosine", col("embedding"), col("embedding")).as("c"))
+      floatCosine(col("embedding"), col("embedding")).as("c"))
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("*("), s"float_cosine fell out of codegen:\n$p")
@@ -30,16 +29,15 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("native float_dot matches the HOF dot product and stays in codegen") {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir).limit(100)
     val both = emb.as("a").join(emb.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(
-        call_function("float_dot", col("a.embedding"), col("b.embedding")).as("native"),
+        floatDot(col("a.embedding"), col("b.embedding")).as("native"),
         aggregate(zip_with(col("a.embedding"), col("b.embedding"), (x, y) => x * y),
           lit(0.0), (acc, x) => acc + x).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0,
       "native float_dot must reproduce the HOF arithmetic exactly")
-    val df = emb.select(call_function("float_dot", col("embedding"), col("embedding")).as("d"))
+    val df = emb.select(floatDot(col("embedding"), col("embedding")).as("d"))
     df.collect()
     assert(df.queryExecution.executedPlan.toString.contains("*("),
       "float_dot fell out of codegen")
@@ -122,10 +120,9 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("hashed_word_grams equals xxhash64 over the composed gram strings") {
-    GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sfDir).limit(100)
     val native = docs.select(col("doc_id"),
-        explode(call_function("hashed_word_grams", col("text"), lit(3))).as("h"))
+        explode(hashedWordGrams(col("text"), 3)).as("h"))
     val composed = docs.select(col("doc_id"),
         explode(TextFunctions.wordGrams(TextFunctions.tokens(col("text")), 3)).as("g"))
       .select(col("doc_id"), xxhash64(col("g")).as("h"))
@@ -134,33 +131,29 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("minhash_signature is bit-identical to the HOF minhashFromHashes") {
-    GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sfDir).limit(100)
-    val hashes = call_function("hashed_word_grams", col("text"), lit(3))
+    val hashes = hashedWordGrams(col("text"), 3)
     val both = docs.select(
-      call_function("minhash_signature", hashes, lit(32)).as("native"),
+      minhashSignature(hashes, 32).as("native"),
       TextFunctions.minhashFromHashes(hashes, 32).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0,
       "native signature must reproduce the HOF arithmetic exactly")
   }
 
   test("minhash_signature of an empty shingle set is the sentinel [P,..]") {
-    val s2 = spark.newSession()
-    GraftFunctions.register(s2)
-    val sig = s2.sql("SELECT minhash_signature(CAST(array() AS ARRAY<BIGINT>), 4) AS s")
+    val sig = spark.newSession().range(1)
+      .select(minhashSignature(typedlit(Seq.empty[Long]), 4))
       .head.getSeq[Long](0)
     assert(sig == Seq.fill(4)(graft.plans.MinhashSignature.P))
   }
 
   test("hyperplane_sign matches the interpreted per-plane dot signs") {
-    GraftFunctions.register(spark)
     val nPlanes = 4
     val dim = 64
     val rnd = new scala.util.Random(7L)
     val planes = Seq.fill(nPlanes * dim)(rnd.nextGaussian())
     val emb = Tables.embeddings(spark, sfDir).limit(200)
-    val native = call_function(
-      "hyperplane_sign", col("embedding"), typedlit(planes), lit(nPlanes))
+    val native = hyperplaneSign(col("embedding"), planes, nPlanes)
     val nativeBits = concat((0 until nPlanes).map(p =>
       when(shiftright(native, p).bitwiseAND(1) === 1, "1").otherwise("0")): _*)
     val hofBits = TextFunctions.bind(col("embedding").cast("array<double>")) { vd =>
@@ -176,10 +169,9 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("native simhash63 is bit-identical to the explode+vote aggregate") {
-    GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sfDir)
     val scalar = docs.select(col("doc_id"),
-      call_function("simhash63", TextFunctions.tokens(col("text"))).as("sc"))
+      simhash63(TextFunctions.tokens(col("text"))).as("sc"))
     val agg = TextFunctions.simhash63Agg(docs, "doc_id", TextFunctions.tokens(col("text")))
     val joined = scalar.join(agg, "doc_id")
     assert(joined.count() == docs.count())
@@ -188,9 +180,8 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("simhash63 stays map-only and inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     val df = Tables.documents(spark, sfDir).select(
-      call_function("simhash63", TextFunctions.tokens(col("text"))).as("sh"))
+      simhash63(TextFunctions.tokens(col("text"))).as("sh"))
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), s"a per-row fingerprint must not shuffle:\n$p")
@@ -198,28 +189,69 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("binary decoders hit the NULL contract on adversarial near-Long.MaxValue args (no overflow wrap)") {
-    GraftFunctions.register(spark)
     // off/count chosen so an unguarded `start + count` wraps negative and
     // would pass a naive bounds check; the contract is NULL, never a
     // garbage range or an ArrayIndexOutOfBoundsException
-    val big = Long.MaxValue - 2L
-    val rows = spark.sql(
-      s"""SELECT
-         |  u8_moments(payload, ${big}L, 8L) AS m1,
-         |  u8_moments(payload, 2L, ${big}L) AS m2,
-         |  pcm_s16le(payload, ${big}L, 4L) AS p1,
-         |  pcm_s16le(payload, 2L, ${big}L) AS p2,
-         |  rgb24_pixels(payload, ${big}L, 2L, 2L) AS r1,
-         |  rgb24_pixels(payload, 2L, ${big}L, ${big}L) AS r2,
-         |  rgb24_pixels(payload, 2L, 4294967296L, 4294967296L) AS r3
-         |FROM (SELECT CAST('0123456789abcdef' AS BINARY) AS payload)""".stripMargin)
-      .collect()
-    val r = rows.head
+    val big = lit(Long.MaxValue - 2L)
+    val payload = col("payload")
+    val r = spark.range(1).select(lit("0123456789abcdef".getBytes("UTF-8")).as("payload"))
+      .select(
+        u8Moments(payload, big, lit(8L)),
+        u8Moments(payload, lit(2L), big),
+        pcmS16le(payload, big, lit(4L)),
+        pcmS16le(payload, lit(2L), big),
+        rgb24Pixels(payload, big, lit(2L), lit(2L)),
+        rgb24Pixels(payload, lit(2L), big, big),
+        rgb24Pixels(payload, lit(2L), lit(4294967296L), lit(4294967296L)))
+      .head
     (0 until 7).foreach(i => assert(r.isNullAt(i), s"col $i must be NULL, got ${r.get(i)}"))
     // in-range calls still decode
-    val ok = spark.sql(
-      "SELECT u8_moments(CAST('ab' AS BINARY), 1L, 2L)").head.getSeq[Long](0)
+    val ok = spark.range(1).select(u8Moments(lit("ab".getBytes("UTF-8")), lit(1L), lit(2L)))
+      .head.getSeq[Long](0)
     assert(ok == Seq(97L + 98L, 98L))
+  }
+
+  test("every typed constructor resolves on a fresh session and stays inside whole-stage codegen") {
+    // a session nothing was registered into; inputs come from range()
+    // so each projection is a real codegen stage, not a LocalTableScan,
+    // and hold no higher-order function (those never enter codegen)
+    val fresh = spark.newSession()
+    val base = fresh.range(64).select(
+      array((0 until 8).map(j => (col("id") - j * 5).cast("float")): _*).as("f"),
+      array((0 until 8).map(j => (col("id") * j).cast("double")): _*).as("d"),
+      concat_ws(" ", (0 until 6).map(j => (col("id") % (j + 2)).cast("string")): _*).as("text"),
+      encode(lpad(col("id").cast("string"), 32, "x"), "UTF-8").as("b"))
+    val planes = Seq.tabulate(16)(i => i - 7.5)
+    val cases = Seq(
+      "float_cosine" -> floatCosine(col("f"), col("f")),
+      "float_dot" -> floatDot(col("f"), col("f")),
+      "double_dot" -> doubleDot(col("d"), col("d")),
+      "hashed_word_grams" -> hashedWordGrams(col("text"), 3),
+      "minhash_signature" -> minhashSignature(hashedWordGrams(col("text"), 3), 4),
+      "hyperplane_sign" -> hyperplaneSign(col("f"), planes, 2),
+      "simhash63" -> simhash63(split(col("text"), " ")),
+      "pcm_s16le" -> pcmS16le(col("b"), lit(1L), lit(4L)),
+      "rgb24_pixels" -> rgb24Pixels(col("b"), lit(1L), lit(2L), lit(2L)),
+      "u8_moments" -> u8Moments(col("b"), lit(1L), lit(8L)))
+    def inCodegen(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      assert(p.linesIterator.exists(l => l.contains("*(") && l.contains(name)),
+        s"$name fell out of codegen:\n$p")
+    }
+    cases.foreach { case (name, c) =>
+      val df = base.select(c.as("out"))
+      assert(df.collect().forall(!_.isNullAt(0)), s"$name returned NULL")
+      inCodegen(df, name)
+    }
+    // the Bloom pair: the filter runs in codegen against the sketch's
+    // scalar subquery (the aggregate itself is an object aggregate)
+    val keys = fresh.range(64).toDF("k")
+    val kept = keys.filter(mightContain(
+      keys.agg(bloomFilterAgg(xxhash64(col("k")), 64L, 2048L)).scalar(), xxhash64(col("k"))))
+    assert(kept.collect().length == 64)
+    inCodegen(kept, "might_contain")
+    (cases.map(_._1) ++ Seq("bloom_filter_agg", "might_contain")).foreach(name =>
+      assert(!fresh.catalog.functionExists(name), s"$name was registered in the session"))
   }
 
   test("registered function resolves from SQL text") {

@@ -6,11 +6,36 @@ import graft.operators.Relational
 class RelationalSpec extends SparkTestBase {
 
   test("every registered query runs and respects its declared contract") {
+    // a session nothing was registered into, holding a caller's own
+    // `orders` view: each entry plans on its own and leaves the
+    // session's temp views exactly as it found them
+    val fresh = spark.newSession()
+    fresh.range(3).createOrReplaceTempView("orders")
+    val views = tempViews(fresh)
     (Relational.all ++ graft.operators.Analytics.all).foreach { q =>
-      val df = q.run(spark, sfDir)
+      val df = q.run(fresh, sfDir)
       assert(df.columns.nonEmpty, s"${q.name}: no columns")
       assert(df.count() >= 0, s"${q.name}: failed to execute")
+      assert(tempViews(fresh) == views, s"${q.name} changed the session's temp views")
     }
+    assert(fresh.table("orders").count() == 3, "the caller's own view was replaced")
+  }
+
+  test("Tables.sql binds tables in CTE bodies and subqueries; a CTE named like a table wins") {
+    val fresh = spark.newSession()
+    val urgent = Tables.orders(spark, sfDir).filter(col("o_orderpriority") === "1-URGENT")
+    val expected = Tables.lineitem(spark, sfDir)
+      .join(urgent, col("l_orderkey") === col("o_orderkey"), "left_semi").count()
+    val got = Tables.sql(fresh, sfDir,
+      """WITH li AS (SELECT l_orderkey FROM lineitem
+        |            WHERE l_orderkey IN (SELECT o_orderkey FROM orders
+        |                                 WHERE o_orderpriority = '1-URGENT'))
+        |SELECT count(*) FROM li""".stripMargin).head.getLong(0)
+    assert(got == expected)
+    val shadowed = Tables.sql(fresh, sfDir,
+      "WITH orders AS (SELECT 1 AS o_orderkey) SELECT count(*) FROM orders").head.getLong(0)
+    assert(shadowed == 1)
+    assert(tempViews(fresh).isEmpty)
   }
 
   test("q01_agg matches hand-computed aggregate") {

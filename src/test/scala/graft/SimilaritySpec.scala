@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.plans.GraftFunctions.floatCosine
 
 class SimilaritySpec extends SparkTestBase {
 
@@ -178,7 +179,7 @@ class SimilaritySpec extends SparkTestBase {
       .join(emb.select(col("vec_id").as("cid"), col("embedding").as("ce")),
         col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        call_function("float_cosine", col("qe"), col("ce")).as("sim"))
+        floatCosine(col("qe"), col("ce")).as("sim"))
       .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
       .select(col("qid"), col("cid"), round(col("sim"), 6).as("s")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

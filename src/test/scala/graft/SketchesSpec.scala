@@ -31,10 +31,9 @@ class SketchesSpec extends SparkTestBase {
   }
 
   test("two concurrent bloomPrune calls with different builds don't clobber each other") {
-    // per-call unique view names: interleaved construction THEN
-    // interleaved execution — with fixed global view names the second
-    // createOrReplaceTempView would silently swap the first call's
-    // build side
+    // interleaved construction THEN interleaved execution — a plan
+    // that reached its build side through a session-global name would
+    // let the second call silently swap the first call's build side
     val evens = spark.range(0, 2000, 2).toDF("k")
     val odds = spark.range(1, 2000, 2).toDF("k")
     val probe = spark.range(0, 2000).toDF("j")
@@ -52,6 +51,16 @@ class SketchesSpec extends SparkTestBase {
     // impossible if the builds were swapped/clobbered (then 100% pass)
     assert(pe.count(_ % 2 == 1) < 200, s"even-call fp tail ${pe.count(_ % 2 == 1)}")
     assert(po.count(_ % 2 == 0) < 200, s"odd-call fp tail ${po.count(_ % 2 == 0)}")
+  }
+
+  test("bf01 leaves the session catalog unchanged") {
+    val fresh = spark.newSession()
+    def functions = fresh.catalog.listFunctions().collect().map(_.name).toSet
+    val (views, before) = (tempViews(fresh), functions)
+    assert(Sketches.bf01.run(fresh, sfDir).collect().nonEmpty)
+    assert(tempViews(fresh) == views, "bf01 left a temp view behind")
+    val added = functions -- before
+    assert(added.isEmpty, s"bf01 registered $added")
   }
 
   test("cmsEstimates never underestimates and respects the eps bound") {

@@ -32,6 +32,10 @@ abstract class SparkTestBase extends AnyFunSuite {
   def spark: SparkSession = TestSpark.spark
   def sfDir: String = TestSpark.sfDir
 
+  /** The temp views registered in session `s`. */
+  def tempViews(s: SparkSession): Set[String] =
+    s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
   /** Jobs this thread starts while running `action`: the listener counts
     * only jobs carrying a local property set on this thread, so jobs of
     * other threads and suites do not count. */

@@ -13,6 +13,9 @@ import java.nio.file.{Files, Paths}
   *
   *   tools/run.sh graft.PlanDump <sfDir> <outDir> <query>[,<query>...]
   *
+  * A name suffixed `:prod` (`r02_als:prod`) dumps the entry's production
+  * twin from [[SparkEntry.prodQueries]] to `<outDir>/<name>_prod.txt`.
+  *
   * Notes: this dumps the plan of the DataFrame the registered entry
   * RETURNS. Driver-iterated trainers do their heavy work in actions
   * inside the entry (the returned frame is often a small certificate
@@ -24,7 +27,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {
       System.err.println(
-        "usage: graft.PlanDump <sfDir> <outDir> <query>[,<query>...]")
+        "usage: graft.PlanDump <sfDir> <outDir> <query>[:prod][,<query>[:prod]...]")
       sys.exit(2)
     }
     val (sfDir, outDir) = (args(0), args(1))
@@ -54,7 +57,11 @@ object PlanDump {
     for (n <- names) {
       try {
         val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)
-        val df = SparkEntry.queries(n)(spark, sfDir)
+        val (fn, file) = n.split(":") match {
+          case Array(q, "prod") => (SparkEntry.prodQueries(q), s"${q}_prod")
+          case _ => (SparkEntry.queries(n), n)
+        }
+        val df = fn(spark, sfDir)
         // run the frame's OWN QueryExecution (a write would plan a fresh
         // one), so the dump is AQE's final plan: the plan that ran, not
         // the initial plan with exchanges a re-plan may have dropped
@@ -68,7 +75,7 @@ object PlanDump {
         // listener events are async; block until the bus has delivered
         // everything (deterministic, unlike a fixed sleep — r16 advisor)
         org.apache.spark.sql.graftshim.GraftDatasetFactory.drainListenerBus(spark)
-        Files.writeString(Paths.get(s"$outDir/$n.txt"),
+        Files.writeString(Paths.get(s"$outDir/$file.txt"),
           plan.toString + s"\n\n# executed end-to-end: jobs=${jobs.get - j0} " +
             s"stages=${stages.get - s0} tasks=${tasks.get - t0}\n")
         System.err.println(s"[plandump] wrote $n jobs=${jobs.get - j0} stages=${stages.get - s0}")

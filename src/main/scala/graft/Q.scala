@@ -8,6 +8,13 @@ import graft.plans.GraftStrategies
   * parquet tables. Column names and row order must match between the two
   * (the driver sorts columns by name and hash-compares values).
   *
+  * `prod`, set only by [[Q.audited]], is the PRODUCTION twin: the same
+  * body run with `audit = false`, so its oracle certificate (exact
+  * recounts, in-plan re-derivations, per-iteration measured claims) is
+  * left out and it serves the operator's own output instead. The
+  * benchmark reports it as what the operator costs when it is trusted
+  * rather than audited.
+  *
   * The factories wrap `run` and `prod` so that every entry plans with
   * graft's strategies ([[GraftStrategies]]) whichever session calls it.
   */
@@ -15,17 +22,7 @@ final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    prod: Option[(SparkSession, String) => DataFrame] = None) {
-
-  /** Attach the PRODUCTION-ONLY plan: the same operator with its oracle
-    * certificate columns (exact recounts, in-plan re-derivations,
-    * per-iteration measured claims) left out. `run` stays the gated
-    * entry; `prod` exists so the benchmark can report what the operator
-    * costs when it is trusted rather than audited. Only meaningful for
-    * entries whose certificates add DISTRIBUTED work — map-only flag
-    * columns cost nothing and need no twin. */
-  def withProd(p: (SparkSession, String) => DataFrame): Q = copy(prod = Some(Q.planned(p)))
-}
+    prod: Option[(SparkSession, String) => DataFrame] = None)
 
 object Q {
   def sql(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): Q =
@@ -35,6 +32,17 @@ object Q {
     sql(name, text)((spark, dir) => Tables.sql(spark, dir, text))
   def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, planned(run), None)
+
+  /** A certificate-carrying entry written once: `body(spark, dir, audit)`
+    * shares inputs, training and serving between its two runs, and only
+    * the certificate branches on `audit`. `run` is the body with
+    * `audit = true` (the oracle-gated entry); `prod` is the same body
+    * with `audit = false`, which starts none of the certificate's jobs.
+    * Only meaningful for entries whose certificates add DISTRIBUTED
+    * work — map-only flag columns cost nothing and need no twin. */
+  def audited(name: String, oracle: String)(
+      body: (SparkSession, String, Boolean) => DataFrame): Q =
+    Q(name, planned(body(_, _, true)), Some(oracle), Some(planned(body(_, _, false))))
 
   private def planned(
       run: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =

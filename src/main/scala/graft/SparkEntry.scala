@@ -42,12 +42,13 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
-  /** Production-only twins for the certificate-carrying entries: the
-    * same operator WITHOUT its oracle-certificate columns (exact
-    * recounts, in-plan re-derivations, per-iteration measured claims).
-    * Bench times these alongside the gated plans and reports them as
-    * `t_prod`, so throughput can be read against production plans
-    * directly. */
+  /** Production twins of the certificate-carrying entries (the 23
+    * built by [[Q.audited]]): each is its entry's own body run with
+    * `audit = false`, so the oracle certificate (exact recounts, in-plan
+    * re-derivations, per-iteration measured claims) is left out and the
+    * operator's serving output comes back instead. Bench times these
+    * alongside the gated plans and reports them as `t_prod`, so
+    * throughput can be read against production plans directly. */
   def prodQueries: Map[String, (SparkSession, String) => DataFrame] =
     registry.flatMap(q => q.prod.map(q.name -> _)).toMap
 }

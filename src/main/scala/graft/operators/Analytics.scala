@@ -264,7 +264,7 @@ object Analytics {
     * the oracle asserts the bound claims as literal TRUE — the exact
     * side exists only to score the sketch; the approx path is the
     * production surface. AnalyticsSpec additionally bounds raw error. */
-  val q41 = Q.sql(
+  val q41 = Q.audited(
     "q41_approx_percentiles",
     """SELECT o_orderpriority,
       |  round(quantile_cont(o_totalprice, 0.5), 2) AS median_price,
@@ -272,28 +272,24 @@ object Analytics {
       |  TRUE AS median_in_bound, TRUE AS p90_in_bound
       |FROM orders
       |GROUP BY o_orderpriority
-      |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
-    Tables.orders(s, dir)
-      .groupBy("o_orderpriority")
+      |ORDER BY o_orderpriority""".stripMargin) { (s, dir, audit) =>
+    val sketch = (p: Double) => expr(s"approx_percentile(o_totalprice, $p, 10000)")
+    val byPriority = Tables.orders(s, dir).groupBy("o_orderpriority")
+    // the twin serves the fixed-size percentile sketch alone, with no
+    // exact value-buffering percentile to score it
+    if (!audit)
+      byPriority.agg(sketch(0.5).as("median_price"), sketch(0.9).as("p90_price"))
+        .orderBy("o_orderpriority")
+    else byPriority
       .agg(
         round(expr("percentile(o_totalprice, 0.5)"), 2).as("median_price"),
         round(expr("percentile(o_totalprice, 0.9)"), 2).as("p90_price"),
-        expr("approx_percentile(o_totalprice, 0.5, 10000)").as("am"),
-        expr("approx_percentile(o_totalprice, 0.9, 10000)").as("a9"))
+        sketch(0.5).as("am"), sketch(0.9).as("a9"))
       .select(col("o_orderpriority"), col("median_price"), col("p90_price"),
         (abs(col("am") - col("median_price")) <= col("median_price") * 0.03)
           .as("median_in_bound"),
         (abs(col("a9") - col("p90_price")) <= col("p90_price") * 0.03)
           .as("p90_in_bound"))
-      .orderBy("o_orderpriority")
-  }.withProd { (s, dir) =>
-    // production path: the fixed-size percentile sketch alone — no
-    // exact value-buffering percentile to score it
-    Tables.orders(s, dir)
-      .groupBy("o_orderpriority")
-      .agg(
-        expr("approx_percentile(o_totalprice, 0.5, 10000)").as("median_price"),
-        expr("approx_percentile(o_totalprice, 0.9, 10000)").as("p90_price"))
       .orderBy("o_orderpriority")
   }
 
@@ -386,31 +382,29 @@ object Analytics {
     * the oracle asserts that claim as a literal TRUE — a sketch that
     * drifts out of bound flips the flag and fails the hash. The
     * ScalaTest spec additionally bounds the raw relative error. */
-  val q30 = Q.sql(
+  val q30 = Q.audited(
     "q30_approx_distinct",
     """SELECT l_returnflag, count(DISTINCT l_orderkey) AS exact_ord,
       |  TRUE AS within_bound
-      |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    // approx and exact run as separate aggregations then join: mixing a
-    // distinct and a non-distinct aggregate in one agg forces an Expand
-    // (row duplication) that multiplies the HLL update cost
+      |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir, audit) =>
     val li = Tables.lineitem(s, dir)
     val approx = li.groupBy("l_returnflag")
       .agg(approx_count_distinct("l_orderkey", 0.02).as("approx_ord"))
-    val exact = li.groupBy("l_returnflag")
-      .agg(countDistinct("l_orderkey").as("exact_ord"))
-    approx.join(exact, "l_returnflag")
-      .select(col("l_returnflag"), col("exact_ord"),
-        (abs(col("approx_ord") - col("exact_ord")) <=
-          col("exact_ord") * 0.05).as("within_bound"))
-      .orderBy("l_returnflag")
-  }.withProd { (s, dir) =>
-    // production path: the HLL sketch alone — no exact countDistinct
-    // scoring join
-    Tables.lineitem(s, dir)
-      .groupBy("l_returnflag")
-      .agg(approx_count_distinct("l_orderkey", 0.02).as("approx_ord"))
-      .orderBy("l_returnflag")
+    // the twin serves the HLL sketch alone, with no exact countDistinct
+    // scoring join. Audited, approx and exact run as separate
+    // aggregations then join: mixing a distinct and a non-distinct
+    // aggregate in one agg forces an Expand (row duplication) that
+    // multiplies the HLL update cost
+    if (!audit) approx.orderBy("l_returnflag")
+    else {
+      val exact = li.groupBy("l_returnflag")
+        .agg(countDistinct("l_orderkey").as("exact_ord"))
+      approx.join(exact, "l_returnflag")
+        .select(col("l_returnflag"), col("exact_ord"),
+          (abs(col("approx_ord") - col("exact_ord")) <=
+            col("exact_ord") * 0.05).as("within_bound"))
+        .orderBy("l_returnflag")
+    }
   }
 
   /** GROUPING SETS — the explicit-set surface distinct from q15's ROLLUP

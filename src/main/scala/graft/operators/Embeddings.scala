@@ -168,37 +168,38 @@ object Embeddings {
     * noise); DuckDB asserts the claim as literal TRUE per vec_id.
     * Cluster recovery on planted data, determinism, and the assignment
     * surface itself stay pinned in EmbeddingsSpec. */
-  val d08 = Q.sql(
+  val d08 = Q.audited(
     "d08_kmeans",
     """SELECT vec_id, TRUE AS assigned_argmax
-      |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir) =>
+      |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir, audit) =>
     val emb = Tables.embeddings(s, dir)
-    val (centroids, _) = kmeansModel(emb, k = 8, iters = 10)
-    def hofCos(c: Array[Float]): Column = {
-      val nc = math.sqrt(c.map(v => v.toDouble * v).sum)
-      val dot = aggregate(
-        zip_with(col("embedding"), typedlit(c.toSeq), (x, y) => (x * y).cast("double")),
-        lit(0.0d), _ + _)
-      val nx = sqrt(aggregate(
-        transform(col("embedding"), x => (x * x).cast("double")), lit(0.0d), _ + _))
-      when(nx === 0.0 || lit(nc) === 0.0, lit(0.0)).otherwise(dot / (nx * lit(nc)))
-    }
-    val sims = array(centroids.toIndexedSeq.map(hofCos): _*)
-    // same map stage the production assignment runs: argmax via the
-    // native float_cosine greatest-struct, certified against the HOF
-    // sims — STAGED as an attribute so the k HOF cosines run once per
-    // row, not once per reference (r15, the t10 lesson)
-    withCluster(emb.select(col("vec_id"), col("embedding")), centroids)
-      .select(col("vec_id"), col("cluster"), sims.as("sims"))
-      .select(col("vec_id"),
-        (element_at(col("sims"), col("cluster") + 1) >=
-          array_max(col("sims")) - lit(1e-6))
-          .as("assigned_argmax"))
-      .orderBy("vec_id")
-  }.withProd { (s, dir) =>
-    // production path: train + assign — no HOF re-derivation scoring
+    val (centroids, assigned) = kmeansModel(emb, k = 8, iters = 10)
+    // the twin trains and assigns, with no HOF re-derivation scoring
     // each assignment against an independent cosine formulation
-    kmeansAssign(Tables.embeddings(s, dir), k = 8, iters = 10)
+    if (!audit) assigned
+    else {
+      def hofCos(c: Array[Float]): Column = {
+        val nc = math.sqrt(c.map(v => v.toDouble * v).sum)
+        val dot = aggregate(
+          zip_with(col("embedding"), typedlit(c.toSeq), (x, y) => (x * y).cast("double")),
+          lit(0.0d), _ + _)
+        val nx = sqrt(aggregate(
+          transform(col("embedding"), x => (x * x).cast("double")), lit(0.0d), _ + _))
+        when(nx === 0.0 || lit(nc) === 0.0, lit(0.0)).otherwise(dot / (nx * lit(nc)))
+      }
+      val sims = array(centroids.toIndexedSeq.map(hofCos): _*)
+      // same map stage the production assignment runs: argmax via the
+      // native float_cosine greatest-struct, certified against the HOF
+      // sims — STAGED as an attribute so the k HOF cosines run once per
+      // row, not once per reference (r15, the t10 lesson)
+      withCluster(emb.select(col("vec_id"), col("embedding")), centroids)
+        .select(col("vec_id"), col("cluster"), sims.as("sims"))
+        .select(col("vec_id"),
+          (element_at(col("sims"), col("cluster") + 1) >=
+            array_max(col("sims")) - lit(1e-6))
+            .as("assigned_argmax"))
+        .orderBy("vec_id")
+    }
   }
 
   /** Gaussian mixture EM (reference mllib/src/main/scala/org/apache/
@@ -223,13 +224,20 @@ object Embeddings {
   def gmmAssign(emb: DataFrame, k: Int, iters: Int): DataFrame = {
     val base = emb.select(col("vec_id"), col("embedding")).localCheckpoint()
     val (means, vars, weights) = gmmFit(base, k, iters)
-    val best = (0 until k).map(j =>
-      struct(col("rs")(j).as("r"), lit(-j).as("nc")))
-    gmmRespFrame(base, means, vars, weights)
-      .select(col("vec_id"), greatest(best: _*).as("b"))
+    gmmHardAssign(gmmRespFrame(base, means, vars, weights), k)
+  }
+
+  /** The winning component of a responsibilities row `rs` as a struct
+    * (r = its responsibility, nc = −index, so `greatest` breaks ties to
+    * the smaller component). */
+  private def gmmBest(k: Int): Column =
+    greatest((0 until k).map(j => struct(col("rs")(j).as("r"), lit(-j).as("nc"))): _*)
+
+  /** (vec_id, cluster, resp) from a [[gmmRespFrame]] output. */
+  private def gmmHardAssign(resp: DataFrame, k: Int): DataFrame =
+    resp.select(col("vec_id"), gmmBest(k).as("b"))
       .select(col("vec_id"), (-col("b.nc")).as("cluster"),
         round(col("b.r"), 6).as("resp"))
-  }
 
   /** E-step responsibilities against the model as plan LITERALS, via
     * the EXPANDED quadratic form: Σ(x−μ)²/v = Σx²·(1/v) − 2Σx·(μ/v) +
@@ -488,12 +496,7 @@ object Embeddings {
   def gmmFullAssign(emb: DataFrame, k: Int, iters: Int): DataFrame = {
     val base = emb.select(col("vec_id"), col("embedding")).localCheckpoint()
     val (means, covs, weights) = gmmFullFit(base, k, iters)
-    val best = (0 until k).map(j =>
-      struct(col("rs")(j).as("r"), lit(-j).as("nc")))
-    gmmFullRespFrame(base, means, covs, weights)
-      .select(col("vec_id"), greatest(best: _*).as("b"))
-      .select(col("vec_id"), (-col("b.nc")).as("cluster"),
-        round(col("b.r"), 6).as("resp"))
+    gmmHardAssign(gmmFullRespFrame(base, means, covs, weights), k)
   }
 
   /** k=8 diagonal-covariance GMM over the embeddings table. The EM fit
@@ -512,47 +515,46 @@ object Embeddings {
     * per vec_id. Planted unequal-spread blob recovery with calibrated
     * weights, and the (cluster, resp) assignment surface itself, stay
     * pinned in EmbeddingsSpec via [[gmmAssign]]. */
-  val gm01 = Q.sql(
+  val gm01 = Q.audited(
     "gm01_gaussian_mixture",
     """SELECT vec_id, TRUE AS argmax_vs_hof, TRUE AS resp_floor
-      |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir) =>
+      |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir, audit) =>
     val k = 8
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding")).localCheckpoint()
     val (means, vars, weights) = gmmFit(base, k, iters = 6)
-    def hofLogd(j: Int): Column = {
-      val mu = typedlit(means(j).toSeq)
-      val vv = typedlit(vars(j).toSeq)
-      val q = aggregate(
-        zip_with(
-          zip_with(col("embedding"), mu, (x, m) => x.cast("double") - m),
-          vv, (d, v) => d * d / v),
-        lit(0.0d), _ + _)
-      lit(math.log(weights(j)) - 0.5 * vars(j).map(math.log).sum) -
-        lit(0.5) * q
-    }
-    val hof = array((0 until k).map(hofLogd): _*)
-    val best = (0 until k).map(j =>
-      struct(col("rs")(j).as("r"), lit(-j).as("nc")))
-    gmmRespFrame(base, means, vars, weights)
-      .select(col("vec_id"), greatest(best: _*).as("b"), hof.as("hl"))
-      .select(col("vec_id"),
-        // tolerance scales with the log-density magnitude: the float
-        // path's absolute error is relative to the quadratic-form terms
-        // (up to ~1e-7·|logd| when a variance sits at its 1e-6 floor),
-        // so a fixed 1e-3 band would flip on legitimately huge
-        // densities while a disagreement beyond 1e-3 + 1e-6·|max|
-        // is a genuine argmax bug
-        (element_at(col("hl"), -col("b.nc") + 1) >=
-          array_max(col("hl")) -
-            (lit(1e-3) + lit(1e-6) * abs(array_max(col("hl")))))
-          .as("argmax_vs_hof"),
-        (col("b.r") >= lit(1.0 / k - 1e-6)).as("resp_floor"))
-      .orderBy("vec_id")
-  }.withProd { (s, dir) =>
-    // production path: EM fit + hard assignment — no independent HOF
+    val resp = gmmRespFrame(base, means, vars, weights)
+    // the twin is the EM fit + hard assignment, with no independent HOF
     // log-density re-derivation scoring the argmax
-    gmmAssign(Tables.embeddings(s, dir), k = 8, iters = 6)
+    if (!audit) gmmHardAssign(resp, k)
+    else {
+      def hofLogd(j: Int): Column = {
+        val mu = typedlit(means(j).toSeq)
+        val vv = typedlit(vars(j).toSeq)
+        val q = aggregate(
+          zip_with(
+            zip_with(col("embedding"), mu, (x, m) => x.cast("double") - m),
+            vv, (d, v) => d * d / v),
+          lit(0.0d), _ + _)
+        lit(math.log(weights(j)) - 0.5 * vars(j).map(math.log).sum) -
+          lit(0.5) * q
+      }
+      val hof = array((0 until k).map(hofLogd): _*)
+      resp.select(col("vec_id"), gmmBest(k).as("b"), hof.as("hl"))
+        .select(col("vec_id"),
+          // tolerance scales with the log-density magnitude: the float
+          // path's absolute error is relative to the quadratic-form terms
+          // (up to ~1e-7·|logd| when a variance sits at its 1e-6 floor),
+          // so a fixed 1e-3 band would flip on legitimately huge
+          // densities while a disagreement beyond 1e-3 + 1e-6·|max|
+          // is a genuine argmax bug
+          (element_at(col("hl"), -col("b.nc") + 1) >=
+            array_max(col("hl")) -
+              (lit(1e-3) + lit(1e-6) * abs(array_max(col("hl")))))
+            .as("argmax_vs_hof"),
+          (col("b.r") >= lit(1.0 / k - 1e-6)).as("resp_floor"))
+        .orderBy("vec_id")
+    }
   }
 
   /** L2 normalization of the embedding table (MLlib feature/Normalizer

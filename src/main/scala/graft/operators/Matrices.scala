@@ -183,21 +183,6 @@ object Matrices {
       .orderBy("vec_id")
   }
 
-  /** Exact pairwise cosine similarity between the embedding matrix's
-    * COLUMNS (reference RowMatrix.scala:1 `columnSimilarities` /
-    * `computeColumnSimilarities`, r11). One distributed pass builds the
-    * uncentered upper-triangle Gramian with EXACT decimal accumulation
-    * (d14's rule — order-independent, bit-identical at any parallelism),
-    * then cos(i,j) = s_ij / (√s_ii·√s_jj) derives from the bounded
-    * dim²/2 entries with identical scalar IEEE ops on both engines
-    * (sqrt is correctly rounded, so it IS bit-portable — unlike log).
-    *
-    * Scale: the shuffle carries only dim²/2 partial sums per partition
-    * regardless of row count — at 100 TB this is one map-side-combined
-    * pass. The reference's DIMSUM sampling exists for matrices with
-    * MILLIONS of columns (quadratic in columns, not rows); at
-    * embedding-width columns the exact Gramian is both cheaper and
-    * deterministic, so that is the registered path. */
   /** cs01's distributed upper-triangle Gramian, collected at dim²/2
     * cells. `exactDecimal` = the oracle-replayable order-independent
     * decimal accumulation (d14's rule — the REGISTERED path);
@@ -235,7 +220,22 @@ object Matrices {
       .toDF("i", "j", "cos_sim").orderBy("i", "j")
   }
 
-  val cs01: Q = Q.sql(
+  /** Exact pairwise cosine similarity between the embedding matrix's
+    * COLUMNS (reference RowMatrix.scala:1 `columnSimilarities` /
+    * `computeColumnSimilarities`, r11). One distributed pass builds the
+    * uncentered upper-triangle Gramian with EXACT decimal accumulation
+    * (d14's rule — order-independent, bit-identical at any parallelism),
+    * then cos(i,j) = s_ij / (√s_ii·√s_jj) derives from the bounded
+    * dim²/2 entries with identical scalar IEEE ops on both engines
+    * (sqrt is correctly rounded, so it IS bit-portable — unlike log).
+    *
+    * Scale: the shuffle carries only dim²/2 partial sums per partition
+    * regardless of row count — at 100 TB this is one map-side-combined
+    * pass. The reference's DIMSUM sampling exists for matrices with
+    * MILLIONS of columns (quadratic in columns, not rows); at
+    * embedding-width columns the exact Gramian is both cheaper and
+    * deterministic, so that is the registered path. */
+  val cs01: Q = Q.audited(
     "cs01_column_similarities",
     """WITH x AS (
       |  SELECT e.vec_id, i AS p, CAST(e.embedding[i] AS DOUBLE) AS x
@@ -250,7 +250,7 @@ object Matrices {
       |  round(g.s / (da.nrm * db.nrm), 6) + 0.0 AS cos_sim
       |FROM g JOIN d da ON g.i = da.p JOIN d db ON g.j = db.p
       |WHERE g.i < g.j
-      |ORDER BY i, j""".stripMargin) { (s, dir) =>
+      |ORDER BY i, j""".stripMargin) { (s, dir, audit) =>
     // join-free Gramian: each row expands to its own dim(dim+1)/2 upper-
     // triangle products via nested posexplode (covarianceUpper's shape) —
     // one map + partial agg, no shuffle of the exploded table.
@@ -259,15 +259,11 @@ object Matrices {
     // half-even in DuckDB; a halfway product at sf0.1 shifts the exact
     // sum ~1e-13 - far below the emit precision. Spark-side decimal
     // HALF_UP rounding replicated driver-side via BigDecimal.
+    // The twin accumulates in plain DOUBLE: the decimal path exists so
+    // the oracle can replay the sum order-independently; production
+    // trusts IEEE summation.
     cosineRows(s,
-      gramianUpper(Tables.embeddings(s, dir), 64, exactDecimal = true), 64)
-  }.withProd { (s, dir) =>
-    // production twin: the same one-pass Gramian with plain DOUBLE
-    // accumulation — no per-product decimal conversion in the hot loop
-    // (the decimal path exists so the oracle can replay the sum
-    // order-independently; production trusts IEEE summation)
-    cosineRows(s,
-      gramianUpper(Tables.embeddings(s, dir), 64, exactDecimal = false), 64)
+      gramianUpper(Tables.embeddings(s, dir), 64, exactDecimal = audit), 64)
   }
 
   /** DIMSUM sampled column similarities (reference RowMatrix.scala:497
@@ -362,7 +358,7 @@ object Matrices {
     val foldSeed = DuckXxhash.hashLong(42L, 42L)
     val (c1, f1) = DuckXxhash.hashLongCtes("inp", foldSeed, "s1")
     val (c2, f2) = DuckXxhash.hashLongCtesExpr("mid", "hseed", "s2")
-    Q.sql(
+    Q.audited(
       "cs02_dimsum",
       s"""WITH raw AS MATERIALIZED (
         |  SELECT vec_id, (i - 1) AS ci, CAST(embedding[i] AS DOUBLE) AS x
@@ -398,15 +394,11 @@ object Matrices {
         |  FROM samp a JOIN samp b ON a.vec_id = b.vec_id AND b.ci > a.ci
         |  GROUP BY 1, 2)
         |SELECT i, j, round(s, 6) + 0.0 AS sim_est
-        |FROM est ORDER BY i, j""".stripMargin) { (s, dir) =>
+        |FROM est ORDER BY i, j""".stripMargin) { (s, dir, audit) =>
+      // the twin: identical sampling, plain DOUBLE accumulation (the
+      // decimal sum is oracle-imposed order-independence)
       dimsumColumnSimilarities(Tables.embeddings(s, dir), "vec_id",
-        dim = 64, threshold = 0.5, seed = 42L)
-        .orderBy("i", "j")
-    }.withProd { (s, dir) =>
-      // production twin: identical sampling, plain DOUBLE accumulation
-      // (the decimal sum is oracle-imposed order-independence)
-      dimsumColumnSimilarities(Tables.embeddings(s, dir), "vec_id",
-        dim = 64, threshold = 0.5, seed = 42L, exactDecimal = false)
+        dim = 64, threshold = 0.5, seed = 42L, exactDecimal = audit)
         .orderBy("i", "j")
     }
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{LoopState, Q, Tables}
 import graft.plans.GraftFunctions.doubleDot
@@ -202,6 +202,44 @@ object Recommender {
       userX, itemF.select(col("i"), col("q"), col("bi")), mu)
   }
 
+  /** The deterministic 200-smallest-customer co-purchase slice r01–r05
+    * train on (scale-invariant cost, t05's registered-entry rule): one
+    * (u, i, r) row per (customer, part) from orders⋈lineitem, `r` the
+    * given aggregate over the pair's lines, checkpointed once. With
+    * `moments` it also carries the exact rating moments r_sum
+    * (Σ l_quantity) and n (count) that [[sliceOracle]] re-derives. */
+  private def ratingSlice(s: SparkSession, dir: String, rating: Column,
+                          moments: Boolean): DataFrame = {
+    val exact =
+      if (moments) Seq(sum("l_quantity").cast("double").as("r_sum"), count(lit(1)).as("n"))
+      else Nil
+    Tables.orders(s, dir)
+      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
+      .filter(col("o_custkey") < 200)
+      .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
+      .agg(rating.as("r"), exact: _*)
+      .localCheckpoint()
+  }
+
+  /** Oracle of r01–r04: [[ratingSlice]]'s (u, i) edge set and exact
+    * rating moments row-for-row, plus the entry's certificate `flags`
+    * asserted as literal TRUE. */
+  private def sliceOracle(flags: String): String =
+    s"""WITH r AS (
+      |  SELECT o_custkey AS u, l_partkey AS i,
+      |         CAST(sum(l_quantity) AS DOUBLE) AS r_sum, count(*) AS n
+      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+      |  WHERE o_custkey < 200
+      |  GROUP BY 1, 2)
+      |SELECT u, i, r_sum, n, $flags
+      |FROM r ORDER BY u, i""".stripMargin
+
+  /** The descent certificate over a measured objective sequence: every
+    * step non-increasing up to a relative 1e-9 (summation-order noise)
+    * plus the absolute `slack`. */
+  private def monotone(js: Seq[Double], slack: Double): Boolean =
+    js.nonEmpty && js.sliding(2).forall(p => p.length < 2 || p(1) <= p(0) * (1 + 1e-9) + slack)
+
   /** Registered pass: co-purchase ratings (customer, part, mean
     * quantity) from orders⋈lineitem, trained on the deterministic
     * 200-smallest-customer slice so cost is scale-invariant (t05's
@@ -221,42 +259,17 @@ object Recommender {
     * SSE 0.49e6 vs the mean baseline's 1.69e6). RecommenderSpec pins
     * planted-structure recovery, seeded determinism, and the
     * prediction surface. */
-  val r01 = Q.sql(
-    "r01_svdpp",
-    """WITH r AS (
-      |  SELECT o_custkey AS u, l_partkey AS i,
-      |         CAST(sum(l_quantity) AS DOUBLE) AS r_sum, count(*) AS n
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE o_custkey < 200
-      |  GROUP BY 1, 2)
-      |SELECT u, i, r_sum, n, TRUE AS sse_monotone
-      |FROM r ORDER BY u, i""".stripMargin) { (s, dir) =>
-    val pairs = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("o_custkey") < 200)
-      .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
-      .agg(avg("l_quantity").as("r"),
-        sum("l_quantity").cast("double").as("r_sum"),
-        count(lit(1)).as("n"))
-      .localCheckpoint()
-    val (_, js) = svdPlusPlusTracked(pairs.select("u", "i", "r"),
-      dim = 8, iters = 5, lr = 0.02)
-    val monotone = js.nonEmpty &&
-      js.sliding(2).forall(p => p.length < 2 || p(1) <= p(0) * (1 + 1e-9))
-    pairs
+  val r01 = Q.audited("r01_svdpp", sliceOracle("TRUE AS sse_monotone")) { (s, dir, audit) =>
+    val pairs = ratingSlice(s, dir, avg("l_quantity"), moments = audit)
+    // the twin trains with SSE tracking OFF (no per-iteration
+    // measured-claim aggregate) and emits the scored predictions
+    val (preds, js) = svdPlusPlusTracked(pairs.select("u", "i", "r"),
+      dim = 8, iters = 5, lr = 0.02, track = audit)
+    if (!audit) preds
+    else pairs
       .select(col("u"), col("i"), col("r_sum"), col("n"),
-        lit(monotone).as("sse_monotone"))
+        lit(monotone(js, slack = 0.0)).as("sse_monotone"))
       .orderBy("u", "i")
-  }.withProd { (s, dir) =>
-    // production path: train with SSE tracking OFF (no per-iteration
-    // measured-claim aggregate) and emit the scored predictions
-    val pairs = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("o_custkey") < 200)
-      .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
-      .agg(avg("l_quantity").as("r"))
-      .localCheckpoint()
-    svdPlusPlus(pairs, dim = 8, iters = 5, lr = 0.02)
   }
 
   /** Deterministic in-place Gaussian elimination with partial pivoting
@@ -535,41 +548,17 @@ object Recommender {
     * RecommenderSpec pins planted exact-low-rank recovery, that ALS
     * out-fits r01's gradient trainer on its own objective, seeded
     * determinism, and the prediction surface. */
-  val r02 = Q.sql(
-    "r02_als",
-    """WITH r AS (
-      |  SELECT o_custkey AS u, l_partkey AS i,
-      |         CAST(sum(l_quantity) AS DOUBLE) AS r_sum, count(*) AS n
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE o_custkey < 200
-      |  GROUP BY 1, 2)
-      |SELECT u, i, r_sum, n, TRUE AS monotone_obj
-      |FROM r ORDER BY u, i""".stripMargin) { (s, dir) =>
-    val pairs = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("o_custkey") < 200)
-      .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
-      .agg(avg("l_quantity").as("r"),
-        sum("l_quantity").cast("double").as("r_sum"),
-        count(lit(1)).as("n"))
-      .localCheckpoint()
-    val (_, js) = alsTracked(pairs.select("u", "i", "r"), dim = 8, iters = 5)
-    val monotone = js.nonEmpty &&
-      js.sliding(2).forall(p => p.length < 2 || p(1) <= p(0) * (1 + 1e-9) + 1e-9)
-    pairs
+  val r02 = Q.audited("r02_als", sliceOracle("TRUE AS monotone_obj")) { (s, dir, audit) =>
+    val pairs = ratingSlice(s, dir, avg("l_quantity"), moments = audit)
+    // the twin runs alternating minimization with objective tracking OFF
+    // (no per-round measured-claim join+agg) and emits the predictions
+    val (preds, js) = alsTracked(pairs.select("u", "i", "r"), dim = 8, iters = 5,
+      track = audit)
+    if (!audit) preds
+    else pairs
       .select(col("u"), col("i"), col("r_sum"), col("n"),
-        lit(monotone).as("monotone_obj"))
+        lit(monotone(js, slack = 1e-9)).as("monotone_obj"))
       .orderBy("u", "i")
-  }.withProd { (s, dir) =>
-    // production path: alternating minimization with objective tracking
-    // OFF (no per-round measured-claim join+agg) and the predictions out
-    val pairs = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("o_custkey") < 200)
-      .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
-      .agg(avg("l_quantity").as("r"))
-      .localCheckpoint()
-    als(pairs, dim = 8, iters = 5)
   }
 
   /** Registered NONNEGATIVE ALS pass (reference ALS.scala:78-79,154
@@ -591,45 +580,25 @@ object Recommender {
     *
     * RecommenderSpec pins planted nonnegative low-rank recovery and the
     * NNLS kernel's KKT conditions. */
-  val r03 = Q.sql(
-    "r03_als_nonneg",
-    """WITH r AS (
-      |  SELECT o_custkey AS u, l_partkey AS i,
-      |         CAST(sum(l_quantity) AS DOUBLE) AS r_sum, count(*) AS n
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE o_custkey < 200
-      |  GROUP BY 1, 2)
-      |SELECT u, i, r_sum, n, TRUE AS monotone_obj, TRUE AS all_nonneg
-      |FROM r ORDER BY u, i""".stripMargin) { (s, dir) =>
-    val pairs = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("o_custkey") < 200)
-      .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
-      .agg(avg("l_quantity").as("r"),
-        sum("l_quantity").cast("double").as("r_sum"),
-        count(lit(1)).as("n"))
-      .localCheckpoint()
-    val (userF, itemF, js) = alsFactors(pairs.select("u", "i", "r"),
-      dim = 8, iters = 5, track = true, nonnegative = true)
-    val monotone = js.nonEmpty &&
-      js.sliding(2).forall(p => p.length < 2 || p(1) <= p(0) * (1 + 1e-9) + 1e-9)
-    def minEntry(f: DataFrame): Double =
-      f.agg(min(array_min(col("f")))).head.getDouble(0)
-    val allNonneg = minEntry(userF) >= 0.0 && minEntry(itemF) >= 0.0
-    pairs
-      .select(col("u"), col("i"), col("r_sum"), col("n"),
-        lit(monotone).as("monotone_obj"), lit(allNonneg).as("all_nonneg"))
-      .orderBy("u", "i")
-  }.withProd { (s, dir) =>
-    // production path: constrained alternating minimization with
-    // objective tracking OFF and the predictions out
-    val pairs = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("o_custkey") < 200)
-      .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
-      .agg(avg("l_quantity").as("r"))
-      .localCheckpoint()
-    als(pairs, dim = 8, iters = 5, nonnegative = true)
+  val r03 = Q.audited("r03_als_nonneg",
+      sliceOracle("TRUE AS monotone_obj, TRUE AS all_nonneg")) { (s, dir, audit) =>
+    val pairs = ratingSlice(s, dir, avg("l_quantity"), moments = audit)
+    val ratings = pairs.select("u", "i", "r")
+    // the twin runs constrained alternating minimization with objective
+    // tracking OFF and emits the predictions
+    val (userF, itemF, js) = alsFactors(ratings, dim = 8, iters = 5,
+      track = audit, nonnegative = true)
+    if (!audit) alsPredict(ratings, userF, itemF).select("u", "i", "r", "pred")
+    else {
+      def minEntry(f: DataFrame): Double =
+        f.agg(min(array_min(col("f")))).head.getDouble(0)
+      val allNonneg = minEntry(userF) >= 0.0 && minEntry(itemF) >= 0.0
+      pairs
+        .select(col("u"), col("i"), col("r_sum"), col("n"),
+          lit(monotone(js, slack = 1e-9)).as("monotone_obj"),
+          lit(allNonneg).as("all_nonneg"))
+        .orderBy("u", "i")
+    }
   }
 
   /** Per-key IMPLICIT-feedback normal-equations kernel (Hu, Koren &
@@ -807,43 +776,19 @@ object Recommender {
     * RecommenderSpec pins observed-above-unobserved ranking on a
     * planted interaction matrix, confidence monotonicity in α, seeded
     * determinism, and the kernel against a driver-side dense solve. */
-  val r04 = Q.sql(
-    "r04_als_implicit",
-    """WITH r AS (
-      |  SELECT o_custkey AS u, l_partkey AS i,
-      |         CAST(sum(l_quantity) AS DOUBLE) AS r_sum, count(*) AS n
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE o_custkey < 200
-      |  GROUP BY 1, 2)
-      |SELECT u, i, r_sum, n, TRUE AS monotone_obj
-      |FROM r ORDER BY u, i""".stripMargin) { (s, dir) =>
-    val pairs = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("o_custkey") < 200)
-      .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
-      .agg(count(lit(1)).cast("double").as("r"),
-        sum("l_quantity").cast("double").as("r_sum"),
-        count(lit(1)).as("n"))
-      .localCheckpoint()
-    val (_, _, js) = alsImplicitFactors(pairs.select("u", "i", "r"),
-      dim = 8, iters = 5, track = true)
-    val monotone = js.nonEmpty &&
-      js.sliding(2).forall(p => p.length < 2 || p(1) <= p(0) * (1 + 1e-9) + 1e-9)
-    pairs
+  val r04 = Q.audited("r04_als_implicit", sliceOracle("TRUE AS monotone_obj")) {
+      (s, dir, audit) =>
+    val pairs = ratingSlice(s, dir, count(lit(1)).cast("double"), moments = audit)
+    val ratings = pairs.select("u", "i", "r")
+    val (userF, itemF, js) = alsImplicitFactors(ratings, dim = 8, iters = 5,
+      track = audit)
+    // the twin tracks no objective and emits the preference scores x·y
+    // over the training edges (the serving surface)
+    if (!audit) alsPredict(ratings, userF, itemF)
+    else pairs
       .select(col("u"), col("i"), col("r_sum"), col("n"),
-        lit(monotone).as("monotone_obj"))
+        lit(monotone(js, slack = 1e-9)).as("monotone_obj"))
       .orderBy("u", "i")
-  }.withProd { (s, dir) =>
-    // production path: objective tracking OFF; emit the preference
-    // scores x·y over the training edges (the serving surface)
-    val pairs = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("o_custkey") < 200)
-      .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
-      .agg(count(lit(1)).cast("double").as("r"))
-      .localCheckpoint()
-    val (userF, itemF, _) = alsImplicitFactors(pairs, dim = 8, iters = 5)
-    alsPredict(pairs, userF, itemF)
   }
 
   /** Registered top-N serving pass (r16 — reference
@@ -866,7 +811,7 @@ object Recommender {
     * exact, not toleranced. The raw scores stay engine-local (trained
     * float state, like every factor-model entry); RecommenderSpec pins
     * the serving surface against a driver-side brute force. */
-  val r05 = Q.sql(
+  val r05 = Q.audited(
     "r05_als_recommend",
     """WITH r AS (
       |  SELECT o_custkey AS u, l_partkey AS i
@@ -879,55 +824,43 @@ object Recommender {
       |       TRUE AS topk_exact
       |FROM users, cat, range(1, 4) t(k)
       |WHERE k <= n_candidates
-      |ORDER BY u, rk""".stripMargin) { (s, dir) =>
-    val pairs = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("o_custkey") < 200)
-      .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
-      .agg(avg("l_quantity").as("r"))
-      .localCheckpoint()
+      |ORDER BY u, rk""".stripMargin) { (s, dir, audit) =>
+    val pairs = ratingSlice(s, dir, avg("l_quantity"), moments = false)
     val (userF, itemF, _) = alsFactors(pairs.select("u", "i", "r"),
       dim = 8, iters = 5)
-    val recs = recommendProducts(userF, itemF, k = 3)
-      .localCheckpoint(false) // lazy: the certificate diff materializes (r16)
-    // independent recount: HOF dot + full-cross-product window ranking
-    val hofScored = userF.select(col("u"), col("f").as("_p"))
-      .crossJoin(broadcast(itemF.select(col("i"), col("f").as("_q"))))
-      .select(col("u"), col("i"),
-        (round(dot(col("_p"), col("_q")), 6) + 0.0).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("u").orderBy(col("score").desc, col("i"))
-    val windowed = hofScored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select("u", "i", "score", "rk")
-    val served = recs.select("u", "i", "score", "rk")
-    // r16: ONE signed-multiplicity pass replaces the two exceptAll
-    // directions (A ≡ B as multisets ⟺ every (row → +1/−1) group sums
-    // to zero — the same predicate, one shuffle + take(1) instead of
-    // two anti-join jobs), which also lets the 600-row window recount
-    // stay an unmaterialized plan consumed exactly once.
-    val topkExact = served.withColumn("_s", lit(1L))
-      .unionByName(windowed.withColumn("_s", lit(-1L)))
-      .groupBy("u", "i", "score", "rk").agg(sum("_s").as("_d"))
-      .filter(col("_d") =!= 0L)
-      .isEmpty
-    val nCand = itemF.count()
-    recs.select(col("u"), col("rk"))
-      .join(pairs.groupBy("u").agg(count(lit(1)).as("n_rated")), "u")
-      .select(col("u"), col("rk"), col("n_rated"),
-        lit(nCand).as("n_candidates"), lit(topkExact).as("topk_exact"))
-      .orderBy("u", "rk")
-  }.withProd { (s, dir) =>
-    // production path: train + serve, no recount cross product
-    val pairs = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("o_custkey") < 200)
-      .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
-      .agg(avg("l_quantity").as("r"))
-      .localCheckpoint()
-    val (userF, itemF, _) = alsFactors(pairs.select("u", "i", "r"),
-      dim = 8, iters = 5)
-    recommendProducts(userF, itemF, k = 3)
+    val top = recommendProducts(userF, itemF, k = 3)
+    // the twin trains and serves, with no recount cross product
+    if (!audit) top
+    else {
+      val recs = top.localCheckpoint(false) // lazy: the certificate diff materializes (r16)
+      // independent recount: HOF dot + full-cross-product window ranking
+      val hofScored = userF.select(col("u"), col("f").as("_p"))
+        .crossJoin(broadcast(itemF.select(col("i"), col("f").as("_q"))))
+        .select(col("u"), col("i"),
+          (round(dot(col("_p"), col("_q")), 6) + 0.0).as("score"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("u").orderBy(col("score").desc, col("i"))
+      val windowed = hofScored.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= 3)
+        .select("u", "i", "score", "rk")
+      val served = recs.select("u", "i", "score", "rk")
+      // r16: ONE signed-multiplicity pass replaces the two exceptAll
+      // directions (A ≡ B as multisets ⟺ every (row → +1/−1) group sums
+      // to zero — the same predicate, one shuffle + take(1) instead of
+      // two anti-join jobs), which also lets the 600-row window recount
+      // stay an unmaterialized plan consumed exactly once.
+      val topkExact = served.withColumn("_s", lit(1L))
+        .unionByName(windowed.withColumn("_s", lit(-1L)))
+        .groupBy("u", "i", "score", "rk").agg(sum("_s").as("_d"))
+        .filter(col("_d") =!= 0L)
+        .isEmpty
+      val nCand = itemF.count()
+      recs.select(col("u"), col("rk"))
+        .join(pairs.groupBy("u").agg(count(lit(1)).as("n_rated")), "u")
+        .select(col("u"), col("rk"), col("n_rated"),
+          lit(nCand).as("n_candidates"), lit(topkExact).as("topk_exact"))
+        .orderBy("u", "rk")
+    }
   }
 
   val all: Seq[Q] = Seq(r01, r02, r03, r04, r05)

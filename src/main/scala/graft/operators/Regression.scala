@@ -162,19 +162,6 @@ object Regression {
     beta
   }
 
-  /** Registered pass: is this document English? Logistic regression on
-    * three O(1) text-quality features (t02's measures). The sigmoid
-    * loop is engine-local float iteration, but the entry carries the
-    * d08 claim-flag pattern: (doc_id, lang) are exact values DuckDB
-    * re-derives row-for-row, and `acc_ge_majority` certifies — from
-    * ONE in-plan confusion aggregate over the learned margin — that
-    * learned accuracy does not fall below the majority class minus the
-    * 2%-of-n slack the spec contract has always carried (fixed-step
-    * descent on a near-signal-free corpus may legitimately misfit a
-    * handful of docs; on this corpus the calibrated majority fit IS
-    * the correct answer, so the floor is the meaningful claim).
-    * RegressionSpec pins planted separable recovery, determinism, the
-    * probability surface, and the same floor independently. */
   /** Shared (f_words, f_wlen, f_sym, y) language-feature projection over
     * the documents corpus (rg02 + svm01, entries and twins): the
     * tokenizer split is STAGED as an attribute (r15 — the t10/pl01
@@ -195,37 +182,57 @@ object Regression {
         (col("lang") === "en").cast("double").as("y")): _*)
   }
 
-  val rg02 = Q.sql(
-    "rg02_logistic",
-    """SELECT doc_id, lang, TRUE AS acc_ge_majority
-      |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val feats = langFeatures(Tables.documents(s, dir), keepLang = true)
-    val beta = logistic(feats, Seq("f_words", "f_wlen", "f_sym"), "y",
-      eta = 2.0, iters = 40)
-    val margin = lit(beta(0)) + col("f_words") * lit(beta(1)) +
-      col("f_wlen") * lit(beta(2)) + col("f_sym") * lit(beta(3))
-    val pred = lit(1.0) / (lit(1.0) + exp(-margin)) >= 0.5
-    val acc = feats.agg(
-      sum(when(pred === (col("y") === 1.0), 1L).otherwise(0L)).as("correct"),
-      sum(col("y")).cast("long").as("pos"),
-      count(lit(1)).as("n")).head
-    val n = acc.getLong(2)
-    val floor = acc.getLong(0) >=
-      math.max(acc.getLong(1), n - acc.getLong(1)) - n / 50
-    feats.select(col("doc_id"), col("lang"),
-      lit(floor).as("acc_ge_majority"))
-      .orderBy("doc_id")
-  }.withProd { (s, dir) =>
-    // production path: train + serve the probability surface — no
-    // confusion aggregate scoring accuracy against the majority floor
-    val feats = langFeatures(Tables.documents(s, dir), keepLang = false)
-    val beta = logistic(feats, Seq("f_words", "f_wlen", "f_sym"), "y",
-      eta = 2.0, iters = 40)
-    val margin = lit(beta(0)) + col("f_words") * lit(beta(1)) +
-      col("f_wlen") * lit(beta(2)) + col("f_sym") * lit(beta(3))
-    feats.select(col("doc_id"),
-      (lit(1.0) / (lit(1.0) + exp(-margin))).as("p_en"))
-  }
+  private val langCols = Seq("f_words", "f_wlen", "f_sym")
+
+  /** rg02 and svm01's one body: `train` learns β (intercept first) over
+    * [[langFeatures]], the margin β·(1, x) is the shared decision
+    * function, `predicts` is the entry's own "is English" rule on it
+    * (kept per entry: sigmoid(m) >= 0.5 and m >= 0 are not bit-identical
+    * near 0), and `serve` is the column the production twin emits per
+    * doc_id. The certificate is `acc_ge_majority`, from ONE in-plan
+    * confusion aggregate; the twin runs no confusion aggregate. */
+  private def langClassifier(name: String, train: DataFrame => Array[Double],
+                             predicts: Column => Column, serve: Column => Column): Q =
+    Q.audited(name,
+      """SELECT doc_id, lang, TRUE AS acc_ge_majority
+        |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir, audit) =>
+      val feats = langFeatures(Tables.documents(s, dir), keepLang = audit)
+      val beta = train(feats)
+      val margin = lit(beta(0)) + col("f_words") * lit(beta(1)) +
+        col("f_wlen") * lit(beta(2)) + col("f_sym") * lit(beta(3))
+      if (!audit) feats.select(col("doc_id"), serve(margin))
+      else {
+        val acc = feats.agg(
+          sum(when(predicts(margin) === (col("y") === 1.0), 1L).otherwise(0L)).as("correct"),
+          sum(col("y")).cast("long").as("pos"),
+          count(lit(1)).as("n")).head
+        val n = acc.getLong(2)
+        val floor = acc.getLong(0) >=
+          math.max(acc.getLong(1), n - acc.getLong(1)) - n / 50
+        feats.select(col("doc_id"), col("lang"),
+          lit(floor).as("acc_ge_majority"))
+          .orderBy("doc_id")
+      }
+    }
+
+  private def sigmoid(m: Column): Column = lit(1.0) / (lit(1.0) + exp(-m))
+
+  /** Registered pass: is this document English? Logistic regression on
+    * three O(1) text-quality features (t02's measures). The sigmoid
+    * loop is engine-local float iteration, but the entry carries the
+    * d08 claim-flag pattern: (doc_id, lang) are exact values DuckDB
+    * re-derives row-for-row, and `acc_ge_majority` certifies — from
+    * ONE in-plan confusion aggregate over the learned margin — that
+    * learned accuracy does not fall below the majority class minus the
+    * 2%-of-n slack the spec contract has always carried (fixed-step
+    * descent on a near-signal-free corpus may legitimately misfit a
+    * handful of docs; on this corpus the calibrated majority fit IS
+    * the correct answer, so the floor is the meaningful claim).
+    * RegressionSpec pins planted separable recovery, determinism, the
+    * probability surface, and the same floor independently. */
+  val rg02 = langClassifier("rg02_logistic",
+    logistic(_, langCols, "y", eta = 2.0, iters = 40),
+    m => sigmoid(m) >= 0.5, m => sigmoid(m).as("p_en"))
 
   // ------------------------------------------------------------- isotonic
 
@@ -388,7 +395,7 @@ object Regression {
     * identical double ops) and re-derives the identical flags from its
     * own moments. RegressionSpec still pins planted support recovery,
     * the exact-zero property, and λ→0 agreement with the ridge solve. */
-  val rg04 = Q.sql(
+  val rg04 = Q.audited(
     "rg04_lasso",
     """WITH m AS (
       |  SELECT CAST(count(*) AS DOUBLE) AS n,
@@ -405,50 +412,47 @@ object Regression {
       |  (abs((sy / n) * n - sy) <= 1e-9 * (abs(sy) + 1.0)) AS kkt_b0,
       |  (abs((s1y - s1 * (sy / n)) / n) <= 5.0) AS kkt_b1,
       |  (abs((s2y - s2 * (sy / n)) / n) <= 5.0) AS kkt_b2
-      |FROM m""".stripMargin) { (s, dir) =>
+      |FROM m""".stripMargin) { (s, dir, audit) =>
     val lambda = 5.0
     val li = Tables.lineitem(s, dir)
     val (b0, b1, b2) = lasso2(
       li, col("l_quantity"), col("l_discount"), col("l_extendedprice") / 1000.0,
       lambda = lambda, sweeps = 200)
-    val dc = (c: Column) => c.cast("decimal(18,6)")
-    val moments = li.select(
-      dc(col("l_quantity")).as("x1"), dc(col("l_discount")).as("x2"),
-      dc(col("l_extendedprice") / 1000.0).as("y"))
-      .agg(
-        count(lit(1)).cast("double").as("n"),
-        sum(col("x1")).cast("double").as("s1"), sum(col("x2")).cast("double").as("s2"),
-        sum(col("y")).cast("double").as("sy"),
-        sum(col("x1") * col("x1")).cast("double").as("s11"),
-        sum(col("x1") * col("x2")).cast("double").as("s12"),
-        sum(col("x2") * col("x2")).cast("double").as("s22"),
-        sum(col("x1") * col("y")).cast("double").as("s1y"),
-        sum(col("x2") * col("y")).cast("double").as("s2y"))
-    // KKT flags in-plan: ρ_j with the learned β as literals; the Scala
-    // branch picks which CONDITION applies (the coefficient is a plan-time
-    // constant), the arithmetic all runs inside the plan
-    def rho(sjy: Column, sj0: Column, sjk: Column, bk: Double): Column =
-      (sjy - sj0 * lit(b0) - sjk * lit(bk)) / col("n")
-    def kktSlope(bj: Double, r: Column, sjj: Column): Column =
-      if (bj == 0.0) abs(r) <= lit(lambda)
-      else abs(r - lit(lambda * math.signum(bj)) - lit(bj) * sjj / col("n")) <=
-        lit(1e-9) * (abs(r) + 1.0)
-    moments.select(
-      lit(math.rint(b0 * 1e6) / 1e6).as("b0"),
-      lit(math.rint(b1 * 1e6) / 1e6).as("b1"),
-      lit(math.rint(b2 * 1e6) / 1e6).as("b2"),
-      (abs(lit(b0) * col("n") - (col("sy") - col("s1") * lit(b1) - col("s2") * lit(b2))) <=
-        lit(1e-9) * (abs(col("sy")) + 1.0)).as("kkt_b0"),
-      kktSlope(b1, rho(col("s1y"), col("s1"), col("s12"), b2), col("s11")).as("kkt_b1"),
-      kktSlope(b2, rho(col("s2y"), col("s2"), col("s12"), b1), col("s22")).as("kkt_b2"))
-  }.withProd { (s, dir) =>
-    // production path: one moment pass + driver coordinate descent,
-    // coefficients out — no second moment aggregate re-certifying KKT
-    val (b0, b1, b2) = lasso2(
-      Tables.lineitem(s, dir),
-      col("l_quantity"), col("l_discount"), col("l_extendedprice") / 1000.0,
-      lambda = 5.0, sweeps = 200)
-    s.range(1).select(lit(b0).as("b0"), lit(b1).as("b1"), lit(b2).as("b2"))
+    // the twin emits the coefficients of the one moment pass + driver
+    // coordinate descent, with no second moment aggregate certifying KKT
+    if (!audit) s.range(1).select(lit(b0).as("b0"), lit(b1).as("b1"), lit(b2).as("b2"))
+    else {
+      val dc = (c: Column) => c.cast("decimal(18,6)")
+      val moments = li.select(
+        dc(col("l_quantity")).as("x1"), dc(col("l_discount")).as("x2"),
+        dc(col("l_extendedprice") / 1000.0).as("y"))
+        .agg(
+          count(lit(1)).cast("double").as("n"),
+          sum(col("x1")).cast("double").as("s1"), sum(col("x2")).cast("double").as("s2"),
+          sum(col("y")).cast("double").as("sy"),
+          sum(col("x1") * col("x1")).cast("double").as("s11"),
+          sum(col("x1") * col("x2")).cast("double").as("s12"),
+          sum(col("x2") * col("x2")).cast("double").as("s22"),
+          sum(col("x1") * col("y")).cast("double").as("s1y"),
+          sum(col("x2") * col("y")).cast("double").as("s2y"))
+      // KKT flags in-plan: ρ_j with the learned β as literals; the Scala
+      // branch picks which CONDITION applies (the coefficient is a plan-time
+      // constant), the arithmetic all runs inside the plan
+      def rho(sjy: Column, sj0: Column, sjk: Column, bk: Double): Column =
+        (sjy - sj0 * lit(b0) - sjk * lit(bk)) / col("n")
+      def kktSlope(bj: Double, r: Column, sjj: Column): Column =
+        if (bj == 0.0) abs(r) <= lit(lambda)
+        else abs(r - lit(lambda * math.signum(bj)) - lit(bj) * sjj / col("n")) <=
+          lit(1e-9) * (abs(r) + 1.0)
+      moments.select(
+        lit(math.rint(b0 * 1e6) / 1e6).as("b0"),
+        lit(math.rint(b1 * 1e6) / 1e6).as("b1"),
+        lit(math.rint(b2 * 1e6) / 1e6).as("b2"),
+        (abs(lit(b0) * col("n") - (col("sy") - col("s1") * lit(b1) - col("s2") * lit(b2))) <=
+          lit(1e-9) * (abs(col("sy")) + 1.0)).as("kkt_b0"),
+        kktSlope(b1, rho(col("s1y"), col("s1"), col("s12"), b2), col("s11")).as("kkt_b1"),
+        kktSlope(b2, rho(col("s2y"), col("s2"), col("s12"), b1), col("s22")).as("kkt_b2"))
+    }
   }
 
   // ------------------------------------------------------------------- svm
@@ -492,36 +496,9 @@ object Regression {
     * RegressionSpec pins planted max-margin recovery, determinism, the
     * decision surface, and the same floor independently (the synthetic
     * corpus is near-signal-free, see rg02). */
-  val svm01 = Q.sql(
-    "svm01_linear_svm",
-    """SELECT doc_id, lang, TRUE AS acc_ge_majority
-      |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val feats = langFeatures(Tables.documents(s, dir), keepLang = true)
-    val beta = svmHinge(feats, Seq("f_words", "f_wlen", "f_sym"), "y",
-      eta = 0.5, lambda = 0.01, iters = 40)
-    val dec = lit(beta(0)) + col("f_words") * lit(beta(1)) +
-      col("f_wlen") * lit(beta(2)) + col("f_sym") * lit(beta(3))
-    val pred = dec >= 0.0
-    val acc = feats.agg(
-      sum(when(pred === (col("y") === 1.0), 1L).otherwise(0L)).as("correct"),
-      sum(col("y")).cast("long").as("pos"),
-      count(lit(1)).as("n")).head
-    val n = acc.getLong(2)
-    val floor = acc.getLong(0) >=
-      math.max(acc.getLong(1), n - acc.getLong(1)) - n / 50
-    feats.select(col("doc_id"), col("lang"),
-      lit(floor).as("acc_ge_majority"))
-      .orderBy("doc_id")
-  }.withProd { (s, dir) =>
-    // production path: train + serve the decision surface — no
-    // confusion aggregate scoring accuracy against the majority floor
-    val feats = langFeatures(Tables.documents(s, dir), keepLang = false)
-    val beta = svmHinge(feats, Seq("f_words", "f_wlen", "f_sym"), "y",
-      eta = 0.5, lambda = 0.01, iters = 40)
-    val dec = lit(beta(0)) + col("f_words") * lit(beta(1)) +
-      col("f_wlen") * lit(beta(2)) + col("f_sym") * lit(beta(3))
-    feats.select(col("doc_id"), dec.as("decision"))
-  }
+  val svm01 = langClassifier("svm01_linear_svm",
+    svmHinge(_, langCols, "y", eta = 0.5, lambda = 0.01, iters = 40),
+    _ >= 0.0, _.as("decision"))
 
   val all: Seq[Q] = Seq(rg01, rg02, rg03, rg04, svm01)
 }

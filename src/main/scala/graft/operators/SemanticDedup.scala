@@ -138,26 +138,25 @@ object SemanticDedup {
     * up to 16 planes): at sf0.1 (~625 per cluster) that derives the
     * same 4 planes the constant used to pin, and at any larger corpus
     * the in-cell pair volume stays ~64²/2. */
-  val d09 = Q.sql(
+  val d09 = Q.audited(
     "d09_semantic_dedup",
     """SELECT vec_id, TRUE AS label_le_id, TRUE AS one_keeper
-      |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir) =>
+      |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir, audit) =>
     val out = semanticDedup(Tables.embeddings(s, dir),
       k = 8, iters = 5, nPlanes = 16, nTables = 4, tau = 0.99,
       targetOccupancy = 64)
-    val keepers = out.groupBy(col("cluster_id"))
-      .agg(sum(col("keep")).as("n_keep"))
-    out.join(keepers, "cluster_id")
-      .select(col("vec_id"),
-        (col("cluster_id") <= col("vec_id")).as("label_le_id"),
-        (col("n_keep") === 1L).as("one_keeper"))
-      .orderBy("vec_id")
-  }.withProd { (s, dir) =>
-    // production path: the dedup pipeline's own output — no independent
+    // the twin is the dedup pipeline's own output, with no independent
     // per-label keeper recount join scoring the structure
-    semanticDedup(Tables.embeddings(s, dir),
-      k = 8, iters = 5, nPlanes = 16, nTables = 4, tau = 0.99,
-      targetOccupancy = 64)
+    if (!audit) out
+    else {
+      val keepers = out.groupBy(col("cluster_id"))
+        .agg(sum(col("keep")).as("n_keep"))
+      out.join(keepers, "cluster_id")
+        .select(col("vec_id"),
+          (col("cluster_id") <= col("vec_id")).as("label_le_id"),
+          (col("n_keep") === 1L).as("one_keeper"))
+        .orderBy("vec_id")
+    }
   }
 
   val all: Seq[Q] = Seq(d09)

@@ -587,43 +587,41 @@ object Similarity {
     * where probing the top cells provably contains the true
     * neighbors). The brute-force pass is the certificate side — the
     * production twin runs the IVF path alone. */
-  val d16 = Q.sql(
+  val d16 = Q.audited(
     "d16_ivf_ann",
     """SELECT q.vec_id AS qid, CAST(t.r AS INT) AS rk,
       |  TRUE AS rank_consistent, TRUE AS recall_floor
       |FROM embeddings q, range(1, 6) t(r)
       |WHERE q.vec_id < 10
-      |ORDER BY qid, rk""".stripMargin) { (s, dir) =>
+      |ORDER BY qid, rk""".stripMargin) { (s, dir, audit) =>
     val emb = Tables.embeddings(s, dir)
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val ivf = ivfTopK(emb, queries, nCells = 16, iters = 5, nProbe = 2, k = 5)
-    // certificate 1: the ranking really is non-increasing
-    val w = Window.partitionBy("qid").orderBy(col("rk"))
-    val ranked = ivf.withColumn("rank_consistent",
-      coalesce(col("sim") <= lag(col("sim"), 1).over(w) + lit(1e-9), lit(true)))
-    // certificate 2: brute-force top-1 per query (the d05 pass), wide
-    // recall band — the documented measured claim
-    val brute = broadcast(queries)
-      .join(emb.select(col("vec_id").as("cid"), col("embedding").as("ce")),
-        col("qid") =!= col("cid"))
-      .groupBy("qid")
-      .agg(max(floatCosine(col("qe"), col("ce"))).as("brute1"))
-    val ivfTop1 = ranked.filter(col("rk") === 1)
-      .select(col("qid"), col("sim").as("ivf1"))
-    ranked
-      .join(brute, "qid").join(ivfTop1, "qid")
-      .select(col("qid"), col("rk"), col("rank_consistent"),
-        (col("ivf1") >= col("brute1") - 0.25).as("recall_floor"))
-      .orderBy("qid", "rk")
-  }.withProd { (s, dir) =>
-    // production path: quantize + probe + in-cell top-k — no brute-force
+    // the twin is quantize + probe + in-cell top-k, with no brute-force
     // certificate pass
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    ivfTopK(emb, queries, nCells = 16, iters = 5, nProbe = 2, k = 5)
-      .select(col("qid"), col("cid"), round(col("sim"), 6).as("sim6"), col("rk"))
+    if (!audit)
+      ivf.select(col("qid"), col("cid"), round(col("sim"), 6).as("sim6"), col("rk"))
+    else {
+      // certificate 1: the ranking really is non-increasing
+      val w = Window.partitionBy("qid").orderBy(col("rk"))
+      val ranked = ivf.withColumn("rank_consistent",
+        coalesce(col("sim") <= lag(col("sim"), 1).over(w) + lit(1e-9), lit(true)))
+      // certificate 2: brute-force top-1 per query (the d05 pass), wide
+      // recall band — the documented measured claim
+      val brute = broadcast(queries)
+        .join(emb.select(col("vec_id").as("cid"), col("embedding").as("ce")),
+          col("qid") =!= col("cid"))
+        .groupBy("qid")
+        .agg(max(floatCosine(col("qe"), col("ce"))).as("brute1"))
+      val ivfTop1 = ranked.filter(col("rk") === 1)
+        .select(col("qid"), col("sim").as("ivf1"))
+      ranked
+        .join(brute, "qid").join(ivfTop1, "qid")
+        .select(col("qid"), col("rk"), col("rank_consistent"),
+          (col("ivf1") >= col("brute1") - 0.25).as("recall_floor"))
+        .orderBy("qid", "rk")
+    }
   }
 
   val all: Seq[Q] = Seq(d02, d03, d04, d05, d06, d16)

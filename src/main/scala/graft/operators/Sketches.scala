@@ -49,7 +49,7 @@ object Sketches {
     * ~2%; the 10% band absorbs hash-seed variance, documented
     * measured-claim). SketchesSpec pins the raw fp rate and the
     * planted-membership behavior. */
-  val bf01 = Q.sql(
+  val bf01 = Q.audited(
     "bf01_bloom_prune",
     """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS exact_matches,
       |  TRUE AS no_false_negatives, TRUE AS fp_rate_bounded
@@ -57,31 +57,28 @@ object Sketches {
       |WHERE l_orderkey IN
       |  (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT')
       |GROUP BY l_returnflag
-      |ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
+      |ORDER BY l_returnflag""".stripMargin) { (s, dir, audit) =>
     val li = Tables.lineitem(s, dir)
     val urgent = Tables.orders(s, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
-    val passed = bloomPrune(urgent, "o_orderkey", li, "l_orderkey",
+    val pruned = bloomPrune(urgent, "o_orderkey", li, "l_orderkey",
       expectedItems = 200000L, numBits = 1600000L)
-      .groupBy("l_returnflag").agg(count(lit(1)).as("bloom_cnt"))
-    val exact = li.join(urgent.select("o_orderkey"),
-        col("l_orderkey") === col("o_orderkey"), "left_semi")
-      .groupBy("l_returnflag").agg(count(lit(1)).as("exact_matches"))
-    val totals = li.groupBy("l_returnflag").agg(count(lit(1)).as("total"))
-    exact.join(passed, "l_returnflag").join(totals, "l_returnflag")
-      .select(col("l_returnflag"), col("exact_matches"),
-        (col("bloom_cnt") >= col("exact_matches")).as("no_false_negatives"),
-        (col("bloom_cnt") - col("exact_matches") <=
-          (col("total") - col("exact_matches")) * 0.10).as("fp_rate_bounded"))
-      .orderBy("l_returnflag")
-  }.withProd { (s, dir) =>
-    // production path: build + broadcast + pruned scan — no exact
+    // the twin is build + broadcast + pruned scan, with no exact
     // semi-join scoring the sketch
-    val urgent = Tables.orders(s, dir)
-      .filter(col("o_orderpriority") === "1-URGENT")
-    bloomPrune(urgent, "o_orderkey", Tables.lineitem(s, dir), "l_orderkey",
-      expectedItems = 200000L, numBits = 1600000L)
-      .groupBy("l_returnflag").agg(count(lit(1)).as("candidate_cnt"))
+    if (!audit) pruned.groupBy("l_returnflag").agg(count(lit(1)).as("candidate_cnt"))
+    else {
+      val passed = pruned.groupBy("l_returnflag").agg(count(lit(1)).as("bloom_cnt"))
+      val exact = li.join(urgent.select("o_orderkey"),
+          col("l_orderkey") === col("o_orderkey"), "left_semi")
+        .groupBy("l_returnflag").agg(count(lit(1)).as("exact_matches"))
+      val totals = li.groupBy("l_returnflag").agg(count(lit(1)).as("total"))
+      exact.join(passed, "l_returnflag").join(totals, "l_returnflag")
+        .select(col("l_returnflag"), col("exact_matches"),
+          (col("bloom_cnt") >= col("exact_matches")).as("no_false_negatives"),
+          (col("bloom_cnt") - col("exact_matches") <=
+            (col("total") - col("exact_matches")) * 0.10).as("fp_rate_bounded"))
+        .orderBy("l_returnflag")
+    }
   }
 
   /** Count-Min frequency estimates for a candidate key set: ONE

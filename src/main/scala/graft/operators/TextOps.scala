@@ -761,7 +761,7 @@ object TextOps {
     * the same discipline as d01 (reference parity hook: the d01 groupBy,
     * TextOps.scala:19). FULL value oracle: segmentation, md5 and the
     * keep-first rule are pure string/hash arithmetic DuckDB replays. */
-  val d17 = Q.sql(
+  val d17 = Q.audited(
     "d17_segment_dedup",
     s"""WITH words AS (
       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
@@ -773,12 +773,10 @@ object TextOps {
       |SELECT doc_id, seg_idx, seg_hash,
       |  count(*) OVER (PARTITION BY seg_hash) AS n_copies,
       |  row_number() OVER (PARTITION BY seg_hash ORDER BY doc_id, seg_idx) = 1 AS keep
-      |FROM segs ORDER BY doc_id, seg_idx""".stripMargin) { (s, dir) =>
-    segmentDedup(Tables.documents(s, dir), d17SegWidth).orderBy("doc_id", "seg_idx")
-  }.withProd { (s, dir) =>
-    // production twin: identical plan with the 8-byte xxhash64 segment
-    // hash riding the shuffle instead of oracle-imposed 32-char md5 hex
-    segmentDedup(Tables.documents(s, dir), d17SegWidth, prodHash = true)
+      |FROM segs ORDER BY doc_id, seg_idx""".stripMargin) { (s, dir, audit) =>
+    // the twin: identical plan with the 8-byte xxhash64 segment hash
+    // riding the shuffle instead of oracle-imposed 32-char md5 hex
+    segmentDedup(Tables.documents(s, dir), d17SegWidth, prodHash = !audit)
       .orderBy("doc_id", "seg_idx")
   }
 
@@ -849,7 +847,7 @@ object TextOps {
     * groupBy + one same-key join. The boundary hash is t04/ht01's
     * cross-engine djb2 fold, which is what lets the FULL value oracle
     * replay boundary selection, slicing, md5 and keep-first exactly. */
-  val d18 = Q.sql(
+  val d18 = Q.audited(
     "d18_cdc_dedup",
     s"""WITH words AS (
       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
@@ -875,11 +873,9 @@ object TextOps {
       |SELECT doc_id, seg_idx, seg_hash,
       |  count(*) OVER (PARTITION BY seg_hash) AS n_copies,
       |  row_number() OVER (PARTITION BY seg_hash ORDER BY doc_id, seg_idx) = 1 AS keep
-      |FROM segs ORDER BY doc_id, seg_idx""".stripMargin) { (s, dir) =>
-    cdcDedup(Tables.documents(s, dir), d18BoundaryMod).orderBy("doc_id", "seg_idx")
-  }.withProd { (s, dir) =>
-    // production twin: xxhash64 chunk hash through the dedup shuffle
-    cdcDedup(Tables.documents(s, dir), d18BoundaryMod, prodHash = true)
+      |FROM segs ORDER BY doc_id, seg_idx""".stripMargin) { (s, dir, audit) =>
+    // the twin: xxhash64 chunk hash through the dedup shuffle
+    cdcDedup(Tables.documents(s, dir), d18BoundaryMod, prodHash = !audit)
       .orderBy("doc_id", "seg_idx")
   }
 
@@ -941,7 +937,7 @@ object TextOps {
     * when ≥10% of its distinct grams appear in the eval set. FULL value
     * oracle: tokenization, 13-gram slicing, md5 and the integer gate
     * (n_hit·10 ≥ n_grams) replay exactly in DuckDB. */
-  val ct01 = Q.sql(
+  val ct01 = Q.audited(
     "ct01_contamination",
     s"""WITH toks AS (
       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS tk
@@ -954,21 +950,14 @@ object TextOps {
       |SELECT b.doc_id, count(*) AS n_grams, count(e.gh) AS n_hit,
       |  count(e.gh) * 10 >= count(*) AS contaminated
       |FROM base b LEFT JOIN evalg e ON b.gh = e.gh
-      |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin) { (s, dir) =>
+      |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin) { (s, dir, audit) =>
+    // the twin: xxhash64 gram hashes — narrow probe rows and a narrow
+    // broadcast eval set instead of oracle-imposed md5 hex
     val docs = Tables.documents(s, dir)
     contaminationScreen(
       docs.filter(col("doc_id") % ct01EvalMod =!= 0),
       docs.filter(col("doc_id") % ct01EvalMod === 0),
-      n = ct01N)
-      .orderBy("doc_id")
-  }.withProd { (s, dir) =>
-    // production twin: xxhash64 gram hashes — narrow probe rows and a
-    // narrow broadcast eval set instead of oracle-imposed md5 hex
-    val docs = Tables.documents(s, dir)
-    contaminationScreen(
-      docs.filter(col("doc_id") % ct01EvalMod =!= 0),
-      docs.filter(col("doc_id") % ct01EvalMod === 0),
-      n = ct01N, prodHash = true)
+      n = ct01N, prodHash = !audit)
       .orderBy("doc_id")
   }
 

@@ -891,16 +891,19 @@ object Trees {
     * squared loss): F(x) = f0 + shrink·Σ_m tree_m(x), each round fitting
     * a regression tree to the current residual column (updated in-plan,
     * so round m is one bounded level-training on a frame that never
-    * leaves the cluster). Returns (f0, shrink, trees, perRoundMse) —
-    * the [[graft.ml.ModelIO.saveGbt]] persistence shape plus the
-    * measured per-round training MSEs (provably non-increasing for
-    * squared loss with mean leaves; see [[gbt01]]).
+    * leaves the cluster). Returns (f0, shrink, trees, mses, frame) —
+    * the [[graft.ml.ModelIO.saveGbt]] persistence shape, then, when
+    * `track` is set, the measured training MSEs (mses.head at F0, then
+    * one per round; provably non-increasing for squared loss with mean
+    * leaves, see [[gbt01]]; empty when not tracking), and the final
+    * binned frame (b, y = residual, w, node) for serving.
     *
     * Predict on a frame binned with the SAME bin edges via
     * [[gbtPredictExpr]]. */
   def trainGbt(data: DataFrame, fts: Seq[Column], yCol: Column,
-               rounds: Int, depth: Int, bins: Int, shrink: Double)
-      : (Double, Double, Seq[RModel], Seq[Double]) = {
+               rounds: Int, depth: Int, bins: Int, shrink: Double,
+               track: Boolean = true)
+      : (Double, Double, Seq[RModel], Seq[Double], DataFrame) = {
     var frame = binForRegression(data, fts, yCol, bins)
     val f0 = frame.agg(avg("y")).head.getDouble(0)
     // r16: staged residual projection over the one binned checkpoint
@@ -909,6 +912,8 @@ object Trees {
     frame = frame.withColumn("y", col("y") - f0)
     val trees = scala.collection.mutable.ArrayBuffer.empty[RModel]
     val mses = scala.collection.mutable.ArrayBuffer.empty[Double]
+    def mse(): Unit = if (track) mses += frame.agg(avg(col("y") * col("y"))).head.getDouble(0)
+    mse()
     for (_ <- 1 to rounds) {
       val tree = trainRegressionBinned(frame, d = fts.length, depth, bins)
       trees += tree
@@ -916,9 +921,9 @@ object Trees {
         .select(col("b"),
           (col("y") - lit(shrink) * regressExpr(tree, col("b"))).as("y"),
           col("w"), lit(0).as("node"))
-      mses += frame.agg(avg(col("y") * col("y"))).head.getDouble(0)
+      mse()
     }
-    (f0, shrink, trees.toSeq, mses.toSeq)
+    (f0, shrink, trees.toSeq, mses.toSeq, frame)
   }
 
   /** Ensemble prediction over a binned feature column: the whole model
@@ -1015,6 +1020,11 @@ object Trees {
     (trees.toSeq.zip(weights), losses.toSeq, frame)
   }
 
+  /** The GBT certificates' comparison bound: the theorems are exact real
+    * arithmetic, and this slack absorbs double-agg summation-order noise
+    * (e.g. when a round's true decrease is ~0 because no split is found). */
+  private def withSlack(a: Double): Double = a * (1 + 1e-9) + 1e-12
+
   /** Registered pass (r12): 4-round depth-2 LogLoss classification GBT
     * (mllib/tree/loss/LogLoss.scala:1 + GradientBoostedTrees.scala:66's
     * ±1 remap) of "was the line returned-neither-accepted" (l_returnflag
@@ -1029,7 +1039,7 @@ object Trees {
     * the remapped target really is the claimed ±1 labeling). The raw
     * per-round deviances stay engine-local (exp is not bit-portable)
     * and are pinned in TreesSpec instead (planted separable recovery). */
-  val gbt02 = Q.sql(
+  val gbt02 = Q.audited(
     "gbt02_gbt_logloss",
     """WITH c AS (
       |  SELECT CAST(sum(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
@@ -1038,40 +1048,33 @@ object Trees {
       |SELECT CAST(r AS INT) AS round, n_pos, n_neg,
       |  TRUE AS monotone, TRUE AS below_prior
       |FROM c, range(0, 4) t(r)
-      |ORDER BY round""".stripMargin) { (s, dir) =>
+      |ORDER BY round""".stripMargin) { (s, dir, audit) =>
     import s.implicits._
     val li = Tables.lineitem(s, dir)
     val fts = Seq(col("l_quantity"), col("l_discount"), col("l_tax"),
       year(col("l_shipdate")))
     val y = when(col("l_returnflag") === "N", 1.0).otherwise(-1.0)
-    val (_, losses, _) = trainGbtLoss(li, fts, y,
-      rounds = 4, depth = 2, bins = 32, shrink = 0.5, loss = "logistic")
-    val prior = 2.0 * math.log(2.0)
-    // flags from the measured per-round deviances: the theorem is exact
-    // real arithmetic; eps absorbs double-agg summation-order noise
-    val eps = (a: Double) => a * (1 + 1e-9) + 1e-12
-    val flags = losses.zipWithIndex.map { case (l, m) =>
-      val prev = if (m == 0) prior else losses(m - 1)
-      (m, l <= eps(prev), l <= eps(prior))
-    }.toDF("round", "monotone", "below_prior")
-    val counts = li.agg(
-      sum(when(col("l_returnflag") === "N", 1L).otherwise(0L)).as("n_pos"),
-      sum(when(col("l_returnflag") =!= "N", 1L).otherwise(0L)).as("n_neg"))
-    flags.crossJoin(counts)
-      .select(col("round"), col("n_pos"), col("n_neg"),
-        col("monotone"), col("below_prior"))
-      .orderBy("round")
-  }.withProd { (s, dir) =>
-    // production path: boost with per-round deviance tracking OFF and
-    // serve the classification (sign of the final ensemble margin)
-    val li = Tables.lineitem(s, dir)
-    val fts = Seq(col("l_quantity"), col("l_discount"), col("l_tax"),
-      year(col("l_shipdate")))
-    val y = when(col("l_returnflag") === "N", 1.0).otherwise(-1.0)
-    val (_, _, frame) = trainGbtLoss(li, fts, y,
+    val (_, losses, frame) = trainGbtLoss(li, fts, y,
       rounds = 4, depth = 2, bins = 32, shrink = 0.5, loss = "logistic",
-      track = false)
-    frame.select(col("y"), signum(col("F")).as("pred"))
+      track = audit)
+    // the twin tracks no per-round deviance and serves the classification
+    // (sign of the final ensemble margin)
+    if (!audit) frame.select(col("y"), signum(col("F")).as("pred"))
+    else {
+      val prior = 2.0 * math.log(2.0)
+      // flags from the measured per-round deviances
+      val flags = losses.zipWithIndex.map { case (l, m) =>
+        val prev = if (m == 0) prior else losses(m - 1)
+        (m, l <= withSlack(prev), l <= withSlack(prior))
+      }.toDF("round", "monotone", "below_prior")
+      val counts = li.agg(
+        sum(when(col("l_returnflag") === "N", 1L).otherwise(0L)).as("n_pos"),
+        sum(when(col("l_returnflag") =!= "N", 1L).otherwise(0L)).as("n_neg"))
+      flags.crossJoin(counts)
+        .select(col("round"), col("n_pos"), col("n_neg"),
+          col("monotone"), col("below_prior"))
+        .orderBy("round")
+    }
   }
 
   /** Registered pass (r12): 4-round depth-2 LAD (absolute-error) GBT of
@@ -1092,7 +1095,7 @@ object Trees {
     * discipline — order-independent decimal sum, identical final
     * double ops), DuckDB-recomputed from the raw table. TreesSpec pins
     * planted recovery for the absolute loss separately. */
-  val gbt03 = Q.sql(
+  val gbt03 = Q.audited(
     "gbt03_gbt_lad",
     """WITH m AS (
       |  SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(ay) AS DOUBLE) AS say
@@ -1101,38 +1104,32 @@ object Trees {
       |SELECT CAST(r AS INT) AS round, round(say / n, 6) AS mad0,
       |  TRUE AS monotone, TRUE AS below_initial
       |FROM m, range(1, 5) t(r)
-      |ORDER BY round""".stripMargin) { (s, dir) =>
+      |ORDER BY round""".stripMargin) { (s, dir, audit) =>
     import s.implicits._
     val li = Tables.lineitem(s, dir)
     val fts = Seq(col("l_quantity"), col("l_discount"), col("l_tax"),
       year(col("l_shipdate")))
-    val (_, losses, _) = trainGbtLoss(li, fts, col("l_extendedprice") / 1000.0,
-      rounds = 4, depth = 2, bins = 32, shrink = 0.5, loss = "absolute")
-    val anchor = li
-      .select(abs((col("l_extendedprice") / 1000.0).cast("decimal(18,6)")).as("ay"))
-      .agg(count(lit(1)).cast("double").as("n"),
-        sum(col("ay")).cast("double").as("say"))
-      .select((col("say") / col("n")).as("mad0raw"),
-        round(col("say") / col("n"), 6).as("mad0"))
-    val mad0 = anchor.head.getDouble(0)
-    val eps = (a: Double) => a * (1 + 1e-9) + 1e-12
-    val flags = losses.zipWithIndex.map { case (l, m) =>
-      val prev = if (m == 0) mad0 else losses(m - 1)
-      (m + 1, l <= eps(prev), l <= eps(mad0))
-    }.toDF("round", "monotone", "below_initial")
-    flags.crossJoin(anchor.select("mad0"))
-      .select(col("round"), col("mad0"), col("monotone"), col("below_initial"))
-      .orderBy("round")
-  }.withProd { (s, dir) =>
-    // production path: LAD boost with loss tracking OFF, serving the
-    // final ensemble prediction frame
-    val li = Tables.lineitem(s, dir)
-    val fts = Seq(col("l_quantity"), col("l_discount"), col("l_tax"),
-      year(col("l_shipdate")))
-    val (_, _, frame) = trainGbtLoss(li, fts, col("l_extendedprice") / 1000.0,
+    val (_, losses, frame) = trainGbtLoss(li, fts, col("l_extendedprice") / 1000.0,
       rounds = 4, depth = 2, bins = 32, shrink = 0.5, loss = "absolute",
-      track = false)
-    frame.select(col("y"), col("F").as("pred"))
+      track = audit)
+    // the twin tracks no loss and serves the final ensemble prediction
+    if (!audit) frame.select(col("y"), col("F").as("pred"))
+    else {
+      val anchor = li
+        .select(abs((col("l_extendedprice") / 1000.0).cast("decimal(18,6)")).as("ay"))
+        .agg(count(lit(1)).cast("double").as("n"),
+          sum(col("ay")).cast("double").as("say"))
+        .select((col("say") / col("n")).as("mad0raw"),
+          round(col("say") / col("n"), 6).as("mad0"))
+      val mad0 = anchor.head.getDouble(0)
+      val flags = losses.zipWithIndex.map { case (l, m) =>
+        val prev = if (m == 0) mad0 else losses(m - 1)
+        (m + 1, l <= withSlack(prev), l <= withSlack(mad0))
+      }.toDF("round", "monotone", "below_initial")
+      flags.crossJoin(anchor.select("mad0"))
+        .select(col("round"), col("mad0"), col("monotone"), col("below_initial"))
+        .orderBy("round")
+    }
   }
 
   /** Registered pass: 4-round depth-2 gradient-boosted regression of the
@@ -1152,7 +1149,7 @@ object Trees {
     * anchor from the raw table and asserts the flags as literal TRUE.
     * The raw per-round MSE path stays pinned in TreesSpec (planted-step
     * exact recovery + non-increasing MSE). */
-  val gbt01 = Q.sql(
+  val gbt01 = Q.audited(
     "gbt01_gbt_regression",
     """WITH m AS (
       |  SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(y) AS DOUBLE) AS sy,
@@ -1163,71 +1160,35 @@ object Trees {
       |  round((syy - sy * (sy / n)) / n, 6) AS mse0,
       |  TRUE AS monotone, TRUE AS below_initial
       |FROM m, range(1, 5) t(r)
-      |ORDER BY round""".stripMargin) { (s, dir) =>
+      |ORDER BY round""".stripMargin) { (s, dir, audit) =>
     import s.implicits._
     val li = Tables.lineitem(s, dir)
     val fts = Seq(col("l_quantity"), col("l_discount"), col("l_tax"),
       year(col("l_shipdate")))
-    val shrink = 0.5
-    var frame = binForRegression(li, fts, col("l_extendedprice") / 1000.0, bins = 32)
-    // F0 = global mean
-    val f0 = frame.agg(avg("y")).head.getDouble(0)
-    // r16: the residual column stays a staged projection over the one
-    // binned checkpoint (same per-row IEEE ops, same scan order → every
-    // aggregate bit-identical); the loop no longer re-materializes the
-    // full frame once per round just to store y − ν·t_m(b).
-    frame = frame.withColumn("y", col("y") - f0)
-    val mseInit = frame.agg(avg(col("y") * col("y"))).head.getDouble(0)
-    val mses = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    for (m <- 1 to 4) {
-      val tree = trainRegressionBinned(frame, d = fts.length, depth = 2, bins = 32)
-      frame = frame
-        .select(col("b"), (col("y") - lit(shrink) * regressExpr(tree, col("b"))).as("y"),
-          col("w"), lit(0).as("node"))
-      mses += ((m, frame.agg(avg(col("y") * col("y"))).head.getDouble(0)))
+    // the twin boosts WITHOUT the initial and per-round MSE heads and the
+    // exact-decimal anchor aggregate, and serves F0 + ν·Σ trees
+    val (f0, shrink, trees, mses, frame) = trainGbt(li, fts,
+      col("l_extendedprice") / 1000.0, rounds = 4, depth = 2, bins = 32,
+      shrink = 0.5, track = audit)
+    if (!audit) frame.select(gbtPredictExpr(f0, shrink, trees, col("b")).as("pred"))
+    else {
+      // flags from the measured MSEs (aggregates computed in the cluster;
+      // the comparison is driver arithmetic on those bounded values)
+      val flags = (1 until mses.length).map { m =>
+        (m, mses(m) <= withSlack(mses(m - 1)), mses(m) <= withSlack(mses.head))
+      }.toDF("round", "monotone", "below_initial")
+      // the exact-decimal anchor, computed in-plan with the oracle's ops
+      val anchor = li
+        .select((col("l_extendedprice") / 1000.0).cast("decimal(18,6)").as("y"))
+        .agg(count(lit(1)).cast("double").as("n"),
+          sum(col("y")).cast("double").as("sy"),
+          sum(col("y") * col("y")).cast("double").as("syy"))
+        .select(round((col("syy") - col("sy") * (col("sy") / col("n"))) / col("n"), 6)
+          .as("mse0"))
+      flags.crossJoin(anchor)
+        .select(col("round"), col("mse0"), col("monotone"), col("below_initial"))
+        .orderBy("round")
     }
-    // flags from the measured per-round MSEs (aggregates computed in the
-    // cluster; the comparison is driver arithmetic on those bounded
-    // values) — epsilon absorbs double-agg summation-order noise when a
-    // round's true decrease is ~0 (no split found)
-    val eps = (a: Double) => a * (1 + 1e-9) + 1e-12
-    val flags = mses.toSeq.map { case (m, v) =>
-      val prev = if (m == 1) mseInit else mses(m - 2)._2
-      (m, v <= eps(prev), v <= eps(mseInit))
-    }.toDF("round", "monotone", "below_initial")
-    // the exact-decimal anchor, computed in-plan with the oracle's ops
-    val anchor = li
-      .select((col("l_extendedprice") / 1000.0).cast("decimal(18,6)").as("y"))
-      .agg(count(lit(1)).cast("double").as("n"),
-        sum(col("y")).cast("double").as("sy"),
-        sum(col("y") * col("y")).cast("double").as("syy"))
-      .select(round((col("syy") - col("sy") * (col("sy") / col("n"))) / col("n"), 6)
-        .as("mse0"))
-    flags.crossJoin(anchor)
-      .select(col("round"), col("mse0"), col("monotone"), col("below_initial"))
-      .orderBy("round")
-  }.withProd { (s, dir) =>
-    // production path: the same 4-round boost WITHOUT the per-round MSE
-    // heads, the initial-MSE measurement, and the exact-decimal anchor
-    // aggregate; serves the ensemble prediction F0 + ν·Σ trees
-    val li = Tables.lineitem(s, dir)
-    val fts = Seq(col("l_quantity"), col("l_discount"), col("l_tax"),
-      year(col("l_shipdate")))
-    val shrink = 0.5
-    var frame = binForRegression(li, fts, col("l_extendedprice") / 1000.0, bins = 32)
-    val f0 = frame.agg(avg("y")).head.getDouble(0)
-    // r16: staged residual projection, one checkpoint total (see the
-    // gated entry's note)
-    frame = frame.withColumn("y", col("y") - f0)
-    val trees = scala.collection.mutable.ArrayBuffer.empty[RModel]
-    for (_ <- 1 to 4) {
-      val tree = trainRegressionBinned(frame, d = fts.length, depth = 2, bins = 32)
-      trees += tree
-      frame = frame
-        .select(col("b"), (col("y") - lit(shrink) * regressExpr(tree, col("b"))).as("y"),
-          col("w"), lit(0).as("node"))
-    }
-    frame.select(gbtPredictExpr(f0, shrink, trees.toSeq, col("b")).as("pred"))
   }
 
   /** Registered pass (r11): dt01's configuration trained with ENTROPY

@@ -64,7 +64,7 @@ class ModelIOSpec extends SparkTestBase {
     assert(ModelIO.loadRegressionTree(spark, p3) == rmodel)
 
     // a REAL trained GBT: train -> save -> load -> bit-identical predictions
-    val (tf0, tshrink, ttrees, tmses) =
+    val (tf0, tshrink, ttrees, tmses, _) =
       Trees.trainGbt(df, fts, col("y"), rounds = 3, depth = 2, bins = 20, shrink = 0.5)
     assert(tmses.zip(tmses.drop(1)).forall { case (a, b) => b <= a * (1 + 1e-9) },
       "squared-loss GBT training MSE must be non-increasing")

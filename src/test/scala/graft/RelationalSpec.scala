@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.operators.Relational
 
@@ -19,6 +20,27 @@ class RelationalSpec extends SparkTestBase {
       assert(tempViews(fresh) == views, s"${q.name} changed the session's temp views")
     }
     assert(fresh.table("orders").count() == 3, "the caller's own view was replaced")
+  }
+
+  test("every production twin runs on a fresh session, and the twins are BASELINE.md's pinned set") {
+    val fresh = spark.newSession()
+    val views = tempViews(fresh)
+    val twins = SparkEntry.prodQueries
+    twins.toSeq.sortBy(_._1).foreach { case (name, prod) =>
+      val df = prod(fresh, sfDir)
+      assert(df.columns.nonEmpty, s"$name twin: no columns")
+      assert(df.count() >= 0, s"$name twin: failed to execute")
+      assert(tempViews(fresh) == views, s"$name twin changed the session's temp views")
+    }
+    // the rows of BASELINE.md's "Production-twin baseline" table: a lost
+    // twin fails here before it fails the bench gate
+    val pinned = java.nio.file.Files.readAllLines(java.nio.file.Paths.get("BASELINE.md"),
+        java.nio.charset.StandardCharsets.UTF_8).asScala.iterator
+      .dropWhile(!_.startsWith("## Production-twin baseline"))
+      .drop(1).dropWhile(!_.startsWith("|")).takeWhile(_.startsWith("|"))
+      .drop(2).map(_.split('|')(1).trim).toSet
+    assert(pinned.size == 23, s"BASELINE.md pins ${pinned.size} twins")
+    assert(twins.keySet == pinned)
   }
 
   test("Tables.sql binds tables in CTE bodies and subqueries; a CTE named like a table wins") {

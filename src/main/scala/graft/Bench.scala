@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints per-query seconds as JSON on stdout
   * (three lines — full named map, heaviest-queries named map, compact
@@ -56,24 +54,17 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 4 rounds by default: the budget check stops whatever doesn't fit,
     // and when a 4th warm round DOES fit it gives every cheap query a
     // 4th sample — the median then survives contention landing on any
     // single round (the r13 q21/s02 class of flags).
     val rounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 149 queries × several codegen'd stages each round blow through
-      // the default 100-entry generated-class cache — every round then
-      // recompiles every plan (janino + fresh JIT state each time).
-      // Keeping the classes cached removes that churn from rounds 2-3.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 149 queries × several codegen'd stages each round blow through
+    // the default 100-entry generated-class cache — every round then
+    // recompiles every plan (janino + fresh JIT state each time).
+    // Keeping the classes cached removes that churn from rounds 2-3.
+    val spark = SparkEntry.localSession(defaultCpus = 4,
+      "spark.sql.codegen.cache.maxEntries" -> "2000")
 
     val allNames = SparkEntry.queries.keys.toSeq.sorted
     // local-iteration filter (comma-separated names); the driver never
@@ -97,20 +88,9 @@ object Bench {
     val prodSamples =
       new java.util.concurrent.ConcurrentHashMap[String, List[(String, Double)]]()
     @volatile var roundsDone = 0
-    // cold time of the d13/d14/d15 shared covariance stage (PCA.scala's
-    // session cache): measured ONCE before round 1 so the ~6.5 s
-    // distributed pass is a recorded number — the per-query medians are
-    // warm shared-stage samples by design and say so in SURVEY §2
+    // cold cost of the three shared one-time stages (graft.Shared),
+    // measured once before round 1 (see coldStage below)
     @volatile var covSharedCold = -1.0
-    // cold cost of the two WRITE/CACHE-side layout stages that are NOT
-    // part of any query's steady-state plan: the q40 bucketed-table
-    // write (Bucketed.bucketedOrdersLineitem — a one-time layout
-    // investment every later join amortizes) and the d02/d07/lp01
-    // shared candidate-pair stage (Similarity.jaccardPairsShared's
-    // session persist). Both are warmed HERE, before round 1, so the
-    // per-query samples measure the operators' steady-state plans and
-    // the one-time costs are their own recorded numbers (r13 verdict
-    // items 1a and 2).
     @volatile var bucketedWriteCold = -1.0
     @volatile var pairsSharedCold = -1.0
     val printed = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -329,55 +309,38 @@ object Bench {
       } catch { case _: Throwable => () }
     }
 
-    // prime + time the shared covariance stage cold (only when one of
-    // its consumers is in this run): all four consumers' samples are
-    // then uniformly warm, and the cold pass is its own labeled number
-    if (Seq("d13_pca", "d14_covariance", "d15_svd",
-            "corr01_correlation_matrix").exists(names.contains)) {
-      val t0 = System.nanoTime()
-      try {
-        operators.PCA.covarianceShared(spark, sfDir)
-        covSharedCold = r3((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] cov_shared_cold failed: ${e.getMessage}")
+    // The one-time shared stages (graft.Shared) are warmed here, before
+    // round 1, each only when one of its consumers is in this run, and
+    // their cold cost is recorded as its own field: every consumer's
+    // samples are then uniformly warm steady-state numbers, whatever the
+    // round's shuffled order (the r13 lp01 5.1x flag was the pair stage's
+    // cold pass landing in one of its samples). q40's bucketed-table
+    // write is a one-time data-layout investment, like building an index,
+    // not part of the join the query demonstrates (r13 verdict item 1a).
+    def coldStage(field: String, consumers: String*)(stage: => Unit): Double =
+      if (!consumers.exists(names.contains)) -1.0
+      else {
+        val t0 = System.nanoTime()
+        val sec =
+          try { stage; r3((System.nanoTime() - t0) / 1e9) }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $field failed: ${e.getMessage}")
+            -1.0
+          }
+        System.err.println(f"[bench] $field ${sec}%.3f s")
+        sec
       }
-      System.err.println(f"[bench] cov_shared_cold ${covSharedCold}%.3f s")
+    covSharedCold = coldStage("cov_shared_cold",
+        "d13_pca", "d14_covariance", "d15_svd", "corr01_correlation_matrix") {
+      operators.PCA.covarianceShared(spark, sfDir)
     }
-
-    // q40's bucketed-table LAYOUT WRITE is a one-time data-layout
-    // investment (like building an index), not part of the join the
-    // query demonstrates — warm it before round 1 and record the write
-    // cost as its own field, so q40's samples time the shuffle-free
-    // join the entry exists to show (r13 verdict item 1a).
-    if (names.contains("q40_bucketed_join")) {
-      val t0 = System.nanoTime()
-      try {
-        operators.Bucketed.bucketedOrdersLineitem(spark, sfDir)
-        bucketedWriteCold = r3((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] bucketed_write_cold failed: ${e.getMessage}")
-      }
-      System.err.println(f"[bench] bucketed_write_cold ${bucketedWriteCold}%.3f s")
+    bucketedWriteCold = coldStage("bucketed_write_cold", "q40_bucketed_join") {
+      operators.Bucketed.bucketedOrdersLineitem(spark, sfDir)
     }
-
-    // The d02/d07/lp01 shared candidate-pair stage persists once per
-    // (session, corpus); whichever consumer ran first used to pay the
-    // cold pass in ONE of its samples depending on the round's shuffled
-    // order (the r13 lp01 5.1x flag). Warm it before round 1 so all
-    // three consumers' samples are uniformly warm and the cold cost is
-    // its own recorded number (r13 verdict item 2).
-    if (Seq("d02_ngram_jaccard", "d07_dup_clusters", "lp01_label_propagation")
-          .exists(names.contains)) {
-      val t0 = System.nanoTime()
-      try {
-        operators.Similarity.jaccardPairsShared(
-          Tables.documents(spark, sfDir), sfDir,
-          dfCap = operators.Similarity.d02DfCap, minJaccard = 0.5).count()
-        pairsSharedCold = r3((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] pairs_shared_cold failed: ${e.getMessage}")
-      }
-      System.err.println(f"[bench] pairs_shared_cold ${pairsSharedCold}%.3f s")
+    pairsSharedCold = coldStage("pairs_shared_cold",
+        "d02_ngram_jaccard", "d07_dup_clusters", "lp01_label_propagation") {
+      operators.Similarity.jaccardPairsShared(spark, sfDir,
+        dfCap = operators.Similarity.d02DfCap, minJaccard = 0.5).count()
     }
 
     // time budget: always complete round 1 (full coverage); a later round

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainUtils
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import java.nio.file.{Files, Paths}
@@ -32,14 +31,7 @@ object PlanDump {
     }
     val (sfDir, outDir) = (args(0), args(1))
     val names = args.drop(2).flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(defaultCpus = 8)
     Files.createDirectories(Paths.get(outDir))
     // execution-shape evidence: count the jobs/stages/tasks the whole
     // entry submits (driver-iterated trainers do their work in actions,

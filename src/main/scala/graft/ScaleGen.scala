@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the in-sandbox scaling experiment (SCALING.md):
@@ -29,14 +28,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, factorS) = args.take(3)
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(defaultCpus = 32)
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val maxDoc = docs.agg(max("doc_id")).head.getLong(0) + 1

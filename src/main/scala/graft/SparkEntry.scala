@@ -29,6 +29,22 @@ object SparkEntry {
       operators.Evaluation.all ++ sources.RandomData.all ++
       ml.Optimize.all ++ operators.Sketches.all ++ operators.Layout.all
 
+  /** The local session of the mains (Verify, Bench, PlanDump, ScaleGen):
+    * `local[N]` with N shuffle partitions, N from `SPARK_GRAFT_CPUS` or
+    * else `defaultCpus`; UTC session time zone, no UI, WARN logging.
+    * `conf` adds settings. */
+  def localSession(defaultCpus: Int, conf: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.q01.run(spark, "/root/testdata/sf0.001")

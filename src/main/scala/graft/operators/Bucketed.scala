@@ -21,23 +21,26 @@ object Bucketed {
 
   val nBuckets = 8
 
-  /** Ensure bucketed copies of orders/lineitem exist for `dir`, keyed by
-    * the order key; idempotent per session (catalog check) and safe
-    * across sessions (overwrite into a dir-keyed scratch path). Returns
-    * the two table names. */
-  def bucketedOrdersLineitem(s: SparkSession, dir: String): (String, String) = {
-    val suf = math.abs(dir.hashCode).toString
-    val scratch = s"${sys.props("java.io.tmpdir")}/graft-bucketed-$suf"
-    val oTbl = s"orders_bkt_$suf"
-    val lTbl = s"lineitem_bkt_$suf"
-    if (!s.catalog.tableExists(oTbl)) {
+  /** Bucketed copies of `dir`'s orders and lineitem, keyed by the order
+    * key, written once per corpus version (see [[graft.Shared]]): table
+    * names and scratch paths carry the stage's tag, and a superseded
+    * version's tables are dropped and their files deleted. Returns the
+    * two table names. */
+  def bucketedOrdersLineitem(s: SparkSession, dir: String): (String, String) =
+    graft.Shared[(String, String, String)](s, "bucketed", dir, nBuckets)({ tag =>
+      val suf = tag.getOrElse(java.util.UUID.randomUUID.toString.replace("-", ""))
+      val scratch = s"${sys.props("java.io.tmpdir")}/graft-bucketed-$suf"
+      val (oTbl, lTbl) = (s"orders_bkt_$suf", s"lineitem_bkt_$suf")
       Sources.writeBucketedAt(Tables.orders(s, dir), oTbl, s"$scratch/orders",
         nBuckets, "o_orderkey", Seq("o_orderkey"))
       Sources.writeBucketedAt(Tables.lineitem(s, dir), lTbl, s"$scratch/lineitem",
         nBuckets, "l_orderkey", Seq("l_orderkey"))
-    }
-    (oTbl, lTbl)
-  }
+      (oTbl, lTbl, scratch)
+    }, { case (oTbl, lTbl, scratch) =>
+      val path = new org.apache.hadoop.fs.Path(scratch)
+      path.getFileSystem(s.sparkContext.hadoopConfiguration).delete(path, true)
+      Seq(oTbl, lTbl).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+    }) match { case (oTbl, lTbl, _) => (oTbl, lTbl) }
 
   /** The q03 join shape on the bucketed layout: orders⋈lineitem joins
     * bucket-to-bucket (no Exchange on the join key — asserted in

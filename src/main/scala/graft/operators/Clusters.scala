@@ -131,7 +131,7 @@ object Clusters {
     // shared persisted stage: reuses d02's candidate pairs when both run
     // in one session (Verify/Bench and any real dedup pipeline do)
     val pairs = Similarity
-      .jaccardPairsShared(docs, dir, dfCap = Similarity.d02DfCap, minJaccard = 0.5)
+      .jaccardPairsShared(s, dir, dfCap = Similarity.d02DfCap, minJaccard = 0.5)
       .select(col("d1").as("src"), col("d2").as("dst"))
     val labels = connectedComponents(docs.select(col("doc_id").as("id")), pairs)
     labels.select(

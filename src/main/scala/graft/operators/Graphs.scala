@@ -386,7 +386,7 @@ object Graphs {
   val lp01 = Q.sql("lp01_label_propagation", lp01OracleSql) { (s, dir) =>
     val docs = Tables.documents(s, dir)
     val pairs = Similarity
-      .jaccardPairsShared(docs, dir, dfCap = Similarity.d02DfCap, minJaccard = 0.5)
+      .jaccardPairsShared(s, dir, dfCap = Similarity.d02DfCap, minJaccard = 0.5)
       .select(col("d1").as("src"), col("d2").as("dst"))
     labelPropagation(docs.select(col("doc_id").as("id")), pairs, iters = 5)
       .select(col("id").as("doc_id"), col("label").as("community"))

@@ -31,25 +31,6 @@ import graft.plans.GraftFunctions.floatDot
   */
 object PCA {
 
-  /** Shared covariance stage (the d02 `jaccardPairsShared` pattern, but
-    * the artifact is the BOUNDED collected triangle — dim(dim+1)/2 rows
-    * plus the dim means — so it caches as plain driver data, no persist
-    * or unpersist lifecycle). d13 and d14 both need the exact same
-    * centered covariance; in one session (Verify, Bench, a real PCA
-    * pipeline) it computes once. Keys carry the corpus snapshot version
-    * (file listing hash); an unversionable corpus bypasses the cache.
-    * The outer map is WEAK on the session OBJECT: entries die with their
-    * session (no unbounded growth across sessions in a long-lived
-    * process) and two live sessions can never alias — an
-    * identityHashCode-keyed map could collide. NOTE for bench readers:
-    * because of this stage, d13/d14 medians are WARM shared-stage
-    * numbers — the first consumer in a session pays the distributed
-    * pass (~6.5 s at sf0.1), later samples read the cached 2080-row
-    * driver artifact. */
-  private val covCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[(String, Long), (Seq[Double], Array[(Long, Long, Double)])]]()
-
   private def covarianceData(emb: DataFrame): (Seq[Double], Array[(Long, Long, Double)]) = {
     val mus = emb
       .select(posexplode(col("embedding")).as(Seq("p", "x")))
@@ -60,28 +41,12 @@ object PCA {
     (mus, entries)
   }
 
+  /** The centered covariance (means, upper-triangle entries) as driver
+    * data, built once per corpus version for d13, d14, d15 and corr01
+    * (see [[graft.Shared]]). */
   def covarianceShared(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (Seq[Double], Array[(Long, Long, Double)]) = {
-    val emb = graft.Tables.embeddings(s, dir)
-    Similarity.corpusVersion(s, dir) match {
-      case None => covarianceData(emb) // unversionable: recompute, never alias
-      case Some(version) =>
-        val perSession = covCache.synchronized {
-          var inner = covCache.get(s)
-          if (inner == null) {
-            inner = scala.collection.mutable.Map.empty
-            covCache.put(s, inner)
-          }
-          inner
-        }
-        perSession.synchronized {
-          // drop superseded snapshots of the same corpus
-          perSession.keys.filter(k => k._1 == dir && k._2 != version)
-            .toList.foreach(perSession.remove)
-          perSession.getOrElseUpdate((dir, version), covarianceData(emb))
-        }
-    }
-  }
+      : (Seq[Double], Array[(Long, Long, Double)]) =
+    graft.Shared(s, "covariance", dir)(_ => covarianceData(graft.Tables.embeddings(s, dir)))
 
   /** (vec_id-less) centered upper-triangle covariance entries
     * (i, j, cov), 1-based dims, i ≤ j, sample normalization (n−1).

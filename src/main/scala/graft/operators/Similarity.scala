@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftDatasetFactory
 import graft.{Q, Tables}
 import graft.plans.GraftFunctions.{floatCosine, hashedWordGrams, hyperplaneSign,
   minhashSignature, simhash63}
@@ -47,96 +48,27 @@ object Similarity {
       |JOIN sizes s2 ON s2.doc_id = d2
       |WHERE c * 1.0 / (s1.sz + s2.sz - c) >= 0.5
       |ORDER BY d1, d2""".stripMargin) { (s, dir) =>
-    jaccardPairsShared(Tables.documents(s, dir), dir, dfCap = d02DfCap, minJaccard = 0.5)
-      .orderBy("d1", "d2")
+    jaccardPairsShared(s, dir, dfCap = d02DfCap, minJaccard = 0.5).orderBy("d1", "d2")
   }
 
-  /** Process-wide materialization of the candidate-pair stage: the dedup
-    * pipeline consumes the SAME pairs twice (d02 emits them, d07 closes
-    * them into clusters), so the stage is computed once per (session,
-    * corpus-version, params) and persisted instead of re-running the
-    * shingle self-join per consumer — the `rdd.cache()`-before-branching
-    * pattern for shared pipeline stages. The pair set is tiny (near-dup
-    * pairs, not the corpus), so MEMORY_AND_DISK costs nothing at any
-    * scale.
-    *
-    * Lifecycle: the key carries a corpus SNAPSHOT VERSION (a hash of the
-    * file listing under `corpusKey` — names, sizes, mtimes), so
-    * re-reading a corpus that changed at the same path recomputes instead
-    * of returning stale pairs; the superseded version's storage is
-    * unpersisted on the spot. A long-lived service can also drop
-    * everything for a session explicitly via [[evictPairsCache]]. */
-  private final case class PairsKey(
-      session: Int, corpus: String, dfCap: Int, minJaccard: Double, version: Long)
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[PairsKey, DataFrame]()
-
-  /** Snapshot version of the files under `dir`: one cheap driver-side
-    * recursive listing (no Spark job). None when the listing fails or the
-    * path doesn't resolve — callers must then BYPASS the cache (compute
-    * unpersisted) rather than alias distinct corpora onto a shared
-    * sentinel slot, where one could evict or poison the other. */
-  private[operators] def corpusVersion(spark: SparkSession, dir: String): Option[Long] = {
-    try {
-      val path = new org.apache.hadoop.fs.Path(dir)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(path)) None
-      else {
-        var h = 1125899906842597L
-        val it = fs.listFiles(path, true)
-        while (it.hasNext) {
-          val f = it.next()
-          h = h * 31 + f.getPath.getName.hashCode
-          h = h * 31 + f.getLen
-          h = h * 31 + f.getModificationTime
-        }
-        Some(h)
-      }
-    } catch { case _: Exception => None }
-  }
-
-  /** Unpersist and drop every cached pair stage owned by `spark`. */
-  def evictPairsCache(spark: SparkSession): Unit = pairsCache.synchronized {
-    val sid = System.identityHashCode(spark)
-    val it = pairsCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.session == sid) { e.getValue.unpersist(blocking = true); it.remove() }
-    }
-  }
-
+  /** The candidate-pair stage the dedup pipeline consumes more than once
+    * (d02 emits the pairs, d07 and lp01 build graphs on them), built once
+    * per corpus version and persisted (see [[graft.Shared]]). The pair set
+    * is tiny (near-duplicate pairs, not the corpus), so MEMORY_AND_DISK
+    * costs nothing at any scale. The frame is returned in the caller's
+    * session, which reads the persisted blocks through the shared cache.
+    * An unversionable corpus gets unpersisted pairs whose shingle stage is
+    * checkpointed within the query (see `shareShingleStage`). */
   def jaccardPairsShared(
-      docs: DataFrame, corpusKey: String, dfCap: Int, minJaccard: Double): DataFrame = {
-    val spark = docs.sparkSession
-    corpusVersion(spark, corpusKey) match {
-      case None =>
-        // unversionable corpus: no caching — a stale or cross-corpus hit
-        // is worse than recomputing the (tiny) pair stage per consumer.
-        // The shingle stage IS materialized within the query (see
-        // shareShingleStage): without it each consumer of `grams`
-        // (sizes + both self-join sides) re-runs the explode.
-        jaccardPairs(docs, dfCap, minJaccard, shareShingleStage = true)
-      case Some(version) =>
-        val key = PairsKey(
-          System.identityHashCode(spark), corpusKey, dfCap, minJaccard, version)
-        // evict-superseded + insert must be one atomic sequence: without
-        // the lock, a concurrent caller could unpersist a DataFrame this
-        // thread just received, or two versions could race to insert.
-        // The lock only guards plan construction (lazy — no Spark job),
-        // so holding it is cheap.
-        pairsCache.synchronized {
-          val it = pairsCache.entrySet().iterator()
-          while (it.hasNext) {
-            val e = it.next()
-            if (e.getKey.copy(version = version) == key && e.getKey.version != version) {
-              e.getValue.unpersist(blocking = true); it.remove()
-            }
-          }
-          pairsCache.computeIfAbsent(key,
-            _ => jaccardPairs(docs, dfCap, minJaccard)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        }
-    }
+      spark: SparkSession, dir: String, dfCap: Int, minJaccard: Double): DataFrame = {
+    val pairs = graft.Shared[DataFrame](spark, "pairs", dir, dfCap, minJaccard)({ tag =>
+      val docs = Tables.documents(spark, dir)
+      if (tag.isEmpty) jaccardPairs(docs, dfCap, minJaccard, shareShingleStage = true)
+      else jaccardPairs(docs, dfCap, minJaccard)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }, _.unpersist(blocking = true))
+    if (pairs.sparkSession eq spark) pairs
+    else GraftDatasetFactory.ofRows(spark, pairs.queryExecution.analyzed)
   }
 
   /** Exact n-gram Jaccard pairs over the df-capped shingle space: grams
@@ -147,10 +79,10 @@ object Similarity {
     * @param shareShingleStage eagerly `localCheckpoint` the df-capped
     *        gram stage so its three consumers (sizes + both self-join
     *        sides) read one materialization instead of re-running the
-    *        explode each. Default false: [[jaccardPairsShared]]'s
-    *        versioned-cache path persists the final pairs lazily under a
-    *        lock that must not run Spark jobs, and an eager checkpoint
-    *        there would. The cache-BYPASS path sets it true. */
+    *        explode each. Default false: [[jaccardPairsShared]]'s kept
+    *        pairs are persisted lazily, so building them starts no job,
+    *        and their plan stays the one the persisted blocks match. The
+    *        unkept path sets it true. */
   def jaccardPairs(docs: DataFrame, dfCap: Int, minJaccard: Double,
       shareShingleStage: Boolean = false): DataFrame = {
     // native shingle hashing: the candidate join shuffles longs, not

@@ -647,27 +647,32 @@ object Trees {
     * FULL value oracle: [[dtOracleSql]] (gini) replays the whole induction —
     * binning, level-order Gini split selection, routing, majority
     * leaves — in DuckDB. */
-  val dt01 = Q.sql("dt01_decision_tree", dtOracleSql("gini")) { (s, dir) =>
-    import s.implicits._
-    val li = Tables.lineitem(s, dir)
-    val (assigned, model) = train(
-      li,
-      Seq(col("l_quantity"), col("l_discount"), col("l_tax"),
-        year(col("l_shipdate"))),
-      col("l_returnflag"), depth = 3, bins = 32,
-      // free driver-side assert over the already-collected candidate
-      // gains (r11 advice): the SQL replay's exactness rests on gains
-      // sitting >2e-12 apart — guard it in the REGISTERED run at the
-      // driver's SF, not only in TreesSpec's corpora
-      guardGainGaps = true)
-    val leafPred = model.leafClass.toSeq.toDF("node", "pred")
-    assigned.groupBy("node", "label").agg(count(lit(1)).as("c"))
-      .join(broadcast(leafPred), Seq("node"))
-      .groupBy(col("node").as("leaf"), col("pred"))
-      .agg(sum("c").as("n"),
-        sum(when(col("label") === col("pred"), col("c")).otherwise(0L)).as("n_correct"))
-      .orderBy("leaf")
-  }
+  val dt01 = returnflagTree("dt01_decision_tree", "gini", gainGapWidth = 2e-12)
+
+  /** The registered body of [[dt01]] and [[dt02]], which differ only in
+    * the impurity and the gain-gap width their oracle replay needs. */
+  private def returnflagTree(name: String, impurity: String, gainGapWidth: Double): Q =
+    Q.sql(name, dtOracleSql(impurity)) { (s, dir) =>
+      import s.implicits._
+      val li = Tables.lineitem(s, dir)
+      val (assigned, model) = train(
+        li,
+        Seq(col("l_quantity"), col("l_discount"), col("l_tax"),
+          year(col("l_shipdate"))),
+        col("l_returnflag"), depth = 3, bins = 32,
+        // free driver-side assert over the already-collected candidate
+        // gains (r11 advice): the SQL replay's exactness rests on gains
+        // sitting more than `gainGapWidth` apart — guard it in the
+        // REGISTERED run at the driver's SF, not only in TreesSpec's corpora
+        guardGainGaps = true, impurity = impurity, gainGapWidth = gainGapWidth)
+      val leafPred = model.leafClass.toSeq.toDF("node", "pred")
+      assigned.groupBy("node", "label").agg(count(lit(1)).as("c"))
+        .join(broadcast(leafPred), Seq("node"))
+        .groupBy(col("node").as("leaf"), col("pred"))
+        .agg(sum("c").as("n"),
+          sum(when(col("label") === col("pred"), col("c")).otherwise(0L)).as("n_correct"))
+        .orderBy("leaf")
+    }
 
   /** The whole 5-tree forest induction of [[rf01]] replayed in SQL
     * (r10): dt01's level replay, parameterized per tree, PLUS the
@@ -1200,23 +1205,7 @@ object Trees {
     * libms; see [[dtOracleSql]]); TreesSpec separately proves the two
     * impurities genuinely differ on a planted corpus, so this is not
     * dt01 re-labeled. */
-  val dt02 = Q.sql("dt02_entropy_tree", dtOracleSql("entropy")) { (s, dir) =>
-    import s.implicits._
-    val li = Tables.lineitem(s, dir)
-    val (assigned, model) = train(
-      li,
-      Seq(col("l_quantity"), col("l_discount"), col("l_tax"),
-        year(col("l_shipdate"))),
-      col("l_returnflag"), depth = 3, bins = 32,
-      guardGainGaps = true, impurity = "entropy", gainGapWidth = 2e-9)
-    val leafPred = model.leafClass.toSeq.toDF("node", "pred")
-    assigned.groupBy("node", "label").agg(count(lit(1)).as("c"))
-      .join(broadcast(leafPred), Seq("node"))
-      .groupBy(col("node").as("leaf"), col("pred"))
-      .agg(sum("c").as("n"),
-        sum(when(col("label") === col("pred"), col("c")).otherwise(0L)).as("n_correct"))
-      .orderBy("leaf")
-  }
+  val dt02 = returnflagTree("dt02_entropy_tree", "entropy", gainGapWidth = 2e-9)
 
   val all: Seq[Q] = Seq(dt01, dt02, rf01, gbt01, gbt02, gbt03)
 }

@@ -22,8 +22,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   */
 object Capacity {
 
-  final case class NodeCapacity(id: String, bytesPerMs: Double, cores: Int)
-
   /** Strategy selector — the reference's JobMonitor chooses among four
     * placement strategies (JobMonitor.scala:389-548); [[Assignment.shares]]
     * reduces each to per-node work shares for a weighted repartition. */

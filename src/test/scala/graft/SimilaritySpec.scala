@@ -77,9 +77,9 @@ class SimilaritySpec extends SparkTestBase {
     // corpus v1: two identical docs -> exactly one jaccard-1.0 pair
     docs.filter(col("doc_id") === 0)
       .unionByName(docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(999L)))
-      .write.mode("overwrite").parquet(dir)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     def pairsNow() = Similarity.jaccardPairsShared(
-      spark.read.parquet(dir), dir, dfCap = Similarity.d02DfCap, minJaccard = 0.5)
+      spark, dir, dfCap = Similarity.d02DfCap, minJaccard = 0.5)
     val v1 = pairsNow()
     assert(v1.count() == 1)
     // same snapshot -> the SAME persisted DataFrame instance comes back
@@ -90,13 +90,23 @@ class SimilaritySpec extends SparkTestBase {
     docs.filter(col("doc_id") === 0)
       .unionByName(docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(998L)))
       .unionByName(docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(999L)))
-      .write.mode("overwrite").parquet(dir)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val v2 = pairsNow()
     assert(v2.count() == 3, "changed corpus at the same path must recompute")
     assert(v2.storageLevel.useMemory || v2.storageLevel.useDisk)
-    Similarity.evictPairsCache(spark)
+    // another session of the same context gets the kept pairs in its own
+    // session, read from the persisted blocks
+    val other = spark.newSession()
+    val inOther = Similarity.jaccardPairsShared(
+      other, dir, dfCap = Similarity.d02DfCap, minJaccard = 0.5)
+    assert(inOther.sparkSession eq other)
+    assert(inOther.queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }.nonEmpty, "the other session must read the persisted pairs")
+    assert(inOther.count() == 3)
+    Shared.evict()
     assert(v2.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "evictPairsCache must unpersist the cached stage")
+      "Shared.evict must unpersist the cached stage")
   }
 
   test("d02 df-cap drops an ultra-common shingle and bounds its candidates") {

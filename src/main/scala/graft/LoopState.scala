@@ -4,10 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 
 /** How state is carried between the rounds of a driver-iterated
   * DataFrame loop — the re-expression of the reference's iterative
-  * surface (GraphX Pregel, the MLlib trainers). Every trainer hands its
-  * loop-carried frames (a value reassigned inside a driver loop) to
-  * [[cut]], and fingerprint-converged loops run through [[fixpoint]];
-  * no other file knows how the lineage is cut.
+  * surface (GraphX Pregel, the MLlib trainers). This object owns
+  * LOOP-CARRIED state: every trainer hands the frames it reassigns
+  * inside a driver loop to [[cut]], and fingerprint-converged loops run
+  * through [[fixpoint]].
+  *
+  * It does not own the one-shot pins: 32 plain `.localCheckpoint()`
+  * calls in 13 files (Graphs, Recommender, Embeddings, Optimize and
+  * others) materialize loop-INVARIANT inputs once, before a loop or a
+  * multi-pass fit. Their origin stats cannot compound (nothing feeds
+  * back into them), and a durability policy (below) must visit them too.
   *
   * Why the cut drops statistics: a `localCheckpoint` leaf inherits
   * stats computed from its origin plan. In a loop those stats COMPOUND —
@@ -24,9 +30,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * Durability: `localCheckpoint` keeps the blocks on the executors that
   * computed them, so losing one of those executors fails the next
-  * round. At cluster scale this object is the one place to swap in
-  * reliable checkpointing (a checkpoint directory, or a replicated
-  * persist).
+  * round. At cluster scale this object is the place to swap in reliable
+  * checkpointing (a checkpoint directory, or a replicated persist) for
+  * loop state; the one-shot pins above need the same swap at their own
+  * sites.
   */
 object LoopState {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)

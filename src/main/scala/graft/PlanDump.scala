@@ -14,6 +14,8 @@ import java.nio.file.{Files, Paths}
   *
   * A name suffixed `:prod` (`r02_als:prod`) dumps the entry's production
   * twin from [[SparkEntry.prodQueries]] to `<outDir>/<name>_prod.txt`.
+  * Exits 2 when any named entry failed (unknown name or a throw), after
+  * dumping the others.
   *
   * Notes: this dumps the plan of the DataFrame the registered entry
   * RETURNS. Driver-iterated trainers do their heavy work in actions
@@ -46,7 +48,7 @@ object PlanDump {
         stages.incrementAndGet(); tasks.addAndGet(s.stageInfo.numTasks.toLong)
       }
     })
-    for (n <- names) {
+    val failed = names.filterNot { n =>
       try {
         val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)
         val (fn, file) = n.split(":") match {
@@ -71,10 +73,14 @@ object PlanDump {
           plan.toString + s"\n\n# executed end-to-end: jobs=${jobs.get - j0} " +
             s"stages=${stages.get - s0} tasks=${tasks.get - t0}\n")
         System.err.println(s"[plandump] wrote $n jobs=${jobs.get - j0} stages=${stages.get - s0}")
+        true
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $n failed: ${e.getMessage}")
+        false
       }
     }
     spark.stop()
+    // as in Verify: a crashed entry must not pass for a complete dump
+    if (failed.nonEmpty) sys.exit(2)
   }
 }

@@ -4,6 +4,7 @@ import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** The one owner of shared one-time stages: results that several entries
@@ -27,8 +28,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Scope: an entry belongs to the SparkContext that built it and is
   * shared by every session of that context, as persisted blocks and
-  * catalog tables are. An entry of a stopped context is released at the
-  * next lookup of its key. Nothing is keyed on a session: a map keyed
+  * catalog tables are. When that context stops (`stop()`, or Spark's
+  * own shutdown hook at JVM exit) its entries are released, so scratch
+  * files a stage wrote do not outlive the process: the first entry a
+  * context keeps registers one listener on it for that, and a lookup
+  * adds no work. Nothing is keyed on a session: a map keyed
   * weakly on a session never drops an entry whose value (a persisted
   * frame) holds that session, and an identity hash can collide.
   *
@@ -52,6 +56,8 @@ object Shared {
   private final case class Key(stage: String, dir: String, params: Seq[Any])
   private final case class Entry(sc: SparkContext, version: Long, value: Any, release: () => Unit)
   private val entries = mutable.Map.empty[Key, Entry]
+  /** Contexts with a stop listener registered. */
+  private val watched = mutable.Set.empty[SparkContext]
 
   /** Snapshot version of the files under `dir`, or None when the listing
     * fails or the path does not exist. */
@@ -94,6 +100,10 @@ object Shared {
               .digest(s"$key@$version".getBytes("UTF-8"))
             val value = build(Some(digest.take(8).map(b => f"$b%02x").mkString))
             entries(key) = Entry(sc, version, value, () => release(value))
+            if (watched.add(sc)) sc.addSparkListener(new SparkListener {
+              override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+                releaseAll(sc)
+            })
             value
         }
     }
@@ -104,6 +114,12 @@ object Shared {
       // a stopped context has nothing left to free
       try e.release() catch { case NonFatal(_) if e.sc.isStopped => () }
     }
+
+  /** Releases the stages kept for a stopping context. */
+  private def releaseAll(sc: SparkContext): Unit = synchronized {
+    watched -= sc
+    entries.collect { case (k, e) if e.sc eq sc => k }.toList.foreach(drop)
+  }
 
   /** Releases every kept stage. */
   def evict(): Unit = synchronized { entries.keys.toList.foreach(drop) }

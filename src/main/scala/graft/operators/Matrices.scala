@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.plans.GraftFunctions.exactSum
 
 /** The reference's distributed-matrix surface (mllib/src/main/scala/org/
   * apache/spark/mllib/linalg/distributed/RowMatrix.scala `multiply`,
@@ -183,40 +184,47 @@ object Matrices {
       .orderBy("vec_id")
   }
 
-  /** cs01's distributed upper-triangle Gramian, collected at dim²/2
-    * cells. `exactDecimal` = the oracle-replayable order-independent
-    * decimal accumulation (d14's rule — the REGISTERED path);
-    * production would take the plain double sum (same one-pass shape,
-    * no per-product decimal conversion riding the hot loop) — the cs01
-    * prod twin measures that delta. */
-  private def gramianUpper(emb: DataFrame, dim: Int,
-                           exactDecimal: Boolean): Map[(Int, Int), Double] = {
-    val prod = col("xi") * col("xj")
-    val sumExpr =
-      if (exactDecimal) sum(prod.cast("decimal(18,12)")).cast("double")
-      else sum(prod)
-    emb
-      .select(transform(col("embedding"), v => v.cast("double")).as("x"))
-      .select(col("x"), posexplode(col("x")).as(Seq("pi", "xi")))
-      .select(col("pi"), col("xi"),
-        posexplode(slice(col("x"), col("pi") + 1, lit(dim))).as(Seq("pj", "xj")))
-      .groupBy(col("pi").cast("int").as("i"),
-        (col("pi") + col("pj")).cast("int").as("j"))
-      .agg(sumExpr.as("s"))
-      // bounded collect: dim(dim+1)/2 = 2080 cells, corpus-size-invariant
-      .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toMap
+  /** Upper-triangle product sums of the array<double> column `x` — the
+    * one kernel of RowMatrix.computeGramianMatrix (RowMatrix.scala:111)
+    * behind PCA's covariance and Gramian, cs01 and implicit ALS. Each
+    * row expands to its n(n+1)/2 products x_i·x_j, i ≤ j, n = size(x),
+    * through nested posexplode (the in-row form of MLlib's `dspr` into a
+    * treeAggregate buffer: no self-join, no shuffle of the expansion),
+    * and one partial-aggregated groupBy(i, j) applies `cell` to the
+    * product column, so the shuffle carries one partial per cell per
+    * partition, never row count. Rows (i, j, v), 0-based int dims. */
+  def upperTriangle(rows: DataFrame, x: Column)(cell: Column => Column): DataFrame =
+    rows.select(x.as("x"))
+      .select(col("x"), posexplode(col("x")).as(Seq("i", "xi")))
+      .select(col("i"), col("xi"),
+        posexplode(slice(col("x"), col("i") + 1, size(col("x")) - col("i")))
+          .as(Seq("d", "xj")))
+      .groupBy(col("i"), (col("i") + col("d")).as("j"))
+      .agg(cell(col("xi") * col("xj")).as("v"))
+
+  /** The collected cells (i, j, v) of an [[upperTriangle]]: bounded at
+    * n(n+1)/2 rows, corpus-size-invariant. */
+  def triangleCells(tri: DataFrame): Array[(Int, Int, Double)] =
+    tri.collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+
+  /** The dim×dim symmetric matrix of upper-triangle cells (i, j, v),
+    * 0-based; a cell absent from `cells` is 0. */
+  def symmetric(dim: Int, cells: Iterable[(Int, Int, Double)]): Array[Array[Double]] = {
+    val m = Array.ofDim[Double](dim, dim)
+    cells.foreach { case (i, j, v) => m(i)(j) = v; m(j)(i) = v }
+    m
   }
 
-  /** (i, j, cos_sim) rows for the upper triangle from a collected
-    * Gramian — bounded driver arithmetic, d14's rounding rule. */
+  /** (i, j, cos_sim) rows for the upper triangle of a collected
+    * symmetric Gramian — bounded driver arithmetic, d14's rounding rule. */
   private def cosineRows(s: org.apache.spark.sql.SparkSession,
-                         g: Map[(Int, Int), Double], dim: Int): DataFrame = {
+                         g: Array[Array[Double]]): DataFrame = {
     import s.implicits._
-    val nrm = Array.tabulate(dim)(i => math.sqrt(g((i, i))))
+    val nrm = g.indices.map(i => math.sqrt(g(i)(i)))
     def r6(v: Double): Double =
       BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
-    (for { i <- 0 until dim; j <- i + 1 until dim }
-      yield (i, j, r6(g((i, j)) / (nrm(i) * nrm(j)))))
+    (for { i <- g.indices; j <- i + 1 until g.length }
+      yield (i, j, r6(g(i)(j) / (nrm(i) * nrm(j)))))
       .toDF("i", "j", "cos_sim").orderBy("i", "j")
   }
 
@@ -251,19 +259,19 @@ object Matrices {
       |FROM g JOIN d da ON g.i = da.p JOIN d db ON g.j = db.p
       |WHERE g.i < g.j
       |ORDER BY i, j""".stripMargin) { (s, dir, audit) =>
-    // join-free Gramian: each row expands to its own dim(dim+1)/2 upper-
-    // triangle products via nested posexplode (covarianceUpper's shape) —
-    // one map + partial agg, no shuffle of the exploded table.
+    // join-free Gramian ([[upperTriangle]]): one map + partial agg.
     // 6dp aggregate rounding + signed-zero normalization (d14's rule):
     // the double->decimal product cast rounds HALF_UP on Spark and
     // half-even in DuckDB; a halfway product at sf0.1 shifts the exact
     // sum ~1e-13 - far below the emit precision. Spark-side decimal
     // HALF_UP rounding replicated driver-side via BigDecimal.
-    // The twin accumulates in plain DOUBLE: the decimal path exists so
-    // the oracle can replay the sum order-independently; production
-    // trusts IEEE summation.
-    cosineRows(s,
-      gramianUpper(Tables.embeddings(s, dir), 64, exactDecimal = audit), 64)
+    // The twin accumulates in plain DOUBLE (no per-product decimal
+    // conversion in the hot loop): the decimal path exists so the oracle
+    // can replay the sum order-independently; production trusts IEEE
+    // summation.
+    val x = transform(col("embedding"), v => v.cast("double"))
+    cosineRows(s, symmetric(64, triangleCells(
+      upperTriangle(Tables.embeddings(s, dir), x)(if (audit) exactSum else sum))))
   }
 
   /** DIMSUM sampled column similarities (reference RowMatrix.scala:497
@@ -306,8 +314,7 @@ object Matrices {
     // parallelism), corrected per the reference's colMagsCorrected
     val xs = transform(col("embedding"), v => v.cast("double"))
     val normRows = emb.select(posexplode(xs).as(Seq("i", "x")))
-      .groupBy("i").agg(sum((col("x") * col("x")).cast("decimal(18,12)"))
-        .cast("double").as("ss"))
+      .groupBy("i").agg(exactSum(col("x") * col("x")).as("ss"))
       .collect().map(r => (r.getInt(0), math.sqrt(r.getDouble(1)))).toMap
     val nrm = Array.tabulate(dim)(i => {
       val n = normRows.getOrElse(i, 0.0); if (n == 0.0) 1.0 else n
@@ -316,6 +323,7 @@ object Matrices {
     val q = nrm.map(n => math.min(sg, n)).toSeq
     // pass 2: coin-filter + scale each row's columns array-natively,
     // expand sampled pairs, exact-decimal partial aggregation
+    val sumOf: Column => Column = if (exactDecimal) exactSum else sum
     val pairsOf = (e: Column) => struct(e.getField("i").as("i"),
       (e.getField("x") / element_at(typedlit(q), e.getField("i") + 1)).as("s"))
     val sampledArr = transform(
@@ -331,10 +339,7 @@ object Matrices {
       .select(col("ea"),
         explode(slice(col("arr"), col("pa") + 2, lit(dim))).as("eb"))
       .groupBy(col("ea.i").as("i"), col("eb.i").as("j"))
-      .agg((if (exactDecimal)
-              sum((col("ea.s") * col("eb.s")).cast("decimal(18,12)"))
-                .cast("double")
-            else sum(col("ea.s") * col("eb.s"))).as("s"))
+      .agg(sumOf(col("ea.s") * col("eb.s")).as("s"))
       .select(col("i"), col("j"), (round(col("s"), 6) + 0.0).as("sim_est"))
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
-import graft.plans.GraftFunctions.floatDot
+import graft.plans.GraftFunctions.{exactSum, floatDot}
 
 /** Principal component analysis over the embedding table — the
   * RowMatrix surface of the reference (mllib/src/main/scala/org/apache/
@@ -31,14 +31,18 @@ import graft.plans.GraftFunctions.floatDot
   */
 object PCA {
 
-  private def covarianceData(emb: DataFrame): (Seq[Double], Array[(Long, Long, Double)]) = {
-    val mus = emb
-      .select(posexplode(col("embedding")).as(Seq("p", "x")))
+  /** Per-dimension means, rounded 6 dp before any use (d12's aggregate-
+    * rounding rule): a bounded dim-value collect that rides as plan
+    * literals, constant in corpus size. */
+  private[graft] def means(emb: DataFrame): Seq[Double] =
+    emb.select(posexplode(col("embedding")).as(Seq("p", "x")))
       .groupBy("p").agg(round(avg(col("x").cast("double")), 6).as("mu"))
       .orderBy("p").collect().map(_.getDouble(1)).toSeq
-    val entries = covarianceUpper(emb).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    (mus, entries)
+
+  private def covarianceData(emb: DataFrame): (Seq[Double], Array[(Long, Long, Double)]) = {
+    val mus = means(emb)
+    (mus, covarianceUpper(emb, mus).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
   }
 
   /** The centered covariance (means, upper-triangle entries) as driver
@@ -48,50 +52,32 @@ object PCA {
       : (Seq[Double], Array[(Long, Long, Double)]) =
     graft.Shared(s, "covariance", dir)(_ => covarianceData(graft.Tables.embeddings(s, dir)))
 
-  /** (vec_id-less) centered upper-triangle covariance entries
-    * (i, j, cov), 1-based dims, i ≤ j, sample normalization (n−1).
-    * Means are rounded (6 dp) BEFORE centering on both engines (d12's
-    * aggregate-rounding rule) so the per-row arithmetic is identical
-    * IEEE ops on identical constants, and each centered product is
-    * accumulated in EXACT decimal (rg01's rule): decimal sums are
-    * order-independent, so the aggregate is bit-identical across
-    * engines, partition layouts, and core counts — no float
-    * sum-order surface left for a hash compare to trip on. */
-  def covarianceUpper(emb: DataFrame): DataFrame = {
-    val base = emb.select(col("vec_id"), col("embedding"))
-    val dim = base.select(size(col("embedding"))).head.getInt(0)
-    // bounded 64-value collect — the d08/gm01 "stats as plan literals"
-    // class, constant in corpus size
-    val mus: Seq[Double] = base
-      .select(posexplode(col("embedding")).as(Seq("p", "x")))
-      .groupBy("p").agg(round(avg(col("x").cast("double")), 6).as("mu"))
-      .orderBy("p").collect().map(_.getDouble(1)).toSeq
-    val cx = zip_with(col("embedding"), typedlit(mus),
-      (xv, m) => xv.cast("double") - m)
-    // The per-row product stays a DOUBLE multiply (one IEEE op on
-    // identical inputs is bit-identical on any engine); only the
-    // PRODUCT is cast to decimal(18,12) for the sum. This keeps the
-    // order-independence (decimal addition is exact) while avoiding
-    // BigDecimal multiplies in the 66M-element hot loop, and
-    // decimal(18,12) stays in Spark's compact-long representation.
-    // 12 fractional digits lose nothing real (float inputs carry ~7
-    // significant digits); sum precision 38 leaves 26 integer digits —
-    // room for ~10^12 rows of O(100) products.
-    base.select(cx.as("cx"))
-      .select(col("cx"), posexplode(col("cx")).as(Seq("pi", "cxi")))
-      .select(col("pi"), col("cxi"),
-        posexplode(slice(col("cx"), col("pi") + 1, lit(dim))).as(Seq("pj", "cxj")))
-      .groupBy(
-        (col("pi") + 1).cast("long").as("i"),
-        (col("pi") + col("pj") + 1).cast("long").as("j"))
+  /** Centered upper-triangle covariance entries (i, j, cov) around the
+    * means `mus` (from [[means]]; their count is the width), 1-based
+    * dims, i ≤ j, sample normalization (n−1). Means are rounded BEFORE
+    * centering on both engines, so the per-row arithmetic is identical
+    * IEEE ops on identical constants, and the centered products sum
+    * through [[exactSum]] (rg01's rule): order-independent, so the
+    * aggregate is bit-identical across engines, partition layouts and
+    * core counts. */
+  def covarianceUpper(emb: DataFrame, mus: Seq[Double]): DataFrame =
+    Matrices.upperTriangle(emb,
+        zip_with(col("embedding"), typedlit(mus), (xv, m) => xv.cast("double") - m)) { p =>
       // + 0.0 normalizes signed zero: DuckDB's binary round keeps the
       // sign of a tiny negative sum (-0.0) while Spark's decimal
       // HALF_UP round emits +0.0 — numerically equal, hash-different.
       // IEEE: -0.0 + 0.0 = +0.0; every other value is unchanged.
-      .agg((round(
-        sum((col("cxi") * col("cxj")).cast("decimal(18,12)"))
-          .cast("double") / (count(lit(1)) - 1), 6) + lit(0.0d)).as("cov"))
-  }
+      round(exactSum(p) / (count(lit(1)) - 1), 6) + lit(0.0d)
+    }.select((col("i") + 1).cast("long").as("i"), (col("j") + 1).cast("long").as("j"),
+      col("v").as("cov"))
+
+  /** (eigenvalues, components) of the covariance given as (means,
+    * 1-based upper-triangle entries) — the one path from a covariance to
+    * its components. */
+  private def covarianceEigen(mus: Seq[Double], entries: Array[(Long, Long, Double)])
+      : (Array[Double], Array[Array[Double]]) =
+    symmetricEigen(Matrices.symmetric(mus.length,
+      entries.map { case (i, j, c) => ((i - 1).toInt, (j - 1).toInt, c) }))
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix: returns
     * (eigenvalues, eigenvectors-as-rows) sorted by eigenvalue
@@ -152,19 +138,9 @@ object PCA {
     * means, component variances (eigenvalues, descending) and the
     * components themselves (rows, unit-norm, sign-canonicalized). */
   def principalComponents(emb: DataFrame, m: Int): (Array[Double], Array[Double], Array[Array[Double]]) = {
-    val entries = covarianceUpper(emb).collect() // bounded: dim·(dim+1)/2 rows
-    val dim = entries.iterator.map(_.getLong(1).toInt).max
-    val cov = Array.ofDim[Double](dim, dim)
-    entries.foreach { r =>
-      val i = r.getLong(0).toInt - 1; val j = r.getLong(1).toInt - 1
-      cov(i)(j) = r.getDouble(2); cov(j)(i) = r.getDouble(2)
-    }
-    val mus = emb
-      .select(posexplode(col("embedding")).as(Seq("p", "x")))
-      .groupBy("p").agg(round(avg(col("x").cast("double")), 6).as("mu"))
-      .orderBy("p").collect().map(_.getDouble(1))
-    val (eig, vecs) = symmetricEigen(cov)
-    (mus, eig.take(m), vecs.take(m))
+    val (mus, entries) = covarianceData(emb)
+    val (eig, vecs) = covarianceEigen(mus, entries)
+    (mus.toArray, eig.take(m), vecs.take(m))
   }
 
   /** Projection from precomputed means + eigenvectors: map-only, one
@@ -191,33 +167,18 @@ object PCA {
   /** [[pcaProject]] through the session-shared covariance stage. */
   def pcaProjectShared(s: org.apache.spark.sql.SparkSession, dir: String,
                        m: Int): DataFrame = {
-    val emb = graft.Tables.embeddings(s, dir)
     val (mus, entries) = covarianceShared(s, dir)
-    val dim = entries.iterator.map(_._2.toInt).max
-    val cov = Array.ofDim[Double](dim, dim)
-    entries.foreach { case (iL, jL, c) =>
-      val i = iL.toInt - 1; val j = jL.toInt - 1
-      cov(i)(j) = c; cov(j)(i) = c
-    }
-    val (_, vecs) = symmetricEigen(cov)
-    projectExpr(emb, mus.toArray.toSeq, vecs.take(m), m)
+    projectExpr(Tables.embeddings(s, dir), mus, covarianceEigen(mus, entries)._2.take(m), m)
   }
 
-  /** Uncentered Gramian AᵀA upper triangle (i, j, g) — RowMatrix.
-    * computeGramianMatrix (RowMatrix.scala:111): the same one-pass
-    * partial-aggregated upper-triangle accumulation as
-    * [[covarianceUpper]], minus centering and normalization. */
-  def gramianUpper(emb: DataFrame): DataFrame = {
-    val base = emb.select(col("embedding"))
-    val dim = base.select(size(col("embedding"))).head.getInt(0)
-    base.select(transform(col("embedding"), x => x.cast("double")).as("cx"))
-      .select(col("cx"), posexplode(col("cx")).as(Seq("pi", "cxi")))
-      .select(col("pi"), col("cxi"),
-        posexplode(slice(col("cx"), col("pi") + 1, lit(dim))).as(Seq("pj", "cxj")))
-      .groupBy(
-        (col("pi") + 1).cast("long").as("i"),
-        (col("pi") + col("pj") + 1).cast("long").as("j"))
-      .agg(round(sum(col("cxi") * col("cxj")), 6).as("g"))
+  /** Eigen-decomposition of the uncentered Gramian AᵀA —
+    * RowMatrix.computeGramianMatrix (RowMatrix.scala:111) through the
+    * [[Matrices.upperTriangle]] kernel, cells rounded 6 dp; the width is
+    * the collected triangle's. */
+  private def gramianEigen(emb: DataFrame): (Array[Double], Array[Array[Double]]) = {
+    val cells = Matrices.triangleCells(Matrices.upperTriangle(emb,
+      transform(col("embedding"), x => x.cast("double")))(p => round(sum(p), 6)))
+    symmetricEigen(Matrices.symmetric(cells.iterator.map(_._2).max + 1, cells))
   }
 
   /** Top-m thin SVD of the embedding table — RowMatrix.computeSVD
@@ -229,14 +190,7 @@ object PCA {
     *
     * @return (singularValues desc, right vectors as rows) */
   def singularValues(emb: DataFrame, m: Int): (Array[Double], Array[Array[Double]]) = {
-    val entries = gramianUpper(emb).collect() // bounded: dim·(dim+1)/2
-    val dim = entries.iterator.map(_.getLong(1).toInt).max
-    val g = Array.ofDim[Double](dim, dim)
-    entries.foreach { r =>
-      val i = r.getLong(0).toInt - 1; val j = r.getLong(1).toInt - 1
-      g(i)(j) = r.getDouble(2); g(j)(i) = r.getDouble(2)
-    }
-    val (eig, vecs) = symmetricEigen(g)
+    val (eig, vecs) = gramianEigen(emb)
     (eig.take(m).map(l => math.sqrt(math.max(l, 0.0))), vecs.take(m))
   }
 
@@ -266,9 +220,8 @@ object PCA {
     """SELECT vec_id, TRUE AS energy_conserved
       |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir) =>
     val emb = Tables.embeddings(s, dir)
-    val dim = emb.select(size(col("embedding"))).head.getInt(0)
-    val (_, vecs) = singularValues(emb, dim)
-    val energyProj = (0 until dim).map { k =>
+    val (_, vecs) = gramianEigen(emb)
+    val energyProj = vecs.indices.map { k =>
       val vf: Seq[Float] = vecs(k).map(_.toFloat).toSeq
       val d = floatDot(col("embedding"), typedlit(vf))
       d * d
@@ -301,8 +254,9 @@ object PCA {
       |  round(tot, 2) AS total_var_projected
       |FROM v""".stripMargin) { (s, dir) =>
     val emb = Tables.embeddings(s, dir)
-    val dim = emb.select(size(col("embedding"))).head.getInt(0)
-    val proj = pcaProjectShared(s, dir, m = dim)
+    val (mus, entries) = covarianceShared(s, dir)
+    val dim = mus.length
+    val proj = projectExpr(emb, mus, covarianceEigen(mus, entries)._2, dim)
     val totProj = proj
       .agg((0 until dim).map(k => var_samp(col(s"pc$k"))).reduce(_ + _).as("tp"))
     val totIn = emb

@@ -649,24 +649,15 @@ object Recommender {
     solveLinear(a, b).toSeq
   }
 
-  /** Gramian Σ f fᵀ of a factor table as a dim² driver array — the
-    * BOUNDED shared state each implicit half-round broadcasts (the
-    * reference's computeYtY, ml/recommendation/ALS.scala:1111): one
-    * partial-aggregated explode of dim² cells per row, collected at
-    * dim² doubles regardless of corpus size. */
-  private def gramian(f: DataFrame, dim: Int): Array[Double] = {
-    // cell index is row-local and deterministic: posexplode of the
-    // flattened per-row outer product puts cell (a, b) at p = a·dim + b
-    val arr = f
-      .select(posexplode(flatten(transform(col("f"), x =>
-        transform(col("f"), y => x * y)))).as(Seq("p", "v")))
-      .groupBy("p").agg(sum("v").as("v"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val out = new Array[Double](dim * dim)
-    var i = 0
-    while (i < out.length) { out(i) = arr.getOrElse(i, 0.0); i += 1 }
-    out
-  }
+  /** Gramian Σ f fᵀ of a factor table as a row-major dim² driver array
+    * — the BOUNDED shared state each implicit half-round broadcasts (the
+    * reference's computeYtY, ml/recommendation/ALS.scala:1111): the
+    * [[Matrices.upperTriangle]] kernel's dim(dim+1)/2 cells, mirrored
+    * (x·y and y·x are the same double), collected regardless of corpus
+    * size. */
+  private def gramian(f: DataFrame, dim: Int): Array[Double] =
+    Matrices.symmetric(dim,
+      Matrices.triangleCells(Matrices.upperTriangle(f, col("f"))(sum))).flatten
 
   /** Implicit-feedback ALS trainer (reference trainImplicit,
     * mllib/recommendation/ALS.scala:338; setImplicitPrefs/setAlpha at

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.plans.GraftFunctions.exactSum
 
 /** Statistical aggregates and ordered selection — the DataFrame.stat /
   * min_by surface of the reference (SURVEY.md §2.1 q31-q33). */
@@ -389,8 +390,8 @@ object Stats {
       .groupBy("p")
       .agg(
         count(lit(1)).as("n"),
-        sum(col("x").cast("decimal(18,12)")).cast("double").as("sx"),
-        sum((col("x") * col("x")).cast("decimal(18,12)")).cast("double").as("sxx"),
+        exactSum(col("x")).as("sx"),
+        exactSum(col("x") * col("x")).as("sxx"),
         count(when(col("x") =!= 0.0, 1)).as("nnz"),
         max("x").as("max_x"), min("x").as("min_x"))
       .select(col("p"), col("n"),

@@ -54,6 +54,18 @@ object GraftFunctions {
   def u8Moments(payload: Column, off: Column, n: Column): Column =
     column(U8Moments(expression(payload), expression(off), expression(n)))
 
+  /** Order-independent sum of the double column `x`, as a double: each
+    * term is cast (HALF_UP) to decimal(18,12) and the terms add exactly,
+    * so the sum is bit-identical at any partitioning and merge order and
+    * on any engine replaying the same casts (the oracles'
+    * `CAST(sum(CAST(x AS DECIMAL(18,12))) AS DOUBLE)`). Contract: every
+    * term has |x| < 10^6 (six integer digits), and the running sum, kept
+    * in Spark's decimal(28,12), stays below 10^16. Outside either range
+    * the query fails under ANSI mode (Spark 4's default); with ANSI off
+    * the cast would yield null and the term would drop silently. */
+  def exactSum(x: Column): Column =
+    org.apache.spark.sql.functions.sum(x.cast("decimal(18,12)")).cast("double")
+
   // Spark ships BloomFilterAggregate / BloomFilterMightContain as the
   // engine's own runtime row-level-filter expressions but does not put
   // them in the public registry; exposing them here gives the library's

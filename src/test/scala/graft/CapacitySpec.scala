@@ -209,44 +209,45 @@ class CapacitySpec extends SparkTestBase {
   }
 
   test("Lever closed loop: capacity measurements drive next-batch placement, results unchanged") {
-    val src = java.nio.file.Files.createTempDirectory("graft-lever-src").toString
-    val ev = Tables.events(spark, TestSpark.sfDir).cache()
-    val schema = ev.schema
+    withTempDir("graft-lever-src") { src =>
+      val ev = Tables.events(spark, TestSpark.sfDir).cache()
+      val schema = ev.schema
 
-    // injectable measurement (the live-monitor path is covered by the
-    // CapacityMonitor test above): batch 0 sees a 3:1 capacity skew,
-    // batch 1 sees recovered 1:1 — placement must follow the CURRENT
-    // measurement each batch, which is the closed loop
-    val caps = new java.util.concurrent.atomic.AtomicReference(
-      Map("n0" -> 3.0, "n1" -> 1.0))
-    val perBatch = new java.util.concurrent.ConcurrentHashMap[Long, Map[Int, Long]]()
+      // injectable measurement (the live-monitor path is covered by the
+      // CapacityMonitor test above): batch 0 sees a 3:1 capacity skew,
+      // batch 1 sees recovered 1:1 — placement must follow the CURRENT
+      // measurement each batch, which is the closed loop
+      val caps = new java.util.concurrent.atomic.AtomicReference(
+        Map("n0" -> 3.0, "n1" -> 1.0))
+      val perBatch = new java.util.concurrent.ConcurrentHashMap[Long, Map[Int, Long]]()
 
-    val q = graft.streaming.Pipelines.startCapacityBalanced(
-      spark.readStream.schema(schema).parquet(src),
-      "lever_loop", () => caps.get(), "event_id") { (batch, id) =>
-      val counts = batch
-        .withColumn("_pid", spark_partition_id())
-        .groupBy("_pid").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      perBatch.put(id, counts)
+      val q = graft.streaming.Pipelines.startCapacityBalanced(
+        spark.readStream.schema(schema).parquet(src),
+        "lever_loop", () => caps.get(), "event_id") { (batch, id) =>
+        val counts = batch
+          .withColumn("_pid", spark_partition_id())
+          .groupBy("_pid").count()
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+        perBatch.put(id, counts)
+      }
+      ev.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      caps.set(Map("n0" -> 1.0, "n1" -> 1.0))
+      ev.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      q.stop()
+
+      def share0(counts: Map[Int, Long]): Double =
+        counts.getOrElse(0, 0L).toDouble / counts.values.sum
+      val s0 = share0(perBatch.get(0L))
+      val s1 = share0(perBatch.get(1L))
+      assert(s0 > 0.65 && s0 < 0.85, s"3:1 capacity should place ~75% on node 0, got $s0")
+      assert(s1 > 0.40 && s1 < 0.60, s"1:1 capacity should place ~50% on node 0, got $s1")
+      // semantically invisible: every row processed exactly once
+      val totalPlaced = perBatch.values().stream()
+        .mapToLong(m => m.values.sum).sum()
+      assert(totalPlaced == ev.count(), "balancing must only move rows, never drop or duplicate")
     }
-    ev.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    caps.set(Map("n0" -> 1.0, "n1" -> 1.0))
-    ev.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    def share0(counts: Map[Int, Long]): Double =
-      counts.getOrElse(0, 0L).toDouble / counts.values.sum
-    val s0 = share0(perBatch.get(0L))
-    val s1 = share0(perBatch.get(1L))
-    assert(s0 > 0.65 && s0 < 0.85, s"3:1 capacity should place ~75% on node 0, got $s0")
-    assert(s1 > 0.40 && s1 < 0.60, s"1:1 capacity should place ~50% on node 0, got $s1")
-    // semantically invisible: every row processed exactly once
-    val totalPlaced = perBatch.values().stream()
-      .mapToLong(m => m.values.sum).sum()
-    assert(totalPlaced == ev.count(), "balancing must only move rows, never drop or duplicate")
   }
 
   test("closed loop: each selectable strategy places per its property, lossless") {
@@ -281,22 +282,23 @@ class CapacitySpec extends SparkTestBase {
         }))
 
     for (((st, caps, check), i) <- cases.zipWithIndex) {
-      val src = java.nio.file.Files.createTempDirectory(s"graft-lever-st$i").toString
-      val got = new java.util.concurrent.atomic.AtomicReference[Map[Int, Long]](Map.empty)
-      val q = graft.streaming.Pipelines.startCapacityBalanced(
-        spark.readStream.schema(schema).parquet(src),
-        s"lever_strategy_$i", () => caps, "event_id", st) { (batch, _) =>
-        got.set(batch
-          .withColumn("_pid", spark_partition_id())
-          .groupBy("_pid").count()
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+      withTempDir(s"graft-lever-st$i") { src =>
+        val got = new java.util.concurrent.atomic.AtomicReference[Map[Int, Long]](Map.empty)
+        val q = graft.streaming.Pipelines.startCapacityBalanced(
+          spark.readStream.schema(schema).parquet(src),
+          s"lever_strategy_$i", () => caps, "event_id", st) { (batch, _) =>
+          got.set(batch
+            .withColumn("_pid", spark_partition_id())
+            .groupBy("_pid").count()
+            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+        }
+        ev.write.mode("append").parquet(src)
+        q.processAllAvailable()
+        q.stop()
+        val counts = got.get()
+        assert(counts.values.sum == nEv, s"$st dropped or duplicated rows")
+        check(counts)
       }
-      ev.write.mode("append").parquet(src)
-      q.processAllAvailable()
-      q.stop()
-      val counts = got.get()
-      assert(counts.values.sum == nEv, s"$st dropped or duplicated rows")
-      check(counts)
     }
   }
 

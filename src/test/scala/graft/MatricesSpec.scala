@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Matrices
+import graft.plans.GraftFunctions.exactSum
 
 class MatricesSpec extends SparkTestBase {
 
@@ -158,5 +159,51 @@ class MatricesSpec extends SparkTestBase {
     // with full per-pair row counts; spot-check emission scale via a
     // repeated run being identical (determinism) and the pair count
     assert(est.size <= width * (width - 1) / 2)
+  }
+
+  test("DIMSUM's sampled estimates equal an exact replay of the kept, 1/q-scaled products") {
+    import TestSpark.spark.implicits._
+    val (dim, n, threshold, seed) = (6, 300, 0.5, 11L)
+    // columns 0-2 carry norms above √γ ≈ 6 (p < 1), columns 3-5 below it
+    val xs = (0 until n).map { r =>
+      r.toLong -> Array.tabulate(dim)(c =>
+        ((((r * 37 + c * 13) % 23) / 23.0f - 0.3f) * (if (c < 3) 2.0f else 0.1f)).toDouble)
+    }
+    val emb = xs.map { case (id, v) => (id, v.map(_.toFloat).toSeq) }.toDF("vec_id", "embedding")
+    val got = Matrices.dimsumColumnSimilarities(emb, "vec_id", dim, threshold, seed).collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    // the coins, from the same hash column the operator filters on
+    val u = emb.select(col("vec_id") +: (0 until dim).map(c =>
+        operators.Sampling.hashU(seed, col("vec_id"), lit(c.toLong))): _*)
+      .collect().map(r => r.getLong(0) -> Array.tabulate(dim)(c => r.getDouble(c + 1))).toMap
+    // Spark's double -> decimal(18,12) cast, HALF_UP; decimal sums are exact
+    def dec(x: Double) = BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP)
+    val nrm = (0 until dim).map(c => math.sqrt(xs.map(r => dec(r._2(c) * r._2(c))).sum.toDouble))
+    val sg = math.sqrt(10.0 * math.log(dim.toDouble) / threshold)
+    val p = nrm.map(v => math.min(1.0, sg / v))
+    val q = nrm.map(v => math.min(sg, v))
+    assert(p.count(_ < 1.0) == 3, s"p = $p")
+    val kept = xs.map { case (id, v) =>
+      (0 until dim).filter(c => u(id)(c) < p(c)).map(c => c -> v(c) / q(c)) }
+    assert(kept.map(_.size).sum < n * dim, "some coins must fail")
+    val sums = scala.collection.mutable.Map.empty[(Int, Int), BigDecimal]
+    for (row <- kept; a <- row.indices; b <- a + 1 until row.size) {
+      val ((i, si), (j, sj)) = (row(a), row(b))
+      sums((i, j)) = sums.getOrElse((i, j), BigDecimal(0)) + dec(si * sj)
+    }
+    val want = sums.map { case (k, v) =>
+      k -> (BigDecimal(v.toDouble).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0) }
+    assert(got == want)
+  }
+
+  test("exactSum fails the query on a term outside decimal(18,12), never drops it as null") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true", "Spark 4's ANSI default")
+    // not foldable, so the cast runs in the tasks
+    def terms(big: Double) = spark.range(3).select(
+      when(col("id") === 1, lit(big)).otherwise(lit(999999.999999)).as("x"))
+    assert(terms(999999.999999).agg(exactSum(col("x"))).head.getDouble(0) == 2999999.999997)
+    val e = intercept[Exception](terms(1e6).agg(exactSum(col("x"))).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("NUMERIC_VALUE_OUT_OF_RANGE")), e)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.CoalesceExec
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
@@ -73,22 +71,23 @@ class OnePartitionSortSpec extends SparkTestBase {
   }
 
   test("a complete-mode streaming sort gets no one-partition coalesce") {
-    val src = Files.createTempDirectory("graft-sort-stream-src").toString
-    val events = Tables.events(spark, sfDir)
-    val stream = Pipelines.hourlyTypeCounts(Pipelines.eventStream(spark, src, events.schema))
-      .orderBy("ws", "event_type")
-    val q = Pipelines.startToMemory(stream, "one_partition_sort_stream", "complete")
-    try {
-      events.write.mode("append").parquet(src)
-      q.processAllAvailable()
-      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
-      assert(plan.collectFirst { case c: CoalesceExec => c }.isEmpty,
-        s"the streaming sort was coalesced:\n$plan")
-      assert(plan.toString.contains("Sort ["), plan.toString)
-    } finally q.stop()
-    val got = spark.table("one_partition_sort_stream").collect().toSeq
-    val want = Pipelines.hourlyTypeCounts(events).orderBy("ws", "event_type").collect().toSeq
-    assert(got == want)
+    withTempDir("graft-sort-stream-src") { src =>
+      val events = Tables.events(spark, sfDir)
+      val stream = Pipelines.hourlyTypeCounts(Pipelines.eventStream(spark, src, events.schema))
+        .orderBy("ws", "event_type")
+      val q = Pipelines.startToMemory(stream, "one_partition_sort_stream", "complete")
+      try {
+        events.write.mode("append").parquet(src)
+        q.processAllAvailable()
+        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+        assert(plan.collectFirst { case c: CoalesceExec => c }.isEmpty,
+          s"the streaming sort was coalesced:\n$plan")
+        assert(plan.toString.contains("Sort ["), plan.toString)
+      } finally q.stop()
+      val got = spark.table("one_partition_sort_stream").collect().toSeq
+      val want = Pipelines.hourlyTypeCounts(events).orderBy("ws", "event_type").collect().toSeq
+      assert(got == want)
+    }
   }
 
   test("the test session plans with each graft strategy exactly once") {

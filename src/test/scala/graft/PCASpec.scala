@@ -38,7 +38,7 @@ class PCASpec extends SparkTestBase {
     assert(eig.zip(eig.tail).forall { case (a, b) => a >= b - 1e-12 },
       s"eigenvalues must be descending: ${eig.toSeq}")
     val (totEig, _) = PCA.symmetricEigen({
-      val entries = PCA.covarianceUpper(df).collect()
+      val entries = PCA.covarianceUpper(df, PCA.means(df)).collect()
       val cov = Array.ofDim[Double](8, 8)
       entries.foreach { r =>
         val i = r.getLong(0).toInt - 1; val j = r.getLong(1).toInt - 1
@@ -145,7 +145,7 @@ class PCASpec extends SparkTestBase {
 
   test("covariance diagonal is the per-dimension sample variance") {
     val df = plantedLowRank()
-    val entries = PCA.covarianceUpper(df).collect()
+    val entries = PCA.covarianceUpper(df, PCA.means(df)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(entries.size == 8 * 9 / 2)
     // independent check of one diagonal entry

@@ -72,41 +72,42 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("pair cache recomputes when the corpus changes at the same path; evict drops storage") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pairs-cache").toString
-    val docs = Tables.documents(spark, sfDir)
-    // corpus v1: two identical docs -> exactly one jaccard-1.0 pair
-    docs.filter(col("doc_id") === 0)
-      .unionByName(docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(999L)))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def pairsNow() = Similarity.jaccardPairsShared(
-      spark, dir, dfCap = Similarity.d02DfCap, minJaccard = 0.5)
-    val v1 = pairsNow()
-    assert(v1.count() == 1)
-    // same snapshot -> the SAME persisted DataFrame instance comes back
-    assert(pairsNow() eq v1)
-    // corpus v2 at the same path: three copies -> three pairs; a stale
-    // cache would still say 1
-    Thread.sleep(1100) // ensure mtime moves even on coarse filesystems
-    docs.filter(col("doc_id") === 0)
-      .unionByName(docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(998L)))
-      .unionByName(docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(999L)))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val v2 = pairsNow()
-    assert(v2.count() == 3, "changed corpus at the same path must recompute")
-    assert(v2.storageLevel.useMemory || v2.storageLevel.useDisk)
-    // another session of the same context gets the kept pairs in its own
-    // session, read from the persisted blocks
-    val other = spark.newSession()
-    val inOther = Similarity.jaccardPairsShared(
-      other, dir, dfCap = Similarity.d02DfCap, minJaccard = 0.5)
-    assert(inOther.sparkSession eq other)
-    assert(inOther.queryExecution.withCachedData.collectFirst {
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
-    }.nonEmpty, "the other session must read the persisted pairs")
-    assert(inOther.count() == 3)
-    Shared.evict()
-    assert(v2.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "Shared.evict must unpersist the cached stage")
+    withTempDir("graft-pairs-cache") { dir =>
+      val docs = Tables.documents(spark, sfDir)
+      // corpus v1: two identical docs -> exactly one jaccard-1.0 pair
+      docs.filter(col("doc_id") === 0)
+        .unionByName(docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(999L)))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      def pairsNow() = Similarity.jaccardPairsShared(
+        spark, dir, dfCap = Similarity.d02DfCap, minJaccard = 0.5)
+      val v1 = pairsNow()
+      assert(v1.count() == 1)
+      // same snapshot -> the SAME persisted DataFrame instance comes back
+      assert(pairsNow() eq v1)
+      // corpus v2 at the same path: three copies -> three pairs; a stale
+      // cache would still say 1
+      Thread.sleep(1100) // ensure mtime moves even on coarse filesystems
+      docs.filter(col("doc_id") === 0)
+        .unionByName(docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(998L)))
+        .unionByName(docs.filter(col("doc_id") === 0).withColumn("doc_id", lit(999L)))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val v2 = pairsNow()
+      assert(v2.count() == 3, "changed corpus at the same path must recompute")
+      assert(v2.storageLevel.useMemory || v2.storageLevel.useDisk)
+      // another session of the same context gets the kept pairs in its own
+      // session, read from the persisted blocks
+      val other = spark.newSession()
+      val inOther = Similarity.jaccardPairsShared(
+        other, dir, dfCap = Similarity.d02DfCap, minJaccard = 0.5)
+      assert(inOther.sparkSession eq other)
+      assert(inOther.queryExecution.withCachedData.collectFirst {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }.nonEmpty, "the other session must read the persisted pairs")
+      assert(inOther.count() == 3)
+      Shared.evict()
+      assert(v2.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "Shared.evict must unpersist the cached stage")
+    }
   }
 
   test("d02 df-cap drops an ultra-common shingle and bounds its candidates") {

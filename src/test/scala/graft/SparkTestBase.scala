@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.commons.io.FileUtils
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -10,14 +13,16 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (forked JVM, see build.sbt). */
 object TestSpark {
   lazy val spark: SparkSession = {
+    // the warehouse lives as long as the session, so it goes at JVM exit
+    val warehouse = Files.createTempDirectory("graft-warehouse").toFile
+    sys.addShutdownHook(FileUtils.deleteQuietly(warehouse))
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // plan like the registered entries from the first test on, whichever
@@ -31,6 +36,19 @@ object TestSpark {
 abstract class SparkTestBase extends AnyFunSuite {
   def spark: SparkSession = TestSpark.spark
   def sfDir: String = TestSpark.sfDir
+
+  /** Runs `body` on a fresh temp dir named `prefix`…, then stops the
+    * active streaming queries whose sources or sink read or write under
+    * it and deletes it recursively. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    try body(dir.toString) finally {
+      spark.streams.active.filter(_.recentProgress.exists(p =>
+        (p.sink.description +: p.sources.map(_.description)).exists(_.contains(dir.toString))))
+        .foreach(_.stop())
+      FileUtils.deleteQuietly(dir)
+    }
+  }
 
   /** The temp views registered in session `s`. */
   def tempViews(s: SparkSession): Set[String] =

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
@@ -42,33 +41,34 @@ class StreamingKMeansSpec extends SparkTestBase {
     val model = new StreamingKMeansModel(k = 2, dim = 4, halfLifeBatches = 1.0)
       .setInitialCenters(Array(Array(0.8f, 0.1f, 0f, 0f), Array(0.1f, 0.8f, 0f, 0f)))
 
-    val src = Files.createTempDirectory("graft-skm-src").toString
-    val stream = spark.readStream.schema(schema).parquet(src)
-    val q = StreamingKMeansOps.start(stream, model, "skm_test")
+    withTempDir("graft-skm-src") { src =>
+      val stream = spark.readStream.schema(schema).parquet(src)
+      val q = StreamingKMeansOps.start(stream, model, "skm_test")
 
-    // phase 1: two stationary blobs over two micro-batches
-    mkBatch(0, a, 50).unionByName(mkBatch(100, b, 50)).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    mkBatch(200, a, 50).unionByName(mkBatch(300, b, 50)).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    val phase1 = model.centers
-    assert(dist(phase1(0), a) < 0.1, s"cluster 0 should sit on blob A: ${phase1(0).toSeq}")
-    assert(dist(phase1(1), b) < 0.1, s"cluster 1 should sit on blob B: ${phase1(1).toSeq}")
-    assert(model.clusterWeights.forall(_ > 0))
-
-    // phase 2: blob A drifts; half-life 1 batch -> the centroid must
-    // follow within a few batches while B's centroid stays put
-    for (r <- 0 until 4) {
-      mkBatch(1000 + r * 100, aDrift, 50)
-        .unionByName(mkBatch(5000 + r * 100, b, 50))
-        .write.mode("append").parquet(src)
+      // phase 1: two stationary blobs over two micro-batches
+      mkBatch(0, a, 50).unionByName(mkBatch(100, b, 50)).write.mode("append").parquet(src)
       q.processAllAvailable()
+      mkBatch(200, a, 50).unionByName(mkBatch(300, b, 50)).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      val phase1 = model.centers
+      assert(dist(phase1(0), a) < 0.1, s"cluster 0 should sit on blob A: ${phase1(0).toSeq}")
+      assert(dist(phase1(1), b) < 0.1, s"cluster 1 should sit on blob B: ${phase1(1).toSeq}")
+      assert(model.clusterWeights.forall(_ > 0))
+
+      // phase 2: blob A drifts; half-life 1 batch -> the centroid must
+      // follow within a few batches while B's centroid stays put
+      for (r <- 0 until 4) {
+        mkBatch(1000 + r * 100, aDrift, 50)
+          .unionByName(mkBatch(5000 + r * 100, b, 50))
+          .write.mode("append").parquet(src)
+        q.processAllAvailable()
+      }
+      q.stop()
+      val phase2 = model.centers
+      assert(dist(phase2(0), aDrift) < 0.15,
+        s"cluster 0 must track the drifted blob: ${phase2(0).toSeq}")
+      assert(dist(phase2(0), aDrift) < dist(phase1(0), aDrift))
+      assert(dist(phase2(1), b) < 0.1, s"cluster 1 must stay on B: ${phase2(1).toSeq}")
     }
-    q.stop()
-    val phase2 = model.centers
-    assert(dist(phase2(0), aDrift) < 0.15,
-      s"cluster 0 must track the drifted blob: ${phase2(0).toSeq}")
-    assert(dist(phase2(0), aDrift) < dist(phase1(0), aDrift))
-    assert(dist(phase2(1), b) < 0.1, s"cluster 1 must stay on B: ${phase2(1).toSeq}")
   }
 }

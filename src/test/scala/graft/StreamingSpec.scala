@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.streaming.{EventTimeOps, Pipelines}
 
@@ -9,197 +8,208 @@ class StreamingSpec extends SparkTestBase {
   private def eventsSchema = Tables.events(spark, sfDir).schema
 
   test("streaming tumbling agg over two micro-batches equals batch result") {
-    val src = Files.createTempDirectory("graft-stream-src").toString
-    val batchEvents = Tables.events(spark, sfDir).cache()
+    withTempDir("graft-stream-src") { src =>
+      val batchEvents = Tables.events(spark, sfDir).cache()
 
-    val stream = Pipelines.hourlyTypeCounts(
-      Pipelines.eventStream(spark, src, eventsSchema))
-    val q = Pipelines.startToMemory(stream, "tumbling_test", "complete")
+      val stream = Pipelines.hourlyTypeCounts(
+        Pipelines.eventStream(spark, src, eventsSchema))
+      val q = Pipelines.startToMemory(stream, "tumbling_test", "complete")
 
-    // Feed in two chunks to force incremental micro-batch processing.
-    batchEvents.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    batchEvents.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
+      // Feed in two chunks to force incremental micro-batch processing.
+      batchEvents.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      batchEvents.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      q.stop()
 
-    val got = spark.table("tumbling_test")
-      .orderBy("ws", "event_type").collect().toSeq
-    val want = Pipelines.hourlyTypeCounts(batchEvents)
-      .orderBy("ws", "event_type").collect().toSeq
-    assert(got == want)
+      val got = spark.table("tumbling_test")
+        .orderBy("ws", "event_type").collect().toSeq
+      val want = Pipelines.hourlyTypeCounts(batchEvents)
+        .orderBy("ws", "event_type").collect().toSeq
+      assert(got == want)
+    }
   }
 
   test("mapGroupsWithState running per-user agg accumulates across micro-batches") {
-    val src = Files.createTempDirectory("graft-state-src").toString
-    val batchEvents = Tables.events(spark, sfDir).cache()
+    withTempDir("graft-state-src") { src =>
+      val batchEvents = Tables.events(spark, sfDir).cache()
 
-    val typed = Pipelines.eventStream(spark, src, eventsSchema)
-      .select(col("user_id"), col("ts"), col("value"))
-      .as[Pipelines.UserEvent](org.apache.spark.sql.Encoders.product[Pipelines.UserEvent])
-    val q = Pipelines.startToMemory(
-      Pipelines.runningUserAgg(typed).toDF(), "running_test", "update")
+      val typed = Pipelines.eventStream(spark, src, eventsSchema)
+        .select(col("user_id"), col("ts"), col("value"))
+        .as[Pipelines.UserEvent](org.apache.spark.sql.Encoders.product[Pipelines.UserEvent])
+      val q = Pipelines.startToMemory(
+        Pipelines.runningUserAgg(typed).toDF(), "running_test", "update")
 
-    batchEvents.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    batchEvents.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
+      batchEvents.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      batchEvents.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      q.stop()
 
-    // The last snapshot per user (max n) must equal the batch count.
-    val got = spark.table("running_test")
-      .groupBy("user_id").agg(max("n").as("n"))
-    val want = batchEvents.groupBy("user_id").agg(count(lit(1)).as("n"))
-    val diff = got.join(want, "user_id")
-      .filter(got("n") =!= want("n"))
-    assert(diff.count() == 0)
-    assert(got.count() == want.count())
+      // The last snapshot per user (max n) must equal the batch count.
+      val got = spark.table("running_test")
+        .groupBy("user_id").agg(max("n").as("n"))
+      val want = batchEvents.groupBy("user_id").agg(count(lit(1)).as("n"))
+      val diff = got.join(want, "user_id")
+        .filter(got("n") =!= want("n"))
+      assert(diff.count() == 0)
+      assert(got.count() == want.count())
+    }
   }
 
   test("watermarked append-mode window query emits finalized windows") {
-    val src = Files.createTempDirectory("graft-wm-src").toString
-    val batchEvents = Tables.events(spark, sfDir).cache()
+    withTempDir("graft-wm-src") { src =>
+      val batchEvents = Tables.events(spark, sfDir).cache()
 
-    val stream = Pipelines.hourlyTypeCountsWatermarked(
-      Pipelines.eventStream(spark, src, eventsSchema), "1 hour")
-    val q = Pipelines.startToMemory(stream, "wm_test", "append")
-    batchEvents.write.mode("append").parquet(src)
-    q.processAllAvailable()
-    // Advance the watermark past every window with a sentinel late batch.
-    batchEvents.limit(0).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
+      val stream = Pipelines.hourlyTypeCountsWatermarked(
+        Pipelines.eventStream(spark, src, eventsSchema), "1 hour")
+      val q = Pipelines.startToMemory(stream, "wm_test", "append")
+      batchEvents.write.mode("append").parquet(src)
+      q.processAllAvailable()
+      // Advance the watermark past every window with a sentinel late batch.
+      batchEvents.limit(0).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      q.stop()
 
-    // All windows strictly below (max ts - 1h watermark) must be finalized.
-    val emitted = spark.table("wm_test").count()
-    assert(emitted > 0, "append mode emitted nothing")
+      // All windows strictly below (max ts - 1h watermark) must be finalized.
+      val emitted = spark.table("wm_test").count()
+      assert(emitted > 0, "append mode emitted nothing")
+    }
   }
 
   test("stream-stream join matches the batch join on the same windows") {
-    val src1 = Files.createTempDirectory("graft-ss-clicks").toString
-    val src2 = Files.createTempDirectory("graft-ss-buys").toString
-    val ev = Tables.events(spark, sfDir).cache()
-    val clicksB = ev.filter(col("event_type") === "click")
-    val buysB = ev.filter(col("event_type") === "purchase")
+    withTempDir("graft-ss-clicks") { src1 =>
+      withTempDir("graft-ss-buys") { src2 =>
+        val ev = Tables.events(spark, sfDir).cache()
+        val clicksB = ev.filter(col("event_type") === "click")
+        val buysB = ev.filter(col("event_type") === "purchase")
 
-    val joined = Pipelines.streamStreamJoin(
-      Pipelines.eventStream(spark, src1, eventsSchema)
-        .filter(col("event_type") === "click"),
-      Pipelines.eventStream(spark, src2, eventsSchema)
-        .filter(col("event_type") === "purchase"))
-    val q = Pipelines.startToMemory(joined, "ss_join_test", "append")
-    ev.filter(col("event_type") === "click").write.mode("append").parquet(src1)
-    ev.filter(col("event_type") === "purchase").write.mode("append").parquet(src2)
-    q.processAllAvailable()
-    q.stop()
+        val joined = Pipelines.streamStreamJoin(
+          Pipelines.eventStream(spark, src1, eventsSchema)
+            .filter(col("event_type") === "click"),
+          Pipelines.eventStream(spark, src2, eventsSchema)
+            .filter(col("event_type") === "purchase"))
+        val q = Pipelines.startToMemory(joined, "ss_join_test", "append")
+        ev.filter(col("event_type") === "click").write.mode("append").parquet(src1)
+        ev.filter(col("event_type") === "purchase").write.mode("append").parquet(src2)
+        q.processAllAvailable()
+        q.stop()
 
-    val want = clicksB.select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("click_id"))
-      .join(buysB.select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"), col("value")),
-        expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 10 minutes"))
-      .count()
-    assert(spark.table("ss_join_test").count() == want)
-    assert(want > 0, "test needs at least one click->purchase pair in range")
+        val want = clicksB.select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+            col("event_id").as("click_id"))
+          .join(buysB.select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+            col("event_id").as("purchase_id"), col("value")),
+            expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 10 minutes"))
+          .count()
+        assert(spark.table("ss_join_test").count() == want)
+        assert(want > 0, "test needs at least one click->purchase pair in range")
+      }
+    }
   }
 
   test("stream-stream LEFT join emits null-padded clicks only after watermark expiry") {
-    val src1 = Files.createTempDirectory("graft-ssl-clicks").toString
-    val src2 = Files.createTempDirectory("graft-ssl-buys").toString
-    val ev = Tables.events(spark, sfDir).cache()
-    val clicksB = ev.filter(col("event_type") === "click")
-    val buysB = ev.filter(col("event_type") === "purchase")
+    withTempDir("graft-ssl-clicks") { src1 =>
+      withTempDir("graft-ssl-buys") { src2 =>
+        val ev = Tables.events(spark, sfDir).cache()
+        val clicksB = ev.filter(col("event_type") === "click")
+        val buysB = ev.filter(col("event_type") === "purchase")
 
-    val joined = Pipelines.streamStreamLeftJoin(
-      Pipelines.eventStream(spark, src1, eventsSchema)
-        .filter(col("event_type") === "click"),
-      Pipelines.eventStream(spark, src2, eventsSchema)
-        .filter(col("event_type") === "purchase"))
-    val q = Pipelines.startToMemory(joined, "ssl_join_test", "append")
-    clicksB.write.mode("append").parquet(src1)
-    buysB.write.mode("append").parquet(src2)
-    q.processAllAvailable()
-    // outer (null-padded) rows may NOT exist yet for late windows: the
-    // watermark sits 10 min behind max event time. Advance BOTH sides'
-    // watermarks far past every real window with one synthetic far-
-    // future event each, then trigger twice (the watermark computed at
-    // a batch's end expires state in the NEXT batch).
-    val maxTs = ev.agg(max("ts")).head.getTimestamp(0)
-    def future(tpe: String, id: Long) = ev.limit(1).select(
-      lit(id).as("event_id"),
-      lit(new java.sql.Timestamp(maxTs.getTime + 24L * 3600 * 1000)).as("ts"),
-      lit(-999L).as("user_id"), lit(tpe).as("event_type"),
-      lit(0.0).as("value"), lit("{}").as("props"))
-    future("click", -1L).write.mode("append").parquet(src1)
-    future("purchase", -2L).write.mode("append").parquet(src2)
-    q.processAllAvailable()
-    future("click", -3L).write.mode("append").parquet(src1)
-    future("purchase", -4L).write.mode("append").parquet(src2)
-    q.processAllAvailable()
-    q.stop()
+        val joined = Pipelines.streamStreamLeftJoin(
+          Pipelines.eventStream(spark, src1, eventsSchema)
+            .filter(col("event_type") === "click"),
+          Pipelines.eventStream(spark, src2, eventsSchema)
+            .filter(col("event_type") === "purchase"))
+        val q = Pipelines.startToMemory(joined, "ssl_join_test", "append")
+        clicksB.write.mode("append").parquet(src1)
+        buysB.write.mode("append").parquet(src2)
+        q.processAllAvailable()
+        // outer (null-padded) rows may NOT exist yet for late windows: the
+        // watermark sits 10 min behind max event time. Advance BOTH sides'
+        // watermarks far past every real window with one synthetic far-
+        // future event each, then trigger twice (the watermark computed at
+        // a batch's end expires state in the NEXT batch).
+        val maxTs = ev.agg(max("ts")).head.getTimestamp(0)
+        def future(tpe: String, id: Long) = ev.limit(1).select(
+          lit(id).as("event_id"),
+          lit(new java.sql.Timestamp(maxTs.getTime + 24L * 3600 * 1000)).as("ts"),
+          lit(-999L).as("user_id"), lit(tpe).as("event_type"),
+          lit(0.0).as("value"), lit("{}").as("props"))
+        future("click", -1L).write.mode("append").parquet(src1)
+        future("purchase", -2L).write.mode("append").parquet(src2)
+        q.processAllAvailable()
+        future("click", -3L).write.mode("append").parquet(src1)
+        future("purchase", -4L).write.mode("append").parquet(src2)
+        q.processAllAvailable()
+        q.stop()
 
-    val got = spark.table("ssl_join_test").filter(col("c_user") =!= -999L)
-    val want = clicksB.select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("click_id"))
-      .join(buysB.select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"), col("value")),
-        expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 10 minutes"),
-        "left_outer")
-    // every real click's window is now below the watermark, so the
-    // streamed result must equal the batch left join EXACTLY —
-    // matched rows identical, unmatched clicks present null-padded
-    assert(got.count() == want.count())
-    val unmatchedStream = got.filter(col("purchase_id").isNull).count()
-    val unmatchedBatch = want.filter(col("purchase_id").isNull).count()
-    assert(unmatchedStream == unmatchedBatch && unmatchedBatch > 0,
-      s"null-padded rows: stream $unmatchedStream vs batch $unmatchedBatch")
-    assert(got.select("click_id", "purchase_id")
-      .exceptAll(want.select("click_id", "purchase_id")).isEmpty)
+        val got = spark.table("ssl_join_test").filter(col("c_user") =!= -999L)
+        val want = clicksB.select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+            col("event_id").as("click_id"))
+          .join(buysB.select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+            col("event_id").as("purchase_id"), col("value")),
+            expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 10 minutes"),
+            "left_outer")
+        // every real click's window is now below the watermark, so the
+        // streamed result must equal the batch left join EXACTLY —
+        // matched rows identical, unmatched clicks present null-padded
+        assert(got.count() == want.count())
+        val unmatchedStream = got.filter(col("purchase_id").isNull).count()
+        val unmatchedBatch = want.filter(col("purchase_id").isNull).count()
+        assert(unmatchedStream == unmatchedBatch && unmatchedBatch > 0,
+          s"null-padded rows: stream $unmatchedStream vs batch $unmatchedBatch")
+        assert(got.select("click_id", "purchase_id")
+          .exceptAll(want.select("click_id", "purchase_id")).isEmpty)
+      }
+    }
   }
 
   test("foreachBatch receives every micro-batch exactly once") {
-    val src = Files.createTempDirectory("graft-feb-src").toString
-    val seen = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-    val q = Pipelines.startForeachBatch(
-      Pipelines.eventStream(spark, src, eventsSchema), "feb_test") { (batch, id) =>
-      seen.put(id, batch.count())
+    withTempDir("graft-feb-src") { src =>
+      val seen = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+      val q = Pipelines.startForeachBatch(
+        Pipelines.eventStream(spark, src, eventsSchema), "feb_test") { (batch, id) =>
+        seen.put(id, batch.count())
+      }
+      val ev = Tables.events(spark, sfDir)
+      ev.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      ev.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      q.stop()
+      val total = seen.values().stream().mapToLong(l => l).sum()
+      assert(total == ev.count(), s"foreachBatch saw $total of ${ev.count()} rows")
+      assert(seen.size() >= 2, "expected at least two micro-batches")
     }
-    val ev = Tables.events(spark, sfDir)
-    ev.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    ev.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    val total = seen.values().stream().mapToLong(l => l).sum()
-    assert(total == ev.count(), s"foreachBatch saw $total of ${ev.count()} rows")
-    assert(seen.size() >= 2, "expected at least two micro-batches")
   }
 
   test("streaming query resumes from checkpoint without loss or duplication") {
-    val src = Files.createTempDirectory("graft-ckpt-src").toString
-    val out = Files.createTempDirectory("graft-ckpt-out").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val ev = Tables.events(spark, sfDir).cache()
+    withTempDir("graft-ckpt-src") { src =>
+      withTempDir("graft-ckpt-out") { out =>
+        withTempDir("graft-ckpt") { ckpt =>
+          val ev = Tables.events(spark, sfDir).cache()
 
-    def start() = Pipelines.startToParquet(
-      Pipelines.eventStream(spark, src, eventsSchema)
-        .select(col("event_id"), col("user_id"), col("value")),
-      out, ckpt)
+          def start() = Pipelines.startToParquet(
+            Pipelines.eventStream(spark, src, eventsSchema)
+              .select(col("event_id"), col("user_id"), col("value")),
+            out, ckpt)
 
-    val q1 = start()
-    ev.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    q1.processAllAvailable()
-    q1.stop()
+          val q1 = start()
+          ev.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
+          q1.processAllAvailable()
+          q1.stop()
 
-    // new data lands while the query is down; restart must pick it up
-    ev.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    val q2 = start()
-    q2.processAllAvailable()
-    q2.stop()
+          // new data lands while the query is down; restart must pick it up
+          ev.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
+          val q2 = start()
+          q2.processAllAvailable()
+          q2.stop()
 
-    val sunk = spark.read.parquet(out)
-    assert(sunk.count() == ev.count(), "exactly-once across restart")
-    assert(sunk.select("event_id").distinct().count() == ev.count(), "no duplicates")
+          val sunk = spark.read.parquet(out)
+          assert(sunk.count() == ev.count(), "exactly-once across restart")
+          assert(sunk.select("event_id").distinct().count() == ev.count(), "no duplicates")
+        }
+      }
+    }
   }
 
   test("s09 incremental sliding agg equals the per-row sliding agg and expands slices, not rows") {
@@ -231,38 +241,39 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("incremental sliding window over a live stream equals batch recompute") {
-    val src = Files.createTempDirectory("graft-incslide-src").toString
-    val batchEvents = Tables.events(spark, sfDir).cache()
+    withTempDir("graft-incslide-src") { src =>
+      val batchEvents = Tables.events(spark, sfDir).cache()
 
-    val typed = Pipelines.eventStream(spark, src, eventsSchema)
-      .select(col("event_type"), col("ts"), col("value"))
-      .as[Pipelines.TypedEvent](org.apache.spark.sql.Encoders.product[Pipelines.TypedEvent])
-    // retention disabled: the test feeds the full 5-month corpus twice,
-    // so no slice may expire between the two passes
-    val out = Pipelines.incrementalSlidingAgg(typed, 3600000000L, 1800000000L,
-      retainSlices = Int.MaxValue)
-    val q = Pipelines.startToMemory(out.toDF(), "inc_slide_test", "update")
+      val typed = Pipelines.eventStream(spark, src, eventsSchema)
+        .select(col("event_type"), col("ts"), col("value"))
+        .as[Pipelines.TypedEvent](org.apache.spark.sql.Encoders.product[Pipelines.TypedEvent])
+      // retention disabled: the test feeds the full 5-month corpus twice,
+      // so no slice may expire between the two passes
+      val out = Pipelines.incrementalSlidingAgg(typed, 3600000000L, 1800000000L,
+        retainSlices = Int.MaxValue)
+      val q = Pipelines.startToMemory(out.toDF(), "inc_slide_test", "update")
 
-    batchEvents.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    batchEvents.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
+      batchEvents.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      batchEvents.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      q.stop()
 
-    // window counts only grow, so the final emission per (key, ws) is the
-    // one with max n
-    val got = spark.table("inc_slide_test")
-      .groupBy("event_type", "ws")
-      .agg(max(struct(col("n"), col("total_value"))).as("m"))
-      .select(col("event_type"), col("ws"), col("m.n").as("n"),
-        round(col("m.total_value"), 2).as("total_value"))
-    val want = EventTimeOps.slidingAgg(batchEvents, "ts", "1 hour", "30 minutes", "event_type")
-    assert(got.count() == want.count(), "same set of non-empty windows")
-    val joined = got.join(want, Seq("event_type", "ws", "n"), "inner")
-    assert(joined.count() == want.count(), "per-window counts must match batch")
-    val drift = joined.filter(
-      abs(got("total_value") - want("total_value")) > 1e-6)
-    assert(drift.count() == 0, "per-window totals must match batch within fp tolerance")
+      // window counts only grow, so the final emission per (key, ws) is the
+      // one with max n
+      val got = spark.table("inc_slide_test")
+        .groupBy("event_type", "ws")
+        .agg(max(struct(col("n"), col("total_value"))).as("m"))
+        .select(col("event_type"), col("ws"), col("m.n").as("n"),
+          round(col("m.total_value"), 2).as("total_value"))
+      val want = EventTimeOps.slidingAgg(batchEvents, "ts", "1 hour", "30 minutes", "event_type")
+      assert(got.count() == want.count(), "same set of non-empty windows")
+      val joined = got.join(want, Seq("event_type", "ws", "n"), "inner")
+      assert(joined.count() == want.count(), "per-window counts must match batch")
+      val drift = joined.filter(
+        abs(got("total_value") - want("total_value")) > 1e-6)
+      assert(drift.count() == 0, "per-window totals must match batch within fp tolerance")
+    }
   }
 
   test("idle keyed state expires at the event-time watermark and restarts from zero") {
@@ -270,220 +281,227 @@ class StreamingSpec extends SparkTestBase {
     // clock, so the test drives it entirely with data (a second "clock"
     // user advances the watermark) — no wall-clock sleeps, no reliance
     // on the engine's processing-time re-trigger loop.
-    val src = Files.createTempDirectory("graft-evt-timeout").toString
-    val proto = Tables.events(spark, sfDir).limit(8).cache()
-    val uid = 9000001L
-    val clock = 9000002L
-    val base = java.sql.Timestamp.valueOf("2024-06-01 00:00:00").getTime
-    def feed(u: Long, nRows: Int, minuteOffset: Long): Unit =
-      proto.limit(nRows)
-        .withColumn("user_id", lit(u))
-        .withColumn("ts", lit(new java.sql.Timestamp(base + minuteOffset * 60000L)))
-        .write.mode("append").parquet(src)
+    withTempDir("graft-evt-timeout") { src =>
+      val proto = Tables.events(spark, sfDir).limit(8).cache()
+      val uid = 9000001L
+      val clock = 9000002L
+      val base = java.sql.Timestamp.valueOf("2024-06-01 00:00:00").getTime
+      def feed(u: Long, nRows: Int, minuteOffset: Long): Unit =
+        proto.limit(nRows)
+          .withColumn("user_id", lit(u))
+          .withColumn("ts", lit(new java.sql.Timestamp(base + minuteOffset * 60000L)))
+          .write.mode("append").parquet(src)
 
-    val typed = Pipelines.eventStream(spark, src, eventsSchema)
-      .select(col("user_id"), col("ts"), col("value"))
-      .as[Pipelines.UserEvent](org.apache.spark.sql.Encoders.product[Pipelines.UserEvent])
-      .withWatermark("ts", "10 seconds")
-    val q = Pipelines.startToMemory(
-      Pipelines.runningUserAgg(typed, idleTimeout = Some("30 minutes"),
-        eventTimeIdle = true).toDF(),
-      "evt_timeout_test", "update")
+      val typed = Pipelines.eventStream(spark, src, eventsSchema)
+        .select(col("user_id"), col("ts"), col("value"))
+        .as[Pipelines.UserEvent](org.apache.spark.sql.Encoders.product[Pipelines.UserEvent])
+        .withWatermark("ts", "10 seconds")
+      val q = Pipelines.startToMemory(
+        Pipelines.runningUserAgg(typed, idleTimeout = Some("30 minutes"),
+          eventTimeIdle = true).toDF(),
+        "evt_timeout_test", "update")
 
-    feed(uid, 3, 0); feed(clock, 1, 0)
-    q.processAllAvailable()        // snapshot (uid, n=3); timer at t+30m
-    feed(clock, 1, 60)
-    q.processAllAvailable()        // watermark advances past the timer
-    feed(clock, 1, 61)
-    q.processAllAvailable()        // timer fires: final (uid, n=3), state removed
-    feed(uid, 5, 120)
-    q.processAllAvailable()        // uid returns; count restarts from zero
-    q.stop()
+      feed(uid, 3, 0); feed(clock, 1, 0)
+      q.processAllAvailable()        // snapshot (uid, n=3); timer at t+30m
+      feed(clock, 1, 60)
+      q.processAllAvailable()        // watermark advances past the timer
+      feed(clock, 1, 61)
+      q.processAllAvailable()        // timer fires: final (uid, n=3), state removed
+      feed(uid, 5, 120)
+      q.processAllAvailable()        // uid returns; count restarts from zero
+      q.stop()
 
-    val ns = spark.table("evt_timeout_test").filter(col("user_id") === uid)
-      .select("n").collect().map(_.getLong(0))
-    assert(ns.count(_ == 3L) >= 2,
-      s"expected the initial AND the timeout snapshot at n=3, got ${ns.toSeq}")
-    assert(ns.contains(5L),
-      s"after expiry the count must restart at 5, got ${ns.toSeq}")
-    assert(!ns.contains(8L), "state must NOT have survived the idle timeout")
+      val ns = spark.table("evt_timeout_test").filter(col("user_id") === uid)
+        .select("n").collect().map(_.getLong(0))
+      assert(ns.count(_ == 3L) >= 2,
+        s"expected the initial AND the timeout snapshot at n=3, got ${ns.toSeq}")
+      assert(ns.contains(5L),
+        s"after expiry the count must restart at 5, got ${ns.toSeq}")
+      assert(!ns.contains(8L), "state must NOT have survived the idle timeout")
+    }
   }
 
   test("unioned streams deliver both sources exactly once (DStream union parity)") {
-    val src1 = Files.createTempDirectory("graft-union-1").toString
-    val src2 = Files.createTempDirectory("graft-union-2").toString
-    val ev = Tables.events(spark, sfDir).cache()
-    val unioned = Pipelines.eventStream(spark, src1, eventsSchema)
-      .unionByName(Pipelines.eventStream(spark, src2, eventsSchema))
-      .groupBy("event_type").agg(count(lit(1)).as("n"))
-    val q = Pipelines.startToMemory(unioned, "union_test", "complete")
-    ev.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src1)
-    ev.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src2)
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("union_test").orderBy("event_type").collect().toSeq
-    val want = ev.groupBy("event_type").agg(count(lit(1)).as("n"))
-      .orderBy("event_type").collect().toSeq
-    assert(got == want)
+    withTempDir("graft-union-1") { src1 =>
+      withTempDir("graft-union-2") { src2 =>
+        val ev = Tables.events(spark, sfDir).cache()
+        val unioned = Pipelines.eventStream(spark, src1, eventsSchema)
+          .unionByName(Pipelines.eventStream(spark, src2, eventsSchema))
+          .groupBy("event_type").agg(count(lit(1)).as("n"))
+        val q = Pipelines.startToMemory(unioned, "union_test", "complete")
+        ev.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src1)
+        ev.filter(col("event_id") % 2 === 1).write.mode("append").parquet(src2)
+        q.processAllAvailable()
+        q.stop()
+        val got = spark.table("union_test").orderBy("event_type").collect().toSeq
+        val want = ev.groupBy("event_type").agg(count(lit(1)).as("n"))
+          .orderBy("event_type").collect().toSeq
+        assert(got == want)
+      }
+    }
   }
 
   test("live as-of enrichment matches the batch contract across micro-batches") {
     import TestSpark.spark.implicits._
     import graft.streaming.Pipelines.TaggedEvent
-    val src = Files.createTempDirectory("graft-asof-src").toString
-    def t(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    val stream = Pipelines.streamingAsOf(
-      TestSpark.spark.readStream
-        .schema(Seq.empty[TaggedEvent].toDS().schema)
-        .parquet(src).as[TaggedEvent])
-    val q = Pipelines.startToMemory(stream.toDF(), "asof_test", "append")
+    withTempDir("graft-asof-src") { src =>
+      def t(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+      val stream = Pipelines.streamingAsOf(
+        TestSpark.spark.readStream
+          .schema(Seq.empty[TaggedEvent].toDS().schema)
+          .parquet(src).as[TaggedEvent])
+      val q = Pipelines.startToMemory(stream.toDF(), "asof_test", "append")
 
-    // batch 1: user 1 clicks before/after their purchase; user 2 never buys
-    // each append coalesces to ONE part file: the continuously-firing
-    // file source can list the directory mid-job-commit and pick up a
-    // subset of a multi-file write as its own micro-batch, which would
-    // split the equal-ts purchase/click pair across batches (observed
-    // as a flake under CPU contention); one file = one atomic rename =
-    // one deterministic batch boundary
-    Seq(
-      TaggedEvent(1L, t(10), is_purchase = true, 1L, 5.0),
-      TaggedEvent(1L, t(5), is_purchase = false, 100L, 0.0),
-      TaggedEvent(1L, t(15), is_purchase = false, 101L, 0.0),
-      TaggedEvent(2L, t(10), is_purchase = false, 200L, 0.0))
-      .toDS().coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    // batch 2: state from batch 1 serves the early click; an equal-ts
-    // purchase wins over the click at the same instant (<= semantics)
-    Seq(
-      TaggedEvent(1L, t(18), is_purchase = false, 103L, 0.0),
-      TaggedEvent(1L, t(20), is_purchase = true, 2L, 7.0),
-      TaggedEvent(1L, t(20), is_purchase = false, 102L, 0.0))
-      .toDS().coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
+      // batch 1: user 1 clicks before/after their purchase; user 2 never buys
+      // each append coalesces to ONE part file: the continuously-firing
+      // file source can list the directory mid-job-commit and pick up a
+      // subset of a multi-file write as its own micro-batch, which would
+      // split the equal-ts purchase/click pair across batches (observed
+      // as a flake under CPU contention); one file = one atomic rename =
+      // one deterministic batch boundary
+      Seq(
+        TaggedEvent(1L, t(10), is_purchase = true, 1L, 5.0),
+        TaggedEvent(1L, t(5), is_purchase = false, 100L, 0.0),
+        TaggedEvent(1L, t(15), is_purchase = false, 101L, 0.0),
+        TaggedEvent(2L, t(10), is_purchase = false, 200L, 0.0))
+        .toDS().coalesce(1).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      // batch 2: state from batch 1 serves the early click; an equal-ts
+      // purchase wins over the click at the same instant (<= semantics)
+      Seq(
+        TaggedEvent(1L, t(18), is_purchase = false, 103L, 0.0),
+        TaggedEvent(1L, t(20), is_purchase = true, 2L, 7.0),
+        TaggedEvent(1L, t(20), is_purchase = false, 102L, 0.0))
+        .toDS().coalesce(1).write.mode("append").parquet(src)
+      q.processAllAvailable()
+      q.stop()
 
-    val got = TestSpark.spark.table("asof_test")
-      .collect()
-      .map(r => r.getLong(1) ->
-        (Option(r.get(3)).map(_.asInstanceOf[Long]),
-         Option(r.get(4)).map(_.asInstanceOf[Double])))
-      .toMap
-    assert(got(100L) == (None, None), "click before any purchase")
-    assert(got(101L) == (Some(1L), Some(5.0)), "same-batch purchase applies")
-    assert(got(200L) == (None, None), "user with no purchases")
-    assert(got(103L) == (Some(1L), Some(5.0)), "state must carry across micro-batches")
-    assert(got(102L) == (Some(2L), Some(7.0)), "equal-ts purchase wins (<= semantics)")
+      val got = TestSpark.spark.table("asof_test")
+        .collect()
+        .map(r => r.getLong(1) ->
+          (Option(r.get(3)).map(_.asInstanceOf[Long]),
+           Option(r.get(4)).map(_.asInstanceOf[Double])))
+        .toMap
+      assert(got(100L) == (None, None), "click before any purchase")
+      assert(got(101L) == (Some(1L), Some(5.0)), "same-batch purchase applies")
+      assert(got(200L) == (None, None), "user with no purchases")
+      assert(got(103L) == (Some(1L), Some(5.0)), "state must carry across micro-batches")
+      assert(got(102L) == (Some(2L), Some(7.0)), "equal-ts purchase wins (<= semantics)")
+    }
   }
 
   test("streaming near-dedup suppresses copies across AND within micro-batches, first-writer-wins") {
-    val src = Files.createTempDirectory("graft-neardedup-src").toString
-    import TestSpark.spark.implicits._
-    // 10 clearly-distinct originals: disjoint word vocabularies so no
-    // accidental near-dups muddy the assertions
-    def text(seed: Int) =
-      (0 until 40).map(i => s"w${seed}_${(i * 7 + seed) % 13}").mkString(" ")
-    val originals = (0L until 10L).map(i => (i, text(i.toInt * 100)))
-    val schema = originals.toDF("doc_id", "text").schema
-    val stream = Pipelines.streamingNearDedup(
-      TestSpark.spark.readStream.schema(schema).parquet(src),
-      k = 32, bands = 8, minEst = 0.5)
-    val q = Pipelines.startToMemory(stream.toDF(), "neardedup_test", "append")
+    withTempDir("graft-neardedup-src") { src =>
+      import TestSpark.spark.implicits._
+      // 10 clearly-distinct originals: disjoint word vocabularies so no
+      // accidental near-dups muddy the assertions
+      def text(seed: Int) =
+        (0 until 40).map(i => s"w${seed}_${(i * 7 + seed) % 13}").mkString(" ")
+      val originals = (0L until 10L).map(i => (i, text(i.toInt * 100)))
+      val schema = originals.toDF("doc_id", "text").schema
+      val stream = Pipelines.streamingNearDedup(
+        TestSpark.spark.readStream.schema(schema).parquet(src),
+        k = 32, bands = 8, minEst = 0.5)
+      val q = Pipelines.startToMemory(stream.toDF(), "neardedup_test", "append")
 
-    originals.toDF("doc_id", "text").write.mode("append").parquet(src)
-    q.processAllAvailable()
-    // batch 2: 100 = exact copy of doc 0 (cross-batch state), 101 = fresh,
-    // 102 = exact copy of 101 (SAME batch — intra-batch doc_id order)
-    Seq((100L, text(0)), (101L, text(7777)), (102L, text(7777)))
-      .toDF("doc_id", "text").write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
+      originals.toDF("doc_id", "text").write.mode("append").parquet(src)
+      q.processAllAvailable()
+      // batch 2: 100 = exact copy of doc 0 (cross-batch state), 101 = fresh,
+      // 102 = exact copy of 101 (SAME batch — intra-batch doc_id order)
+      Seq((100L, text(0)), (101L, text(7777)), (102L, text(7777)))
+        .toDF("doc_id", "text").write.mode("append").parquet(src)
+      q.processAllAvailable()
+      q.stop()
 
-    val verdicts = spark.table("neardedup_test").cache()
-    val decision = Pipelines.dedupDecision(verdicts).collect()
-      .map(r => r.getLong(0) -> (r.getBoolean(1),
-        if (r.isNullAt(2)) -1.0 else r.getDouble(2))).toMap
-    // originals: nothing seen before them
-    (0L until 10L).foreach(i =>
-      assert(!decision(i)._1, s"original $i flagged duplicate"))
-    // the cross-batch copy: every band matches its bucket's incumbent 0
-    // with agreement 1.0
-    assert(decision(100L) == ((true, 1.0)), s"100 -> ${decision(100L)}")
-    val m100 = verdicts.filter(col("doc_id") === 100L).collect()
-    assert(m100.length == 8 && m100.forall(r =>
-      r.getBoolean(3) && r.getLong(4) == 0L && r.getDouble(5) == 1.0),
-      "copy of doc 0 must match incumbent 0 in all 8 bands at est 1.0")
-    // the same-batch pair: 101 (smaller id) claims the buckets, 102 matches it
-    assert(!decision(101L)._1, "first of the same-batch pair is the keeper")
-    assert(decision(102L) == ((true, 1.0)), s"102 -> ${decision(102L)}")
-    assert(verdicts.filter(col("doc_id") === 102L && col("matched"))
-      .select("match_id").distinct().collect().map(_.getLong(0)).toSeq == Seq(101L))
+      val verdicts = spark.table("neardedup_test").cache()
+      val decision = Pipelines.dedupDecision(verdicts).collect()
+        .map(r => r.getLong(0) -> (r.getBoolean(1),
+          if (r.isNullAt(2)) -1.0 else r.getDouble(2))).toMap
+      // originals: nothing seen before them
+      (0L until 10L).foreach(i =>
+        assert(!decision(i)._1, s"original $i flagged duplicate"))
+      // the cross-batch copy: every band matches its bucket's incumbent 0
+      // with agreement 1.0
+      assert(decision(100L) == ((true, 1.0)), s"100 -> ${decision(100L)}")
+      val m100 = verdicts.filter(col("doc_id") === 100L).collect()
+      assert(m100.length == 8 && m100.forall(r =>
+        r.getBoolean(3) && r.getLong(4) == 0L && r.getDouble(5) == 1.0),
+        "copy of doc 0 must match incumbent 0 in all 8 bands at est 1.0")
+      // the same-batch pair: 101 (smaller id) claims the buckets, 102 matches it
+      assert(!decision(101L)._1, "first of the same-batch pair is the keeper")
+      assert(decision(102L) == ((true, 1.0)), s"102 -> ${decision(102L)}")
+      assert(verdicts.filter(col("doc_id") === 102L && col("matched"))
+        .select("match_id").distinct().collect().map(_.getLong(0)).toSeq == Seq(101L))
+    }
   }
 
   test("streaming near-dedup counts dropped incumbents on full buckets") {
-    val src = Files.createTempDirectory("graft-neardedup-drop-src").toString
-    import TestSpark.spark.implicits._
-    def text(seed: Int) =
-      (0 until 40).map(i => s"w${seed}_${(i * 7 + seed) % 13}").mkString(" ")
-    // identical texts share every band bucket; minEst > 1 makes them
-    // UNMATCHABLE, so doc 1 fills each bucket (maxPerBucket=1) and
-    // doc 2's insert attempt must be counted as a drop in all 8 bands
-    val docs = Seq((1L, text(5)), (2L, text(5))).toDF("doc_id", "text")
-    val schema = docs.schema
-    val droppedAcc = TestSpark.spark.sparkContext
-      .longAccumulator("test.neardedup.dropped")
-    val stream = Pipelines.streamingNearDedup(
-      TestSpark.spark.readStream.schema(schema).parquet(src),
-      k = 32, bands = 8, minEst = 1.1, maxPerBucket = 1,
-      dropped = Some(droppedAcc))
-    val q = Pipelines.startToMemory(stream.toDF(), "neardedup_drop_test", "append")
-    docs.write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-    assert(droppedAcc.value == 8L,
-      s"doc 2 must be dropped from all 8 full band buckets, got ${droppedAcc.value}")
-    // with minEst impossible nothing matches — but every (doc, band)
-    // verdict still emits, so downstream accounting never loses a doc
-    val verdicts = spark.table("neardedup_drop_test")
-    assert(verdicts.count() == 16)
-    assert(verdicts.filter(col("matched")).count() == 0)
+    withTempDir("graft-neardedup-drop-src") { src =>
+      import TestSpark.spark.implicits._
+      def text(seed: Int) =
+        (0 until 40).map(i => s"w${seed}_${(i * 7 + seed) % 13}").mkString(" ")
+      // identical texts share every band bucket; minEst > 1 makes them
+      // UNMATCHABLE, so doc 1 fills each bucket (maxPerBucket=1) and
+      // doc 2's insert attempt must be counted as a drop in all 8 bands
+      val docs = Seq((1L, text(5)), (2L, text(5))).toDF("doc_id", "text")
+      val schema = docs.schema
+      val droppedAcc = TestSpark.spark.sparkContext
+        .longAccumulator("test.neardedup.dropped")
+      val stream = Pipelines.streamingNearDedup(
+        TestSpark.spark.readStream.schema(schema).parquet(src),
+        k = 32, bands = 8, minEst = 1.1, maxPerBucket = 1,
+        dropped = Some(droppedAcc))
+      val q = Pipelines.startToMemory(stream.toDF(), "neardedup_drop_test", "append")
+      docs.write.mode("append").parquet(src)
+      q.processAllAvailable()
+      q.stop()
+      assert(droppedAcc.value == 8L,
+        s"doc 2 must be dropped from all 8 full band buckets, got ${droppedAcc.value}")
+      // with minEst impossible nothing matches — but every (doc, band)
+      // verdict still emits, so downstream accounting never loses a doc
+      val verdicts = spark.table("neardedup_drop_test")
+      assert(verdicts.count() == 16)
+      assert(verdicts.filter(col("matched")).count() == 0)
+    }
   }
 
   test("streaming near-dedup TTL evicts idle bucket state: a post-TTL copy is NOT matched") {
-    val src = Files.createTempDirectory("graft-neardedup-ttl-src").toString
-    import TestSpark.spark.implicits._
-    def text(seed: Int) =
-      (0 until 40).map(i => s"w${seed}_${(i * 7 + seed) % 13}").mkString(" ")
-    val schema = Seq((0L, "x")).toDF("doc_id", "text").schema
-    // NOTE: with ProcessingTimeTimeout registered the engine schedules
-    // timeout-evaluation batches on its own, so processAllAvailable()
-    // never drains — poll the sink for the expected row count instead.
-    // 180 s deadline (r17): generous on purpose — this bound exists only
-    // to fail a HUNG query loudly, and a tighter bound is the one
-    // wall-clock assumption in this suite a contended host could break
-    // (the r16 full-suite run had one unattributed StreamingSpec
-    // failure that 21 quiet re-runs could not reproduce).
-    def awaitRows(table: String, n: Long): Unit = {
-      val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
-      while (spark.table(table).count() < n) {
-        assert(System.nanoTime() < deadline, s"timed out waiting for $n rows")
-        Thread.sleep(100)
+    withTempDir("graft-neardedup-ttl-src") { src =>
+      import TestSpark.spark.implicits._
+      def text(seed: Int) =
+        (0 until 40).map(i => s"w${seed}_${(i * 7 + seed) % 13}").mkString(" ")
+      val schema = Seq((0L, "x")).toDF("doc_id", "text").schema
+      // NOTE: with ProcessingTimeTimeout registered the engine schedules
+      // timeout-evaluation batches on its own, so processAllAvailable()
+      // never drains — poll the sink for the expected row count instead.
+      // 180 s deadline (r17): generous on purpose — this bound exists only
+      // to fail a HUNG query loudly, and a tighter bound is the one
+      // wall-clock assumption in this suite a contended host could break
+      // (the r16 full-suite run had one unattributed StreamingSpec
+      // failure that 21 quiet re-runs could not reproduce).
+      def awaitRows(table: String, n: Long): Unit = {
+        val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
+        while (spark.table(table).count() < n) {
+          assert(System.nanoTime() < deadline, s"timed out waiting for $n rows")
+          Thread.sleep(100)
+        }
       }
+      val stream = Pipelines.streamingNearDedup(
+        TestSpark.spark.readStream.schema(schema).parquet(src),
+        k = 32, bands = 8, minEst = 0.5, ttlMs = 500L)
+      val q = Pipelines.startToMemory(stream.toDF(), "neardedup_ttl_test", "append")
+      Seq((1L, text(3))).toDF("doc_id", "text").write.mode("append").parquet(src)
+      awaitRows("neardedup_ttl_test", 8)
+      Thread.sleep(1500) // > ttl: doc 1's bucket state must age out
+      Seq((2L, text(3))).toDF("doc_id", "text").write.mode("append").parquet(src)
+      awaitRows("neardedup_ttl_test", 16)
+      q.stop()
+      val verdicts = spark.table("neardedup_ttl_test")
+      // without the TTL doc 2 (an exact copy) would match in all 8 bands;
+      // with the state evicted it must claim the empty buckets instead
+      assert(verdicts.filter(col("doc_id") === 2L && col("matched")).count() == 0,
+        "TTL must have evicted doc 1's incumbency before doc 2 arrived")
     }
-    val stream = Pipelines.streamingNearDedup(
-      TestSpark.spark.readStream.schema(schema).parquet(src),
-      k = 32, bands = 8, minEst = 0.5, ttlMs = 500L)
-    val q = Pipelines.startToMemory(stream.toDF(), "neardedup_ttl_test", "append")
-    Seq((1L, text(3))).toDF("doc_id", "text").write.mode("append").parquet(src)
-    awaitRows("neardedup_ttl_test", 8)
-    Thread.sleep(1500) // > ttl: doc 1's bucket state must age out
-    Seq((2L, text(3))).toDF("doc_id", "text").write.mode("append").parquet(src)
-    awaitRows("neardedup_ttl_test", 16)
-    q.stop()
-    val verdicts = spark.table("neardedup_ttl_test")
-    // without the TTL doc 2 (an exact copy) would match in all 8 bands;
-    // with the state evicted it must claim the empty buckets instead
-    assert(verdicts.filter(col("doc_id") === 2L && col("matched")).count() == 0,
-      "TTL must have evicted doc 1's incumbency before doc 2 arrived")
   }
 
   test("session windows via shared EventTimeOps match gaps-and-islands ground truth") {

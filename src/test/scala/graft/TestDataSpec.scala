@@ -22,17 +22,18 @@ class TestDataSpec extends SparkTestBase {
   }
 
   test("requireSchemas names the table and column of a drifted corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift").toString
-    Tables.all.filter(_ != "orders").foreach { t =>
-      Tables(spark, sfDir, t).limit(1).write.parquet(s"$dir/$t.parquet")
+    withTempDir("graft-drift") { dir =>
+      Tables.all.filter(_ != "orders").foreach { t =>
+        Tables(spark, sfDir, t).limit(1).write.parquet(s"$dir/$t.parquet")
+      }
+      Tables.orders(spark, sfDir).withColumnRenamed("o_orderpriority", "o_priority")
+        .limit(1).write.parquet(s"$dir/orders.parquet")
+      // the declared read does not see the drift: the column is all nulls
+      assert(Tables.orders(spark, dir).where("o_orderpriority IS NOT NULL").isEmpty)
+      val e = intercept[IllegalArgumentException](Tables.requireSchemas(spark, dir))
+      assert(e.getMessage.contains("table orders, column o_orderpriority"), e.getMessage)
+      assert(e.getMessage.contains("has o_priority STRING"), e.getMessage)
     }
-    Tables.orders(spark, sfDir).withColumnRenamed("o_orderpriority", "o_priority")
-      .limit(1).write.parquet(s"$dir/orders.parquet")
-    // the declared read does not see the drift: the column is all nulls
-    assert(Tables.orders(spark, dir).where("o_orderpriority IS NOT NULL").isEmpty)
-    val e = intercept[IllegalArgumentException](Tables.requireSchemas(spark, dir))
-    assert(e.getMessage.contains("table orders, column o_orderpriority"), e.getMessage)
-    assert(e.getMessage.contains("has o_priority STRING"), e.getMessage)
   }
 
   test("Tables readers and SQL query builds start no Spark job") {

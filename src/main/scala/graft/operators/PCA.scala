@@ -164,13 +164,6 @@ object PCA {
     projectExpr(emb, mus, comps, m)
   }
 
-  /** [[pcaProject]] through the session-shared covariance stage. */
-  def pcaProjectShared(s: org.apache.spark.sql.SparkSession, dir: String,
-                       m: Int): DataFrame = {
-    val (mus, entries) = covarianceShared(s, dir)
-    projectExpr(Tables.embeddings(s, dir), mus, covarianceEigen(mus, entries)._2.take(m), m)
-  }
-
   /** Eigen-decomposition of the uncentered Gramian AᵀA —
     * RowMatrix.computeGramianMatrix (RowMatrix.scala:111) through the
     * [[Matrices.upperTriangle]] kernel, cells rounded 6 dp; the width is

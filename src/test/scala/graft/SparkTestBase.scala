@@ -37,15 +37,14 @@ abstract class SparkTestBase extends AnyFunSuite {
   def spark: SparkSession = TestSpark.spark
   def sfDir: String = TestSpark.sfDir
 
-  /** Runs `body` on a fresh temp dir named `prefix`…, then stops the
-    * active streaming queries whose sources or sink read or write under
-    * it and deletes it recursively. */
+  /** Runs `body` on a fresh temp dir named `prefix`…, then stops every
+    * active streaming query and deletes the dir recursively. Tests run
+    * one after another in one JVM, so any query still active here was
+    * started by this body, whether or not it finished a batch. */
   def withTempDir[T](prefix: String)(body: String => T): T = {
     val dir = Files.createTempDirectory(prefix).toFile
     try body(dir.toString) finally {
-      spark.streams.active.filter(_.recentProgress.exists(p =>
-        (p.sink.description +: p.sources.map(_.description)).exists(_.contains(dir.toString))))
-        .foreach(_.stop())
+      spark.streams.active.foreach(_.stop())
       FileUtils.deleteQuietly(dir)
     }
   }

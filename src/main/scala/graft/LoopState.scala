@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * inside a driver loop to [[cut]], and fingerprint-converged loops run
   * through [[fixpoint]].
   *
-  * It does not own the one-shot pins: 32 plain `.localCheckpoint()`
+  * It does not own the one-shot pins: 29 plain `.localCheckpoint()`
   * calls in 13 files (Graphs, Recommender, Embeddings, Optimize and
   * others) materialize loop-INVARIANT inputs once, before a loop or a
   * multi-pass fit. Their origin stats cannot compound (nothing feeds

@@ -214,18 +214,25 @@ object Embeddings {
     * max-shifted softmax, d08's assignment pattern made soft); the
     * M-step is one explode + groupBy(dim) whose output is dim rows ×
     * 3k aggregates — so what returns to the driver is O(k·dim), never
-    * row count. Means seed from [[kmeansParallelSeeds]], variances from
-    * the global per-dimension variance, weights uniform — fully
-    * deterministic.
+    * row count. Means seed from [[kmeansParallelSeeds]], each
+    * component's variances from the per-dimension variance over its
+    * seed's hard Voronoi cell (a GLOBAL variance makes the components'
+    * densities nearly indistinguishable and EM collapses them toward
+    * the corpus mean), weights uniform — fully deterministic.
     *
     * @return (vec_id, cluster, resp) — hard argmax assignment plus its
     *         responsibility (rounded), ties to the smaller component
     */
   def gmmAssign(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    val base = emb.select(col("vec_id"), col("embedding")).localCheckpoint()
+    val base = gmmBase(emb)
     val (means, vars, weights) = gmmFit(base, k, iters)
     gmmHardAssign(gmmRespFrame(base, means, vars, weights), k)
   }
+
+  /** The (vec_id, embedding) frame a GMM fit reads once per round,
+    * checkpointed once before the fit. */
+  private def gmmBase(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("embedding")).localCheckpoint()
 
   /** The winning component of a responsibilities row `rs` as a struct
     * (r = its responsibility, nc = −index, so `greatest` breaks ties to
@@ -239,87 +246,116 @@ object Embeddings {
       .select(col("vec_id"), (-col("b.nc")).as("cluster"),
         round(col("b.r"), 6).as("resp"))
 
-  /** E-step responsibilities against the model as plan LITERALS, via
-    * the EXPANDED quadratic form: Σ(x−μ)²/v = Σx²·(1/v) − 2Σx·(μ/v) +
-    * Σμ²/v — two NATIVE float_dot products per component (graft.plans
-    * codegen), instead of nested zip_with/aggregate HOFs which run on
-    * the interpreted path and dominated the first implementation.
-    * Max-shifted softmax of the log-densities.
+  /** The staged softmax both E-steps share: appends `out` (array of k
+    * responsibilities) to df, preserving its columns. `logDensity(p)`
+    * is the variant's own part — its prep columns and its k
+    * log-densities (one per component), any temp names built on the
+    * prefix `p`.
     *
     * STAGED (r15 — the t10/pl01 inlining lesson at its worst: the
     * former Seq[Column] form textually nested every reference — each
     * of the k softmax outputs inlined its own logd, the k-way max (k
     * more logd copies), and the z-sum (k·(k+1) more) — ~k²
     * log-density subtrees per row instead of k; codegen CSE recovers
-    * only part of it). Here each tier — x², the k log-densities,
-    * their max, the k shifted exps, the z sum — becomes an ATTRIBUTE
-    * before the next consumes it, so every quantity is computed once
-    * per row; CollapseProject keeps the tiers apart because each
-    * alias is referenced by 2+ non-cheap consumers. Same per-row
-    * float ops on the same values → bit-identical responsibilities.
-    * Appends `out` (array of k responsibilities) to df, preserving
-    * its columns. Intermediate tier names are derived collision-free
-    * from df.columns (r15 advisor: the former fixed `_xx`/`_ld*`/…
-    * names broke on frames that already carried one); `out` colliding
-    * with an existing column fails loudly. */
-  def gmmRespFrame(df: DataFrame, means: Array[Array[Double]],
-                   vars: Array[Array[Double]], weights: Array[Double],
-                   out: String = "rs"): DataFrame = {
+    * only part of it). Here each tier — the prep columns, the k
+    * log-densities, their max, the k shifted exps, the z sum — becomes
+    * an ATTRIBUTE before the next consumes it, so every quantity is
+    * computed once per row; CollapseProject keeps the tiers apart
+    * because each alias is referenced by 2+ non-cheap consumers.
+    * Intermediate names are derived collision-free from df.columns
+    * (r15 advisor: fixed `_xx`/`_ld*`/… names broke on frames that
+    * already carried one); `out` colliding with an existing column
+    * fails loudly. */
+  private def softmaxFrame(df: DataFrame, out: String)(
+      logDensity: String => (Seq[Column], Seq[Column])): DataFrame = {
     require(!df.columns.contains(out),
       s"output column '$out' already exists — pass a different `out`")
     // shortest underscore run no caller column starts with → every
     // s"${p}..." temp name is fresh by construction
     val p = Iterator.iterate("_")(_ + "_")
       .find(u => !df.columns.exists(_.startsWith(u))).get
-    val k = weights.length
     val keep = df.columns.map(col).toSeq
-    val ldCols = (0 until k).map { j =>
-      val a = vars(j).map(v => (1.0 / v).toFloat).toSeq
-      val b = means(j).zip(vars(j)).map { case (m, v) => (m / v).toFloat }.toSeq
-      val cTerm = means(j).zip(vars(j)).map { case (m, v) => m * m / v }.sum
-      val logDet = vars(j).map(math.log).sum
-      (lit(math.log(weights(j)) - 0.5 * (logDet + cTerm)) -
-        lit(0.5) * floatDot(col(s"${p}xx"), typedlit(a)) +
-        floatDot(col("embedding"), typedlit(b))).as(s"${p}ld$j")
-    }
-    val lds = (0 until k).map(j => col(s"${p}ld$j"))
-    val es = (0 until k).map(j => col(s"${p}e$j"))
+    val (prep, ldCols) = logDensity(p)
+    val ldNames = ldCols.indices.map(j => s"${p}ld$j")
+    val eNames = ldCols.indices.map(j => s"${p}e$j")
+    val (lds, es) = (ldNames.map(col), eNames.map(col))
     df
-      .select(keep :+ transform(col("embedding"), x => x * x).as(s"${p}xx"): _*)
-      .select(keep ++ ldCols: _*)
+      .select(keep ++ prep: _*)
+      .select(keep ++ ldCols.zip(ldNames).map { case (c, n) => c.as(n) }: _*)
       .select(keep ++ lds :+ greatest(lds: _*).as(s"${p}m"): _*)
-      .select(keep ++ (0 until k).map(j =>
-        exp(col(s"${p}ld$j") - col(s"${p}m")).as(s"${p}e$j")): _*)
+      .select(keep ++ lds.zip(eNames).map { case (ld, n) => exp(ld - col(s"${p}m")).as(n) }: _*)
       .select(keep ++ es :+ es.reduce(_ + _).as(s"${p}z"): _*)
       .select(keep :+ array(es.map(_ / col(s"${p}z")): _*).as(out): _*)
   }
 
-  /** The EM loop of [[gmmAssign]]: fit (means, vars, weights) over a
-    * pre-checkpointed (vec_id, embedding) frame. Driver state is
-    * O(k·dim) throughout. */
-  def gmmFit(base: DataFrame, k: Int, iters: Int)
-      : (Array[Array[Double]], Array[Array[Double]], Array[Double]) = {
+  /** Diagonal E-step responsibilities against the model as plan
+    * LITERALS, via the EXPANDED quadratic form: Σ(x−μ)²/v = Σx²·(1/v) −
+    * 2Σx·(μ/v) + Σμ²/v — two NATIVE float_dot products per component
+    * (graft.plans codegen) over the staged x², instead of nested
+    * zip_with/aggregate HOFs which run on the interpreted path and
+    * dominated the first implementation; then [[softmaxFrame]], which
+    * appends `out` (array of k responsibilities) to df. */
+  def gmmRespFrame(df: DataFrame, means: Array[Array[Double]],
+                   vars: Array[Array[Double]], weights: Array[Double],
+                   out: String = "rs"): DataFrame =
+    softmaxFrame(df, out) { p =>
+      val ld = weights.indices.map { j =>
+        val a = vars(j).map(v => (1.0 / v).toFloat).toSeq
+        val b = means(j).zip(vars(j)).map { case (m, v) => (m / v).toFloat }.toSeq
+        val cTerm = means(j).zip(vars(j)).map { case (m, v) => m * m / v }.sum
+        val logDet = vars(j).map(math.log).sum
+        lit(math.log(weights(j)) - 0.5 * (logDet + cTerm)) -
+          lit(0.5) * floatDot(col(s"${p}xx"), typedlit(a)) +
+          floatDot(col("embedding"), typedlit(b))
+      }
+      (Seq(transform(col("embedding"), x => x * x).as(s"${p}xx")), ld)
+    }
+
+  /** The EM loop both GMM fits run over a pre-checkpointed (vec_id,
+    * embedding) frame. Init, written once: means from
+    * [[kmeansParallelSeeds]] (the width read off the seeds, so no probe
+    * job), each component's per-dimension variances over its seed's hard
+    * Voronoi cell (one bounded k×dim agg — MLlib's
+    * init-from-cluster-sample shape; a GLOBAL variance init makes the
+    * components' densities nearly indistinguishable and EM collapses
+    * them toward the corpus mean), which `spread` turns into the
+    * variant's own spread parameter, and uniform weights. Each round
+    * scores `resp`, runs the variant's `mStep` — (mass, means, spread),
+    * keeping an empty component's old values — and re-weights by mass/n. */
+  private def gmmEm[S](base: DataFrame, k: Int, iters: Int)(
+      spread: Array[Array[Double]] => S)(
+      resp: (Array[Array[Double]], S, Array[Double]) => DataFrame)(
+      mStep: (DataFrame, Array[Array[Double]], S) => (Array[Double], Array[Array[Double]], S))
+      : (Array[Array[Double]], S, Array[Double]) = {
     require(k >= 2, "GMM needs k >= 2")
-    val dim = base.select(size(col("embedding"))).head.getInt(0)
     val seeds = kmeansParallelSeeds(base, k)
-    var means: Array[Array[Double]] = seeds.map(_.map(_.toDouble))
-    // per-component variance from the seeds' hard Voronoi cells (one
-    // bounded k×dim agg — MLlib's init-from-cluster-sample shape): a
-    // GLOBAL variance init makes the components' densities nearly
-    // indistinguishable and EM collapses them toward the corpus mean
-    val cellVar = withCluster(base, seeds)
+    val cellVar = Array.fill(k, seeds.head.length)(1e-2)
+    withCluster(base, seeds)
       .select(col("cluster"), posexplode(col("embedding")).as(Seq("p", "x")))
       .groupBy("cluster", "p").agg(var_pop(col("x").cast("double")).as("v"))
       .collect()
-    var vars: Array[Array[Double]] = Array.fill(k, dim)(1e-2)
-    cellVar.foreach(r =>
-      vars(r.getInt(0))(r.getInt(1)) = math.max(
+      .foreach(r => cellVar(r.getInt(0))(r.getInt(1)) = math.max(
         if (r.isNullAt(2)) 1e-2 else r.getDouble(2), 1e-6))
+    var means: Array[Array[Double]] = seeds.map(_.map(_.toDouble))
+    var sp = spread(cellVar)
     var weights: Array[Double] = Array.fill(k)(1.0 / k)
-
     val n = base.count().toDouble
     for (_ <- 1 to iters) {
-      val withR = gmmRespFrame(base, means, vars, weights)
+      val (mass, nextMeans, nextSp) = mStep(resp(means, sp, weights), means, sp)
+      means = nextMeans
+      sp = nextSp
+      weights = Array.tabulate(k)(j => math.max(mass(j) / n, 1e-12))
+    }
+    (means, sp, weights)
+  }
+
+  /** The diagonal fit of [[gmmAssign]]: (means, vars, weights) over a
+    * pre-checkpointed (vec_id, embedding) frame through [[gmmEm]].
+    * Driver state is O(k·dim) throughout. */
+  def gmmFit(base: DataFrame, k: Int, iters: Int)
+      : (Array[Array[Double]], Array[Array[Double]], Array[Double]) =
+    gmmEm(base, k, iters)(v => v)((m, v, w) => gmmRespFrame(base, m, v, w)) {
+        (withR, means, vars) =>
       // ONE pass: per-dim rows carry (Σ r·x, Σ r·x²) for every
       // component, plus Σ r (identical across dims — the component
       // mass, read from the p=0 row) — dim rows × 3k aggregates total
@@ -334,8 +370,8 @@ object Embeddings {
         .agg(aggs.head, aggs.tail: _*)
         .collect()
       val mass = Array.tabulate(k)(j => stats.head.getDouble(1 + 2 * k + j))
-      val newMeans = Array.tabulate(k, dim)((j, p) => means(j)(p))
-      val newVars = Array.tabulate(k, dim)((j, p) => vars(j)(p))
+      val newMeans = means.map(_.clone())
+      val newVars = vars.map(_.clone())
       stats.foreach { r =>
         val p = r.getInt(0)
         for (j <- 0 until k) {
@@ -348,12 +384,8 @@ object Embeddings {
           }
         }
       }
-      means = newMeans
-      vars = newVars
-      weights = Array.tabulate(k)(j => math.max(mass(j) / n, 1e-12))
+      (mass, newMeans, newVars)
     }
-    (means, vars, weights)
-  }
 
   /** FULL-covariance E-step responsibilities (r16 — the reference's
     * actual model, mllib/clustering/GaussianMixture.scala:1 +
@@ -361,88 +393,52 @@ object Embeddings {
     * is the diagonal restriction): per component one
     * [[graft.functions.MultivariateGaussian]] logpdf — Σ⁻¹ and
     * ln det Σ computed once on the driver, embedded as plan literals,
-    * the per-row quadratic form a bounded nested fold. Same staged-tier
-    * softmax as the diagonal path (each tier an attribute before the
-    * next consumes it — the t10/gm01 inlining lesson), same
-    * collision-free temp naming. Appends `out` (array of k
-    * responsibilities) to df. */
+    * the per-row quadratic form a bounded nested fold — then
+    * [[softmaxFrame]], which appends `out` to df. Each component's
+    * CENTERED vector is a prep column, so the d² quadratic-form fold
+    * reads elements in O(1) instead of re-deriving the zip_with per
+    * element (the inlining pitfall inside a single Column function). */
   def gmmFullRespFrame(df: DataFrame, means: Array[Array[Double]],
                        covs: Array[Array[Array[Double]]], weights: Array[Double],
-                       out: String = "rs"): DataFrame = {
-    require(!df.columns.contains(out),
-      s"output column '$out' already exists — pass a different `out`")
-    val p = Iterator.iterate("_")(_ + "_")
-      .find(u => !df.columns.exists(_.startsWith(u))).get
-    val k = weights.length
-    val keep = df.columns.map(col).toSeq
-    val gs = (0 until k).map(j => graft.functions.MultivariateGaussian(
-      means(j).toSeq, covs(j).map(_.toSeq).toSeq))
-    // tier 0: each component's CENTERED vector as an attribute, so the
-    // d² quadratic-form fold reads elements in O(1) instead of
-    // re-deriving the zip_with per element (the inlining pitfall inside
-    // a single Column function)
-    val uCols = (0 until k).map(j => gs(j).centered(col("embedding")).as(s"${p}u$j"))
-    val ldCols = (0 until k).map { j =>
-      (lit(math.log(weights(j))) +
-        gs(j).logpdfFromCentered(col(s"${p}u$j"))).as(s"${p}ld$j")
+                       out: String = "rs"): DataFrame =
+    softmaxFrame(df, out) { p =>
+      val gs = weights.indices.map(j => graft.functions.MultivariateGaussian(
+        means(j).toSeq, covs(j).map(_.toSeq).toSeq))
+      (gs.indices.map(j => gs(j).centered(col("embedding")).as(s"${p}u$j")),
+        gs.indices.map(j =>
+          lit(math.log(weights(j))) + gs(j).logpdfFromCentered(col(s"${p}u$j"))))
     }
-    val lds = (0 until k).map(j => col(s"${p}ld$j"))
-    val es = (0 until k).map(j => col(s"${p}e$j"))
-    df
-      .select(keep ++ uCols: _*)
-      .select(keep ++ ldCols: _*)
-      .select(keep ++ lds :+ greatest(lds: _*).as(s"${p}m"): _*)
-      .select(keep ++ (0 until k).map(j =>
-        exp(col(s"${p}ld$j") - col(s"${p}m")).as(s"${p}e$j")): _*)
-      .select(keep ++ es :+ es.reduce(_ + _).as(s"${p}z"): _*)
-      .select(keep :+ array(es.map(_ / col(s"${p}z")): _*).as(out): _*)
-  }
 
   /** Full-covariance GMM EM (r16 — reference GaussianMixture.scala's
     * model; [[gmmFit]] is the diagonal restriction the registered gm01
     * keeps): fit (means, covariances, weights) over a pre-checkpointed
-    * (vec_id, embedding) frame.
+    * (vec_id, embedding) frame through [[gmmEm]], the covariances
+    * starting diagonal at the seeds' hard-cell variances.
     *
     * Scale shape: the E-step is [[gmmFullRespFrame]]'s one codegen'd
     * map against O(k·dim²) plan literals; the M-step is ONE
     * explode-to-upper-triangle + groupBy((p, q)) pass whose output is
-    * dim(dim+1)/2 rows × (2k+1) aggregates — Σ rⱼ·xₚxq per cell,
-    * Σ rⱼ·xₚ read off the diagonal rows, component mass off cell
-    * (0,0) — so the driver sees O(k·dim²) per round, never rows.
-    * `dim ≤ 16` keeps the literal footprint (k·dim² doubles in every
-    * task) and the driver dim³ inversions model-sized; wider
-    * embeddings belong to the diagonal path (the reference caps full-Σ
-    * use the same way in practice — its docs flag the dim² blowup).
-    * Each Σ update adds a 1e-6 ridge on the diagonal, so the driver
-    * inversion stays positive definite (the reference's pseudo-inverse
-    * tolerance serves the same purpose). Means seed from
-    * [[kmeansParallelSeeds]], covariances from the seeds' hard-cell
-    * per-dimension variances (diagonal start), weights uniform —
-    * fully deterministic. */
+    * dim(dim+1)/2 rows × 3k aggregates — Σ rⱼ·xₚxq per cell, Σ rⱼ·xₚ
+    * read off the diagonal rows, component mass off cell (0,0) — so the
+    * driver sees O(k·dim²) per round, never rows. `dim ≤ 16` keeps the
+    * literal footprint (k·dim² doubles in every task) and the driver
+    * dim³ inversions model-sized; wider embeddings belong to the
+    * diagonal path (the reference caps full-Σ use the same way in
+    * practice — its docs flag the dim² blowup). Each Σ update adds a
+    * 1e-6 ridge on the diagonal, so the driver inversion stays positive
+    * definite (the reference's pseudo-inverse tolerance serves the same
+    * purpose). */
   def gmmFullFit(base: DataFrame, k: Int, iters: Int)
-      : (Array[Array[Double]], Array[Array[Array[Double]]], Array[Double]) = {
-    require(k >= 2, "GMM needs k >= 2")
-    val dim = base.select(size(col("embedding"))).head.getInt(0)
-    require(dim <= 16,
-      s"gmmFull embeds k·dim² literals per task and inverts k dim×dim " +
-        s"matrices per round on the driver — dim $dim > 16; use gmmFit")
-    val seeds = kmeansParallelSeeds(base, k)
-    var means: Array[Array[Double]] = seeds.map(_.map(_.toDouble))
-    val cellVar = withCluster(base, seeds)
-      .select(col("cluster"), posexplode(col("embedding")).as(Seq("p", "x")))
-      .groupBy("cluster", "p").agg(var_pop(col("x").cast("double")).as("v"))
-      .collect()
-    var covs: Array[Array[Array[Double]]] =
-      Array.tabulate(k, dim, dim)((_, a, b) => if (a == b) 1e-2 else 0.0)
-    cellVar.foreach(r =>
-      covs(r.getInt(0))(r.getInt(1))(r.getInt(1)) = math.max(
-        if (r.isNullAt(2)) 1e-2 else r.getDouble(2), 1e-6))
-    var weights: Array[Double] = Array.fill(k)(1.0 / k)
-
-    val n = base.count().toDouble
-    val cellCount = dim * (dim + 1) / 2
-    for (_ <- 1 to iters) {
-      val withR = gmmFullRespFrame(base, means, covs, weights)
+      : (Array[Array[Double]], Array[Array[Array[Double]]], Array[Double]) =
+    gmmEm(base, k, iters) { v =>
+      val dim = v.head.length
+      require(dim <= 16,
+        s"gmmFull embeds k·dim² literals per task and inverts k dim×dim " +
+          s"matrices per round on the driver — dim $dim > 16; use gmmFit")
+      Array.tabulate(k, dim, dim)((j, a, b) => if (a == b) v(j)(a) else 0.0)
+    }((m, c, w) => gmmFullRespFrame(base, m, c, w)) { (withR, means, covs) =>
+      val dim = means.head.length
+      val cellCount = dim * (dim + 1) / 2
       // upper-triangle cells (p ≤ q) as one staged explode: the x array
       // becomes an attribute first so the dim²/2 products read it once
       val cells = withR
@@ -468,8 +464,8 @@ object Embeddings {
       val byCell = stats.map(r => (r.getInt(0), r.getInt(1)) -> r).toMap
       // mass: every base row contributes to every cell exactly once
       val mass = Array.tabulate(k)(j => byCell((0, 0)).getDouble(2 + 2 * k + j))
-      val newMeans = Array.tabulate(k, dim)((j, pp) => means(j)(pp))
-      val newCovs = Array.tabulate(k, dim, dim)((j, a, b) => covs(j)(a)(b))
+      val newMeans = means.map(_.clone())
+      val newCovs = covs.map(_.map(_.clone()))
       for (j <- 0 until k if mass(j) > 1e-9) {
         val w = mass(j)
         for (pp <- 0 until dim)
@@ -482,19 +478,15 @@ object Embeddings {
           newCovs(j)(qq)(pp) = c
         }
       }
-      means = newMeans
-      covs = newCovs
-      weights = Array.tabulate(k)(j => math.max(mass(j) / n, 1e-12))
+      (mass, newMeans, newCovs)
     }
-    (means, covs, weights)
-  }
 
   /** Hard assignment through [[gmmFullFit]] — [[gmmAssign]]'s
     * full-covariance sibling.
     *
     * @return (vec_id, cluster, resp) — ties to the smaller component */
   def gmmFullAssign(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    val base = emb.select(col("vec_id"), col("embedding")).localCheckpoint()
+    val base = gmmBase(emb)
     val (means, covs, weights) = gmmFullFit(base, k, iters)
     gmmHardAssign(gmmFullRespFrame(base, means, covs, weights), k)
   }
@@ -520,8 +512,7 @@ object Embeddings {
     """SELECT vec_id, TRUE AS argmax_vs_hof, TRUE AS resp_floor
       |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir, audit) =>
     val k = 8
-    val base = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding")).localCheckpoint()
+    val base = gmmBase(Tables.embeddings(s, dir))
     val (means, vars, weights) = gmmFit(base, k, iters = 6)
     val resp = gmmRespFrame(base, means, vars, weights)
     // the twin is the EM fit + hard assignment, with no independent HOF

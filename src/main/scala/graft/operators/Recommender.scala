@@ -49,36 +49,6 @@ object Recommender {
   private def asArr(c: String): Column =
     transform(sort_array(collect_list(struct(col("p"), col(c)))), s => s.getField(c))
 
-  /** Train and return (u, i, r, pred) over the training edges.
-    *
-    * The default lr=0.02 is the MEASURED-STABLE step on quantity-scale
-    * ratings (residuals ~15): r01's sse_monotone certificate proved the
-    * former default 0.05 diverges (SSE 1.7e6 → 1.5e27 over five
-    * iterations at sf0.1), so a bare call now gets the configuration
-    * the certificate validates; RecommenderSpec pins the diverging-lr
-    * regression (tracked SSE at lr=0.05 breaks monotonicity — the
-    * exact failure the certificate catches).
-    *
-    * @param ratings (u: long, i: long, r: double), unique per (u, i)
-    */
-  def svdPlusPlus(ratings: DataFrame, dim: Int = 8, iters: Int = 8,
-                  lr: Double = 0.02, reg: Double = 0.05, seed: Long = 42L): DataFrame =
-    svdPlusPlusTracked(ratings, dim, iters, lr, reg, seed, track = false)._1
-
-  /** [[svdPlusPlus]] plus, when `track` is set, the training SSE
-    * measured on each iteration's scored frame (the err column is
-    * already materialized there — one extra bounded aggregate per
-    * iteration) with the final model's SSE appended: js.head is the
-    * SSE at init, js.last the SSE of the returned predictions — the
-    * descent claim [[r01]] certifies. */
-  def svdPlusPlusTracked(ratings: DataFrame, dim: Int = 8, iters: Int = 8,
-                         lr: Double = 0.02, reg: Double = 0.05,
-                         seed: Long = 42L, track: Boolean = true)
-      : (DataFrame, Seq[Double]) = {
-    val m = svdPlusPlusModel(ratings, dim, iters, lr, reg, seed, track)
-    (m.preds, m.sse)
-  }
-
   /** The trained SVD++ SERVING state: user table (u, x, bu) with
     * x = p_u + w_u·Σ_{j∈N(u)} y_j already folded (the per-user implicit
     * profile is a training-set property, so serving needs no edge join),
@@ -110,7 +80,25 @@ object Recommender {
       .join(nu, "u")
       .select(col("u"), transform(col("imp0"), v => v * col("w")).as("imp"))
 
-  /** [[svdPlusPlusTracked]] returning the full [[SvdppModel]]. */
+  /** Train SVD++ and return its [[SvdppModel]]: `preds` is (u, i, r,
+    * pred) over the training edges; when `track` is set, `sse` holds the
+    * training SSE measured on each iteration's scored frame (the err
+    * column is already materialized there — one extra bounded aggregate
+    * per iteration) with the final model's SSE appended: sse.head is the
+    * SSE at init, sse.last the SSE of the returned predictions — the
+    * descent claim [[r01]] certifies. An empty ratings frame trains to
+    * empty tables with every measured SSE 0 (Σ over no ratings).
+    *
+    * The default lr=0.02 is the MEASURED-STABLE step on quantity-scale
+    * ratings (residuals ~15): r01's sse_monotone certificate proved the
+    * former default 0.05 diverges (SSE 1.7e6 → 1.5e27 over five
+    * iterations at sf0.1), so a bare call now gets the configuration
+    * the certificate validates; RecommenderSpec pins the diverging-lr
+    * regression (tracked SSE at lr=0.05 breaks monotonicity — the
+    * exact failure the certificate catches).
+    *
+    * @param ratings (u: long, i: long, r: double), unique per (u, i)
+    */
   def svdPlusPlusModel(ratings: DataFrame, dim: Int = 8, iters: Int = 8,
                        lr: Double = 0.02, reg: Double = 0.05,
                        seed: Long = 42L, track: Boolean = true): SvdppModel = {
@@ -139,7 +127,7 @@ object Recommender {
 
     val js = scala.collection.mutable.ArrayBuffer.empty[Double]
     def sse(f: DataFrame): Double =
-      f.agg(sum(pow(col("err"), 2))).head.getDouble(0)
+      f.agg(coalesce(sum(pow(col("err"), 2)), lit(0.0))).head.getDouble(0)
     for (_ <- 1 to iters) {
       val s = LoopState.cut(scored(userF, itemF), eager = false)
       if (track) js += sse(s)
@@ -263,12 +251,12 @@ object Recommender {
     val pairs = ratingSlice(s, dir, avg("l_quantity"), moments = audit)
     // the twin trains with SSE tracking OFF (no per-iteration
     // measured-claim aggregate) and emits the scored predictions
-    val (preds, js) = svdPlusPlusTracked(pairs.select("u", "i", "r"),
+    val m = svdPlusPlusModel(pairs.select("u", "i", "r"),
       dim = 8, iters = 5, lr = 0.02, track = audit)
-    if (!audit) preds
+    if (!audit) m.preds
     else pairs
       .select(col("u"), col("i"), col("r_sum"), col("n"),
-        lit(monotone(js, slack = 0.0)).as("sse_monotone"))
+        lit(monotone(m.sse, slack = 0.0)).as("sse_monotone"))
       .orderBy("u", "i")
   }
 
@@ -300,25 +288,38 @@ object Recommender {
     x
   }
 
-  /** Per-key ALS-WR normal-equations kernel: accumulate Σqqᵀ / Σr·q over
-    * the group's partner-sorted (rating, factor) pairs, ridge the
-    * diagonal by reg·n, and solve — unconstrained elimination, or
-    * warm-started NNLS when `nonnegative`. All state is explicit
-    * parameters so executor lambdas calling it capture nothing. */
-  private def solveNormalEq(rows: Iterator[(Double, Seq[Double])],
-                            x0: Array[Double], dim: Int, reg: Double,
-                            nonnegative: Boolean): Seq[Double] = {
-    val a = Array.ofDim[Double](dim, dim)
+  /** The per-key normal-equations kernel every ALS variant solves (the
+    * reference's one NormalEquation accumulator, ml/recommendation/
+    * ALS.scala:453): over the group's partner-sorted (rating, factor)
+    * rows, with (w, t) = `law(r)`,
+    *
+    *   (A0 + Σ w·qqᵀ + reg·n·I) x = Σ t·q,
+    *
+    * A0 the row-major dim² `a0` (zero when null), n the key's row count
+    * (the ALS-WR weighted-λ ridge); solved by elimination, or by NNLS
+    * warm-started from `x0` when `nonnegative`. The explicit law (1, r)
+    * accumulates bit for bit what a plain Σqqᵀ / Σr·q kernel does:
+    * (1.0·q_x)·q_y is exactly q_x·q_y, and a skipped zero target leaves
+    * b unchanged (0·q is ±0 for a finite factor, and b, starting at
+    * +0.0, is never −0.0, so adding ±0.0 to it is the identity). All
+    * state is explicit parameters so executor lambdas calling it capture
+    * nothing but `law`'s constants. */
+  private[graft] def solveNormalEq(rows: Iterator[(Double, Seq[Double])],
+                                   a0: Array[Double], x0: Array[Double], dim: Int,
+                                   reg: Double, law: Double => (Double, Double),
+                                   nonnegative: Boolean): Seq[Double] = {
+    val a = Array.tabulate(dim, dim)((x, y) => if (a0 == null) 0.0 else a0(x * dim + y))
     val b = new Array[Double](dim)
     var n = 0
     rows.foreach { case (r, q) =>
       n += 1
+      val (w, t) = law(r)
       var x = 0
       while (x < dim) {
+        val wqx = w * q(x)
         var y = 0
-        val qx = q(x)
-        while (y < dim) { a(x)(y) += qx * q(y); y += 1 }
-        b(x) += r * qx
+        while (y < dim) { a(x)(y) += wqx * q(y); y += 1 }
+        if (t != 0.0) b(x) += t * q(x)
         x += 1
       }
     }
@@ -328,52 +329,18 @@ object Recommender {
      else solveLinear(a, b)).toSeq
   }
 
-  /** Alternating least squares (reference mllib/src/main/scala/org/
-    * apache/spark/mllib/recommendation/ALS.scala:1) — the reference's
-    * canonical recommender, re-expressed Spark-first. Each half-round
-    * holds one side fixed and solves every key's dim×dim normal
-    * equations (Σ qqᵀ + λ·n_u·I) p = Σ r·q — the ALS-WR weighted-λ
-    * form the reference implements — over per-key partner-sorted row
-    * lists assembled by a native collect_list aggregation (r17): the
-    * genuinely per-key sequential kernel (t07's rule), bounded at
-    * dim² per rating + dim³ per key, never corpus-sized. A half-round
-    * is ONE key-equality join (ratings ⋈ fixed side) + ONE groupBy:
-    * factors live in two distributed id-keyed tables (MLlib's layout)
-    * and never touch the driver. Group rows are sorted by partner id
-    * before accumulating so float summation order — and therefore the
-    * whole trainer — is bit-deterministic.
-    *
-    * @param ratings (u: long, i: long, r), ONE row per (u, i) — every
-    *                ALS trainer here assumes unique pairs (the registered
-    *                entries aggregate per (u, i) first); a repeated pair
-    *                is not rejected, it silently enters its keys' normal
-    *                equations once per copy
-    * @return (u, i, r, pred) over the training edges
-    */
-  def als(ratings: DataFrame, dim: Int = 8, iters: Int = 5,
-          reg: Double = 0.1, seed: Long = 42L,
-          nonnegative: Boolean = false): DataFrame =
-    alsTracked(ratings, dim, iters, reg, seed, track = false,
-      nonnegative = nonnegative)._1
+  /** The explicit-feedback law of [[solveNormalEq]]: weight 1, target r. */
+  private val explicitLaw: Double => (Double, Double) = r => (1.0, r)
 
-  /** [[als]] plus, when `track` is set, the ALS-WR regularized
-    * objective J = Σ_ratings [(r − p·q)² + reg·(‖p_u‖² + ‖q_i‖²)]
-    * measured after every FULL round — ONE bounded join+agg each
-    * (per-half-round measurement doubled the job count for the same
-    * guarantee: each half-round is an exact normal-equations solve, so
-    * J is non-increasing at every half-step and therefore across any
-    * composition of them). The sequence is provably non-increasing —
-    * the claim [[r02]] certifies. */
-  def alsTracked(ratings: DataFrame, dim: Int = 8, iters: Int = 5,
-                 reg: Double = 0.1, seed: Long = 42L,
-                 track: Boolean = true,
-                 nonnegative: Boolean = false): (DataFrame, Seq[Double]) = {
-    val (userF, itemF, js) =
-      alsFactors(ratings, dim, iters, reg, seed, track, nonnegative)
-    val r2 = ratings.select(col("u"), col("i"), col("r").cast("double").as("r"))
-    val preds = alsPredict(r2, userF, itemF)
-      .select(col("u"), col("i"), col("r"), col("pred"))
-    (preds, js)
+  /** The implicit-feedback law of [[solveNormalEq]] (Hu, Koren &
+    * Volinsky, "Collaborative Filtering for Implicit Feedback Datasets",
+    * ICDM'08 — the reference's NormalEquation addImplicit,
+    * ml/recommendation/ALS.scala:453): confidence c = 1 + α·|r| (the
+    * reference's |r| extension for r < 0), weight c − 1 on top of the
+    * shared Gramian, target c when the preference is 1 (r > 0), else 0. */
+  private[graft] def implicitLaw(alpha: Double): Double => (Double, Double) = { r =>
+    val c = 1.0 + alpha * math.abs(r)
+    (c - 1.0, if (r > 0) c else 0.0)
   }
 
   /** Score (u, i, ...) pairs against ALS factor tables (u, f) / (i, f):
@@ -439,98 +406,137 @@ object Recommender {
     top.withColumn("rk", row_number().over(w))
   }
 
-  /** [[als]]'s trainer, returning the distributed FACTOR TABLES
-    * (u, f: array<double>) / (i, f) — the reference
-    * MatrixFactorizationModel's state (mllib/recommendation/
+  /** The one ALS trainer every variant runs (the reference trains
+    * explicit and implicit ALS through one computeFactors loop): item
+    * factors start at `init`; each round solves the users against the
+    * fixed items, then the items against the new users, and with
+    * `track` measures the objective J after the full round.
+    *
+    * A half-round is ONE key-equality join (ratings ⋈ fixed side) + ONE
+    * groupBy assembling each key's row list natively
+    * (sort_array(collect_list(struct(partner, r, f))) keeps the
+    * pre-solve pipeline in codegen and partial-aggregates the lists
+    * map-side, with no Dataset encoder around the exchange), then one
+    * typed map into [[solveNormalEq]] — the genuinely per-key
+    * sequential kernel (t07's rule), bounded at dim² per rating + dim³
+    * per key, never corpus-sized. Factors live in two distributed
+    * id-keyed tables (MLlib's layout) and never touch the driver.
+    * sort_array orders the structs lexicographically, partner first, so
+    * every key's float summation order — and therefore the whole
+    * trainer — is bit-deterministic; equal structs (a repeated (u, i)
+    * row) sort alike.
+    *
+    * A variant is only its arguments:
+    *  - `gram`: the kernel starts from the fixed side's Gramian
+    *    ([[gramian]], one bounded collect per half-round) instead of
+    *    zero, and J gains the unobserved pairs' ⟨G_X, G_Y⟩_F;
+    *  - `law`: a rating's (weight, target) in the kernel;
+    *  - `nonnegative`: NNLS warm-started from the solving side's
+    *    previous factors instead of elimination (joined AFTER the
+    *    aggregation: one row per key, never riding the exchange);
+    *  - `loss`: J's per-rating term over the columns r and xy = p·q, to
+    *    which J adds reg·(‖p_u‖² + ‖q_i‖²) per rating. Σ over no ratings
+    *    is 0, so an empty ratings frame measures J = 0. */
+  private def alsLoop(ratings: DataFrame, dim: Int, iters: Int, reg: Double,
+                      track: Boolean, init: Column, gram: Boolean,
+                      law: Double => (Double, Double), nonnegative: Boolean,
+                      loss: Column): (DataFrame, DataFrame, Seq[Double]) = {
+    val spark = ratings.sparkSession
+    import spark.implicits._
+    val r2 = ratings.select(col("u"), col("i"), col("r").cast("double").as("r"))
+      .localCheckpoint()
+    def start(fixed: DataFrame): Array[Double] = if (gram) gramian(fixed, dim) else null
+
+    def halfRound(fixed: DataFrame, fixedKey: String, solveKey: String,
+                  a0: Array[Double], prev: Option[DataFrame]): DataFrame = {
+      val (d0, r0, law0, nn0) = (dim, reg, law, nonnegative) // plain captures, not `this`
+      val rows = r2.join(fixed, fixedKey).groupBy(col(solveKey)).agg(
+        sort_array(collect_list(struct(
+          col(fixedKey).as("_1"), col("r").as("_2"), col("f").as("_3"))))
+          .as("_rows"))
+      prev.fold(rows.withColumn("_f0", lit(null).cast("array<double>")))(p =>
+          rows.join(p.select(col(solveKey), col("f").as("_f0")), Seq(solveKey), "left"))
+        .as[(Long, Seq[(Long, Double, Seq[Double])], Option[Seq[Double]])]
+        .map { case (key, rs, f0) =>
+          (key, Recommender.solveNormalEq(rs.iterator.map(t => (t._2, t._3)),
+            a0, f0.map(_.toArray).orNull, d0, r0, law0, nn0))
+        }
+        .toDF(solveKey, "f")
+    }
+
+    def objective(uF: DataFrame, iF: DataFrame, gX: Array[Double]): Double = {
+      var dense = 0.0
+      if (gram) {
+        val gY = gramian(iF, dim)
+        var k = 0
+        while (k < gX.length) { dense += gX(k) * gY(k); k += 1 }
+      }
+      // xy staged as an attribute: composing the dot Column directly
+      // would inline the aggregate HOF into both consumers (t10 lesson)
+      dense + r2.join(uF.select(col("u"), col("f").as("p")), "u")
+        .join(iF.select(col("i"), col("f").as("q")), "i")
+        .withColumn("xy", dot(col("p"), col("q")))
+        .agg(coalesce(sum(loss +
+          lit(reg) * (dot(col("p"), col("p")) + dot(col("q"), col("q")))), lit(0.0)))
+        .head.getDouble(0)
+    }
+
+    val js = scala.collection.mutable.ArrayBuffer.empty[Double]
+    var itemF = LoopState.cut(r2.select("i").distinct()
+      .select(col("i"), init.as("f")), eager = true)
+    var userF: DataFrame = null
+    for (_ <- 1 to iters) {
+      userF = LoopState.cut(halfRound(itemF, "i", "u", start(itemF),
+        Option(userF).filter(_ => nonnegative)), eager = false)
+      val gX = start(userF)
+      itemF = LoopState.cut(halfRound(userF, "u", "i", gX,
+        Some(itemF).filter(_ => nonnegative)), eager = false)
+      if (track) js += objective(userF, itemF, gX)
+    }
+    (userF, itemF, js.toSeq)
+  }
+
+  /** Alternating least squares (reference mllib/src/main/scala/org/
+    * apache/spark/mllib/recommendation/ALS.scala:1), returning the
+    * distributed FACTOR TABLES (u, f: array<double>) / (i, f) — the
+    * reference MatrixFactorizationModel's state (mllib/recommendation/
     * MatrixFactorizationModel.scala:1) and the persistence surface
-    * [[graft.ml.ModelIO.saveAlsFactors]] writes. */
+    * [[graft.ml.ModelIO.saveAlsFactors]] writes; [[alsPredict]] scores
+    * them. Each half-round of [[alsLoop]] solves every key's dim×dim
+    * normal equations (Σ qqᵀ + λ·n_u·I) p = Σ r·q — the ALS-WR
+    * weighted-λ form the reference implements.
+    *
+    * With `track`, the third value is the ALS-WR regularized objective
+    * J = Σ_ratings [(r − p·q)² + reg·(‖p_u‖² + ‖q_i‖²)] after every FULL
+    * round — ONE bounded join+agg each (each half-round is an exact
+    * normal-equations solve, so J is non-increasing at every half-step
+    * and therefore across any composition of them; measuring per
+    * half-round would double the job count for the same guarantee). The
+    * sequence is provably non-increasing — the claim [[r02]] certifies.
+    *
+    * `nonnegative` (reference ALS.scala:78-79,154 `setNonnegative`)
+    * initializes in the feasible cone (|init|, the reference's
+    * abs-of-random convention, so round 1's item warm start is
+    * clamp-free) and solves each key by NNLS warm-started from that
+    * side's previous factors — what keeps the constrained half-round
+    * non-increasing: coordinate descent only ever improves on its start,
+    * so J(new) <= J(old) even if the sweep budget stops short of the
+    * exact constrained optimum.
+    *
+    * @param ratings (u: long, i: long, r), ONE row per (u, i) — every
+    *                ALS trainer here assumes unique pairs (the registered
+    *                entries aggregate per (u, i) first); a repeated pair
+    *                is not rejected, it enters its keys' normal
+    *                equations once per copy
+    */
   def alsFactors(ratings: DataFrame, dim: Int = 8, iters: Int = 5,
                  reg: Double = 0.1, seed: Long = 42L,
                  track: Boolean = false,
                  nonnegative: Boolean = false): (DataFrame, DataFrame, Seq[Double]) = {
-    val spark = ratings.sparkSession
-    import spark.implicits._
-    // ratings are unique per (u, i): see [[als]]
-    val r2 = ratings.select(col("u"), col("i"), col("r").cast("double").as("r"))
-      .localCheckpoint()
-
-    // `prev` = the solving side's PREVIOUS factors (nonnegative mode
-    // only): the per-key NNLS warm-starts from them, which is what makes
-    // the constrained half-round provably non-increasing — coordinate
-    // descent only ever improves on its start, so J(new) <= J(old) even
-    // if the sweep budget stops short of the exact constrained optimum.
-    // The default path keeps the lean 4-field row (no null _f0 column
-    // riding the r02 shuffle for a feature it never reads).
-    // r17: DataFrame-native group assembly (guide §2.3 "aggregate before
-    // you shuffle" + codegen). The former groupByKey→mapGroups shape paid
-    // the Dataset encoder on BOTH sides of its exchange every half-round:
-    // an AppendColumns deserialize-per-row to compute the key, an
-    // in-partition sort, and a second deserialize-per-row inside
-    // MapGroups. groupBy + sort_array(collect_list(struct(...))) keeps the
-    // whole pre-solve pipeline in native codegen, partial-aggregates the
-    // per-key lists map-side, and the one remaining object hop is the
-    // bounded (key, rows) array fed to the solver. The solver sees the
-    // group's rows sorted by partner key EXACTLY as before — sort_array
-    // orders the structs lexicographically and the partner key (the
-    // struct's first field) is unique per group (ratings are one row per
-    // (u, i)) — so every solve, and therefore the whole trainer, is
-    // bit-identical. The nonnegative warm start joins AFTER the
-    // aggregation (one _f0 row per key instead of one per rating riding
-    // the exchange).
-    def halfRound(fixed: DataFrame, fixedKey: String, solveKey0: String,
-                  factCol: String, prev: Option[DataFrame]): DataFrame = {
-      val base = r2.join(fixed, fixedKey)
-        .select(col(solveKey0), col(fixedKey), col("r"), col(factCol))
-      val (d0, r0, nn0) = (dim, reg, nonnegative) // plain captures, not `this`
-      val agged = base.groupBy(col(solveKey0)).agg(
-        sort_array(collect_list(struct(
-          col(fixedKey).as("_1"), col("r").as("_2"), col(factCol).as("_3"))))
-          .as("_rows"))
-      val solved = prev match {
-        case None =>
-          agged.as[(Long, Seq[(Long, Double, Seq[Double])])]
-            .map { case (key, rows) =>
-              (key, Recommender.solveNormalEq(
-                rows.iterator.map(t => (t._2, t._3)), null, d0, r0, nn0))
-            }
-        case Some(p) =>
-          agged.join(p.select(col(solveKey0), col("f").as("_f0")),
-              Seq(solveKey0), "left")
-            .as[(Long, Seq[(Long, Double, Seq[Double])], Option[Seq[Double]])]
-            .map { case (key, rows, f0) =>
-              (key, Recommender.solveNormalEq(
-                rows.iterator.map(t => (t._2, t._3)),
-                f0.map(_.toArray).orNull, d0, r0, nn0))
-            }
-      }
-      solved.toDF(solveKey0, "f")
-    }
-
-    def objective(uF: DataFrame, iF: DataFrame): Double =
-      r2.join(uF.select(col("u"), col("f").as("p")), "u")
-        .join(iF.select(col("i"), col("f").as("q")), "i")
-        .agg(sum(
-          pow(col("r") - dot(col("p"), col("q")), 2) +
-            lit(reg) * (dot(col("p"), col("p")) + dot(col("q"), col("q")))))
-        .head.getDouble(0)
-
-    val js = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // nonnegative mode initializes in the feasible cone (|init|, the
-    // reference's abs-of-random convention) so round 1's item warm start
-    // is clamp-free
-    val init0 = initArr(col("i"), dim, seed)
-    var itemF = LoopState.cut(r2.select("i").distinct()
-      .select(col("i"),
-        (if (nonnegative) transform(init0, v => abs(v)) else init0).as("f")), eager = true)
-    var userF: DataFrame = null
-    for (_ <- 1 to iters) {
-      userF = LoopState.cut(halfRound(itemF, "i", "u", "f",
-        Option(userF).filter(_ => nonnegative)), eager = false)
-      itemF = LoopState.cut(halfRound(userF, "u", "i", "f",
-        if (nonnegative) Some(itemF) else None), eager = false)
-      if (track) js += objective(userF, itemF)
-    }
-    (userF, itemF, js.toSeq)
+    val init = initArr(col("i"), dim, seed)
+    alsLoop(ratings, dim, iters, reg, track,
+      if (nonnegative) transform(init, v => abs(v)) else init,
+      gram = false, explicitLaw, nonnegative, pow(col("r") - col("xy"), 2))
   }
 
   /** Registered ALS pass over the same deterministic 200-customer
@@ -552,9 +558,9 @@ object Recommender {
     val pairs = ratingSlice(s, dir, avg("l_quantity"), moments = audit)
     // the twin runs alternating minimization with objective tracking OFF
     // (no per-round measured-claim join+agg) and emits the predictions
-    val (preds, js) = alsTracked(pairs.select("u", "i", "r"), dim = 8, iters = 5,
-      track = audit)
-    if (!audit) preds
+    val ratings = pairs.select("u", "i", "r")
+    val (userF, itemF, js) = alsFactors(ratings, dim = 8, iters = 5, track = audit)
+    if (!audit) alsPredict(ratings, userF, itemF).select("u", "i", "r", "pred")
     else pairs
       .select(col("u"), col("i"), col("r_sum"), col("n"),
         lit(monotone(js, slack = 1e-9)).as("monotone_obj"))
@@ -601,54 +607,6 @@ object Recommender {
     }
   }
 
-  /** Per-key IMPLICIT-feedback normal-equations kernel (Hu, Koren &
-    * Volinsky, "Collaborative Filtering for Implicit Feedback
-    * Datasets", ICDM'08 — the reference's trainImplicit mode,
-    * mllib/recommendation/ALS.scala:338 and the NormalEquation
-    * addImplicit kernel at ml/recommendation/ALS.scala:453): the
-    * dense system ranges over ALL items, but decomposes as the SHARED
-    * Gramian G = ΣyyᵀY (identical for every key — passed in as a
-    * bounded dim² array) plus per-key corrections from the key's
-    * OBSERVED edges only:
-    *
-    *   (G + Σ_obs (c−1)·qqᵀ + λ·n·I) x = Σ_obs[r>0] c·q,
-    *   c = 1 + α·|r|  (the reference's |r| extension for r < 0),
-    *   preference p = 1 iff r > 0.
-    *
-    * λ·n (n = the key's observed-edge count) is graft's ALS-WR
-    * weighting, matching [[solveNormalEq]] — a documented delta from
-    * the reference's λ·(total factor count) quirk; it is the
-    * regularizer the monotone-objective certificate is proved
-    * against. */
-  private[graft] def solveImplicitNormalEq(rows: Iterator[(Double, Seq[Double])],
-                                    gram: Array[Double], dim: Int,
-                                    reg: Double, alpha: Double): Seq[Double] = {
-    val a = Array.ofDim[Double](dim, dim)
-    val b = new Array[Double](dim)
-    var x = 0
-    while (x < dim) {
-      var y = 0
-      while (y < dim) { a(x)(y) = gram(x * dim + y); y += 1 }
-      x += 1
-    }
-    var n = 0
-    rows.foreach { case (r, q) =>
-      n += 1
-      val c = 1.0 + alpha * math.abs(r)
-      var i = 0
-      while (i < dim) {
-        val qi = q(i)
-        var j = 0
-        while (j < dim) { a(i)(j) += (c - 1.0) * qi * q(j); j += 1 }
-        if (r > 0) b(i) += c * qi
-        i += 1
-      }
-    }
-    var d = 0
-    while (d < dim) { a(d)(d) += reg * n; d += 1 }
-    solveLinear(a, b).toSeq
-  }
-
   /** Gramian Σ f fᵀ of a factor table as a row-major dim² driver array
     * — the BOUNDED shared state each implicit half-round broadcasts (the
     * reference's computeYtY, ml/recommendation/ALS.scala:1111): the
@@ -662,89 +620,47 @@ object Recommender {
   /** Implicit-feedback ALS trainer (reference trainImplicit,
     * mllib/recommendation/ALS.scala:338; setImplicitPrefs/setAlpha at
     * :130,138) returning the factor tables plus, when `track` is set,
-    * the confidence-weighted objective after every FULL round:
+    * the confidence-weighted objective after every FULL round.
+    *
+    * The dense per-key system ranges over ALL items, but decomposes as
+    * the SHARED Gramian G = ΣyyᵀY (identical for every key — a bounded
+    * dim² array) plus corrections from the key's OBSERVED edges only,
+    * which is [[alsLoop]] with the Gramian start and [[implicitLaw]]:
+    *
+    *   (G + Σ_obs (c−1)·qqᵀ + λ·n·I) x = Σ_obs[r>0] c·q,
+    *   c = 1 + α·|r|,  preference p = 1 iff r > 0.
+    *
+    * λ·n (n = the key's observed-edge count) is graft's ALS-WR
+    * weighting, as in [[alsFactors]] — a documented delta from the
+    * reference's λ·(total factor count) quirk; it is the regularizer the
+    * monotone-objective certificate is proved against. The objective
     *
     *   J(X,Y) = Σ_u Σ_i c_ui (p_ui − x_u·y_i)²
     *          + λ (Σ_u n_u‖x_u‖² + Σ_i n_i‖y_i‖²),
     *
-    * c_ui = 1 and p_ui = 0 off the observed edges. The dense Σ_u Σ_i
-    * ranges over every (user, item) pair, but measures EXACTLY with
-    * bounded work via Σ_u Σ_i (x_u·y_i)² = ⟨G_X, G_Y⟩_F (a dim²
-    * Frobenius dot of the two Gramians the half-rounds compute
-    * anyway) plus observed-edge corrections — one join + one
+    * c_ui = 1 and p_ui = 0 off the observed edges, ranges over every
+    * (user, item) pair, but measures EXACTLY with bounded work via
+    * Σ_u Σ_i (x_u·y_i)² = ⟨G_X, G_Y⟩_F (a dim² Frobenius dot of the two
+    * Gramians) plus observed-edge corrections — one join + one
     * aggregate:
     *
     *   J = ⟨G_X, G_Y⟩_F
     *     + Σ_obs [c·(p − x·y)² − (x·y)² + λ(‖x_u‖² + ‖y_i‖²)].
     *
-    * Each half-round solves its side's per-key system EXACTLY (the
-    * kernel above), so J is non-increasing at every half-step —
-    * the same alternating-exact-minimization argument as [[r02]],
-    * extended to the weighted objective (the ALS-WR argument the r14
-    * verdict cites): the provable certificate [[r04]] carries. */
+    * Each half-round solves its side's per-key system EXACTLY, so J is
+    * non-increasing at every half-step — the same
+    * alternating-exact-minimization argument as [[r02]], extended to the
+    * weighted objective (the ALS-WR argument the r14 verdict cites): the
+    * provable certificate [[r04]] carries. */
   def alsImplicitFactors(ratings: DataFrame, dim: Int = 8, iters: Int = 5,
                          reg: Double = 0.1, alpha: Double = 1.0,
                          seed: Long = 42L, track: Boolean = false)
       : (DataFrame, DataFrame, Seq[Double]) = {
-    val spark = ratings.sparkSession
-    import spark.implicits._
-    // ratings are unique per (u, i): see [[als]]
-    val r2 = ratings.select(col("u"), col("i"), col("r").cast("double").as("r"))
-      .localCheckpoint()
-
-    // r17: same DataFrame-native group assembly as [[alsFactors]] — the
-    // typed groupByKey/mapGroups encoder round-trips are replaced by a
-    // codegen collect_list aggregation; the solver still sees each key's
-    // rows sorted by (unique) partner key, so every solve is bit-identical.
-    def halfRound(fixed: DataFrame, fixedKey: String, solveKey0: String,
-                  gram: Array[Double]): DataFrame = {
-      val base = r2.join(fixed, fixedKey)
-        .select(col(solveKey0), col(fixedKey), col("r"), col("f"))
-      val (d0, r0, a0, g0) = (dim, reg, alpha, gram) // plain captures, not `this`
-      base.groupBy(col(solveKey0)).agg(
-        sort_array(collect_list(struct(
-          col(fixedKey).as("_1"), col("r").as("_2"), col("f").as("_3"))))
-          .as("_rows"))
-        .as[(Long, Seq[(Long, Double, Seq[Double])])]
-        .map { case (key, rows) =>
-          (key, Recommender.solveImplicitNormalEq(
-            rows.iterator.map(t => (t._2, t._3)), g0, d0, r0, a0))
-        }
-        .toDF(solveKey0, "f")
-    }
-
-    def obsTerm(uF: DataFrame, iF: DataFrame): Double = {
-      val c = lit(1.0) + lit(alpha) * abs(col("r"))
-      val p = when(col("r") > 0, lit(1.0)).otherwise(lit(0.0))
-      // xy staged as an attribute: composing the dot Column directly
-      // would inline the aggregate HOF into both consumers (t10 lesson)
-      r2.join(uF.select(col("u"), col("f").as("p")), "u")
-        .join(iF.select(col("i"), col("f").as("q")), "i")
-        .withColumn("xy", dot(col("p"), col("q")))
-        .agg(sum(
-          c * pow(p - col("xy"), 2) - pow(col("xy"), 2) +
-            lit(reg) * (dot(col("p"), col("p")) + dot(col("q"), col("q")))))
-        .head.getDouble(0)
-    }
-
-    val js = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var itemF = LoopState.cut(r2.select("i").distinct()
-      .select(col("i"), initArr(col("i"), dim, seed + 1).as("f")), eager = true)
-    var userF: DataFrame = null
-    for (_ <- 1 to iters) {
-      val gY = gramian(itemF, dim)
-      userF = LoopState.cut(halfRound(itemF, "i", "u", gY), eager = false)
-      val gX = gramian(userF, dim)
-      itemF = LoopState.cut(halfRound(userF, "u", "i", gX), eager = false)
-      if (track) {
-        val gY2 = gramian(itemF, dim)
-        var frob = 0.0
-        var k = 0
-        while (k < gX.length) { frob += gX(k) * gY2(k); k += 1 }
-        js += frob + obsTerm(userF, itemF)
-      }
-    }
-    (userF, itemF, js.toSeq)
+    val c = lit(1.0) + lit(alpha) * abs(col("r"))
+    val pref = when(col("r") > 0, lit(1.0)).otherwise(lit(0.0))
+    alsLoop(ratings, dim, iters, reg, track, initArr(col("i"), dim, seed + 1),
+      gram = true, implicitLaw(alpha), nonnegative = false,
+      c * pow(pref - col("xy"), 2) - pow(col("xy"), 2))
   }
 
   /** Registered IMPLICIT-feedback ALS pass (reference trainImplicit,

@@ -209,8 +209,6 @@ object Capacity {
     * completions and keeps an exponentially-decayed per-executor rate. */
   final class CapacityMonitor(alpha: Double = 0.3) extends SparkListener {
     private val speed = mutable.Map.empty[String, Double] // executorId -> bytes/ms
-    private val runTime = mutable.Map.empty[String, Long]
-    private val bytes = mutable.Map.empty[String, Long]
 
     override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = synchronized {
       val m = taskEnd.taskMetrics
@@ -218,16 +216,11 @@ object Capacity {
         val ex = taskEnd.taskInfo.executorId
         val read = m.inputMetrics.bytesRead + m.shuffleReadMetrics.totalBytesRead
         val ms = math.max(1L, m.executorRunTime)
-        runTime(ex) = runTime.getOrElse(ex, 0L) + ms
-        bytes(ex) = bytes.getOrElse(ex, 0L) + read
         val inst = read.toDouble / ms
         speed(ex) = speed.get(ex).map(s => s * (1 - alpha) + inst * alpha).getOrElse(inst)
       }
     }
 
     def capacities: Map[String, Double] = synchronized { speed.toMap }
-    def totals: Map[String, (Long, Long)] = synchronized {
-      runTime.keys.map(k => k -> (bytes.getOrElse(k, 0L), runTime(k))).toMap
-    }
   }
 }

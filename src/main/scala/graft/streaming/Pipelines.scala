@@ -272,14 +272,6 @@ object Pipelines {
       }
       .start()
 
-  /** [[startCapacityBalanced]] wired to a live monitor. */
-  def startCapacityBalanced(
-      df: DataFrame, name: String,
-      monitor: Capacity.CapacityMonitor,
-      uniformCol: String,
-      handle: (DataFrame, Long) => Unit): StreamingQuery =
-    startCapacityBalanced(df, name, () => monitor.capacities, uniformCol)(handle)
-
   // ------------------------------------------------- streaming near-dedup
 
   final case class BandedDoc(doc_id: Long, band: Int, bh: Long, sig: Seq[Long])

@@ -137,6 +137,21 @@ class EmbeddingsSpec extends SparkTestBase {
     assert(first == again, "EM must be deterministic")
   }
 
+  test("gmmFit reads the embedding width off its seeds: no probe job") {
+    // three planted 4-dim blobs; the fit's jobs are the k-means|| seeds,
+    // the cell-variance pass, the row count and one M-step per round — a
+    // width probe (a `head` over the frame) would be one job more
+    val rows: java.util.List[Row] = new java.util.ArrayList()
+    for (i <- 0 until 30) {
+      val v = Array.fill(4)(0.01f * (i % 5))
+      v(i % 3) = 1.0f
+      rows.add(Row(i.toLong, v.toSeq))
+    }
+    val base = spark.createDataFrame(rows, embSchema).localCheckpoint()
+    val jobs = jobsOf { Embeddings.gmmFit(base, k = 3, iters = 2) }
+    assert(jobs == 17, s"gmmFit started $jobs jobs")
+  }
+
   test("full-covariance GMM recovers planted correlated blobs with the right covariance signs") {
     val dim = 4
     // two blobs whose SHAPE (not just location) carries signal: blob 0

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Recommender
 
@@ -24,9 +25,22 @@ class RecommenderSpec extends SparkTestBase {
   private def rmse(df: org.apache.spark.sql.DataFrame, predCol: String): Double =
     math.sqrt(df.select(avg(pow(col("r") - col(predCol), 2.0))).head.getDouble(0))
 
+  /** (u, i, r, pred) over the training edges of an explicit ALS fit. */
+  private def alsPreds(ratings: DataFrame, dim: Int, iters: Int,
+                       reg: Double = 0.1): DataFrame = {
+    val (userF, itemF, _) = Recommender.alsFactors(ratings, dim, iters, reg)
+    Recommender.alsPredict(ratings, userF, itemF)
+  }
+
+  /** A factor table as sorted (id, raw IEEE bits of f) — bit-exact equality. */
+  private def bits(f: DataFrame): Seq[(Long, Seq[Long])] =
+    f.collect().map(r => (r.getLong(0),
+      r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits))).sortBy(_._1).toSeq
+
   test("SVD++ learns the planted block structure well below the mean-only baseline") {
     val ratings = planted()
-    val out = Recommender.svdPlusPlus(ratings, dim = 8, iters = 20, lr = 0.1).cache()
+    val out = Recommender.svdPlusPlusModel(ratings, dim = 8, iters = 20, lr = 0.1,
+      track = false).preds.cache()
     val mu = ratings.agg(avg("r")).head.getDouble(0)
     val base = rmse(ratings.withColumn("base", lit(mu)), "base")
     val trained = rmse(out, "pred")
@@ -48,22 +62,22 @@ class RecommenderSpec extends SparkTestBase {
     // the shipped default until r11. 10× the planted ratings reproduces
     // the failure mode at spec scale.
     val big = planted().withColumn("r", col("r") * 10.0)
-    val (_, diverging) = Recommender.svdPlusPlusTracked(
-      big, dim = 8, iters = 5, lr = 0.05)
+    val diverging = Recommender.svdPlusPlusModel(
+      big, dim = 8, iters = 5, lr = 0.05).sse
     val monotone = diverging.sliding(2)
       .forall(p => p.length < 2 || p(1) <= p(0) * (1 + 1e-9))
     assert(!monotone,
       s"lr=0.05 unexpectedly stable on quantity-scale ratings: $diverging")
     // the measured-stable default holds the descent claim on the same data
-    val (_, stable) = Recommender.svdPlusPlusTracked(
-      big, dim = 8, iters = 5)
+    val stable = Recommender.svdPlusPlusModel(
+      big, dim = 8, iters = 5).sse
     assert(stable.sliding(2).forall(p => p.length < 2 || p(1) <= p(0) * (1 + 1e-9)),
       s"default lr not monotone on quantity-scale ratings: $stable")
   }
 
   test("SVD++ training is seeded-deterministic") {
     val ratings = planted()
-    def run() = Recommender.svdPlusPlus(ratings, dim = 4, iters = 3)
+    def run() = Recommender.svdPlusPlusModel(ratings, dim = 4, iters = 3, track = false).preds
       .select(col("u"), col("i"), round(col("pred"), 9).as("p"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     assert(run() == run(), "same seed must reproduce identical predictions")
@@ -91,7 +105,7 @@ class RecommenderSpec extends SparkTestBase {
       yield (u.toLong, i.toLong,
         fac(u, 1).zip(fac(i, 2)).map { case (a, b) => a * b }.sum)
     val ratings = rows.toDF("u", "i", "r")
-    val out = Recommender.als(ratings, dim = 3, iters = 10, reg = 1e-3).cache()
+    val out = alsPreds(ratings, dim = 3, iters = 10, reg = 1e-3).cache()
     val err = rmse(out, "pred")
     val scale = ratings.agg(avg("r")).head.getDouble(0)
     assert(err < 0.02 * scale, s"ALS RMSE $err on exact rank-$dim data (scale $scale)")
@@ -99,13 +113,14 @@ class RecommenderSpec extends SparkTestBase {
 
   test("ALS beats the gradient SVD++ trainer on the planted blocks and is deterministic") {
     val ratings = planted()
-    val alsOut = Recommender.als(ratings, dim = 8, iters = 10, reg = 0.01).cache()
+    val alsOut = alsPreds(ratings, dim = 8, iters = 10, reg = 0.01).cache()
     val alsErr = rmse(alsOut, "pred")
     val svdErr = rmse(
-      Recommender.svdPlusPlus(ratings, dim = 8, iters = 20, lr = 0.1), "pred")
+      Recommender.svdPlusPlusModel(ratings, dim = 8, iters = 20, lr = 0.1,
+        track = false).preds, "pred")
     assert(alsErr <= svdErr + 0.05,
       s"ALS RMSE $alsErr must not trail the gradient trainer's $svdErr")
-    def run() = Recommender.als(ratings, dim = 4, iters = 3)
+    def run() = alsPreds(ratings, dim = 4, iters = 3)
       .select(col("u"), col("i"), col("pred"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     assert(run() == run(), "sorted-group accumulation must make ALS bit-deterministic")
@@ -123,8 +138,8 @@ class RecommenderSpec extends SparkTestBase {
     // user observed items 0 (r=3) and 2 (r=1); item 1 unobserved
     val obs = Seq((3.0, items(0).toSeq), (1.0, items(2).toSeq))
     val alpha = 1.5; val reg = 0.1
-    val x = Recommender.solveImplicitNormalEq(
-      obs.iterator, gram, dim, reg, alpha).toArray
+    val x = Recommender.solveNormalEq(obs.iterator, gram, null, dim, reg,
+      Recommender.implicitLaw(alpha), nonnegative = false).toArray
     // dense reference: A = Σ_all c qqᵀ + λnI, b = Σ_all c p q
     val a = Array.ofDim[Double](dim, dim); val b = new Array[Double](dim)
     val cs = Map(0 -> (1.0 + alpha * 3.0), 1 -> 1.0, 2 -> (1.0 + alpha * 1.0))
@@ -323,5 +338,41 @@ class RecommenderSpec extends SparkTestBase {
       .agg(count(lit(1)).as("n"), max("rk").as("mx"), min("rk").as("mn"))
     assert(perUser.filter(col("n") =!= col("mx") || col("mn") =!= 1).count() == 0)
     assert(perUser.filter(col("mx") > 3).count() == 0)
+  }
+
+  test("every tracked trainer measures 0 on an empty ratings frame and trains empty tables") {
+    import TestSpark.spark.implicits._
+    // Σ over no ratings is 0: the measured objectives must be defined,
+    // not a null sum read as a double
+    val empty = Seq.empty[(Long, Long, Double)].toDF("u", "i", "r")
+    val svd = Recommender.svdPlusPlusModel(empty, dim = 4, iters = 2)
+    assert(svd.sse == Seq(0.0, 0.0, 0.0), s"SVD++ SSE ${svd.sse}")
+    assert(svd.preds.count() == 0)
+    val trained = Seq(
+      "explicit" -> Recommender.alsFactors(empty, dim = 4, iters = 2, track = true),
+      "nonnegative" -> Recommender.alsFactors(empty, dim = 4, iters = 2, track = true,
+        nonnegative = true),
+      "implicit" -> Recommender.alsImplicitFactors(empty, dim = 4, iters = 2, track = true))
+    for ((name, (userF, itemF, js)) <- trained) {
+      assert(js == Seq(0.0, 0.0), s"$name ALS objective $js")
+      assert(userF.count() == 0 && itemF.count() == 0, s"$name ALS factors")
+    }
+  }
+
+  test("ALS: a repeated (u, i) row enters the normal equations once per copy, bit-deterministically") {
+    // the contract alsFactors documents: a duplicate is not rejected, it
+    // weighs its key's solve once more — and sort_array orders the equal
+    // structs alike, so two runs stay bit-equal
+    val ratings = planted()
+    val dup = ratings.union(ratings.filter(col("u") === 0 && col("i") === 0))
+    val trainers = Seq[(String, DataFrame => (DataFrame, DataFrame, Seq[Double]))](
+      "explicit" -> (r => Recommender.alsFactors(r, dim = 4, iters = 3)),
+      "implicit" -> (r => Recommender.alsImplicitFactors(r, dim = 4, iters = 3)))
+    for ((name, train) <- trainers) {
+      def run(r: DataFrame) = { val (u, i, _) = train(r); (bits(u), bits(i)) }
+      val once = run(dup)
+      assert(once == run(dup), s"$name ALS on a repeated row is not bit-deterministic")
+      assert(once != run(ratings), s"$name ALS ignored the repeated row")
+    }
   }
 }

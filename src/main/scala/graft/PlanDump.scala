@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.ExplainUtils
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Plan-evidence dumper (r16 optimization round): runs registered
   * queries and writes the `.explain("formatted")` text of the plan each
@@ -14,8 +14,11 @@ import java.nio.file.{Files, Paths}
   *
   * A name suffixed `:prod` (`r02_als:prod`) dumps the entry's production
   * twin from [[SparkEntry.prodQueries]] to `<outDir>/<name>_prod.txt`.
-  * Exits 2 when any named entry failed (unknown name or a throw), after
-  * dumping the others.
+  * Each dumped entry also appends one line
+  * `name<TAB>jobs<TAB>stages<TAB>tasks` to `<outDir>/JOBS.tsv` (the
+  * entry's name as given, `:prod` included), so job tables are built
+  * from that file. Exits 2 when any named entry failed (unknown name or
+  * a throw), after dumping the others.
   *
   * Notes: this dumps the plan of the DataFrame the registered entry
   * RETURNS. Driver-iterated trainers do their heavy work in actions
@@ -69,10 +72,12 @@ object PlanDump {
         // listener events are async; block until the bus has delivered
         // everything (deterministic, unlike a fixed sleep — r16 advisor)
         org.apache.spark.sql.graftshim.GraftDatasetFactory.drainListenerBus(spark)
+        val (nj, ns, nt) = (jobs.get - j0, stages.get - s0, tasks.get - t0)
         Files.writeString(Paths.get(s"$outDir/$file.txt"),
-          plan.toString + s"\n\n# executed end-to-end: jobs=${jobs.get - j0} " +
-            s"stages=${stages.get - s0} tasks=${tasks.get - t0}\n")
-        System.err.println(s"[plandump] wrote $n jobs=${jobs.get - j0} stages=${stages.get - s0}")
+          plan.toString + s"\n\n# executed end-to-end: jobs=$nj stages=$ns tasks=$nt\n")
+        Files.writeString(Paths.get(s"$outDir/JOBS.tsv"), s"$n\t$nj\t$ns\t$nt\n",
+          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+        System.err.println(s"[plandump] wrote $n jobs=$nj stages=$ns")
         true
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $n failed: ${e.getMessage}")

@@ -16,7 +16,8 @@ import graft.plans.GraftStrategies
   * rather than audited.
   *
   * The factories wrap `run` and `prod` so that every entry plans with
-  * graft's strategies ([[GraftStrategies]]) whichever session calls it.
+  * graft's strategies and its [[graft.plans.OnePartitionScan]] optimizer
+  * rule ([[GraftStrategies.install]]) whichever session calls it.
   */
 final case class Q(
     name: String,

@@ -45,7 +45,17 @@ object Bucketed {
   /** The q03 join shape on the bucketed layout: orders⋈lineitem joins
     * bucket-to-bucket (no Exchange on the join key — asserted in
     * SourcesSpec), the customer dim broadcasts. Oracle = the plain join
-    * on the unbucketed tables: bucketing must be semantically invisible. */
+    * on the unbucketed tables: bucketing must be semantically invisible.
+    *
+    * FOUND: at small scale the bucket-to-bucket join never happens. At
+    * sf0.02 the planner broadcasts `orders_bkt` (static estimate
+    * 2.2 MiB, under the 10 MB `autoBroadcastJoinThreshold`) and streams
+    * `lineitem_bkt`, so the layout only costs: q40's cold run, which
+    * builds it, took 2.8–5.6 s against about 0.6 s warm, in cold
+    * analytics passes with a median of 12.6–13.6 s (sf0.02, 4-core
+    * host). SourcesSpec's zero-exchange check holds because it turns
+    * broadcast off. [[graft.plans.OnePartitionScan]] leaves both
+    * bucketed scans as Spark plans them (OnePartitionScanSpec). */
   val q40 = Q.sql(
     "q40_bucketed_join",
     """SELECT o_orderpriority, c_mktsegment, count(*) AS n,

@@ -429,7 +429,9 @@ object Recommender {
     * A variant is only its arguments:
     *  - `gram`: the kernel starts from the fixed side's Gramian
     *    ([[gramian]], one bounded collect per half-round) instead of
-    *    zero, and J gains the unobserved pairs' ⟨G_X, G_Y⟩_F;
+    *    zero, and J gains the unobserved pairs' ⟨G_X, G_Y⟩_F; a tracked
+    *    fit's objective collects G_Y of the same item table the next
+    *    user half-round solves against, so that half-round reuses it;
     *  - `law`: a rating's (weight, target) in the kernel;
     *  - `nonnegative`: NNLS warm-started from the solving side's
     *    previous factors instead of elimination (joined AFTER the
@@ -464,34 +466,42 @@ object Recommender {
         .toDF(solveKey, "f")
     }
 
-    def objective(uF: DataFrame, iF: DataFrame, gX: Array[Double]): Double = {
+    /** J after a full round, with the item Gramian G_Y it collected
+      * (null without `gram`): the next user half-round starts from it. */
+    def objective(uF: DataFrame, iF: DataFrame, gX: Array[Double]): (Double, Array[Double]) = {
+      val gY = start(iF)
       var dense = 0.0
       if (gram) {
-        val gY = gramian(iF, dim)
         var k = 0
         while (k < gX.length) { dense += gX(k) * gY(k); k += 1 }
       }
       // xy staged as an attribute: composing the dot Column directly
       // would inline the aggregate HOF into both consumers (t10 lesson)
-      dense + r2.join(uF.select(col("u"), col("f").as("p")), "u")
+      (dense + r2.join(uF.select(col("u"), col("f").as("p")), "u")
         .join(iF.select(col("i"), col("f").as("q")), "i")
         .withColumn("xy", dot(col("p"), col("q")))
         .agg(coalesce(sum(loss +
           lit(reg) * (dot(col("p"), col("p")) + dot(col("q"), col("q")))), lit(0.0)))
-        .head.getDouble(0)
+        .head.getDouble(0), gY)
     }
 
     val js = scala.collection.mutable.ArrayBuffer.empty[Double]
     var itemF = LoopState.cut(r2.select("i").distinct()
       .select(col("i"), init.as("f")), eager = true)
     var userF: DataFrame = null
+    // the item Gramian the last objective collected from this itemF
+    var itemGram: Array[Double] = null
     for (_ <- 1 to iters) {
-      userF = LoopState.cut(halfRound(itemF, "i", "u", start(itemF),
+      userF = LoopState.cut(halfRound(itemF, "i", "u", Option(itemGram).getOrElse(start(itemF)),
         Option(userF).filter(_ => nonnegative)), eager = false)
       val gX = start(userF)
       itemF = LoopState.cut(halfRound(userF, "u", "i", gX,
         Some(itemF).filter(_ => nonnegative)), eager = false)
-      if (track) js += objective(userF, itemF, gX)
+      itemGram = if (!track) null else {
+        val (j, gY) = objective(userF, itemF, gX)
+        js += j
+        gY
+      }
     }
     (userF, itemF, js.toSeq)
   }

@@ -8,12 +8,13 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.GraftDatasetFactory.{column, expression}
 
 /** Adds graft's native expressions to the SQL surface, with its
-  * optimizer rule and planner strategies ([[GraftStrategies]]).
+  * optimizer rules ([[RewriteHofCosine]], [[OnePartitionScan]]) and
+  * planner strategies ([[GraftStrategies]]).
   *
   * Library code needs none of this: it builds the expressions with the
   * typed constructors of [[GraftFunctions]], and every registered entry
-  * installs the strategies through [[graft.Q]]. Two entry points for
-  * SQL text that names the functions:
+  * installs the strategies and [[OnePartitionScan]] through [[graft.Q]].
+  * Two entry points for SQL text that names the functions:
   *  - config: `spark.sql.extensions=graft.plans.GraftExtensions` picks
   *    them up at session build (cluster deployments);
   *  - [[GraftFunctions.register]]: idempotent runtime registration into
@@ -23,6 +24,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.sqlSurface.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => RewriteHofCosine)
+    ext.injectOptimizerRule(_ => OnePartitionScan)
     GraftStrategies.all.foreach(strategy => ext.injectPlannerStrategy(_ => strategy))
   }
 }

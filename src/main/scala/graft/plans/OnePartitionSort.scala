@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition, Sort}
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
 
@@ -26,9 +26,15 @@ import org.apache.spark.sql.internal.SQLConf
   * when it has no more exchanges than the current plan, so a sort that
   * starts in one partition stays there even if its runtime input turns
   * out larger than the threshold. A streaming sort is left to Spark.
+  *
+  * A sort over a one-partition input needs no exchange either way: where
+  * [[OnePartitionScan]] already put a one-partition coalesce under the
+  * sort, this strategy leaves the sort to Spark, whose `SortExec` then
+  * finds `SinglePartition` below it and plans no exchange.
   */
 object OnePartitionSort extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case Sort(_, true, Repartition(1, false, _), _) => Nil
     case Sort(order, true, child, _) if !child.isStreaming && fitsOnePartition(child) =>
       SortExec(order, global = true, CoalesceExec(1, planLater(child))) :: Nil
     case _ => Nil
@@ -38,17 +44,26 @@ object OnePartitionSort extends SparkStrategy {
     child.stats.sizeInBytes <= SQLConf.get.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
 }
 
-/** The one place graft's planner strategies enter a session. */
+/** The one place graft's planner strategies and its optimizer rule
+  * ([[OnePartitionScan]]) enter a session. */
 object GraftStrategies {
   val all: Seq[SparkStrategy] = Seq(TopKStrategy, OnePartitionSort)
 
-  /** Adds every strategy the session does not plan with yet; idempotent,
-    * and a no-op for sessions configured with [[GraftExtensions]]. */
+  /** Adds every strategy the session does not plan with yet, and
+    * [[OnePartitionScan]] to `spark.experimental.extraOptimizations`
+    * unless it is there already; idempotent. The strategies are a no-op
+    * for sessions configured with [[GraftExtensions]]; there the rule
+    * runs in the operator-optimization batch and again here, after the
+    * late rewrites (distinct aggregates, subqueries), and the second run
+    * only reaches what the first could not see. */
   def install(spark: SparkSession): Unit = synchronized {
     val planned = spark.sessionState.planner.strategies
     val missing = all.filterNot(planned.contains)
     if (missing.nonEmpty) {
       spark.experimental.extraStrategies = spark.experimental.extraStrategies ++ missing
+    }
+    if (!spark.experimental.extraOptimizations.contains(OnePartitionScan)) {
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ OnePartitionScan
     }
   }
 }

@@ -26,28 +26,48 @@ class OnePartitionSortSpec extends SparkTestBase {
     finally before.fold(spark.conf.unset(MinPartitionSize))(spark.conf.set(MinPartitionSize, _))
   }
 
+  /** q15 over orders written as two files, so the rollup shuffles:
+    * over one file it runs in the scan's task (OnePartitionScan). */
+  private def q15TwoFiles[T](body: DataFrame => T): T =
+    withTwoFileTables("orders")(dir => body(Analytics.q15.run(spark, dir)))
+
   test("q15 sorts in one partition: no range exchange, 2 jobs") {
-    val df = Analytics.q15.run(spark, sfDir)
-    val jobs = jobsOf(df.collect())
-    val p = finalPlan(df)
-    assert(!p.contains("rangepartitioning"), s"q15 kept its range exchange:\n$p")
-    assert(p.contains("Coalesce 1"), s"q15 is not coalesced to one partition:\n$p")
-    // the rollup's map stage and the result: no sampling job, no range map stage
-    assert(jobs == 2, s"q15 ran $jobs jobs:\n$p")
+    q15TwoFiles { df =>
+      val jobs = jobsOf(df.collect())
+      val p = finalPlan(df)
+      assert(!p.contains("rangepartitioning"), s"q15 kept its range exchange:\n$p")
+      assert(p.contains("Coalesce 1"), s"q15 is not coalesced to one partition:\n$p")
+      // the rollup's map stage and the result: no sampling job, no range map stage
+      assert(jobs == 2, s"q15 ran $jobs jobs:\n$p")
+    }
+    // over one file: no exchange at all, one job
+    val one = Analytics.q15.run(spark, sfDir)
+    val jobs = jobsOf(one.collect())
+    assert(!finalPlan(one).contains("Exchange"), finalPlan(one))
+    assert(jobs == 1, s"one-file q15 ran $jobs jobs:\n${finalPlan(one)}")
   }
 
   test("the size gate is live: at a 1-byte minimum partition size q15 range-sorts again") {
     val p = withRangeSort {
-      val df = Analytics.q15.run(spark, sfDir)
-      df.collect()
-      finalPlan(df)
+      q15TwoFiles { df =>
+        df.collect()
+        finalPlan(df)
+      }
     }
     assert(p.contains("rangepartitioning"), s"no range exchange above the threshold:\n$p")
     assert(!p.contains("Coalesce 1"), p)
     // and the setting is restored
-    val after = Analytics.q15.run(spark, sfDir)
-    after.collect()
-    assert(!finalPlan(after).contains("rangepartitioning"))
+    q15TwoFiles { after =>
+      after.collect()
+      assert(!finalPlan(after).contains("rangepartitioning"))
+    }
+    // a sort over a one-partition input needs no exchange either way
+    val one = withRangeSort {
+      val df = Analytics.q15.run(spark, sfDir)
+      df.collect()
+      finalPlan(df)
+    }
+    assert(!one.contains("Exchange"), s"one-file q15 exchanged above the threshold:\n$one")
   }
 
   test("duplicate sort keys over 8 input partitions: same rows, same key order on both paths") {

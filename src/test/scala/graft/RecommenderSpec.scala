@@ -205,6 +205,14 @@ class RecommenderSpec extends SparkTestBase {
     out.unpersist()
   }
 
+  test("r04's tracked fit reuses each round's item Gramian: 105 jobs") {
+    // the objective's G_Y seeds the next user half-round: iters − 1 = 4
+    // Gramian shuffle-and-collect passes fewer than recollecting it each
+    // round, which ran 114 jobs here
+    val jobs = jobsOf(Recommender.r04.run(spark, sfDir).collect())
+    assert(jobs == 105, s"r04 ran $jobs jobs")
+  }
+
   test("NNLS kernel: interior solutions match the unconstrained solve; active constraints satisfy KKT") {
     // interior case: A = [[4,1],[1,3]], b = [1,2] → x* = (1/11, 7/11),
     // strictly positive, so NNLS must equal the unconstrained optimum

@@ -49,6 +49,17 @@ abstract class SparkTestBase extends AnyFunSuite {
     }
   }
 
+  /** Runs `body` on a temp corpus dir holding the named tables of
+    * `sfDir`, each written as two parquet files, so Spark reads every one
+    * in two or more partitions. A plan-shape assertion that counts
+    * exchanges above a scan needs this: a one-file table plans none
+    * (graft.plans.OnePartitionScan). */
+  def withTwoFileTables[T](tables: String*)(body: String => T): T =
+    withTempDir("graft-two-file") { dir =>
+      tables.foreach(t => Tables(spark, sfDir, t).repartition(2).write.parquet(s"$dir/$t.parquet"))
+      body(dir)
+    }
+
   /** The temp views registered in session `s`. */
   def tempViews(s: SparkSession): Set[String] =
     s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet

@@ -331,11 +331,18 @@ class TextSpec extends SparkTestBase {
     // substitute an InMemoryRelation into any identical later plan):
     // the only width-changing shuffle is the dedup groupBy (plus the
     // final presentation sort); gate and chunk explode stay map-side
-    val plan0 = graft.operators.TextOps.pl01.run(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    // on documents written as two files: over one file the dedup
+    // groupBy runs in the scan's task (asserted below)
+    val plan0 = withTwoFileTables("documents") { dir =>
+      graft.operators.TextOps.pl01.run(spark, dir).queryExecution.executedPlan.toString
+    }
     val exchanges0 = "Exchange hashpartitioning".r.findAllIn(plan0).length
     assert(exchanges0 == 1,
       s"expected exactly one hash shuffle, got $exchanges0:\n${plan0.take(900)}")
+    val onePlan = graft.operators.TextOps.pl01.run(spark, sfDir)
+      .queryExecution.executedPlan.toString
+    assert(!onePlan.contains("Exchange"),
+      s"one-file documents still shuffle:\n${onePlan.take(900)}")
     // r15: the tokenizer split is STAGED — once in the gate filter, once
     // in the post-dedup chunk grid (the former single-select shape
     // inlined it 3× post-shuffle; bounds guard against regex rot too)

@@ -114,12 +114,15 @@ object ModelIO {
 
   // ---- decision trees / forests / boosted ensembles ----
 
-  /** One-table encoding shared by every tree family: split rows carry
-    * (feature, bin), leaf rows carry the payload; `tree` distinguishes
-    * ensemble members (0 for a single tree). */
-  private def treeRows(spark: SparkSession, trees: Seq[(Seq[(Int, Trees.Split)],
-      Seq[(Int, String)], Seq[(Int, Double)])]): DataFrame = {
+  private type TreeRows = (Seq[(Int, Trees.Split)], Seq[(Int, String)], Seq[(Int, Double)])
+
+  /** The one writer behind every tree family: metadata, then the one-file
+    * `nodes` table — split rows carry (feature, bin), leaf rows carry the
+    * payload; `tree` distinguishes ensemble members (0 for a single tree). */
+  private def writeTrees(spark: SparkSession, path: String, clazz: String,
+                         trees: Seq[TreeRows], params: (String, String)*): Unit = {
     import spark.implicits._
+    writeMeta(spark, path, clazz, params: _*)
     trees.zipWithIndex.flatMap { case ((splits, leafC, leafV), t) =>
       splits.map { case (n, s) =>
         (t, "split", n, s.feature, s.thresholdBin, null: String, null: java.lang.Double) } ++
@@ -128,6 +131,7 @@ object ModelIO {
         leafV.map { case (n, v) =>
           (t, "leafv", n, -1, -1, null: String, java.lang.Double.valueOf(v)) }
     }.toDF("tree", "kind", "node", "feature", "bin", "cls", "value")
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/nodes")
   }
 
   private def readTreeRows(spark: SparkSession, path: String)
@@ -145,11 +149,9 @@ object ModelIO {
     }
   }
 
-  def saveTree(spark: SparkSession, path: String, model: Trees.Model): Unit = {
-    writeMeta(spark, path, "DecisionTreeModel", "depth" -> model.depth.toString)
-    treeRows(spark, Seq((model.splits.toSeq, model.leafClass.toSeq, Nil)))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/nodes")
-  }
+  def saveTree(spark: SparkSession, path: String, model: Trees.Model): Unit =
+    writeTrees(spark, path, "DecisionTreeModel",
+      Seq((model.splits.toSeq, model.leafClass.toSeq, Nil)), "depth" -> model.depth.toString)
 
   def loadTree(spark: SparkSession, path: String): Trees.Model = {
     val meta = readMeta(spark, path, "DecisionTreeModel")
@@ -158,12 +160,10 @@ object ModelIO {
   }
 
   def saveForest(spark: SparkSession, path: String,
-                 models: Seq[Trees.Model]): Unit = {
-    writeMeta(spark, path, "RandomForestModel",
+                 models: Seq[Trees.Model]): Unit =
+    writeTrees(spark, path, "RandomForestModel",
+      models.map(m => (m.splits.toSeq, m.leafClass.toSeq, Nil)),
       "numTrees" -> models.size.toString, "depth" -> models.head.depth.toString)
-    treeRows(spark, models.map(m => (m.splits.toSeq, m.leafClass.toSeq, Nil)))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/nodes")
-  }
 
   def loadForest(spark: SparkSession, path: String): Seq[Trees.Model] = {
     val meta = readMeta(spark, path, "RandomForestModel")
@@ -176,11 +176,9 @@ object ModelIO {
   }
 
   def saveRegressionTree(spark: SparkSession, path: String,
-                         model: Trees.RModel): Unit = {
-    writeMeta(spark, path, "RegressionTreeModel", "depth" -> model.depth.toString)
-    treeRows(spark, Seq((model.splits.toSeq, Nil, model.leafValue.toSeq)))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/nodes")
-  }
+                         model: Trees.RModel): Unit =
+    writeTrees(spark, path, "RegressionTreeModel",
+      Seq((model.splits.toSeq, Nil, model.leafValue.toSeq)), "depth" -> model.depth.toString)
 
   def loadRegressionTree(spark: SparkSession, path: String): Trees.RModel = {
     val meta = readMeta(spark, path, "RegressionTreeModel")
@@ -190,14 +188,12 @@ object ModelIO {
 
   /** GBT ensemble: F(x) = f0 + shrink·Σ trees(x). */
   def saveGbt(spark: SparkSession, path: String, f0: Double, shrink: Double,
-              trees: Seq[Trees.RModel]): Unit = {
-    writeMeta(spark, path, "GradientBoostedTreesModel",
+              trees: Seq[Trees.RModel]): Unit =
+    writeTrees(spark, path, "GradientBoostedTreesModel",
+      trees.map(m => (m.splits.toSeq, Nil, m.leafValue.toSeq)),
       "numTrees" -> trees.size.toString, "depth" -> trees.head.depth.toString,
       "f0" -> java.lang.Double.toHexString(f0),
       "shrink" -> java.lang.Double.toHexString(shrink))
-    treeRows(spark, trees.map(m => (m.splits.toSeq, Nil, m.leafValue.toSeq)))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/nodes")
-  }
 
   def loadGbt(spark: SparkSession, path: String)
       : (Double, Double, Seq[Trees.RModel]) = {

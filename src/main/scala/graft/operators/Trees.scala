@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.{LoopState, Q, Tables}
 
@@ -15,13 +15,17 @@ import graft.{LoopState, Q, Tables}
   * counts (the reference's findBestSplits placement,
   * DecisionTree.scala:1136).
   *
+  * ONE level-wise grower ([[grow]]) trains T trees together, as the
+  * reference's `DecisionTree.run` is a one-tree RandomForest: the single
+  * classification tree and the regression tree are T = 1, the forest is
+  * T = nTrees with per-tree deterministic Poisson(1) bootstrap WEIGHTS
+  * (RandomForest.scala's baggedInput — weights, not resampled copies)
+  * and per-tree feature subsets, and boosting calls the regression tree
+  * once per round on a residual column updated in-plan. A family is a
+  * [[Law]]: its cell statistic, its split choice and its leaf value.
   * Rows carry their current node id as a COLUMN (updated per level by a
   * bounded when-chain on the binned feature), so the tree state lives
-  * in the data — no shuffling by node, no per-node passes. The forest
-  * reuses the same machinery with per-tree deterministic Poisson(1)
-  * bootstrap WEIGHTS (RandomForest.scala's baggedInput — weights, not
-  * resampled copies) and per-tree feature subsets; boosting reuses the
-  * regression variant on a residual column updated in-plan.
+  * in the data — no shuffling by node, no per-node passes.
   */
 object Trees {
 
@@ -53,7 +57,7 @@ object Trees {
   /** Resolve an impurity name (the reference's `Impurities.fromString`,
     * mllib/tree/impurity/Impurities.scala:1): classification trees take
     * "gini" (default) or "entropy"; regression uses weighted variance
-    * (trainRegressionBinned's SSE), as the reference does. */
+    * ([[sseSplit]]), as the reference does. */
   private def impurityFn(name: String): Seq[Long] => Double = name match {
     case "gini"    => gini
     case "entropy" => entropy
@@ -68,6 +72,8 @@ object Trees {
       Seq(min(col("x")(j)).as(s"lo$j"), max(col("x")(j)).as(s"hi$j")))
     val mm = raw.agg(mmExprs.head, mmExprs.tail: _*).head
     (0 until d).map { j =>
+      require(!mm.isNullAt(2 * j),
+        s"feature $j has no non-null value: cannot bin an empty or all-null column")
       val lo = mm.getDouble(2 * j); val hi = mm.getDouble(2 * j + 1)
       val w = (hi - lo) / bins
       if (w == 0) lit(0)
@@ -75,205 +81,213 @@ object Trees {
     }
   }
 
-  /** Classification-tree prediction as a pure when-chain over the binned
-    * feature array column — map-only application. */
+  /** One column per tree, or the array of them when there are several:
+    * T = 1 carries its weight and node id as scalars. */
+  private def perTree(cs: Seq[Column]): Column =
+    if (cs.size == 1) cs.head else array(cs: _*)
+
+  /** The binned, checkpointed training frame (b, `value`, w, node = 0)
+    * with one weight column per tree. */
+  private def binned(data: DataFrame, fts: Seq[Column], value: String,
+                     valueCol: Column, w: Seq[Column], bins: Int): DataFrame = {
+    val raw = data.select(array(fts.map(_.cast("double")): _*).as("x"),
+      valueCol.as(value), perTree(w).as("w"))
+    LoopState.cut(raw.select(array(binColumns(raw, fts.length, bins): _*).as("b"),
+      col(value), col("w"), perTree(w.map(_ => lit(0))).as("node")),
+      eager = false) // the first level's cube collect materializes (r16)
+  }
+
+  /** A tree walk as a pure when-chain over the binned feature array
+    * column (map-only application); `leaf` gives each leaf's literal. */
+  private def walk(splits: Map[Int, Split], depth: Int, b: Column)
+                  (leaf: Int => Column): Column = {
+    def go(node: Int, level: Int): Column = splits.get(node) match {
+      case Some(s) if level < depth =>
+        when(b(s.feature) <= s.thresholdBin, go(2 * node + 1, level + 1))
+          .otherwise(go(2 * node + 2, level + 1))
+      case _ => leaf(node)
+    }
+    go(0, 0)
+  }
+
+  /** Classification-tree prediction. */
   def classifyExpr(model: Model, b: Column): Column = {
     val fallback = model.leafClass.values.toSeq.sorted.headOption.getOrElse("")
-    def go(node: Int, depth: Int): Column = model.splits.get(node) match {
-      case Some(s) if depth < model.depth =>
-        when(b(s.feature) <= s.thresholdBin, go(2 * node + 1, depth + 1))
-          .otherwise(go(2 * node + 2, depth + 1))
-      case _ => lit(model.leafClass.getOrElse(node, fallback))
-    }
-    go(0, 0)
+    walk(model.splits, model.depth, b)(n => lit(model.leafClass.getOrElse(n, fallback)))
   }
 
-  /** Regression-tree prediction, same shape with double leaves. */
-  def regressExpr(model: RModel, b: Column): Column = {
-    def go(node: Int, depth: Int): Column = model.splits.get(node) match {
-      case Some(s) if depth < model.depth =>
-        when(b(s.feature) <= s.thresholdBin, go(2 * node + 1, depth + 1))
-          .otherwise(go(2 * node + 2, depth + 1))
-      case _ => lit(model.leafValue.getOrElse(node, 0.0))
-    }
-    go(0, 0)
+  /** Regression-tree prediction, same walk with double leaves. */
+  def regressExpr(model: RModel, b: Column): Column =
+    walk(model.splits, model.depth, b)(n => lit(model.leafValue.getOrElse(n, 0.0)))
+
+  /** A tree family as the grower's arguments.
+    *
+    * @param value the frame's response column (`label` or `y`)
+    * @param keys  cell grouping keys after (node, feature, bin)
+    * @param stats the cell statistic, aggregates over `w` and `value`
+    * @param cell  decodes a collected (keys, stats) tail starting at the index
+    * @param split a node's (feature, bin, cell) histogram and its tree's
+    *              allowed features → Right(split) or Left(leaf)
+    * @param leaf  a still-open node's leaf from its (keys, stats) cells */
+  private final case class Law[C, L](value: String, keys: Seq[String],
+                                     stats: Seq[Column], cell: (Row, Int) => C,
+                                     split: (Seq[(Int, Int, C)], Set[Int]) => Either[L, Split],
+                                     leaf: Seq[C] => Option[L])
+
+  /** Weighted class counts: Gini/entropy splits, weighted-majority leaves. */
+  private def classLaw(bins: Int, guardGaps: Boolean, impurity: String,
+                       gapWidth: Double): Law[(String, Long), String] = {
+    val imp = impurityFn(impurity)
+    Law("label", Seq("label"), Seq(sum(col("w")).as("c")),
+      (r, i) => (r.getString(i), r.getLong(i + 1)),
+      chooseSplit(_, _, bins, guardGaps, imp, gapWidth),
+      cells => Some(majority(cells)))
   }
 
-  /** Train a depth-`depth` Gini tree over `fts` (d doubles, binned here)
-    * against string label `labelCol`.
+  /** Weighted moments (Σw, Σwy, Σwy²): SSE-reduction splits, weighted-
+    * mean leaves. */
+  private def meanLaw(bins: Int): Law[(Double, Double, Double), Double] =
+    Law("y", Nil,
+      Seq(sum(col("w")).as("cw"), sum(col("w") * col("y")).as("sy"),
+        sum(col("w") * col("y") * col("y")).as("syy")),
+      (r, i) => (r.getLong(i).toDouble, r.getDouble(i + 1), r.getDouble(i + 2)),
+      sseSplit(_, _, bins),
+      _.collectFirst { case (w, sy, _) if w > 0 => sy / w })
+
+  /** The level-wise grower: `depth` levels of T = `allowed.length` trees
+    * over `base` (b, `law.value`, w, node), tree t splitting only on
+    * `allowed(t)` among d features. Per level ONE partial-agg groupBy
+    * collects the (tree, node, feature, bin, law keys) → statistic cube —
+    * the posexplode multiplies rows by d (×T), both bounded, and combines
+    * map-side — then every open node splits or becomes a leaf on the
+    * driver, and one when-chain per tree routes the rows. Nodes still open
+    * after the last level get leaves from one (tree, node) pass.
     *
-    * Per level: one partial-agg groupBy over (node, feature, bin,
-    * label) — the posexplode multiplies rows by d (bounded, d tiny) and
-    * combines map-side, so the shuffle carries at most
-    * nodes·d·bins·classes rows per partition. Ties break (gain desc,
-    * feature asc, bin asc) so training is deterministic end-to-end.
+    * T = 1 groups by exactly (node, feature, bin, law keys), with no tree
+    * key (a constant key would still change the hash aggregate's output
+    * order, which the regression totals are summed in), and keeps the
+    * routed node a STAGED projection over the one checkpoint (r16: a
+    * per-level re-materialization bought a job + I/O for an integer
+    * derivable from `b`; node is computed once per row per job, and every
+    * job scans the same checkpointed partitions in the same order).
+    * T > 1 CUTS every level instead (lazily: the next collect
+    * materializes it in the same job): the route is a T-wide array
+    * feeding a T-way explode, and recomputing every earlier level's array
+    * per scan measured 6.1 s → 9.2 s at sf0.1 (r16).
     *
-    * @param weight   per-row long bootstrap weight (0 = out-of-bag; the
-    *                 row still routes and gets a prediction)
-    * @param features feature indices this tree may split on (the
-    *                 forest's per-tree subset); split stats always
-    *                 aggregate all d features — the cube stays bounded —
-    *                 but only allowed ones compete
-    */
+    * @return per-tree (splits, leaves) and the final routed frame */
+  private def grow[C, L](base: DataFrame, law: Law[C, L], d: Int, depth: Int,
+                         allowed: Seq[Set[Int]])
+      : (Seq[(Map[Int, Split], Map[Int, L])], DataFrame) = {
+    val nTrees = allowed.length
+    require(allowed.forall(a => a.nonEmpty && a.forall(f => f >= 0 && f < d)))
+    val splits = Array.fill(nTrees)(Map.empty[Int, Split])
+    val leaves = Array.fill(nTrees)(Map.empty[Int, L])
+    val tKey = if (nTrees == 1) Nil else Seq("t")
+    // one (t, node, value, w) row per input row and tree, plus `gen`
+    def rows(df: DataFrame, gen: Column*): DataFrame =
+      if (nTrees == 1) df.select(Seq(col("node"), col(law.value), col("w")) ++ gen: _*)
+      else df.select(col("b"), col(law.value), col("w"), col("node"),
+          explode(sequence(lit(0), lit(nTrees - 1))).as("t"))
+        .select(Seq(col("t"), element_at(col("node"), col("t") + 1).as("node"),
+          col(law.value), element_at(col("w"), col("t") + 1).as("w")) ++ gen: _*)
+    // (t, node, row); the row's columns after node start at `at`
+    val at = tKey.size + 1
+    def collectStats(frame: DataFrame, keys: String*): Array[(Int, Int, Row)] =
+      frame.groupBy((tKey ++ ("node" +: keys) ++ law.keys).map(col): _*)
+        .agg(law.stats.head, law.stats.tail: _*).collect()
+        .map(r => (if (nTrees == 1) 0 else r.getInt(0), r.getInt(at - 1), r))
+    def open(t: Int, node: Int) = !splits(t).contains(node) && !leaves(t).contains(node)
+    // only a tree's ALLOWED features ever compete (the split law's
+    // weight carrier is allowed.min, also in the set), so the level cube
+    // drops the others before the shuffle (r17: exploding the allowed
+    // (t, f) pairs directly as a struct-array literal measured ~15%
+    // slower — it leaves flat codegen)
+    val keep = allowed.zipWithIndex.map { case (a, t) =>
+      val inTree = col("f").isin(a.toSeq.sorted.map(Int.box): _*)
+      if (nTrees == 1) inTree else col("t") === t && inTree
+    }.reduce(_ || _)
+    var df = base
+    for (_ <- 0 until depth) {
+      val cells = rows(df, posexplode(col("b")).as(Seq("f", "bin")))
+      val cube = collectStats(
+        if (allowed.exists(_.size < d)) cells.filter(keep) else cells, "f", "bin")
+        .map { case (t, node, r) =>
+          (t, node, (r.getInt(at), r.getInt(at + 1), law.cell(r, at + 2)))
+        }
+      val routes = (0 until nTrees).map { t =>
+        val level = cube.filter(_._1 == t).groupBy(_._2).toSeq.sortBy(_._1).flatMap {
+          case (node, cs) if open(t, node) =>
+            law.split(cs.map(_._3).toSeq, allowed(t)) match {
+              case Right(s) => Some(s.copy(node = node))
+              case Left(leaf) => leaves(t) += node -> leaf; None
+            }
+          case _ => None
+        }
+        splits(t) ++= level.map(s => s.node -> s)
+        val nodeT = if (nTrees == 1) col("node") else element_at(col("node"), t + 1)
+        level.foldLeft(nodeT) { (acc, s) =>
+          when(nodeT === s.node,
+            lit(s.node * 2 + 1) + (col("b")(s.feature) > s.thresholdBin).cast("int"))
+            .otherwise(acc)
+        }
+      }
+      val next = df.select(col("b"), col(law.value), col("w"), perTree(routes).as("node"))
+      df = if (nTrees == 1) next else LoopState.cut(next, eager = false)
+    }
+    collectStats(rows(df)).groupBy(r => (r._1, r._2)).foreach { case ((t, node), rs) =>
+      if (open(t, node))
+        law.leaf(rs.toSeq.map(c => law.cell(c._3, at)))
+          .foreach(leaf => leaves(t) += node -> leaf)
+    }
+    ((0 until nTrees).map(t => (splits(t), leaves(t))), df)
+  }
+
+  /** Train a depth-`depth` Gini (or entropy) tree over `fts` (d doubles,
+    * binned here) against string label `labelCol`: the grower at T = 1.
+    * Ties break (gain desc, feature asc, bin asc) so training is
+    * deterministic end-to-end.
+    *
+    * @return the final binned frame (b, label, w, node: int) and the model */
   def train(data: DataFrame, fts: Seq[Column], labelCol: Column,
-            depth: Int, bins: Int, weight: Column = lit(1L),
-            features: Option[Set[Int]] = None,
+            depth: Int, bins: Int,
             guardGainGaps: Boolean = false,
             impurity: String = "gini",
             gainGapWidth: Double = 2e-12): (DataFrame, Model) = {
-    val imp = impurityFn(impurity)
+    val law = classLaw(bins, guardGainGaps, impurity, gainGapWidth)
     val d = fts.length
-    val allowed = features.getOrElse((0 until d).toSet)
-    require(allowed.nonEmpty && allowed.forall(f => f >= 0 && f < d))
-    val raw = data.select(array(fts.map(_.cast("double")): _*).as("x"),
-      labelCol.cast("string").as("label"), weight.cast("long").as("w"))
-    var df = LoopState.cut(raw.select(array(binColumns(raw, d, bins): _*).as("b"),
-      col("label"), col("w"), lit(0).as("node")),
-      eager = false) // level-0's cube collect materializes (r16)
-
-    var splits = Map.empty[Int, Split]
-    var leaves = Map.empty[Int, String]
-    for (_ <- 0 until depth) {
-      val cube = df.select(col("node"), col("label"), col("w"),
-        posexplode(col("b")).as(Seq("f", "bin")))
-        .groupBy("node", "f", "bin", "label").agg(sum(col("w")).as("c"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getString(3), r.getLong(4)))
-      val byNode = cube.groupBy(_._1)
-      val levelSplits = byNode.toSeq.sortBy(_._1).flatMap { case (node, rows) =>
-        if (splits.contains(node) || leaves.contains(node)) None
-        else chooseSplit(rows.toSeq.map(r => (r._2, r._3, r._4, r._5)),
-          allowed, bins, guardGainGaps, imp, gainGapWidth) match {
-          case Right(s) => Some(s.copy(node = node))
-          case Left(leaf) => leaves += node -> leaf; None
-        }
-      }
-      if (levelSplits.nonEmpty) {
-        splits ++= levelSplits.map(s => s.node -> s)
-        val route = levelSplits.foldLeft(col("node")) { (acc, s) =>
-          when(col("node") === s.node,
-            lit(s.node * 2 + 1) + (col("b")(s.feature) > s.thresholdBin).cast("int"))
-            .otherwise(acc)
-        }
-        // r16: the routed node column stays a STAGED PROJECTION over the
-        // one checkpointed base instead of a per-level re-materialization
-        // (each level used to pay one full-frame localCheckpoint job +
-        // I/O just to store an integer derivable from `b`). The when-
-        // chain is referenced many times by the next level's route, so
-        // CollapseProject keeps each level's projection staged — node is
-        // computed once per row per job, and every later job scans the
-        // same checkpointed partitions in the same order (counts and
-        // split choices are bit-identical).
-        df = df.select(col("b"), col("label"), col("w"), route.as("node"))
-      }
-    }
-    // finalize leaves: weighted-majority class of every still-open node
-    val finalCounts = df.groupBy("node", "label").agg(sum(col("w")).as("c"))
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-    finalCounts.groupBy(_._1).foreach { case (node, rows) =>
-      if (!splits.contains(node) && !leaves.contains(node))
-        leaves += node -> rows.map(r => (r._2, r._3)).toSeq
-          .minBy { case (l, c) => (-c, l) }._1
-    }
-    (df, Model(splits, leafClass = leaves, depth))
+    val (Seq((splits, leaves)), df) = grow(
+      binned(data, fts, "label", labelCol.cast("string"), Seq(lit(1L)), bins),
+      law, d, depth, Seq((0 until d).toSet))
+    (df, Model(splits, leaves, depth))
   }
 
   /** Regression tree on a PRE-BINNED frame (columns `b` array<int>,
-    * `y` double, `w` long): per level ONE groupBy collecting the
-    * (node, feature, bin) → (Σw, Σwy, Σwy²) moment cube; splits by
-    * weighted SSE reduction, leaves carry the weighted mean. The
-    * boosting loop calls this once per round on the residual column. */
+    * `y` double, `w` long, `node` int): the grower at T = 1 over the
+    * (Σw, Σwy, Σwy²) moment cube. The boosting loop calls this once per
+    * round on the residual column. */
   def trainRegressionBinned(binned: DataFrame, d: Int, depth: Int,
                             bins: Int): RModel = {
-    var df = binned
-    var splits = Map.empty[Int, Split]
-    var leafV = Map.empty[Int, Double]
-    def sse(w: Double, sy: Double, syy: Double): Double =
-      if (w <= 0) 0.0 else syy - sy * sy / w
-    for (_ <- 0 until depth) {
-      val cube = df.select(col("node"), col("y"), col("w"),
-        posexplode(col("b")).as(Seq("f", "bin")))
-        .groupBy("node", "f", "bin")
-        .agg(sum(col("w")).as("cw"),
-          sum(col("w") * col("y")).as("sy"),
-          sum(col("w") * col("y") * col("y")).as("syy"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2),
-          r.getLong(3).toDouble, r.getDouble(4), r.getDouble(5)))
-      val byNode = cube.groupBy(_._1)
-      val levelSplits = byNode.toSeq.sortBy(_._1).flatMap { case (node, rows) =>
-        if (splits.contains(node) || leafV.contains(node)) None
-        else {
-          val f0cells = rows.filter(_._2 == 0)
-          val tw = f0cells.map(_._4).sum
-          val tsy = f0cells.map(_._5).sum
-          val tsyy = f0cells.map(_._6).sum
-          val parent = sse(tw, tsy, tsyy)
-          if (tw <= 0) { leafV += node -> 0.0; None }
-          else {
-            var best: Option[(Double, Int, Int)] = None
-            for (f <- 0 until d) {
-              val cells = rows.filter(_._2 == f)
-              var cw = 0.0; var cy = 0.0; var cyy = 0.0
-              for (t <- 0 until bins - 1) {
-                cells.filter(_._3 == t).foreach { r =>
-                  cw += r._4; cy += r._5; cyy += r._6
-                }
-                if (cw > 0 && cw < tw) {
-                  val gain = parent - sse(cw, cy, cyy) -
-                    sse(tw - cw, tsy - cy, tsyy - cyy)
-                  if (gain > 1e-9 && best.forall(b => gain > b._1 + 1e-9))
-                    best = Some((gain, f, t))
-                }
-              }
-            }
-            best match {
-              case Some((_, f, t)) => Some(Split(node, f, t))
-              case None => leafV += node -> tsy / tw; None
-            }
-          }
-        }
-      }
-      if (levelSplits.nonEmpty) {
-        splits ++= levelSplits.map(s => s.node -> s)
-        val route = levelSplits.foldLeft(col("node")) { (acc, s) =>
-          when(col("node") === s.node,
-            lit(s.node * 2 + 1) + (col("b")(s.feature) > s.thresholdBin).cast("int"))
-            .otherwise(acc)
-        }
-        // r16: staged projection, no per-level checkpoint (see train's
-        // note — node is a cheap integer function of `b`; rematerializing
-        // the whole frame per level bought nothing but a job + I/O)
-        df = df.select(col("b"), col("y"), col("w"), route.as("node"))
-      }
-    }
-    val fin = df.groupBy("node")
-      .agg(sum(col("w")).as("cw"), sum(col("w") * col("y")).as("sy"))
-      .collect().map(r => (r.getInt(0), r.getLong(1).toDouble, r.getDouble(2)))
-    fin.foreach { case (node, w, sy) =>
-      if (!splits.contains(node) && !leafV.contains(node) && w > 0)
-        leafV += node -> sy / w
-    }
-    RModel(splits, leafV, depth)
+    val (Seq((splits, leaves)), _) =
+      grow(binned, meanLaw(bins), d, depth, Seq((0 until d).toSet))
+    RModel(splits, leaves, depth)
   }
 
   /** Bin a raw (features, y) frame once for the regression/boosting
     * loops. Returns the checkpointed frame (b, y, w, node=0). */
   def binForRegression(data: DataFrame, fts: Seq[Column], yCol: Column,
-                       bins: Int): DataFrame = {
-    val d = fts.length
-    val raw = data.select(array(fts.map(_.cast("double")): _*).as("x"),
-      yCol.cast("double").as("y"))
-    LoopState.cut(raw.select(array(binColumns(raw, d, bins): _*).as("b"), col("y"),
-      lit(1L).as("w"), lit(0).as("node")),
-      eager = false) // the caller's first pass materializes (r16)
-  }
+                       bins: Int): DataFrame =
+    binned(data, fts, "y", yCol.cast("double"), Seq(lit(1L)), bins)
 
-  /** Split choice for one node from its histogram cells
-    * ((f, bin, label, weight) tuples): the driver-side arithmetic shared
-    * by the single tree and the forest. Returns Right(split) or
-    * Left(majority leaf class). */
-  /** `guardGaps` asserts the dt01-oracle assumption at every node: the
+  /** The weighted-majority class, ties to the smallest label. */
+  private def majority(counts: Iterable[(String, Long)]): String =
+    counts.minBy { case (l, c) => (-c, l) }._1
+
+  /** Classification split choice for one node from its histogram cells
+    * ((f, bin, (label, weight)) tuples). Returns Right(split) or
+    * Left(majority leaf class).
+    *
+    * `guardGaps` asserts the dt01-oracle assumption at every node: the
     * DuckDB CTE replay (`g >= mg - 1e-12` + (f,t) argmin) equals this
     * sequential epsilon update (`g > best + 1e-12`) only while no two
     * DISTINCT gain values sit within (0, 2e-12] of each other (exact
@@ -281,20 +295,19 @@ object Trees {
     * guard makes corpus drift fail HERE, loudly, instead of as an
     * opaque verify hash mismatch (TreesSpec runs it on the real
     * table with dt01's exact configuration). */
-  private def chooseSplit(rows: Seq[(Int, Int, String, Long)],
+  private def chooseSplit(rows: Seq[(Int, Int, (String, Long))],
                           allowed: Set[Int], bins: Int,
-                          guardGaps: Boolean = false,
-                          imp: Seq[Long] => Double = gini,
-                          gapWidth: Double = 2e-12): Either[String, Split] = {
+                          guardGaps: Boolean,
+                          imp: Seq[Long] => Double,
+                          gapWidth: Double): Either[String, Split] = {
     val f0 = allowed.min
-    val labels = rows.groupBy(_._3).map { case (l, rs) =>
+    val labels = rows.groupBy(_._3._1).map { case (l, rs) =>
       // feature f0 cells carry each row's weight exactly once
-      l -> rs.filter(_._1 == f0).map(_._4).sum
+      l -> rs.filter(_._1 == f0).map(_._3._2).sum
     }
     val total = labels.values.sum
     val parentG = imp(labels.values.toSeq)
-    val majority = labels.toSeq.minBy { case (l, c) => (-c, l) }._1
-    if (labels.count(_._2 > 0) <= 1) Left(majority)
+    if (labels.count(_._2 > 0) <= 1) Left(majority(labels))
     else {
       // materialize every candidate (bounded: d·bins entries) so the
       // guard can inspect the full gain multiset
@@ -304,7 +317,7 @@ object Trees {
         val labelsSeq = labels.keys.toSeq.sorted
         val prefix = scala.collection.mutable.Map(labelsSeq.map(_ -> 0L): _*)
         for (t <- 0 until bins - 1) {
-          cells.filter(_._2 == t).foreach(r => prefix(r._3) += r._4)
+          cells.filter(_._2 == t).foreach { case (_, _, (l, c)) => prefix(l) += c }
           val left = labelsSeq.map(prefix)
           val nL = left.sum
           if (nL > 0 && nL < total) {
@@ -361,7 +374,43 @@ object Trees {
         if (g > 1e-12 && best.forall(b => g > b._1 + 1e-12))
           best = Some((g, f, t))
       }
-      best.map { case (_, f, t) => Split(-1, f, t) }.toRight(majority)
+      best.map { case (_, f, t) => Split(-1, f, t) }.toRight(majority(labels))
+    }
+  }
+
+  /** Regression split choice for one node from its (f, bin, (Σw, Σwy,
+    * Σwy²)) cells: the largest weighted-SSE reduction, scanning the
+    * thresholds of each allowed feature in order. The node totals are
+    * summed over the weight carrier `allowed.min`'s cells in collect
+    * order. Returns Right(split) or Left(weighted-mean leaf). */
+  private def sseSplit(rows: Seq[(Int, Int, (Double, Double, Double))],
+                       allowed: Set[Int], bins: Int): Either[Double, Split] = {
+    def sse(w: Double, sy: Double, syy: Double): Double =
+      if (w <= 0) 0.0 else syy - sy * sy / w
+    val f0cells = rows.filter(_._1 == allowed.min).map(_._3)
+    val tw = f0cells.map(_._1).sum
+    val tsy = f0cells.map(_._2).sum
+    val tsyy = f0cells.map(_._3).sum
+    val parent = sse(tw, tsy, tsyy)
+    if (tw <= 0) Left(0.0)
+    else {
+      var best: Option[(Double, Int, Int)] = None
+      for (f <- allowed.toSeq.sorted) {
+        val cells = rows.filter(_._1 == f)
+        var cw = 0.0; var cy = 0.0; var cyy = 0.0
+        for (t <- 0 until bins - 1) {
+          cells.filter(_._2 == t).foreach { case (_, _, (w, sy, syy)) =>
+            cw += w; cy += sy; cyy += syy
+          }
+          if (cw > 0 && cw < tw) {
+            val gain = parent - sse(cw, cy, cyy) -
+              sse(tw - cw, tsy - cy, tsyy - cyy)
+            if (gain > 1e-9 && best.forall(b => gain > b._1 + 1e-9))
+              best = Some((gain, f, t))
+          }
+        }
+      }
+      best.map { case (_, f, t) => Split(-1, f, t) }.toRight(tsy / tw)
     }
   }
 
@@ -379,119 +428,38 @@ object Trees {
     * baggedInput-by-weights — no data copies) and a per-tree feature
     * subset (featureSubsetStrategy).
     *
-    * All trees train TOGETHER, one aggregation pass per LEVEL for the
-    * whole forest (the reference's node-group batching,
+    * All trees train TOGETHER in the grower, one aggregation pass per
+    * LEVEL for the whole forest (the reference's node-group batching,
     * RandomForest.scala's findBestSplits over a node queue): rows carry
-    * a per-tree node-id ARRAY and a per-tree weight ARRAY; the level
-    * pass explodes the tree index (×nTrees) and the features (×d) —
-    * both bounded — and partial-aggregates the
-    * (tree, node, feature, bin, label) cube, so the whole forest costs
-    * `depth` cluster passes, not nTrees·depth. Prediction is the
-    * per-row plurality vote folded as a pure column expression —
+    * a per-tree node-id ARRAY and a per-tree weight ARRAY, so the whole
+    * forest costs `depth` cluster passes, not nTrees·depth. Prediction
+    * is the per-row plurality vote folded as a pure column expression —
     * map-only application, models live in the plan.
     *
     * @return (per-tree models, the final binned frame (b, label, w,
-    *         node) — already checkpointed, so a consumer scoring the
-    *         training set votes over it directly instead of re-scanning
-    *         and re-binning the source (one min/max pass + one full
-    *         scan saved; bins are identical by construction)) */
+    *         node; w and node are arrays when nTrees > 1) — already
+    *         checkpointed, so a consumer scoring the training set votes
+    *         over it directly instead of re-scanning and re-binning the
+    *         source (one min/max pass + one full scan saved; bins are
+    *         identical by construction)) */
   def forest(data: DataFrame, fts: Seq[Column], labelCol: Column,
              idCols: Seq[Column], depth: Int, bins: Int, nTrees: Int,
              featuresPerTree: Int,
              guardGainGaps: Boolean = false,
              impurity: String = "gini",
              gainGapWidth: Double = 2e-12): (Seq[Model], DataFrame) = {
-    val imp = impurityFn(impurity)
+    val law = classLaw(bins, guardGainGaps, impurity, gainGapWidth)
     val d = fts.length
-    val allowed = (0 until nTrees).map(t => featureSubset(t, d, featuresPerTree))
     // deterministic Poisson(1) weights: P(0)=.368 P(1)=.368 P(2)=.184 ...
     val wCols = (0 until nTrees).map { t =>
       val h = pmod(xxhash64((idCols :+ (lit(t): Column)): _*), lit(1000L))
       when(h < 368, 0L).when(h < 736, 1L).when(h < 920, 2L)
         .when(h < 981, 3L).otherwise(4L)
     }
-    val raw = data.select(array(fts.map(_.cast("double")): _*).as("x"),
-      labelCol.cast("string").as("label"), array(wCols: _*).as("w"))
-    var df = LoopState.cut(raw.select(array(binColumns(raw, d, bins): _*).as("b"),
-      col("label"), col("w"),
-      typedlit(Seq.fill(nTrees)(0)).as("node")),
-      eager = false) // level-0's cube collect materializes (r16)
-
-    val splits = Array.fill(nTrees)(Map.empty[Int, Split])
-    val leaves = Array.fill(nTrees)(Map.empty[Int, String])
-    // only a tree's ALLOWED features ever compete in chooseSplit (whose
-    // weight-carrier is allowed.min, also in the set), so the level cube
-    // drops the others before the shuffle: nTrees×featuresPerTree rows
-    // per input row instead of nTrees×d
-    // (r17 note: exploding the allowed (t, f) pairs DIRECTLY as a
-    // struct-array literal — skipping the nTrees×d intermediate and this
-    // filter — was measured ~15% SLOWER across every sample (5.4 → 6.2 s
-    // warm) and reverted: a struct-array literal explode materializes
-    // row objects where posexplode over the int array + an int-compare
-    // filter stays in flat codegen. Same trap as r16's reverted t05
-    // literal-model shape.)
-    val allowedPair = (0 until nTrees).map(t =>
-      col("t") === t && col("f").isin(allowed(t).toSeq.sorted.map(Int.box): _*))
-      .reduce(_ || _)
-    for (_ <- 0 until depth) {
-      val cube = df
-        .select(col("b"), col("label"), col("w"), col("node"),
-          explode(sequence(lit(0), lit(nTrees - 1))).as("t"))
-        .select(col("t"), element_at(col("node"), col("t") + 1).as("node"),
-          element_at(col("w"), col("t") + 1).as("wt"), col("label"),
-          posexplode(col("b")).as(Seq("f", "bin")))
-        .filter(allowedPair)
-        .groupBy("t", "node", "f", "bin", "label").agg(sum("wt").as("c"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3),
-          r.getString(4), r.getLong(5)))
-      val routes = (0 until nTrees).map { t =>
-        val mine = cube.filter(_._1 == t)
-        val levelSplits = mine.groupBy(_._2).toSeq.sortBy(_._1).flatMap {
-          case (node, rows) =>
-            if (splits(t).contains(node) || leaves(t).contains(node)) None
-            else chooseSplit(rows.toSeq.map(r => (r._3, r._4, r._5, r._6)),
-              allowed(t), bins, guardGainGaps, imp, gainGapWidth) match {
-              case Right(s) => Some(s.copy(node = node))
-              case Left(leaf) => leaves(t) += node -> leaf; None
-            }
-        }
-        splits(t) ++= levelSplits.map(s => s.node -> s)
-        val nodeT = element_at(col("node"), t + 1)
-        levelSplits.foldLeft(nodeT) { (acc, s) =>
-          when(nodeT === s.node,
-            lit(s.node * 2 + 1) + (col("b")(s.feature) > s.thresholdBin).cast("int"))
-            .otherwise(acc)
-        }
-      }
-      // (r16 note: dropping this per-level checkpoint for a staged
-      // projection — the trainRegressionBinned/train change — was
-      // measured and REVERTED here: the forest's per-level route is an
-      // nTrees-wide ARRAY feeding an nTrees-way explode, so recomputing
-      // all previous levels' arrays per scan cost more than the saved
-      // materialization, 6.1 s → 9.2 s at sf0.1.)
-      // r16: LAZY checkpoint — the next level's cube collect (or the
-      // leaf-finalize pass) materializes the routed frame in the same
-      // job, fusing the former per-level eager write job with its first
-      // consumer; blocks persist exactly as before.
-      df = LoopState.cut(df.select(col("b"), col("label"), col("w"),
-        array(routes: _*).as("node")), eager = false)
-    }
-    // finalize leaves for every still-open (tree, node) in ONE pass
-    val fin = df
-      .select(col("label"), col("w"), col("node"),
-        explode(sequence(lit(0), lit(nTrees - 1))).as("t"))
-      .groupBy(col("t"), element_at(col("node"), col("t") + 1).as("node"),
-        col("label"))
-      .agg(sum(element_at(col("w"), col("t") + 1)).as("c"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getLong(3)))
-    fin.groupBy(r => (r._1, r._2)).foreach { case ((t, node), rows) =>
-      if (!splits(t).contains(node) && !leaves(t).contains(node))
-        leaves(t) += node -> rows.map(r => (r._3, r._4)).toSeq
-          .minBy { case (l, c) => (-c, l) }._1
-    }
-    ((0 until nTrees).map(t => Model(splits(t), leaves(t), depth)), df)
+    val (trees, df) = grow(
+      binned(data, fts, "label", labelCol.cast("string"), wCols, bins), law, d, depth,
+      (0 until nTrees).map(t => featureSubset(t, d, featuresPerTree)))
+    (trees.map { case (splits, leaves) => Model(splits, leaves, depth) }, df)
   }
 
   /** Plurality vote over a per-tree prediction ARRAY column, ties to
@@ -520,15 +488,6 @@ object Trees {
   def voteExpr(models: Seq[Model], b: Column): Column =
     voteFromPreds(array(models.map(m => classifyExpr(m, b)): _*))
 
-  /** The whole depth-3 Gini induction of [[dt01]] replayed in SQL: the
-    * same fixed-width bins from one global min/max, then per level the
-    * (node, feature, bin, label) count cube, threshold prefix sums,
-    * Gini gains in the fixed A/N/R operation order, the 1e-12-epsilon
-    * argmax with (feature, threshold) tie-break, and the when-chain
-    * routing — three unrolled levels, then weighted-majority leaves.
-    * Gains are arithmetic on integer counts, so distinct split
-    * configurations sit ≫1e-12 apart and the epsilon rule picks the
-    * identical split on both engines. */
   /** The dt01/dt02 induction replay, parameterized on the impurity.
     *
     * Gini gains are rational arithmetic on integer counts — bit-identical

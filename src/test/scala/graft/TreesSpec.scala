@@ -60,6 +60,51 @@ class TreesSpec extends SparkTestBase {
     }
   }
 
+  test("an empty frame fails with a named require; a single row trains one leaf") {
+    import TestSpark.spark.implicits._
+    val fts = Seq(col("x0"), col("x1"))
+    val empty = Seq.empty[(Long, Double, Double, String, Double)]
+      .toDF("id", "x0", "x1", "label", "y")
+    for (fit <- Seq[() => Any](
+      () => Trees.train(empty, fts, col("label"), depth = 2, bins = 8),
+      () => Trees.forest(empty, fts, col("label"), Seq(col("id")), depth = 2, bins = 8,
+        nTrees = 3, featuresPerTree = 1),
+      () => Trees.trainGbt(empty, fts, col("y"), rounds = 2, depth = 2, bins = 8,
+        shrink = 0.5))) {
+      val e = intercept[IllegalArgumentException](fit())
+      assert(e.getMessage.contains("feature 0"), e.getMessage)
+    }
+    val one = Seq((0.25, 3.0, "a", 7.5)).toDF("x0", "x1", "label", "y")
+    val (assigned, model) = Trees.train(one, fts, col("label"), depth = 2, bins = 8)
+    assert(model.splits.isEmpty && model.leafClass == Map(0 -> "a"), s"$model")
+    assert(assigned.select("node").as[Int].collect().toSeq == Seq(0))
+    val rmodel = Trees.trainRegressionBinned(
+      Trees.binForRegression(one, fts, col("y"), bins = 8), d = 2, depth = 2, bins = 8)
+    assert(rmodel.splits.isEmpty && rmodel.leafValue == Map(0 -> 7.5), s"$rmodel")
+  }
+
+  test("the gain-gap guard fires through train and forest when the width exceeds every gain") {
+    import TestSpark.spark.implicits._
+    // the planted-quadrant corpus: every Gini gain sits below 0.9, so the
+    // widened-band positivity assert (max gain > width) must fail
+    val df = (0 until 800).map { i =>
+      val x0 = (i % 40) / 40.0
+      val x1 = ((i * 13) % 40) / 40.0
+      (i.toLong, x0, x1, (if (x0 <= 0.5) "a" else "b") + (if (x1 <= 0.3) "0" else "1"))
+    }.toDF("id", "x0", "x1", "label")
+    val fts = Seq(col("x0"), col("x1"))
+    val e1 = intercept[AssertionError] {
+      Trees.train(df, fts, col("label"), depth = 2, bins = 40,
+        guardGainGaps = true, gainGapWidth = 0.9)
+    }
+    val e2 = intercept[AssertionError] {
+      Trees.forest(df, fts, col("label"), Seq(col("id")), depth = 2, bins = 40,
+        nTrees = 5, featuresPerTree = 2, guardGainGaps = true, gainGapWidth = 0.9)
+    }
+    Seq(e1, e2).foreach(e =>
+      assert(e.getMessage.contains("ambiguous positivity window"), e.getMessage))
+  }
+
   test("training is deterministic across runs") {
     import TestSpark.spark.implicits._
     val df = (0 until 500).map { i =>
@@ -232,6 +277,18 @@ class TreesSpec extends SparkTestBase {
     assert(out.length <= 9 && out.nonEmpty)
     val total = out.map(_.getLong(2)).sum
     assert(total == Tables.lineitem(spark, sfDir).count())
+  }
+
+  test("dt01, rf01 and gbt01 job counts at the spec corpus") {
+    // one grower serves all three: a level costs one cube collect, the
+    // forest's per-level cut fuses into that collect, and each boosting
+    // round is one depth-2 tree plus its MSE head
+    val dt = jobsOf(Trees.dt01.run(spark, sfDir).collect())
+    val rf = jobsOf(Trees.rf01.run(spark, sfDir).collect())
+    val gbt = jobsOf(Trees.gbt01.run(spark, sfDir).collect())
+    assert(dt == 13, s"dt01 ran $dt jobs")
+    assert(rf == 11, s"rf01 ran $rf jobs")
+    assert(gbt == 39, s"gbt01 ran $gbt jobs")
   }
 
   test("dt01 on the real table: bounded leaf summary, accuracy >= majority") {

@@ -68,10 +68,12 @@ object Bench {
 
     val allNames = SparkEntry.queries.keys.toSeq.sorted
     // local-iteration filter (comma-separated names); the driver never
-    // sets it, so official runs always cover the full registry
-    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .fold(allNames)(keep => allNames.filter(keep))
+    // sets it, so official runs always cover the full registry; the
+    // output lines record a filter as "only" (tools/check_bench.py)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).distinct.sorted.toSeq)
+    val names = only.fold(allNames)(keep => allNames.filter(keep.toSet))
+    val onlyField = only.fold("")(o => o.map("\"" + _ + "\"").mkString(",\"only\":[", ",", "]"))
 
     // per-query RAW samples, each labeled with the pass that took it
     // ("1","2",… rounds, "iso" quiet pass, "twin" backstop) — published
@@ -183,7 +185,7 @@ object Bench {
         roundsDone == 0
       val qs = rs.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","rounds":$roundsDone,"partial":$partial,"cov_shared_cold":$covSharedCold,"bucketed_write_cold":$bucketedWriteCold,"pairs_shared_cold":$pairsSharedCold,"sf":"$sfDir","queries":$qs,"t_prod":${renderProd()}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","rounds":$roundsDone,"partial":$partial,"cov_shared_cold":$covSharedCold,"bucketed_write_cold":$bucketedWriteCold,"pairs_shared_cold":$pairsSharedCold,"sf":"$sfDir","queries":$qs,"t_prod":${renderProd()}$onlyField}"""
     }
     // The harness keeps only the LAST ~2 KB of stdout, and the named
     // per-query line above is ~2.4 KB at 99 queries — so whichever end is
@@ -204,7 +206,7 @@ object Bench {
         if (s2 == s2.toLong) s2.toLong.toString else s2.toString
       }
       val ts = rs.map(r => short(r._2)).mkString("[", ",", "]")
-      s"""{"metric":"total","value":$total,"unit":"sec","rounds":$roundsDone,"partial":$partial,"cov_shared_cold":$covSharedCold,"bucketed_write_cold":$bucketedWriteCold,"pairs_shared_cold":$pairsSharedCold,"n":${rs.size},"order":"name-asc","t":$ts,"t_prod":${renderProd()}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","rounds":$roundsDone,"partial":$partial,"cov_shared_cold":$covSharedCold,"bucketed_write_cold":$bucketedWriteCold,"pairs_shared_cold":$pairsSharedCold,"n":${rs.size},"order":"name-asc","t":$ts,"t_prod":${renderProd()}$onlyField}"""
     }
     // r17 (r16 verdict item 6): the external capture keeps only the LAST
     // ~2000 bytes of stdout, and a fully-NAMED per-query map cannot fit
@@ -222,7 +224,7 @@ object Bench {
       val total = r3(rs.map(_._2).filter(_ >= 0).sum)
       val partial = rs.exists(_._2 < 0) || prodResults().exists(_._2 < 0) ||
         roundsDone == 0
-      val head = s"""{"metric":"total","value":$total,"unit":"sec","rounds":$roundsDone,"partial":$partial,"sf":"$sfDir","n":${rs.size},"t_prod":${renderProd()},"queries_omitted":NNN,"queries":{"""
+      val head = s"""{"metric":"total","value":$total,"unit":"sec","rounds":$roundsDone,"partial":$partial,"sf":"$sfDir","n":${rs.size},"t_prod":${renderProd()}$onlyField,"queries_omitted":NNN,"queries":{"""
       val tail = "}}"
       val budget = 1100 - head.length - tail.length
       val byCost = rs.filter(_._2 >= 0).sortBy { case (n, v) => (-v, n) }

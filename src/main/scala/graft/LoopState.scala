@@ -1,19 +1,13 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graftshim.GraftDatasetFactory
 
-/** How state is carried between the rounds of a driver-iterated
-  * DataFrame loop — the re-expression of the reference's iterative
-  * surface (GraphX Pregel, the MLlib trainers). This object owns
-  * LOOP-CARRIED state: every trainer hands the frames it reassigns
-  * inside a driver loop to [[cut]], and fingerprint-converged loops run
-  * through [[fixpoint]].
-  *
-  * It does not own the one-shot pins: 29 plain `.localCheckpoint()`
-  * calls in 13 files (Graphs, Recommender, Embeddings, Optimize and
-  * others) materialize loop-INVARIANT inputs once, before a loop or a
-  * multi-pass fit. Their origin stats cannot compound (nothing feeds
-  * back into them), and a durability policy (below) must visit them too.
+/** Every materialization in graft — how the re-expressed iterative
+  * surface (GraphX Pregel, the MLlib trainers) carries what its driver
+  * loops read more than once. A loop-INVARIANT input (an edge list, a
+  * feature frame) is [[pin]]ned once; the frames a loop reassigns each
+  * round go through [[cut]]; fingerprint-converged loops run [[fixpoint]].
   *
   * Why the cut drops statistics: a `localCheckpoint` leaf inherits
   * stats computed from its origin plan. In a loop those stats COMPOUND —
@@ -26,28 +20,38 @@ import org.apache.spark.sql.{Column, DataFrame}
   * origin stats reports `spark.sql.defaultSizeInBytes`, the conservative
   * "unknown" that is right for loop state: planning cost stays constant
   * per round and joins against the state are never wrongly
-  * auto-broadcast.
+  * auto-broadcast. A pin's stats cannot compound (nothing feeds back into
+  * it), so it keeps them.
   *
   * Durability: `localCheckpoint` keeps the blocks on the executors that
-  * computed them, so losing one of those executors fails the next
-  * round. At cluster scale this object is the place to swap in reliable
-  * checkpointing (a checkpoint directory, or a replicated persist) for
-  * loop state; the one-shot pins above need the same swap at their own
-  * sites.
+  * computed them, so losing one fails the next job that reads them.
+  * [[pin]]'s body is the one place that decides how a frame is
+  * materialized: reliable checkpointing (a checkpoint directory, or a
+  * replicated persist) swapped in there covers every pin and cut.
   */
 object LoopState {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** The lineage cut for loop state: a local checkpoint whose leaf
-    * carries no origin stats. `eager = false` only marks the frame — the
-    * caller's next action materializes the blocks inside its own job (the
-    * r16 fusion: "checkpoint the round" and "read its 1-row fingerprint"
-    * cost one job, not two). Use the lazy form only where a consuming
-    * action follows promptly; otherwise the materialization cascades into
-    * whichever job reads the state next. */
+  /** A local checkpoint of `df` that keeps its origin stats: a one-shot
+    * input read more than once. `eager = false` only marks the frame (its
+    * shuffle-map stages still run now) and the next action materializes
+    * it in its own job (the r16 fusion); use it only where one follows.
+    * The origin's execution lives as long as the pinned RDD: a stage that
+    * still runs over a lazy pin's lineage after another job materialized
+    * it must not report to SQL metrics the driver has collected. */
+  def pin(df: DataFrame, eager: Boolean): DataFrame = {
+    val pinned = df.localCheckpoint(eager)
+    GraftDatasetFactory.checkpointedRdd(pinned).foreach(origins.put(_, df.queryExecution))
+    pinned
+  }
+
+  // pinned RDD → origin execution (which holds no reference back to it)
+  private val origins =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[AnyRef, AnyRef])
+
+  /** The lineage cut for loop state: a [[pin]] without origin stats. */
   def cut(df: DataFrame, eager: Boolean): DataFrame =
-    org.apache.spark.sql.graftshim.GraftDatasetFactory
-      .withoutOriginStats(df.localCheckpoint(eager))
+    GraftDatasetFactory.withoutOriginStats(pin(df, eager))
 
   /** Iterates `step` from `init` until a round leaves the state's
     * fingerprint unchanged, or `maxRounds` rounds ran. The fingerprint is

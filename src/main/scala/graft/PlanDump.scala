@@ -15,10 +15,13 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * A name suffixed `:prod` (`r02_als:prod`) dumps the entry's production
   * twin from [[SparkEntry.prodQueries]] to `<outDir>/<name>_prod.txt`.
   * Each dumped entry also appends one line
-  * `name<TAB>jobs<TAB>stages<TAB>tasks` to `<outDir>/JOBS.tsv` (the
-  * entry's name as given, `:prod` included), so job tables are built
-  * from that file. Exits 2 when any named entry failed (unknown name or
-  * a throw), after dumping the others.
+  * `name<TAB>jobs<TAB>stages<TAB>tasks<TAB>input_bytes` to
+  * `<outDir>/JOBS.tsv` (the entry's name as given, `:prod` included), so
+  * job tables are built from that file. `input_bytes` sums every task's
+  * input-metrics bytes (file scans, cached or checkpointed blocks) and
+  * shuffle read: a dropped materialization shows there as its rescans.
+  * Exits 2 when any named entry failed (unknown name or a throw), after
+  * dumping the others.
   *
   * Notes: this dumps the plan of the DataFrame the registered entry
   * RETURNS. Driver-iterated trainers do their heavy work in actions
@@ -38,22 +41,23 @@ object PlanDump {
     val names = args.drop(2).flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     val spark = SparkEntry.localSession(defaultCpus = 8)
     Files.createDirectories(Paths.get(outDir))
-    // execution-shape evidence: count the jobs/stages/tasks the whole
-    // entry submits (driver-iterated trainers do their work in actions,
-    // not in the returned frame's plan — the job count IS the claim)
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
+    // execution-shape evidence: count the jobs/stages/tasks/input bytes
+    // the whole entry submits (driver-iterated trainers do their work in
+    // actions, not in the returned frame's plan — the job count IS the claim)
+    val Seq(jobs, stages, tasks, bytes) = Seq.fill(4)(new java.util.concurrent.atomic.AtomicLong)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
       override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet(); tasks.addAndGet(s.stageInfo.numTasks.toLong)
       }
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m =>
+          bytes.addAndGet(m.inputMetrics.bytesRead + m.shuffleReadMetrics.totalBytesRead))
     })
     val failed = names.filterNot { n =>
       try {
-        val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)
+        val before = Seq(jobs, stages, tasks, bytes).map(_.get)
         val (fn, file) = n.split(":") match {
           case Array(q, "prod") => (SparkEntry.prodQueries(q), s"${q}_prod")
           case _ => (SparkEntry.queries(n), n)
@@ -72,12 +76,12 @@ object PlanDump {
         // listener events are async; block until the bus has delivered
         // everything (deterministic, unlike a fixed sleep — r16 advisor)
         org.apache.spark.sql.graftshim.GraftDatasetFactory.drainListenerBus(spark)
-        val (nj, ns, nt) = (jobs.get - j0, stages.get - s0, tasks.get - t0)
-        Files.writeString(Paths.get(s"$outDir/$file.txt"),
-          plan.toString + s"\n\n# executed end-to-end: jobs=$nj stages=$ns tasks=$nt\n")
-        Files.writeString(Paths.get(s"$outDir/JOBS.tsv"), s"$n\t$nj\t$ns\t$nt\n",
+        val Seq(nj, ns, nt, nb) = Seq(jobs, stages, tasks, bytes).zip(before).map(c => c._1.get - c._2)
+        Files.writeString(Paths.get(s"$outDir/$file.txt"), plan.toString +
+          s"\n\n# executed end-to-end: jobs=$nj stages=$ns tasks=$nt input_bytes=$nb\n")
+        Files.writeString(Paths.get(s"$outDir/JOBS.tsv"), s"$n\t$nj\t$ns\t$nt\t$nb\n",
           StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-        System.err.println(s"[plandump] wrote $n jobs=$nj stages=$ns")
+        System.err.println(s"[plandump] wrote $n jobs=$nj stages=$ns input_bytes=$nb")
         true
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $n failed: ${e.getMessage}")

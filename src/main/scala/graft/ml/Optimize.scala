@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 
 /** Standalone optimization surface (reference mllib/src/main/scala/org/
   * apache/spark/mllib/optimization/: LBFGS.scala:1,
@@ -54,8 +54,8 @@ object Optimize {
                 kind: String, regParam: Double = 0.0): Objective = {
     require(Seq("leastSquares", "logistic", "hinge").contains(kind),
       s"gradient kind '$kind' (supported: leastSquares, logistic, hinge)")
-    val frame = data.select(xCol.as("x"), yCol.cast("double").as("y"))
-      .localCheckpoint(false) // lazy: the count below materializes (r16)
+    val frame = LoopState.pin(data.select(xCol.as("x"), yCol.cast("double").as("y")),
+      eager = false) // the count below materializes (r16)
     val n = frame.count().toDouble
     require(n > 0, "objective over an empty frame")
     Objective(d, w => {

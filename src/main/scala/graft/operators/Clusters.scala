@@ -38,7 +38,6 @@ object Clusters {
   def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val bidir = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
     LoopState.fixpoint(vertices.select(col("id"), col("id").as("label")), maxIter,
         "connectedComponents (deep graphs: connectedComponentsStar)") { labels =>
       val msgs = bidir.join(labels, bidir("src") === labels("id"))

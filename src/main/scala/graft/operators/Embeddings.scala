@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 import graft.plans.GraftFunctions.{floatCosine, floatDot}
 
 /** Embedding clustering — distributed spherical k-means over the
@@ -232,7 +232,7 @@ object Embeddings {
   /** The (vec_id, embedding) frame a GMM fit reads once per round,
     * checkpointed once before the fit. */
   private def gmmBase(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), col("embedding")).localCheckpoint()
+    LoopState.pin(emb.select(col("vec_id"), col("embedding")), eager = true)
 
   /** The winning component of a responsibilities row `rs` as a struct
     * (r = its responsibility, nc = −index, so `greatest` breaks ties to

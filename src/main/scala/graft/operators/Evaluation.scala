@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 
 /** Model-evaluation metrics (reference mllib/src/main/scala/org/apache/
   * spark/mllib/evaluation/ — BinaryClassificationMetrics.scala:1,
@@ -107,10 +107,9 @@ object Evaluation {
     * the same bounded aggregate. */
   def binaryMetrics(sl: DataFrame): DataFrame = {
     // one full-data pass; everything after is per-distinct-score
-    val curve = sl.groupBy("score").agg(
+    val curve = LoopState.pin(sl.groupBy("score").agg(
       sum(col("pos")).cast("double").as("cp"),
-      count(lit(1)).cast("double").as("ct"))
-      .localCheckpoint()
+      count(lit(1)).cast("double").as("ct")), eager = true)
     val t = curve.agg(sum(col("cp")).as("p"),
       (sum(col("ct")) - sum(col("cp"))).as("n"), count(lit(1)).as("nt")).head
     val (p, n, nThresh) = (t.getDouble(0), t.getDouble(1), t.getLong(2))

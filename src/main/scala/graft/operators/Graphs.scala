@@ -57,7 +57,7 @@ object Graphs {
                                       damping: Double = 0.85): (DataFrame, Int) = {
     val n = vertices.count().toDouble
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val e = edges.join(deg, "src").localCheckpoint()
+    val e = LoopState.pin(edges.join(deg, "src"), eager = true)
     var ranks = LoopState.cut(
       vertices.select(col("id"), lit(1.0 / n).as("rank")), eager = true)
     var rounds = 0
@@ -147,7 +147,7 @@ object Graphs {
       mergeMsg: DataFrame => DataFrame,
       vprog: (org.apache.spark.sql.Column, org.apache.spark.sql.Column)
         => org.apache.spark.sql.Column): DataFrame = {
-    val e = edges.localCheckpoint()
+    val e = LoopState.pin(edges, eager = true)
     var v = LoopState.cut(vertices.select(col("id"),
         initialMsg.fold(col("attr"))(m => vprog(col("attr"), m)).as("attr")), eager = true)
     var halted = false
@@ -319,9 +319,9 @@ object Graphs {
     * @return (id, label)
     */
   def labelPropagation(vertices: DataFrame, edges: DataFrame, iters: Int = 5): DataFrame = {
-    val bidir = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false) // lazy: round 1 materializes (r16)
+    val bidir = LoopState.pin(edges.select(col("src"), col("dst"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst"))),
+      eager = false) // round 1 materializes (r16)
     // the initial labels stay a plan over `vertices` (round 1 reads them
     // once, with the vertex scan's real size estimate); each round's lazy
     // cut is materialized by the next round's first job, or the caller's
@@ -503,9 +503,9 @@ object Graphs {
     * @return (id, lm, d) — min hops from id to lm, d <= maxHops
     */
   def shortestPaths(edges: DataFrame, landmarks: DataFrame, maxHops: Int): DataFrame = {
-    val bidir = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false) // lazy: round 1 materializes (r16)
+    val bidir = LoopState.pin(edges.select(col("src"), col("dst"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst"))),
+      eager = false) // round 1 materializes (r16)
     // early exit on the (row count, Σd) fingerprint: relaxation only ever
     // ADDS pairs or DECREASES a d, so an unchanged pair is a sound
     // fixpoint — most graphs converge well before the hop cap, and each
@@ -537,7 +537,7 @@ object Graphs {
       |  SELECT e.v, r.lm, r.d + 1 FROM r JOIN bidir e ON e.u = r.id WHERE r.d < 8)
       |SELECT id AS partkey, lm AS landmark, CAST(min(d) AS BIGINT) AS dist
       |FROM r GROUP BY id, lm ORDER BY partkey, landmark""".stripMargin) { (s, dir) =>
-    val copurchase = copurchaseEdges(s, dir).localCheckpoint()
+    val copurchase = LoopState.pin(copurchaseEdges(s, dir), eager = true)
     val landmarks = copurchase
       .select(col("src").as("lm")).union(copurchase.select(col("dst").as("lm")))
       .distinct().orderBy("lm").limit(3)
@@ -765,7 +765,7 @@ object Graphs {
       |        FROM verts LEFT JOIN mutual m ON m.v = verts.v
       |        GROUP BY verts.v)
       |SELECT v AS partkey, scc_id FROM scc ORDER BY partkey""".stripMargin) { (s, dir) =>
-    val e = successionEdges(s, dir).localCheckpoint()
+    val e = LoopState.pin(successionEdges(s, dir), eager = true)
     val verts = e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
     stronglyConnectedComponents(verts, e)
       .select(col("id").as("partkey"), col("scc").as("scc_id"))
@@ -808,13 +808,13 @@ object Graphs {
     * asserts per row). */
   private def picRanked(edges: DataFrame, k: Int, iters: Int)
       : (DataFrame, Array[Int], Double) = {
-    val bidir = edges.select(col("src"), col("dst"), col("w").cast("double").as("w"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst"), col("w").cast("double").as("w")))
-      .localCheckpoint()
+    val bidir = LoopState.pin(edges.select(col("src"), col("dst"), col("w").cast("double").as("w"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst"), col("w").cast("double").as("w"))),
+      eager = true)
     val deg = bidir.groupBy("src").agg(sum("w").as("deg"))
-    val norm = bidir.join(deg, "src")
-      .select(col("src"), col("dst"), (col("w") / col("deg")).as("a"))
-      .localCheckpoint(false) // lazy: round 1 materializes (r16)
+    val norm = LoopState.pin(bidir.join(deg, "src")
+      .select(col("src"), col("dst"), (col("w") / col("deg")).as("a")),
+      eager = false) // round 1 materializes (r16)
     // reference init: degree / total-degree (already L1-normalized)
     val totalDeg = deg.agg(sum("deg").as("t"))
     var v = LoopState.cut(deg.crossJoin(broadcast(totalDeg))
@@ -840,9 +840,9 @@ object Graphs {
     val idx = Relational.withGlobalIndex(v.select(col("id"), col("v")), "v", "id")
       .select(col("id"), col("v"), (col("idx") + 1).cast("int").as("rn"))
     val prev = idx.select((col("rn") + 1).as("rn"), col("v").as("v_prev"))
-    val ranked = idx.join(prev, Seq("rn"), "left")
-      .select(col("id"), col("v"), col("rn"), (col("v") - col("v_prev")).as("gap"))
-      .localCheckpoint(false) // lazy: the bounded cuts collect materializes (r16)
+    val ranked = LoopState.pin(idx.join(prev, Seq("rn"), "left")
+      .select(col("id"), col("v"), col("rn"), (col("v") - col("v_prev")).as("gap")),
+      eager = false) // the bounded cuts collect materializes (r16)
     val cuts = ranked.filter(col("gap").isNotNull)
       .orderBy(col("gap").desc, col("rn")).limit(k - 1)
       .select(col("rn").as("cut"), col("gap"))

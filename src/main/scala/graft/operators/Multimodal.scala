@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 import graft.plans.GraftFunctions.{pcmS16le, rgb24Pixels, u8Moments}
 
 /** Multimodal column plumbing — SURVEY.md §2.4 mm01.
@@ -475,10 +475,10 @@ object Multimodal {
     // expression into every payload reference in parseWav's validation
     // filters and field projections (~8 copies per row — measured 66 s
     // vs ~5 s at sf0.1)
-    val media = docs.select(col("doc_id"),
+    val media = LoopState.pin(docs.select(col("doc_id"),
       wavPayload(n, rate,
-        k => (col("doc_id") * 31L + k * 7L) % 2048L - 1024L).as("payload"))
-      .localCheckpoint(false) // lazy: the parse job materializes; the barrier is the LogicalRDD itself (r16)
+        k => (col("doc_id") * 31L + k * 7L) % 2048L - 1024L).as("payload")),
+      eager = false) // the parse job materializes; the barrier is the LogicalRDD itself (r16)
     val parsed = parseWav(media, "payload")
     val nWins = ((col("n_samples") - 160L) / 80L).cast("int") + 1
     parsed
@@ -628,10 +628,10 @@ object Multimodal {
     // mm04's materialization barrier: planted payloads behave like a
     // stored blob column, not an expression Catalyst can inline into
     // every parser reference
-    val media = docs.select(col("doc_id"),
+    val media = LoopState.pin(docs.select(col("doc_id"),
       bmpPayload(w, h,
-        (x, y) => (law(0)(x, y), law(1)(x, y), law(2)(x, y))).as("payload"))
-      .localCheckpoint(false) // lazy: single consumer (r16)
+        (x, y) => (law(0)(x, y), law(1)(x, y), law(2)(x, y))).as("payload")),
+      eager = false) // single consumer (r16)
     val chSum = (shift: Int) => aggregate(col("pixels"), lit(0L),
       (acc, v) => acc + shiftright(v, shift).bitwiseAND(255))
     parseBmp(media, "payload")
@@ -786,11 +786,11 @@ object Multimodal {
     val h = lit(4L) + (col("doc_id") % 2) * 2L
     val nf = lit(3L) + col("doc_id") % 4
     // mm04's materialization barrier (a stored blob column's shape)
-    val media = docs.select(col("doc_id"),
+    val media = LoopState.pin(docs.select(col("doc_id"),
       y4mPayload(w, h, nf,
         (f, x, yy) => (col("doc_id") * 11L + f * 17L + yy * 5L + x * 3L) % 256L,
-        f => (col("doc_id") + f * 7L) % 256L).as("payload"))
-      .localCheckpoint(false) // lazy: single consumer (r16)
+        f => (col("doc_id") + f * 7L) % 256L).as("payload")),
+      eager = false) // single consumer (r16)
     frameLumaStats(parseY4m(media, "payload"), "payload", stride = 2)
       .select(col("doc_id"), col("width"), col("height"), col("fps_num"),
         col("n_frames"), col("frame_idx"), col("y_sum"), col("y_max"))

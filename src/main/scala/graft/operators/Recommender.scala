@@ -102,11 +102,11 @@ object Recommender {
   def svdPlusPlusModel(ratings: DataFrame, dim: Int = 8, iters: Int = 8,
                        lr: Double = 0.02, reg: Double = 0.05,
                        seed: Long = 42L, track: Boolean = true): SvdppModel = {
-    val r2 = ratings.select(col("u"), col("i"), col("r").cast("double").as("r"))
-      .localCheckpoint()
+    val r2 = LoopState.pin(
+      ratings.select(col("u"), col("i"), col("r").cast("double").as("r")), eager = true)
     val mu = r2.agg(avg("r").as("mu"))
-    val nu = r2.groupBy("u").agg(pow(count(lit(1)).cast("double"), -0.5).as("w"))
-      .localCheckpoint()
+    val nu = LoopState.pin(
+      r2.groupBy("u").agg(pow(count(lit(1)).cast("double"), -0.5).as("w")), eager = true)
 
     var userF = LoopState.cut(r2.select("u").distinct()
       .select(col("u"), initArr(col("u"), dim, seed).as("p"), lit(0.0).as("bu")),
@@ -193,7 +193,7 @@ object Recommender {
   /** The deterministic 200-smallest-customer co-purchase slice r01–r05
     * train on (scale-invariant cost, t05's registered-entry rule): one
     * (u, i, r) row per (customer, part) from orders⋈lineitem, `r` the
-    * given aggregate over the pair's lines, checkpointed once. With
+    * given aggregate over the pair's lines. With
     * `moments` it also carries the exact rating moments r_sum
     * (Σ l_quantity) and n (count) that [[sliceOracle]] re-derives. */
   private def ratingSlice(s: SparkSession, dir: String, rating: Column,
@@ -206,7 +206,6 @@ object Recommender {
       .filter(col("o_custkey") < 200)
       .groupBy(col("o_custkey").as("u"), col("l_partkey").as("i"))
       .agg(rating.as("r"), exact: _*)
-      .localCheckpoint()
   }
 
   /** Oracle of r01–r04: [[ratingSlice]]'s (u, i) edge set and exact
@@ -445,8 +444,8 @@ object Recommender {
                       loss: Column): (DataFrame, DataFrame, Seq[Double]) = {
     val spark = ratings.sparkSession
     import spark.implicits._
-    val r2 = ratings.select(col("u"), col("i"), col("r").cast("double").as("r"))
-      .localCheckpoint()
+    val r2 = LoopState.pin(ratings.select(col("u"), col("i"), col("r").cast("double").as("r")),
+      eager = false) // the item init cut below materializes (r16)
     def start(fixed: DataFrame): Array[Double] = if (gram) gramian(fixed, dim) else null
 
     def halfRound(fixed: DataFrame, fixedKey: String, solveKey: String,
@@ -749,7 +748,6 @@ object Recommender {
     // the twin trains and serves, with no recount cross product
     if (!audit) top
     else {
-      val recs = top.localCheckpoint(false) // lazy: the certificate diff materializes (r16)
       // independent recount: HOF dot + full-cross-product window ranking
       val hofScored = userF.select(col("u"), col("f").as("_p"))
         .crossJoin(broadcast(itemF.select(col("i"), col("f").as("_q"))))
@@ -760,7 +758,7 @@ object Recommender {
       val windowed = hofScored.withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 3)
         .select("u", "i", "score", "rk")
-      val served = recs.select("u", "i", "score", "rk")
+      val served = top.select("u", "i", "score", "rk")
       // r16: ONE signed-multiplicity pass replaces the two exceptAll
       // directions (A ≡ B as multisets ⟺ every (row → +1/−1) group sums
       // to zero — the same predicate, one shuffle + take(1) instead of
@@ -772,7 +770,7 @@ object Recommender {
         .filter(col("_d") =!= 0L)
         .isEmpty
       val nCand = itemF.count()
-      recs.select(col("u"), col("rk"))
+      top.select(col("u"), col("rk"))
         .join(pairs.groupBy("u").agg(count(lit(1)).as("n_rated")), "u")
         .select(col("u"), col("rk"), col("n_rated"),
           lit(nCand).as("n_candidates"), lit(topkExact).as("topk_exact"))

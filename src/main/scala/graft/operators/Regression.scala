@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 
 /** The reference's generalized-linear regression surface
   * (mllib/src/main/scala/org/apache/spark/mllib/regression/
@@ -132,8 +132,8 @@ object Regression {
 
   /** Full-batch logistic regression: β ← β − η·∇, ∇ = Σ(σ(x'β) − y)x/n.
     *
-    * Shape at scale: the feature frame is materialized once
-    * (localCheckpoint); each of the `iters` steps is ONE partial-agg
+    * Shape at scale: the feature frame is pinned once
+    * ([[graft.LoopState.pin]]); each of the `iters` steps is ONE partial-agg
     * pass computing d+1 gradient sums with the current β as plan
     * LITERALS — no driver data beyond the (d+1)-vector per step, no
     * sampled minibatch variance (the reference's GradientDescent
@@ -146,9 +146,9 @@ object Regression {
                eta: Double, iters: Int): Array[Double] = {
     val d = xCols.length
     val xs = lit(1.0) +: xCols.map(c => col(c).cast("double"))
-    val data = feats.select(
-      array(xs: _*).as("x"), col(yCol).cast("double").as("y"))
-      .localCheckpoint(false) // lazy: iteration 1's gradient agg materializes (r16)
+    val data = LoopState.pin(feats.select(
+      array(xs: _*).as("x"), col(yCol).cast("double").as("y")),
+      eager = false) // iteration 1's gradient agg materializes (r16)
     var beta = Array.fill(d + 1)(0.0)
     for (_ <- 0 until iters) {
       val margin = (0 to d).map(j => col("x")(j) * lit(beta(j))).reduce(_ + _)
@@ -468,10 +468,10 @@ object Regression {
                eta: Double, lambda: Double, iters: Int): Array[Double] = {
     val d = xCols.length
     val xs = lit(1.0) +: xCols.map(c => col(c).cast("double"))
-    val data = feats.select(
+    val data = LoopState.pin(feats.select(
       array(xs: _*).as("x"),
-      (col(yCol).cast("double") * 2.0 - 1.0).as("s"))
-      .localCheckpoint(false) // lazy: iteration 1's gradient agg materializes (r16)
+      (col(yCol).cast("double") * 2.0 - 1.0).as("s")),
+      eager = false) // iteration 1's gradient agg materializes (r16)
     var beta = Array.fill(d + 1)(0.0)
     for (_ <- 0 until iters) {
       val margin = (0 to d).map(j => col("x")(j) * lit(beta(j))).reduce(_ + _)

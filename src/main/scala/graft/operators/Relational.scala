@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 
 /** Core relational operator suite — the Spark 1.3 DataFrame/SQL surface of
   * the reference (see SURVEY.md §2.1), re-expressed declaratively on the
@@ -520,8 +520,7 @@ object Relational {
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
     try {
-      cachedOrdersAgg(s, dir)
-        .localCheckpoint() // eager: populates + reads the cache NOW
+      LoopState.pin(cachedOrdersAgg(s, dir), eager = true) // populates + reads the cache NOW
         .orderBy("o_orderpriority")
     } finally {
       s.catalog.uncacheTable("graft_orders_cached")

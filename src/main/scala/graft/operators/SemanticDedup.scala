@@ -110,9 +110,7 @@ object SemanticDedup {
       emb: DataFrame, k: Int, iters: Int,
       nPlanes: Int, nTables: Int, tau: Double,
       targetOccupancy: Int = 0): DataFrame = {
-    // k-means assignment is consumed by both sides of the candidate
-    // self-join; cut it once so the Lloyd's map stage runs once
-    val assign = Embeddings.kmeansAssign(emb, k, iters).localCheckpoint()
+    val assign = Embeddings.kmeansAssign(emb, k, iters)
     val e = edges(emb, assign, nPlanes, nTables, tau, targetOccupancy)
       .select(col("d1").as("src"), col("d2").as("dst"))
     val labels = Clusters.connectedComponents(

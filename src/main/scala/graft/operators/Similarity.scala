@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftDatasetFactory
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 import graft.plans.GraftFunctions.{floatCosine, hashedWordGrams, hyperplaneSign,
   minhashSignature, simhash63}
 import graft.functions.TextFunctions._
@@ -76,8 +76,8 @@ object Similarity {
     * join, so the Jaccard stays self-consistent) before the candidate
     * self-join.
     *
-    * @param shareShingleStage eagerly `localCheckpoint` the df-capped
-    *        gram stage so its three consumers (sizes + both self-join
+    * @param shareShingleStage eagerly pin ([[graft.LoopState.pin]]) the
+    *        df-capped gram stage so its three consumers (sizes + both self-join
     *        sides) read one materialization instead of re-running the
     *        explode each. Default false: [[jaccardPairsShared]]'s kept
     *        pairs are persisted lazily, so building them starts no job,
@@ -100,7 +100,7 @@ object Similarity {
       .filter(col("df") > dfCap)
       .select("g")
     val grams1 = grams0.join(hot, Seq("g"), "left_anti")
-    val grams = if (shareShingleStage) grams1.localCheckpoint() else grams1
+    val grams = if (shareShingleStage) LoopState.pin(grams1, eager = true) else grams1
     val sizes = grams.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val a = grams.as("a")
     val b = grams.as("b")

@@ -37,11 +37,11 @@ object Topics {
   def ldaTopics(docs: DataFrame, k: Int, iters: Int = 10, topWords: Int = 5,
                 alpha: Double = 0.1, beta: Double = 0.1, seed: Long = 42L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val edges = docs
+    val edges = LoopState.pin(docs
       .select(col("doc_id").as("d"),
         explode(graft.functions.TextFunctions.tokens(col("text"))).as("w"))
-      .groupBy("d", "w").agg(count(lit(1)).cast("double").as("cnt"))
-      .localCheckpoint(false) // lazy: the vocab count below materializes (r16)
+      .groupBy("d", "w").agg(count(lit(1)).cast("double").as("cnt")),
+      eager = false) // the vocab count below materializes (r16)
     val vocabSize = edges.select("w").distinct().count().toDouble
 
     def ts(prefix: String): Seq[String] = (0 until k).map(j => s"$prefix$j")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{LoopState, Q, Tables}
 import graft.plans.GraftFunctions.floatDot
 import graft.functions.TextFunctions.tokens
 
@@ -102,31 +102,23 @@ object Word2Vec {
             lr: Double = 3.0, seed: Long = 42L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val vocab = vocabulary(docs, vocabSize).localCheckpoint(false) // lazy: count() materializes (r16)
+    val vocab = vocabulary(docs, vocabSize)
     val nVocab = vocab.count().toInt
     require(nVocab >= 2, s"need at least 2 in-vocab words, got $nVocab")
-    // checkpoint the pair MULTISET COLLAPSED to its distinct (c, t, label)
-    // triples with a count weight (r17, guide §2.3 "aggregate before you
-    // iterate"): the 15 per-iteration gradient jobs re-scan this exact
-    // data, and every quantity they compute — the per-key mean gradients —
-    // depends on a (c, t) pair only through g(c,t) and the fixed model
-    // rows, so duplicate occurrences fold into a weight once at build
-    // time. The checkpointed frame is bounded by 2·vocab² rows (vocab is
-    // capped) REGARDLESS of corpus size, where the raw pair set grows
-    // linearly with the corpus: at 100 TB the iteration cost becomes
-    // scale-invariant instead of corpus-sized. The per-key means are
-    // computed as Σ w·g·x / Σ w — the same value as the former per-row
-    // avg up to float summation order (the embedding floats are
-    // engine-local; the entry's published columns are exact integer
-    // counts and a finiteness flag, both unchanged).
+    // pin the pair MULTISET COLLAPSED to its distinct (c, t, label)
+    // triples with a count weight (r17, "aggregate before you iterate"):
+    // the 15 per-iteration gradient jobs re-scan it, and the per-key mean
+    // gradients depend on a (c, t) pair only through g(c,t) and the fixed
+    // model rows, so duplicates fold into a weight once. The pinned frame
+    // is bounded by 2·vocab² rows (vocab is capped) at any corpus size, so
+    // the iteration cost is scale-invariant. The per-key means are
+    // Σ w·g·x / Σ w — the former per-row avg up to float summation order
+    // (the embedding floats are engine-local; the entry's published
+    // columns are exact integer counts and a finiteness flag).
     val nPart = math.max(1, (docs.sparkSession.sparkContext.defaultParallelism / 4))
-    // (EAGER on purpose: the per-iteration plan consumes `data` twice —
-    // the dU/dV union branches — so a lazy mark would double-compute
-    // the pair build inside the first materializing job)
-    val data = trainingPairs(docs, vocab, nVocab, window, negatives, seed)
+    val data = LoopState.pin(trainingPairs(docs, vocab, nVocab, window, negatives, seed)
       .groupBy("c", "t", "label").agg(count(lit(1)).cast("double").as("w"))
-      .repartition(nPart)
-      .localCheckpoint()
+      .repartition(nPart), eager = false) // iteration 1's gradient job materializes (r16)
 
     // deterministic init: BOTH matrices uniform(-0.5, 0.5)/dim from a
     // hash. word2vec.c zeroes the context vectors, which works for

@@ -39,6 +39,10 @@ object GraftDatasetFactory {
       case _ => ds
     }
 
+  /** The RDD under a checkpointed frame's `LogicalRDD` leaf, if any. */
+  def checkpointedRdd(ds: DataFrame): Option[AnyRef] = PartialFunction.condOpt(
+    ds.queryExecution.analyzed) { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
+
   /** Block until the async listener bus has delivered every queued
     * event — the deterministic replacement for "sleep and hope" when a
     * tool reads listener-accumulated counters right after an action

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The loop-state primitive every driver-iterated trainer uses: the
-  * fixpoint driver's round/convergence accounting and cap warning, and
-  * the stats-free lineage cut. */
+/** The materialization primitives every driver-iterated trainer uses:
+  * the fixpoint driver's round/convergence accounting and cap warning,
+  * the pin and the stats-free lineage cut, and the rule that nothing
+  * else in graft materializes a frame. */
 class LoopStateSpec extends SparkTestBase {
 
   /** Min-label propagation over an undirected edge list: the same
@@ -73,8 +74,8 @@ class LoopStateSpec extends SparkTestBase {
       .byteStringAsBytes(spark.conf.get("spark.sql.defaultSizeInBytes")))
     def size(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val base = spark.range(1000).select(col("id"), (col("id") % 7).as("k"))
-    assert(size(base.localCheckpoint()) < default, "a plain checkpoint keeps origin stats")
     for (eager <- Seq(true, false)) {
+      assert(size(LoopState.pin(base, eager)) < default, s"a pin keeps origin stats, eager=$eager")
       val leaf = LoopState.cut(base, eager)
       assert(size(leaf) == default, s"eager=$eager")
       // a join over two cut leaves estimates their PRODUCT; its cut must
@@ -86,5 +87,38 @@ class LoopStateSpec extends SparkTestBase {
       // ids 0..999 by id % 7: six keys of 143 rows, one of 142
       assert(next.count() == 6L * 143 * 143 + 142L * 142)
     }
+  }
+
+  test("an eager pin costs one job, a lazy pin none until an action reads it") {
+    val base = spark.range(1000).select(col("id"), (col("id") % 7).as("k"))
+    var eager: DataFrame = null
+    assert(jobsOf { eager = LoopState.pin(base, eager = true) } == 1)
+    assert(jobsOf(eager.collect()) == 1)
+    var lazyPin: DataFrame = null
+    assert(jobsOf { lazyPin = LoopState.pin(base, eager = false) } == 0)
+    // the first action materializes the blocks inside its own job
+    assert(jobsOf(assert(lazyPin.collect().length == 1000)) == 1)
+  }
+
+  test("no file under src/main/scala but LoopState.scala calls localCheckpoint") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repository root, not $root")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.getFileName.toString == "LoopState.scala"))
+    val offenders = files.filter(_.getFileName.toString != "LoopState.scala")
+      .filter(f => java.nio.file.Files.readString(f).contains(".localCheckpoint("))
+    assert(offenders.isEmpty,
+      s"materialize through LoopState.pin or LoopState.cut instead: ${offenders.mkString(", ")}")
+  }
+
+  test("d07 reads its components' edges unpinned: 19 jobs") {
+    // d07 lost its connected-components pin (plans/r28/JOBS.md) and builds
+    // its shared candidate pairs cold here. r04 is pinned in
+    // RecommenderSpec; r03, r05 and t05 move by up to three jobs run to run
+    graft.Shared.evict()
+    val jobs = jobsOf(operators.Clusters.d07.run(spark, sfDir).collect())
+    assert(jobs == 19, s"d07 ran $jobs jobs")
   }
 }

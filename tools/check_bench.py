@@ -15,6 +15,12 @@ BASELINE.md says to pin a query's first clean measurement when
 registering it), or a run whose bench line carries partial=true (a
 truncated capture is not a gate pass).
 
+A SUBSET run (graft.Bench under SPARK_GRAFT_BENCH_ONLY) records the names
+it was asked for as "only" in every output line. Only the pins of those
+names are gated — one of them that did not run still fails as GONE — and
+every other pin is listed as outside the subset. The summary then says
+the run is not a full gate pass.
+
 The PRODUCTION TWINS (SparkEntry.prodQueries, reported as "t_prod") are
 gated by the SAME rules against BASELINE.md's "Production-twin baseline"
 table (r15 verdict item 1: twin regressions used to be invisible by
@@ -52,11 +58,16 @@ def parse_baseline(path="BASELINE.md"):
     return base, twins
 
 
-def _names_from(correctness_path, t):
+def _names_from(correctness_path, t, only=None):
+    if only is not None and len(only) == len(t):
+        # a subset run's "t" is the name-asc order of the names it ran
+        return dict(zip(sorted(only), map(float, t)))
     if not correctness_path:
         sys.exit("this capture carries only the compact 't' array: pass the "
                  "round's CORRECTNESS_rN.json to recover query names")
     names = sorted(json.load(open(correctness_path, encoding="utf-8")).keys())
+    if only is not None:
+        names = sorted(set(names) & set(only))
     if len(names) != len(t):
         sys.exit(f"name/sample count mismatch: {len(names)} correctness "
                  f"keys vs {len(t)} bench samples")
@@ -64,10 +75,11 @@ def _names_from(correctness_path, t):
 
 
 def load_bench(path, correctness_path=None):
-    """Returns a 4-tuple (per-query seconds map, twin seconds map,
-    partial flag or None if unknown, truncated flag). `truncated` is True
-    only when nothing but the heaviest-queries map survived, so just the
-    captured entries can be gated and absent pins are not GONE. The twin
+    """Returns a 5-tuple (per-query seconds map, twin seconds map,
+    partial flag or None if unknown, truncated flag, subset). `truncated`
+    is True only when nothing but the heaviest-queries map survived, so
+    just the captured entries can be gated and absent pins are not GONE.
+    `subset` is the run's "only" list, or None for a full run. The twin
     map ("t_prod") is rendered as a NAMED map in every bench output line
     and in the driver artifact's parsed form, so no name recovery is
     needed for it."""
@@ -106,6 +118,12 @@ def load_bench(path, correctness_path=None):
                      "part of the gate; re-run with a Bench that emits it")
         return {k: float(v) for k, v in tp.items()}
 
+    def only_of(data):
+        if "only" in data:
+            return data["only"]
+        return data.get("parsed", {}).get("only") \
+            if isinstance(data.get("parsed"), dict) else None
+
     # preference order (the heaviest-queries line's "queries" map is
     # truncated, so it ranks below the compact line that follows it):
     #   1. a COMPLETE named map (no queries_omitted, or zero omitted),
@@ -117,14 +135,15 @@ def load_bench(path, correctness_path=None):
             and "queries" in data.get("parsed", {}) else data
         if "queries" in d and not d.get("queries_omitted"):
             return ({k: float(v) for k, v in d["queries"].items()},
-                    prod_of(d), partial_of(d), False)
+                    prod_of(d), partial_of(d), False, only_of(d))
     for data in candidates:
+        only = only_of(data)
         if "t" in data and isinstance(data["t"], list):
-            return (_names_from(correctness_path, data["t"]),
-                    prod_of(data), partial_of(data), False)
+            return (_names_from(correctness_path, data["t"], only),
+                    prod_of(data), partial_of(data), False, only)
         if "parsed" in data and "t" in data.get("parsed", {}):
-            return (_names_from(correctness_path, data["parsed"]["t"]),
-                    prod_of(data), partial_of(data), False)
+            return (_names_from(correctness_path, data["parsed"]["t"], only),
+                    prod_of(data), partial_of(data), False, only)
     for data in candidates:
         d = data.get("parsed") if isinstance(data.get("parsed"), dict) \
             and "queries" in data.get("parsed", {}) else data
@@ -135,15 +154,21 @@ def load_bench(path, correctness_path=None):
                   "pinned queries absent from this map are NOT treated as "
                   "deregistered.")
             return ({k: float(v) for k, v in d["queries"].items()},
-                    prod_of(d), partial_of(d), True)
+                    prod_of(d), partial_of(d), True, only_of(d))
     sys.exit(f"unrecognized bench format in {path}")
 
 
-def diff(bench, base, kind=""):
+def diff(bench, base, kind="", only=None):
     """Prints the per-query diff, returns (flagged, new, gone, crashed).
-    `kind` prefixes each line ("" for main queries, "twin " for t_prod)."""
+    `kind` prefixes each line ("" for main queries, "twin " for t_prod).
+    With `only` (a subset run's names), pins outside it are listed as
+    outside the subset and never counted GONE."""
     flagged, new, gone, crashed = [], [], [], []
     tag = (kind + " ").rstrip() + " " if kind else ""
+    if only is not None:
+        for q in sorted(set(base) - set(only)):
+            print(f"OUT  {tag}{q:32s} outside subset")
+        base = {q: b for q, b in base.items() if q in only}
     for q, sec in sorted(bench.items()):
         if sec < 0:
             crashed.append(q)
@@ -169,17 +194,17 @@ def diff(bench, base, kind=""):
 def main():
     if len(sys.argv) < 2:
         sys.exit(__doc__)
-    bench, prod, partial, truncated = load_bench(
+    bench, prod, partial, truncated, only = load_bench(
         sys.argv[1], sys.argv[2] if len(sys.argv) > 2 else None)
     base, twin_base = parse_baseline()
-    flagged, new, gone, crashed = diff(bench, base)
+    flagged, new, gone, crashed = diff(bench, base, only=only)
     if truncated and gone:
         # the capture only kept the heaviest entries: absence from the
         # truncated map is a capture artifact, not a deregistration
         print(f"(truncated capture: {len(gone)} pinned queries below the "
               "capture cut are not gated this run)")
         gone = []
-    tf, tn, tg, tc = diff(prod, twin_base, kind="twin")
+    tf, tn, tg, tc = diff(prod, twin_base, kind="twin", only=only)
     flagged += tf
     new += tn
     gone += tg
@@ -187,7 +212,10 @@ def main():
     print(f"\n{len(bench)} measured + {len(prod)} twins, "
           f"{len(flagged)} over 2x baseline, "
           f"{len(crashed)} crashed, {len(new)} new, {len(gone)} missing"
-          + (", PARTIAL RUN" if partial else ""))
+          + (", PARTIAL RUN" if partial else "")
+          + (f", {len(set(base) - set(only))} + "
+             f"{len(set(twin_base) - set(only))} twin pins outside subset"
+             "\nSUBSET RUN: not a full gate pass" if only is not None else ""))
     if partial:
         print("\nWARNING: the bench line says partial=true — a truncated or "
               "budget-cut capture, not a full gate pass.")

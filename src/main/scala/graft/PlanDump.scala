@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.ExplainUtils
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.{ExplainUtils, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Plan-evidence dumper (r16 optimization round): runs registered
@@ -15,11 +16,16 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * A name suffixed `:prod` (`r02_als:prod`) dumps the entry's production
   * twin from [[SparkEntry.prodQueries]] to `<outDir>/<name>_prod.txt`.
   * Each dumped entry also appends one line
-  * `name<TAB>jobs<TAB>stages<TAB>tasks<TAB>input_bytes` to
-  * `<outDir>/JOBS.tsv` (the entry's name as given, `:prod` included), so
-  * job tables are built from that file. `input_bytes` sums every task's
-  * input-metrics bytes (file scans, cached or checkpointed blocks) and
-  * shuffle read: a dropped materialization shows there as its rescans.
+  * `name<TAB>jobs<TAB>stages<TAB>tasks<TAB>input_bytes<TAB>wscg<TAB>compiles`
+  * to `<outDir>/JOBS.tsv` (the entry's name as given, `:prod` included),
+  * so job tables are built from that file. `input_bytes` sums every
+  * task's input-metrics bytes (file scans, cached or checkpointed blocks)
+  * and shuffle read: a dropped materialization shows there as its
+  * rescans. `wscg` counts the whole-stage codegen stages of the dumped
+  * plan (AQE's query stages and subqueries included); `compiles` is the
+  * number of classes Spark's codegen compiled while the entry was built
+  * and run (`CodegenMetrics`, cache misses only), so a warm line shows
+  * what the codegen cache failed to keep.
   * Exits 2 when any named entry failed (unknown name or a throw), after
   * dumping the others.
   *
@@ -31,6 +37,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * lineage (checkpointed leaves vs composed projections).
   */
 object PlanDump {
+  private object Aqe extends AdaptiveSparkPlanHelper
+
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {
       System.err.println(
@@ -58,6 +66,7 @@ object PlanDump {
     val failed = names.filterNot { n =>
       try {
         val before = Seq(jobs, stages, tasks, bytes).map(_.get)
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val (fn, file) = n.split(":") match {
           case Array(q, "prod") => (SparkEntry.prodQueries(q), s"${q}_prod")
           case _ => (SparkEntry.queries(n), n)
@@ -77,11 +86,16 @@ object PlanDump {
         // everything (deterministic, unlike a fixed sleep — r16 advisor)
         org.apache.spark.sql.graftshim.GraftDatasetFactory.drainListenerBus(spark)
         val Seq(nj, ns, nt, nb) = Seq(jobs, stages, tasks, bytes).zip(before).map(c => c._1.get - c._2)
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+        val wscg = Aqe.collectWithSubqueries(ran) { case w: WholeStageCodegenExec => w }.size
         Files.writeString(Paths.get(s"$outDir/$file.txt"), plan.toString +
-          s"\n\n# executed end-to-end: jobs=$nj stages=$ns tasks=$nt input_bytes=$nb\n")
-        Files.writeString(Paths.get(s"$outDir/JOBS.tsv"), s"$n\t$nj\t$ns\t$nt\t$nb\n",
+          s"\n\n# executed end-to-end: jobs=$nj stages=$ns tasks=$nt input_bytes=$nb" +
+          s" wscg=$wscg compiles=$compiles\n")
+        Files.writeString(Paths.get(s"$outDir/JOBS.tsv"),
+          s"$n\t$nj\t$ns\t$nt\t$nb\t$wscg\t$compiles\n",
           StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-        System.err.println(s"[plandump] wrote $n jobs=$nj stages=$ns input_bytes=$nb")
+        System.err.println(
+          s"[plandump] wrote $n jobs=$nj stages=$ns input_bytes=$nb wscg=$wscg compiles=$compiles")
         true
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $n failed: ${e.getMessage}")

@@ -14,6 +14,9 @@ import org.apache.spark.sql.graftshim.GraftDatasetFactory.{column, expression}
   * Library code needs none of this: it builds the expressions with the
   * typed constructors of [[GraftFunctions]], and every registered entry
   * installs the strategies and [[OnePartitionScan]] through [[graft.Q]].
+  * [[CanonicalDistinctGroups]] is not injected: it must run after Spark's
+  * distinct-aggregate rewrite, which no injection point follows, so only
+  * [[GraftStrategies.install]] adds it.
   * Two entry points for SQL text that names the functions:
   *  - config: `spark.sql.extensions=graft.plans.GraftExtensions` picks
   *    them up at session build (cluster deployments);

@@ -22,6 +22,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * one partition; its only effect is that the planner sees
   * `SinglePartition`, which satisfies every clustered and ordered
   * distribution, so `EnsureRequirements` plans no exchange above it.
+  * The coalesce is planned as [[OnePartitionExec]] (by
+  * [[OnePartitionCoalesce]]), which fuses into the codegen stage of the
+  * scan and its consumer: scan, chain, coalesce and aggregate are one
+  * generated class where `CoalesceExec` made two.
   *
   * It does this only where the chain feeds an Aggregate, Window,
   * WindowGroupLimit, global Sort, Deduplicate or Union, or is the stream

@@ -2,11 +2,12 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition, Sort}
-import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Plans a small global sort in ONE partition: `SortExec(global) over
-  * CoalesceExec(1)` instead of a range exchange.
+  * OnePartitionExec` instead of a range exchange.
   *
   * Spark plans every global `ORDER BY` as a range exchange. Its
   * RangePartitioner first runs a sampling job that recomputes the child
@@ -31,12 +32,17 @@ import org.apache.spark.sql.internal.SQLConf
   * [[OnePartitionScan]] already put a one-partition coalesce under the
   * sort, this strategy leaves the sort to Spark, whose `SortExec` then
   * finds `SinglePartition` below it and plans no exchange.
+  *
+  * The coalesce is [[OnePartitionExec]], not `CoalesceExec`: once the
+  * child has one partition (its shuffle read coalesced by AQE, or a
+  * one-file scan's aggregate) the node fuses into the sort's generated
+  * class instead of ending the stage below it.
   */
 object OnePartitionSort extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Sort(_, true, Repartition(1, false, _), _) => Nil
     case Sort(order, true, child, _) if !child.isStreaming && fitsOnePartition(child) =>
-      SortExec(order, global = true, CoalesceExec(1, planLater(child))) :: Nil
+      SortExec(order, global = true, OnePartitionExec(planLater(child))) :: Nil
     case _ => Nil
   }
 
@@ -44,26 +50,30 @@ object OnePartitionSort extends SparkStrategy {
     child.stats.sizeInBytes <= SQLConf.get.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
 }
 
-/** The one place graft's planner strategies and its optimizer rule
-  * ([[OnePartitionScan]]) enter a session. */
+/** The one place graft's planner strategies and its optimizer rules
+  * ([[CanonicalDistinctGroups]], [[OnePartitionScan]]) enter a session. */
 object GraftStrategies {
-  val all: Seq[SparkStrategy] = Seq(TopKStrategy, OnePartitionSort)
+  val all: Seq[SparkStrategy] = Seq(TopKStrategy, OnePartitionSort, OnePartitionCoalesce)
 
-  /** Adds every strategy the session does not plan with yet, and
-    * [[OnePartitionScan]] to `spark.experimental.extraOptimizations`
-    * unless it is there already; idempotent. The strategies are a no-op
-    * for sessions configured with [[GraftExtensions]]; there the rule
-    * runs in the operator-optimization batch and again here, after the
-    * late rewrites (distinct aggregates, subqueries), and the second run
-    * only reaches what the first could not see. */
+  /** In this order: the canonical distinct groups must see the Expand
+    * before a one-partition coalesce goes under it. */
+  private val rules: Seq[Rule[LogicalPlan]] = Seq(CanonicalDistinctGroups, OnePartitionScan)
+
+  /** Adds every strategy the session does not plan with yet, and every
+    * rule not yet in `spark.experimental.extraOptimizations`; idempotent.
+    * Those rules run after the late rewrites (distinct aggregates,
+    * subqueries). The strategies are a no-op for sessions configured with
+    * [[GraftExtensions]]; there [[OnePartitionScan]] also runs in the
+    * operator-optimization batch, and its second run here only reaches
+    * what the first could not see. */
   def install(spark: SparkSession): Unit = synchronized {
     val planned = spark.sessionState.planner.strategies
     val missing = all.filterNot(planned.contains)
     if (missing.nonEmpty) {
       spark.experimental.extraStrategies = spark.experimental.extraStrategies ++ missing
     }
-    if (!spark.experimental.extraOptimizations.contains(OnePartitionScan)) {
-      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ OnePartitionScan
-    }
+    val optimizations = spark.experimental.extraOptimizations
+    val absent = rules.filterNot(optimizations.contains)
+    if (absent.nonEmpty) spark.experimental.extraOptimizations = optimizations ++ absent
   }
 }

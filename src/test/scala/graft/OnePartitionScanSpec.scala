@@ -52,7 +52,7 @@ class OnePartitionScanSpec extends SparkTestBase {
     df.collect()
     val p = finalPlan(df)
     assert(p.contains("Exchange"), s"$what lost its exchange:\n$p")
-    assert(!p.contains("Coalesce"), s"$what was coalesced:\n$p")
+    assert(!p.contains("OnePartition"), s"$what was coalesced:\n$p")
   }
 
   private val shapes: Seq[(String, DataFrame => DataFrame, Boolean)] = Seq(
@@ -145,7 +145,8 @@ class OnePartitionScanSpec extends SparkTestBase {
         q.processAllAvailable()
         val p = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
         assert(p.toString.contains("Exchange"), s"the streaming aggregate lost its exchange:\n$p")
-        assert(!p.toString.contains("Coalesce"), s"the streaming scan was coalesced:\n$p")
+        assert(!p.toString.contains("Coalesce") && !p.toString.contains("OnePartition"),
+          s"the streaming scan was coalesced:\n$p")
       } finally q.stop()
       assert(spark.table("one_scan_stream").count() == 17)
     }

@@ -5,11 +5,11 @@ import org.apache.spark.sql.execution.CoalesceExec
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import graft.operators.Analytics
-import graft.plans.{GraftStrategies, OnePartitionSort}
+import graft.plans.{GraftStrategies, OnePartitionExec, OnePartitionSort}
 import graft.streaming.Pipelines
 
 /** A global sort whose input is at most AQE's minimum partition size is
-  * planned over a one-partition coalesce, with no sampling job and no
+  * planned over a one-partition coalesce (`OnePartitionExec`), with no sampling job and no
   * range shuffle; above that size Spark's range sort is unchanged. */
 class OnePartitionSortSpec extends SparkTestBase {
 
@@ -36,7 +36,7 @@ class OnePartitionSortSpec extends SparkTestBase {
       val jobs = jobsOf(df.collect())
       val p = finalPlan(df)
       assert(!p.contains("rangepartitioning"), s"q15 kept its range exchange:\n$p")
-      assert(p.contains("Coalesce 1"), s"q15 is not coalesced to one partition:\n$p")
+      assert(p.contains("OnePartition"), s"q15 is not coalesced to one partition:\n$p")
       // the rollup's map stage and the result: no sampling job, no range map stage
       assert(jobs == 2, s"q15 ran $jobs jobs:\n$p")
     }
@@ -55,7 +55,7 @@ class OnePartitionSortSpec extends SparkTestBase {
       }
     }
     assert(p.contains("rangepartitioning"), s"no range exchange above the threshold:\n$p")
-    assert(!p.contains("Coalesce 1"), p)
+    assert(!p.contains("OnePartition"), p)
     // and the setting is restored
     q15TwoFiles { after =>
       after.collect()
@@ -76,7 +76,7 @@ class OnePartitionSortSpec extends SparkTestBase {
       .orderBy("k")
     val one = sorted
     val onePart = one.collect().toSeq
-    assert(finalPlan(one).contains("Coalesce 1"), finalPlan(one))
+    assert(finalPlan(one).contains("OnePartition"), finalPlan(one))
     val (rangePart, rangePlan) = withRangeSort {
       val df = sorted
       (df.collect().toSeq, finalPlan(df))
@@ -100,7 +100,7 @@ class OnePartitionSortSpec extends SparkTestBase {
         events.write.mode("append").parquet(src)
         q.processAllAvailable()
         val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
-        assert(plan.collectFirst { case c: CoalesceExec => c }.isEmpty,
+        assert(plan.collectFirst { case c: CoalesceExec => c; case o: OnePartitionExec => o }.isEmpty,
           s"the streaming sort was coalesced:\n$plan")
         assert(plan.toString.contains("Sort ["), plan.toString)
       } finally q.stop()
@@ -119,6 +119,6 @@ class OnePartitionSortSpec extends SparkTestBase {
     // a plain DataFrame sort, built outside any registered entry
     val df = spark.range(10).toDF().orderBy(col("id").desc)
     assert(spark.sessionState.planner.strategies.contains(OnePartitionSort))
-    assert(finalPlan(df).contains("Coalesce 1"), finalPlan(df))
+    assert(finalPlan(df).contains("OnePartition"), finalPlan(df))
   }
 }

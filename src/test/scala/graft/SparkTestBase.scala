@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.commons.io.FileUtils
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.GraftDatasetFactory
@@ -82,5 +83,17 @@ abstract class SparkTestBase extends AnyFunSuite {
       GraftDatasetFactory.drainListenerBus(spark)
       jobs.get
     } finally sc.removeSparkListener(counter)
+  }
+
+  /** Classes Spark's codegen compiles while running `action`: its
+    * compile-count delta (`CodegenMetrics`, one per codegen cache miss,
+    * driver and executor alike). A plan whose code the cache already holds
+    * compiles none. Counts every thread's compiles; suites run one at a
+    * time. */
+  def compilesOf(action: => Unit): Long = {
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiled.getCount
+    action
+    compiled.getCount - before
   }
 }

@@ -18,8 +18,8 @@ import org.apache.spark.sql.execution.{CodegenSupport, CoalesceExec, ColumnarToR
   * `CoalesceExec` does not support codegen, so it splits the pipeline
   * above a scan into two generated classes: scan → coalesce → aggregate
   * is one class below the coalesce and one above it. Each class is
-  * compiled once per class loader (the driver's compile check and the
-  * executor's), so the split costs two entries of Spark's codegen cache.
+  * compiled once per class loader (Spark's planning-time compile check
+  * and the task's), so the split costs two entries of Spark's codegen cache.
   * This node fuses instead, in two cases:
   *  - its child already has one partition (a shuffle read AQE coalesced
   *    to one partition, or another one-partition node below): the node

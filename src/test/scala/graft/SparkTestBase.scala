@@ -87,7 +87,7 @@ abstract class SparkTestBase extends AnyFunSuite {
 
   /** Classes Spark's codegen compiles while running `action`: its
     * compile-count delta (`CodegenMetrics`, one per codegen cache miss,
-    * driver and executor alike). A plan whose code the cache already holds
+    * at planning time and in tasks alike). A plan whose code the cache already holds
     * compiles none. Counts every thread's compiles; suites run one at a
     * time. */
   def compilesOf(action: => Unit): Long = {

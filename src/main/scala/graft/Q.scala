@@ -31,8 +31,6 @@ object Q {
   /** An entry whose oracle text is also its run, through [[Tables.sql]]. */
   def sqlText(name: String, text: String): Q =
     sql(name, text)((spark, dir) => Tables.sql(spark, dir, text))
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, planned(run), None)
 
   /** A certificate-carrying entry written once: `body(spark, dir, audit)`
     * shares inputs, training and serving between its two runs, and only

@@ -120,19 +120,12 @@ object Embeddings {
     sel.map(centers).toArray
   }
 
-  /** Lloyd's spherical k-means: returns (final centroids, assignment
-    * (vec_id, cluster)). `parallelInit` seeds with
-    * [[kmeansParallelSeeds]] (the default); false keeps the
-    * first-k-vec_ids init (cheaper, but collapses when the smallest ids
-    * all share one dense region). */
-  def kmeansModel(emb: DataFrame, k: Int, iters: Int,
-                  parallelInit: Boolean = true): (Array[Array[Float]], DataFrame) = {
+  /** Lloyd's spherical k-means seeded by [[kmeansParallelSeeds]]:
+    * returns (final centroids, assignment (vec_id, cluster)). */
+  def kmeansModel(emb: DataFrame, k: Int, iters: Int): (Array[Array[Float]], DataFrame) = {
     require(k >= 2, "k-means needs k >= 2")
     val base = emb.select(col("vec_id"), col("embedding"))
-    var centroids: Array[Array[Float]] =
-      if (parallelInit) kmeansParallelSeeds(base, k)
-      else base.orderBy("vec_id").limit(k)
-        .collect().map(_.getSeq[Float](1).toArray)
+    var centroids = kmeansParallelSeeds(base, k)
     val dim = centroids.head.length
     for (_ <- 1 to iters) {
       // per-dimension means, k×dim rows back to the driver
@@ -151,9 +144,8 @@ object Embeddings {
   }
 
   /** Lloyd's spherical k-means assignment: (vec_id, cluster). */
-  def kmeansAssign(
-      emb: DataFrame, k: Int, iters: Int, parallelInit: Boolean = true): DataFrame =
-    kmeansModel(emb, k, iters, parallelInit)._2
+  def kmeansAssign(emb: DataFrame, k: Int, iters: Int): DataFrame =
+    kmeansModel(emb, k, iters)._2
 
   /** k=8 spherical k-means over the embeddings table.
     *

@@ -31,9 +31,7 @@ case class FloatCosine(left: Expression, right: Expression)
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
+  def compute(xs: ArrayData, ys: ArrayData): Double = {
     val n = math.min(xs.numElements(), ys.numElements())
     var dot = 0.0
     var na = 0.0
@@ -50,28 +48,13 @@ case class FloatCosine(left: Expression, right: Expression)
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  float $x = $a.getFloat($i);
-         |  float $y = $b.getFloat($i);
-         |  $dot += (double) ($x * $y);
-         |  $na += (double) ($x * $x);
-         |  $nb += (double) ($y * $y);
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("fcos", this, classOf[FloatCosine].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FloatCosine =

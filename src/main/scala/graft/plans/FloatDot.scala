@@ -34,9 +34,7 @@ case class FloatDot(left: Expression, right: Expression)
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
+  def compute(xs: ArrayData, ys: ArrayData): Double = {
     val n = math.min(xs.numElements(), ys.numElements())
     var dot = 0.0
     var i = 0
@@ -47,20 +45,13 @@ case class FloatDot(left: Expression, right: Expression)
     dot
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += (double) ($a.getFloat($i) * $b.getFloat($i));
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("fdot", this, classOf[FloatDot].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FloatDot =

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType}
 
 /** Native codegen decode of `n` little-endian signed 16-bit PCM samples
@@ -14,10 +15,11 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType,
   * n_docs × n_samples byte pairs, and doing it with per-byte
   * hex/conv/substr column arithmetic costs two string conversions per
   * byte (measured 70 s for ~20M samples at sf0.1). Here it is one
-  * branch-free pass over the backing byte array inside whole-stage
-  * codegen, returning an `array<int>` (int, not smallint — downstream
-  * window math squares values, and int keeps the arithmetic surface
-  * identical to the previous column implementation).
+  * pass over the backing byte array in `compute`, which the interpreter
+  * runs and whole-stage codegen calls, returning an `array<int>` (int,
+  * not smallint — downstream window math squares values, and int keeps
+  * the arithmetic surface identical to the previous column
+  * implementation).
   *
   * Bounds contract: a decode that would read past the payload end (or a
   * negative offset/count) returns NULL rather than a silently short
@@ -39,10 +41,9 @@ case class PcmS16Le(first: Expression, second: Expression, third: Expression)
 
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(bin: Any, off: Any, n: Any): Any = {
-    val bytes = bin.asInstanceOf[Array[Byte]]
-    val start = off.asInstanceOf[Long] - 1L
-    val count = n.asInstanceOf[Long]
+  /** The decoded samples, or NULL when the range falls outside `bytes`. */
+  def compute(bytes: Array[Byte], off: Long, count: Long): ArrayData = {
+    val start = off - 1L
     // `start > bytes.length` first: with start capped at the payload
     // length and count at Int.MaxValue, `start + 2L * count` cannot wrap
     // negative for adversarial near-Long.MaxValue offsets
@@ -62,28 +63,14 @@ case class PcmS16Le(first: Expression, second: Expression, third: Expression)
     }
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (bin, off, n) => {
-      val start = ctx.freshName("start")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      s"""
-         |long $start = $off - 1L;
-         |if ($start < 0 || $n < 0 || $n > Integer.MAX_VALUE ||
-         |    $start > $bin.length || $start + 2L * $n > $bin.length) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int[] $out = new int[(int) $n];
-         |  int $p = (int) $start;
-         |  for (int $i = 0; $i < $out.length; $i++, $p += 2) {
-         |    $out[$i] = (short) (($bin[$p + 1] << 8) | ($bin[$p] & 0xFF));
-         |  }
-         |  ${ev.value} =
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-         |}
-       """.stripMargin
-    })
+  override protected def nullSafeEval(bin: Any, off: Any, n: Any): Any =
+    compute(bin.asInstanceOf[Array[Byte]], off.asInstanceOf[Long], n.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("pcm", this, classOf[PcmS16Le].getName)
+    nullSafeCodeGen(ctx, ev, (bin, off, n) =>
+      s"${ev.value} = $ref.compute($bin, $off, $n); ${ev.isNull} = ${ev.value} == null;")
+  }
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): PcmS16Le =

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -17,9 +16,10 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   * codegen. Non-matching expressions are left untouched — the rule is
   * purely opportunistic and safe to run on any plan.
   *
-  * Enable per session with [[GraftRewrites.enable]] (the public
-  * `spark.experimental.extraOptimizations` hook) or cluster-wide via
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * [[GraftExtensions]] injects it: build the session with
+  * `spark.sql.extensions=graft.plans.GraftExtensions` or
+  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * [[GraftStrategies.install]] does not add it.
   */
 object RewriteHofCosine extends Rule[LogicalPlan] {
 
@@ -50,15 +50,5 @@ object RewriteHofCosine extends Rule[LogicalPlan] {
           FloatCosine(a, b)
         case _ => orig
       }
-  }
-}
-
-object GraftRewrites {
-  /** Idempotently adds graft's optimizer rules to an existing session. */
-  def enable(spark: SparkSession): Unit = {
-    val current = spark.experimental.extraOptimizations
-    if (!current.contains(RewriteHofCosine)) {
-      spark.experimental.extraOptimizations = current :+ RewriteHofCosine
-    }
   }
 }

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType}
 
 /** Native codegen decode of a 24-bit BMP pixel block: reads `height`
@@ -10,8 +11,9 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType,
   * 4-byte boundary, the BMP row rule) starting at ONE-BASED byte offset
   * `off`, and returns the pixels TOP-DOWN row-major as packed
   * `r<<16 | g<<8 | b` ints — [[PcmS16Le]]'s role for the image path:
-  * the corpus-scale per-byte loop as one branch-free codegen pass
-  * instead of per-byte string-conversion column math.
+  * the corpus-scale per-byte loop as one pass in `compute`, which the
+  * interpreter runs and whole-stage codegen calls, instead of per-byte
+  * string-conversion column math.
   *
   * Bounds contract (PcmS16Le's): non-positive dimensions, a negative
   * offset, or a block extending past the payload end return NULL, never
@@ -35,11 +37,9 @@ case class Rgb24Pixels(first: Expression, second: Expression,
 
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(bin: Any, off: Any, w: Any, h: Any): Any = {
-    val bytes = bin.asInstanceOf[Array[Byte]]
-    val start = off.asInstanceOf[Long] - 1L
-    val width = w.asInstanceOf[Long]
-    val height = h.asInstanceOf[Long]
+  /** The pixels top-down, or NULL when the block falls outside `bytes`. */
+  def compute(bytes: Array[Byte], off: Long, width: Long, height: Long): ArrayData = {
+    val start = off - 1L
     val rowSize = ((3L * width + 3L) / 4L) * 4L
     // dimension caps FIRST so none of the products (w*h, rowSize*h,
     // start + rowSize*h) can wrap negative for adversarial
@@ -69,39 +69,15 @@ case class Rgb24Pixels(first: Expression, second: Expression,
     }
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (bin, off, w, h) => {
-      val start = ctx.freshName("start")
-      val rowSize = ctx.freshName("rowSize")
-      val out = ctx.freshName("out")
-      val y = ctx.freshName("y")
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      val end = ctx.freshName("end")
-      s"""
-         |long $start = $off - 1L;
-         |long $rowSize = ((3L * $w + 3L) / 4L) * 4L;
-         |if ($start < 0 || $w <= 0 || $h <= 0 ||
-         |    $w > Integer.MAX_VALUE || $h > Integer.MAX_VALUE ||
-         |    $w * $h > Integer.MAX_VALUE || $start > $bin.length ||
-         |    $start + $rowSize * $h > $bin.length) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int[] $out = new int[(int) ($w * $h)];
-         |  for (int $y = 0; $y < $h; $y++) {
-         |    int $p = (int) ($start + ($h - 1 - $y) * $rowSize);
-         |    int $i = (int) ($y * $w);
-         |    int $end = $i + (int) $w;
-         |    for (; $i < $end; $i++, $p += 3) {
-         |      $out[$i] = (($bin[$p + 2] & 0xFF) << 16) |
-         |        (($bin[$p + 1] & 0xFF) << 8) | ($bin[$p] & 0xFF);
-         |    }
-         |  }
-         |  ${ev.value} =
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-         |}
-       """.stripMargin
-    })
+  override protected def nullSafeEval(bin: Any, off: Any, w: Any, h: Any): Any =
+    compute(bin.asInstanceOf[Array[Byte]], off.asInstanceOf[Long],
+      w.asInstanceOf[Long], h.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("rgb", this, classOf[Rgb24Pixels].getName)
+    nullSafeCodeGen(ctx, ev, (bin, off, w, h) =>
+      s"${ev.value} = $ref.compute($bin, $off, $w, $h); ${ev.isNull} = ${ev.value} == null;")
+  }
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,

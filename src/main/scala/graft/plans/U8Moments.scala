@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
 
 /** Native codegen moments of `n` unsigned bytes starting at ONE-BASED
@@ -32,10 +33,9 @@ case class U8Moments(first: Expression, second: Expression, third: Expression)
 
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(bin: Any, off: Any, n: Any): Any = {
-    val bytes = bin.asInstanceOf[Array[Byte]]
-    val start = off.asInstanceOf[Long] - 1L
-    val count = n.asInstanceOf[Long]
+  /** `[sum, max]` of the range, or NULL when it falls outside `bytes`. */
+  def compute(bytes: Array[Byte], off: Long, count: Long): ArrayData = {
+    val start = off - 1L
     // count/start capped BEFORE the sum so `start + count` cannot wrap
     // negative for adversarial near-Long.MaxValue args (the expression is
     // a registered SQL function, callable with arbitrary values)
@@ -57,34 +57,14 @@ case class U8Moments(first: Expression, second: Expression, third: Expression)
     }
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (bin, off, n) => {
-      val start = ctx.freshName("start")
-      val sum = ctx.freshName("sum")
-      val max = ctx.freshName("max")
-      val v = ctx.freshName("v")
-      val p = ctx.freshName("p")
-      val end = ctx.freshName("end")
-      s"""
-         |long $start = $off - 1L;
-         |if ($start < 0 || $n < 0 || $n > Integer.MAX_VALUE ||
-         |    $start > $bin.length || $start + $n > $bin.length) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $sum = 0L;
-         |  long $max = -1L;
-         |  int $end = (int) ($start + $n);
-         |  for (int $p = (int) $start; $p < $end; $p++) {
-         |    int $v = $bin[$p] & 0xFF;
-         |    $sum += $v;
-         |    if ($v > $max) $max = $v;
-         |  }
-         |  ${ev.value} =
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-         |      new long[] {$sum, $max});
-         |}
-       """.stripMargin
-    })
+  override protected def nullSafeEval(bin: Any, off: Any, n: Any): Any =
+    compute(bin.asInstanceOf[Array[Byte]], off.asInstanceOf[Long], n.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("u8m", this, classOf[U8Moments].getName)
+    nullSafeCodeGen(ctx, ev, (bin, off, n) =>
+      s"${ev.value} = $ref.compute($bin, $off, $n); ${ev.isNull} = ${ev.value} == null;")
+  }
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): U8Moments =

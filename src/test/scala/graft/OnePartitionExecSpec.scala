@@ -37,12 +37,6 @@ class OnePartitionExecSpec extends SparkTestBase {
   private def stages(df: DataFrame): Int =
     Aqe.collectWithSubqueries(finalPlan(df)) { case w: WholeStageCodegenExec => w }.size
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val before = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
   private val schema = StructType(Seq(StructField("k", LongType), StructField("v", LongType)))
 
   test("count(*) over an empty input coalesced to one partition is 0 on both paths") {

@@ -27,12 +27,6 @@ class OnePartitionScanSpec extends SparkTestBase {
     try body finally spark.experimental.extraOptimizations = before
   }
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   private def rowsOf(df: DataFrame): Seq[Row] = df.collect().toSeq
 
   /** 3000 rows: a key `k` of 17 values, a group `g` of 3, a double `v`. */
@@ -99,7 +93,7 @@ class OnePartitionScanSpec extends SparkTestBase {
       val one = written(s"$dir/one", 1)
       val len = new java.io.File(s"$dir/one/t").listFiles()
         .filter(_.getName.endsWith(".parquet")).head.length
-      withConf("spark.sql.files.maxPartitionBytes", (len - 1).toString) {
+      withConf("spark.sql.files.maxPartitionBytes" -> (len - 1).toString) {
         assertExchangeStays("a file over the split size", agg(spark.read.parquet(s"$dir/one/t")))
       }
       assertExchangeStays("rand()", one.withColumn("r", rand(7))
@@ -107,7 +101,7 @@ class OnePartitionScanSpec extends SparkTestBase {
       assertExchangeStays("a generator below the aggregate",
         one.select(col("k"), explode(array(col("v"), col("v") + 1)).as("x"))
           .groupBy("k").agg(sum("x").as("s")))
-      withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val join = one.join(one.filter(col("g") === 0).select(col("k"), col("g").as("g2")), "k")
           .groupBy("g2").agg(count(lit(1)).as("n"))
         assertExchangeStays("a sort-merge join", join)

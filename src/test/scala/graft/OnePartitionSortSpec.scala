@@ -19,12 +19,7 @@ class OnePartitionSortSpec extends SparkTestBase {
 
   /** Runs `body` with AQE's minimum partition size at one byte, so no
     * input fits one partition, and restores the session's setting. */
-  private def withRangeSort[T](body: => T): T = {
-    val before = spark.conf.getOption(MinPartitionSize)
-    spark.conf.set(MinPartitionSize, "1b")
-    try body
-    finally before.fold(spark.conf.unset(MinPartitionSize))(spark.conf.set(MinPartitionSize, _))
-  }
+  private def withRangeSort[T](body: => T): T = withConf(MinPartitionSize -> "1b")(body)
 
   /** q15 over orders written as two files, so the rollup shuffles:
     * over one file it runs in the scan's task (OnePartitionScan). */

@@ -1,11 +1,61 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import graft.plans.GraftFunctions
+import graft.plans.{GraftExtensions, GraftFunctions}
 import graft.plans.GraftFunctions._
 
 class PlansSpec extends SparkTestBase {
+
+  /** Codegen on, with no silent fall back to the interpreter when the
+    * generated class fails to compile. */
+  private def codegenOnly[T](body: => T): T =
+    withConf("spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.fallback" -> "false")(body)
+
+  private def finalPlan(df: DataFrame): String =
+    df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+
+  /** Asserts that `name` is evaluated inside a whole-stage codegen stage
+    * of `df`'s executed plan (run `df` first, so AQE's plan is final). */
+  private def inCodegen(df: DataFrame, name: String): Unit = {
+    val p = finalPlan(df)
+    assert(p.linesIterator.exists(l => l.contains("*(") && l.contains(name)),
+      s"$name fell out of codegen:\n$p")
+  }
+
+  /** Inputs for the ten native expressions, built from `range()` so no
+    * call is constant-folded before codegen: float and double vectors
+    * `f`/`d`, `text`, a 32-byte payload `b` of hashed bytes (signed ones
+    * included) and its one-based offset `off`. Row `nullAt` holds NULL
+    * vectors and text and an out-of-range offset, so every expression
+    * returns NULL there. */
+  private def kernelInputs(s: SparkSession, nullAt: Long = -1L): DataFrame = {
+    def orNull(c: Column): Column = when(col("id") =!= nullAt, c)
+    s.range(64).select(col("id"),
+      orNull(array((0 until 8).map(j => (col("id") - j * 5).cast("float")): _*)).as("f"),
+      orNull(array((0 until 8).map(j => (col("id") * j).cast("double")): _*)).as("d"),
+      orNull(concat_ws(" ", (0 until 6).map(j => (col("id") % (j + 2)).cast("string")): _*))
+        .as("text"),
+      unhex(sha2(col("id").cast("string"), 256)).as("b"),
+      when(col("id") =!= nullAt, 1L).otherwise(Long.MaxValue - 2L).as("off"))
+  }
+
+  /** The ten native expressions over [[kernelInputs]], by SQL name. */
+  private lazy val kernels: Seq[(String, Column)] = {
+    val planes = Seq.tabulate(16)(i => i - 7.5)
+    Seq(
+      "float_cosine" -> floatCosine(col("f"), col("f")),
+      "float_dot" -> floatDot(col("f"), col("f")),
+      "double_dot" -> doubleDot(col("d"), col("d")),
+      "hashed_word_grams" -> hashedWordGrams(col("text"), 3),
+      "minhash_signature" -> minhashSignature(hashedWordGrams(col("text"), 3), 4),
+      "hyperplane_sign" -> hyperplaneSign(col("f"), planes, 2),
+      "simhash63" -> simhash63(split(col("text"), " ")),
+      "pcm_s16le" -> pcmS16le(col("b"), col("off"), lit(4L)),
+      "rgb24_pixels" -> rgb24Pixels(col("b"), col("off"), lit(2L), lit(2L)),
+      "u8_moments" -> u8Moments(col("b"), col("off"), lit(8L)))
+  }
 
   test("native float_cosine is bit-identical to the HOF cosine") {
     val emb = Tables.embeddings(spark, sfDir).limit(100)
@@ -44,21 +94,31 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("optimizer rule rewrites the HOF cosine into the native expression") {
-    graft.plans.GraftRewrites.enable(spark)
-    try {
-      val emb = Tables.embeddings(spark, sfDir).limit(50)
-      val df = emb.as("a").join(emb.as("b"), col("a.vec_id") < col("b.vec_id"))
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    def pairs(s: SparkSession): DataFrame = {
+      val emb = Tables.embeddings(s, sfDir).orderBy("vec_id").limit(50)
+      emb.as("a").join(emb.as("b"), col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id"), col("b.vec_id"),
           TextFunctions.cosine(col("a.embedding"), col("b.embedding")).as("c"))
+        .orderBy(col("a.vec_id"), col("b.vec_id"))
+    }
+    try {
+      val ext = SparkSession.builder().withExtensions(new GraftExtensions).create()
+      val df = pairs(ext)
+      // nothing was installed: the injected rule alone rewrote it
+      assert(ext.experimental.extraOptimizations.isEmpty)
       val optimized = df.queryExecution.optimizedPlan.toString
       assert(optimized.contains("float_cosine"),
         s"rule did not fire:\n${optimized.take(800)}")
-      // and the rewrite is result-preserving
-      val vals = df.collect().map(_.getDouble(2))
-      assert(vals.forall(v => v >= -1.0001 && v <= 1.0001))
+      // the shared session has no rewrite, and the result is the same
+      assert(!pairs(spark).queryExecution.optimizedPlan.toString.contains("float_cosine"))
+      val got = df.collect().toSeq
+      assert(got.nonEmpty && got == pairs(spark).collect().toSeq)
     } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.RewriteHofCosine)
+      // the shared session's active and default state, as before
+      active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+      default.fold(SparkSession.clearDefaultSession())(SparkSession.setDefaultSession)
     }
   }
 
@@ -191,24 +251,57 @@ class PlansSpec extends SparkTestBase {
   test("binary decoders hit the NULL contract on adversarial near-Long.MaxValue args (no overflow wrap)") {
     // off/count chosen so an unguarded `start + count` wraps negative and
     // would pass a naive bounds check; the contract is NULL, never a
-    // garbage range or an ArrayIndexOutOfBoundsException
-    val big = lit(Long.MaxValue - 2L)
-    val payload = col("payload")
-    val r = spark.range(1).select(lit("0123456789abcdef".getBytes("UTF-8")).as("payload"))
+    // garbage range or an ArrayIndexOutOfBoundsException. Payload and
+    // offsets are columns over range(), so no call is constant-folded and
+    // each runs in the generated code
+    val df = spark.range(1).select(
+        encode(lpad(col("id").cast("string"), 16, "0123456789abcdef"), "UTF-8").as("payload"),
+        (col("id") + (Long.MaxValue - 2L)).as("big"),
+        (col("id") + 4294967296L).as("huge"),
+        (col("id") + 1L).as("one"),
+        (col("id") + 2L).as("two"))
       .select(
-        u8Moments(payload, big, lit(8L)),
-        u8Moments(payload, lit(2L), big),
-        pcmS16le(payload, big, lit(4L)),
-        pcmS16le(payload, lit(2L), big),
-        rgb24Pixels(payload, big, lit(2L), lit(2L)),
-        rgb24Pixels(payload, lit(2L), big, big),
-        rgb24Pixels(payload, lit(2L), lit(4294967296L), lit(4294967296L)))
-      .head
+        u8Moments(col("payload"), col("big"), lit(8L)),
+        u8Moments(col("payload"), col("two"), col("big")),
+        pcmS16le(col("payload"), col("big"), lit(4L)),
+        pcmS16le(col("payload"), col("two"), col("big")),
+        rgb24Pixels(col("payload"), col("big"), lit(2L), lit(2L)),
+        rgb24Pixels(col("payload"), col("two"), col("big"), col("big")),
+        rgb24Pixels(col("payload"), col("two"), col("huge"), col("huge")),
+        // in-range calls still decode: bytes "12" and "0123"
+        u8Moments(col("payload"), col("two"), lit(2L)),
+        pcmS16le(col("payload"), col("one"), lit(2L)))
+    val r = codegenOnly {
+      val rows = df.collect()
+      Seq("u8_moments", "pcm_s16le", "rgb24_pixels").foreach(inCodegen(df, _))
+      rows.head
+    }
     (0 until 7).foreach(i => assert(r.isNullAt(i), s"col $i must be NULL, got ${r.get(i)}"))
-    // in-range calls still decode
-    val ok = spark.range(1).select(u8Moments(lit("ab".getBytes("UTF-8")), lit(1L), lit(2L)))
-      .head.getSeq[Long](0)
-    assert(ok == Seq(97L + 98L, 98L))
+    assert(r.getSeq[Long](7) == Seq(49L + 50L, 50L))
+    assert(r.getSeq[Int](8) == Seq(0x3130, 0x3332))
+  }
+
+  test("the ten native expressions give the same rows in whole-stage codegen and interpreted") {
+    // row 63 returns NULL from every expression: NULL inputs, and an
+    // out-of-range offset for the decoders
+    def run(): (DataFrame, Seq[Row]) = {
+      val df = kernelInputs(spark, nullAt = 63L)
+        .select(col("id") +: kernels.map { case (name, c) => c.as(name) }: _*)
+      (df, df.collect().toSeq)
+    }
+    val (fused, generated) = codegenOnly(run())
+    kernels.foreach { case (name, _) => inCodegen(fused, name) }
+    val (plain, interpreted) = withConf(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(run())
+    assert(!finalPlan(plain).contains("*("),
+      s"interpreted run planned a codegen stage:\n${finalPlan(plain)}")
+    assert(generated.length == 64)
+    val last = generated.last
+    assert(last.getLong(0) == 63L && (1 to kernels.length).forall(last.isNullAt),
+      s"row 63 must be NULL in every column: $last")
+    assert(generated.init.forall(r => (1 to kernels.length).forall(!r.isNullAt(_))))
+    assert(generated == interpreted)
   }
 
   test("every typed constructor resolves on a fresh session and stays inside whole-stage codegen") {
@@ -216,29 +309,8 @@ class PlansSpec extends SparkTestBase {
     // so each projection is a real codegen stage, not a LocalTableScan,
     // and hold no higher-order function (those never enter codegen)
     val fresh = spark.newSession()
-    val base = fresh.range(64).select(
-      array((0 until 8).map(j => (col("id") - j * 5).cast("float")): _*).as("f"),
-      array((0 until 8).map(j => (col("id") * j).cast("double")): _*).as("d"),
-      concat_ws(" ", (0 until 6).map(j => (col("id") % (j + 2)).cast("string")): _*).as("text"),
-      encode(lpad(col("id").cast("string"), 32, "x"), "UTF-8").as("b"))
-    val planes = Seq.tabulate(16)(i => i - 7.5)
-    val cases = Seq(
-      "float_cosine" -> floatCosine(col("f"), col("f")),
-      "float_dot" -> floatDot(col("f"), col("f")),
-      "double_dot" -> doubleDot(col("d"), col("d")),
-      "hashed_word_grams" -> hashedWordGrams(col("text"), 3),
-      "minhash_signature" -> minhashSignature(hashedWordGrams(col("text"), 3), 4),
-      "hyperplane_sign" -> hyperplaneSign(col("f"), planes, 2),
-      "simhash63" -> simhash63(split(col("text"), " ")),
-      "pcm_s16le" -> pcmS16le(col("b"), lit(1L), lit(4L)),
-      "rgb24_pixels" -> rgb24Pixels(col("b"), lit(1L), lit(2L), lit(2L)),
-      "u8_moments" -> u8Moments(col("b"), lit(1L), lit(8L)))
-    def inCodegen(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-      assert(p.linesIterator.exists(l => l.contains("*(") && l.contains(name)),
-        s"$name fell out of codegen:\n$p")
-    }
-    cases.foreach { case (name, c) =>
+    val base = kernelInputs(fresh)
+    kernels.foreach { case (name, c) =>
       val df = base.select(c.as("out"))
       assert(df.collect().forall(!_.isNullAt(0)), s"$name returned NULL")
       inCodegen(df, name)
@@ -250,7 +322,7 @@ class PlansSpec extends SparkTestBase {
       keys.agg(bloomFilterAgg(xxhash64(col("k")), 64L, 2048L)).scalar(), xxhash64(col("k"))))
     assert(kept.collect().length == 64)
     inCodegen(kept, "might_contain")
-    (cases.map(_._1) ++ Seq("bloom_filter_agg", "might_contain")).foreach(name =>
+    (kernels.map(_._1) ++ Seq("bloom_filter_agg", "might_contain")).foreach(name =>
       assert(!fresh.catalog.functionExists(name), s"$name was registered in the session"))
   }
 
@@ -260,5 +332,30 @@ class PlansSpec extends SparkTestBase {
     val r = s2.sql("SELECT float_cosine(array(CAST(1.0 AS FLOAT)), array(CAST(2.0 AS FLOAT)))")
       .head.getDouble(0)
     assert(math.abs(r - 1.0) < 1e-12)
+  }
+
+  test("every doGenCode under graft.plans calls its Scala compute and emits no loop") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft/plans")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repository root, not $root")
+    // each doGenCode body: from its `def` to the next member or the class end
+    val bodies = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val text = java.nio.file.Files.readString(f)
+        val at = text.indexOf("def doGenCode(")
+        Option.when(at >= 0) {
+          val end = Seq("\n  override ", "\n  def ", "\n}")
+            .map(text.indexOf(_, at)).filter(_ >= 0).min
+          f.getFileName.toString -> text.substring(at, end)
+        }
+      }
+    assert(bodies.size >= kernels.length, s"found only ${bodies.map(_._1)}")
+    val loops = bodies.collect { case (f, b) if b.contains("for (") || b.contains("while (") => f }
+    assert(loops.isEmpty, s"generated code loops instead of calling the kernel: ${loops.mkString(", ")}")
+    val noCall = bodies.collect {
+      case (f, b) if !b.contains("addReferenceObj(") || !b.contains(".compute(") => f
+    }
+    assert(noCall.isEmpty, s"doGenCode does not call its compute: ${noCall.mkString(", ")}")
   }
 }

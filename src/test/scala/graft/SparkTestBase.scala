@@ -61,6 +61,14 @@ abstract class SparkTestBase extends AnyFunSuite {
       body(dir)
     }
 
+  /** Runs `body` with each `key -> value` set in the shared session's
+    * conf, then restores every key's earlier value or unsets it. */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val before = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   /** The temp views registered in session `s`. */
   def tempViews(s: SparkSession): Set[String] =
     s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
